@@ -1,47 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every registered query against
   * `SPARK_GRAFT_SF_DIR`, forcing full execution through the `noop` sink
-  * (a `count()` would let Catalyst skip projection work), and prints ONE
-  * JSON line. A warmup query absorbs session/codegen init so per-query
-  * numbers reflect steady-state throughput.
+  * ([[Harness.timeNoop]]), and prints the full JSON line, then a compact
+  * summary line last. A warmup query absorbs session/codegen init so
+  * per-query numbers reflect steady-state throughput.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // opt-in state-store provider for the streaming family (A/B against
-    // the default memory-backed HDFSBackedStateStoreProvider):
-    // SPARK_GRAFT_STATESTORE=rocksdb or a fully-qualified class name
-    sys.env.get("SPARK_GRAFT_STATESTORE").foreach { v =>
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        if (v == "rocksdb")
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider"
-        else v)
-    }
+    val spark = Harness.session(Harness.cpus)
 
-    def once(name: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+    def once(name: String): Double =
+      try Harness.timeNoop(SparkEntry.queries(name)(spark, sfDir))
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return -1.0
+        -1.0
       }
-      (System.nanoTime() - t0) / 1e9
-    }
 
     // per-query steady state, contention-robust: one discarded warm run
     // (planning + Janino codegen are per-query, so the first execution

@@ -25,17 +25,6 @@ object BenchCli {
     if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
   }
 
-  private def session(threads: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions", threads)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** Materialize scenes + dump the item set as a FeatureCollection. */
   def prepare(nScenes: Int, outFile: String): String = {
     val jsons = RasterBench.writeScenes(nScenes)
@@ -126,9 +115,7 @@ object BenchCli {
       val ntimes = opt(args, "ntimes").map(_.toInt).getOrElse(3)
       val results = opt(args, "results").getOrElse(
         s"${sys.props("java.io.tmpdir")}/graft_rbench_results.jsonl")
-      val threads = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        Runtime.getRuntime.availableProcessors().toString).toInt
-      val spark = session(threads)
+      val spark = Harness.session(Harness.cpus)
       try runBench(spark, n, mode, ntimes, results) finally spark.stop()
       println(s"""{"results_file":"$results","ntimes":$ntimes}""")
     case Some("report") =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions.{col, lit, max}
 
 /** Scale-corpus generator for the sf1+ cap-proof benchmarks
@@ -123,13 +123,8 @@ object GenCorpus {
     val mult = args(1).toInt
     val nDocs = 5000L * mult
     val nVecs = 2000L * mult
-    val spark = SparkSession.builder()
-      .master("local[*]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     import spark.implicits._
 
     /** Land `df` as a PLAIN parquet file `<outDir>/<name>.parquet`

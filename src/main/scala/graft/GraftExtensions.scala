@@ -8,14 +8,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** Session-extension injector — the standard deployment hook for the
   * engine's native expressions:
   *
-  * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  * }}}
-  *
-  * makes `vec_cosine`, `minhash_bands` and `simhash64` available to
-  * every session (SQL and DataFrame API) without per-session
-  * registration calls — the packaging a cluster-wide install uses.
+  * setting `spark.sql.extensions=graft.GraftExtensions` on a session
+  * builder makes `vec_cosine`, `minhash_bands` and `simhash64`
+  * available to every session (SQL and DataFrame API) without
+  * per-session registration calls — the packaging a cluster-wide
+  * install uses.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

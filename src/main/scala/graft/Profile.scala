@@ -1,40 +1,58 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
 
-/** Dev-only diagnostic (optimization guide §1): run named registered
-  * queries once warm + once timed under the Bench session shape with a
-  * listener that prints per-job wall time and per-stage task totals
-  * (task time, shuffle read/write bytes, spill), so a query's cost can
-  * be attributed to its jobs/stages without the Spark UI.
+/** Dev-only diagnostics for named registered queries under the
+  * [[Harness]] session, one mode per question:
+  *  - `stages`: one warm run, then one timed run under a listener that
+  *    prints per-job wall time and per-stage task totals (task time,
+  *    shuffle read/write bytes, spill), so a query's cost can be
+  *    attributed to its jobs/stages without the Spark UI.
+  *  - `time`: 3 back-to-back runs and their wall times, the first one
+  *    cold — one query's behavior without the full Bench protocol.
+  *  - `explain`: the formatted physical plan, to audit the scale
+  *    properties (pushdown, pruning, broadcast, codegen spans).
   *
-  * Usage: runMain graft.Profile <sfDir> <query> [<query>...]
+  * Usage: runMain graft.Profile <stages|time|explain> <sfDir> <query>...
   */
 object Profile {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: Profile <sfDir> <query> [<query>...]")
-    val sfDir = args(0)
-    val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  private val usage =
+    "usage: Profile <stages|time|explain> <sfDir> <query> [<query>...]"
 
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 3 &&
+      Set("stages", "time", "explain")(args(0)), usage)
+    val mode = args(0)
+    val sfDir = args(1)
+    val queries = args.drop(2).toSeq.map { name =>
+      name -> SparkEntry.queries.getOrElse(name,
+        sys.error(s"unknown query: $name"))
+    }
+    val spark = Harness.session(Harness.cpus)
+    mode match {
+      case "stages" => stageReport(spark, sfDir, queries)
+      case "time" => queries.foreach { case (name, q) =>
+        val times = Seq.fill(3)(Harness.timeNoop(q(spark, sfDir)))
+        println(s"== $name: " + times.map(t => f"$t%.2f").mkString(" ") + " s")
+      }
+      case "explain" => queries.foreach { case (name, q) =>
+        println(s"\n======== $name ========")
+        q(spark, sfDir).explain("formatted")
+      }
+    }
+    spark.stop()
+  }
+
+  private def stageReport(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)]): Unit = {
     final case class StageAgg(var name: String = "", var tasks: Int = 0,
       var taskMs: Long = 0, var shufReadB: Long = 0, var shufWriteB: Long = 0,
       var inputB: Long = 0, var spillB: Long = 0, var gcMs: Long = 0)
     // listener state is mutated on the listener-bus thread and read on
-    // the main thread after a waitUntilEmpty drain; the shared lock
-    // gives the read a happens-before edge (the sleep it replaces had
-    // neither a guaranteed drain nor any ordering)
+    // the main thread after a drain; the shared lock gives the read a
+    // happens-before edge
     val lock = new Object
     val jobStart = mutable.Map[Int, Long]()
     val jobLines = mutable.ArrayBuffer[String]()
@@ -76,22 +94,14 @@ object Profile {
         }
     })
 
-    names.foreach { name =>
-      val q = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query: $name"))
-      // warm (codegen + landings)
-      q(spark, sfDir).write.format("noop").mode("overwrite").save()
+    queries.foreach { case (name, q) =>
+      Harness.timeNoop(q(spark, sfDir)) // warm (codegen + landings)
       lock.synchronized { jobStart.clear(); jobLines.clear(); stages.clear() }
       collecting = true
-      val t0 = System.nanoTime()
-      q(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val wall = Harness.timeNoop(q(spark, sfDir))
       // deterministic drain: every queued listener event lands before
-      // collecting flips off and the maps are read. listenerBus is
-      // private[spark] (public in bytecode), so reflect — dev-only tool.
-      val bus = spark.sparkContext.getClass
-        .getMethod("listenerBus").invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      // collecting flips off and the maps are read
+      Harness.drainListeners(spark)
       collecting = false
       lock.synchronized {
         println(f"\n== $name  wall=$wall%.2f s  jobs=${jobLines.size}")
@@ -104,6 +114,5 @@ object Profile {
         }
       }
     }
-    spark.stop()
   }
 }

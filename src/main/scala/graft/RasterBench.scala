@@ -115,30 +115,10 @@ object RasterBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val threads = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val threads = Harness.cpus
     val nScenes = sys.env.getOrElse("SPARK_GRAFT_RB_SCENES", "9").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions", threads)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(threads)
     import spark.implicits._
-
-    if (sys.env.contains("GRAFT_RBENCH_DEBUG")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = s.stageInfo
-          println(f"[rbench] stage ${si.stageId} '${si.name.takeWhile(_ != ' ')}' " +
-            f"tasks=${si.numTasks} runtime=${si.taskMetrics.executorRunTime}ms " +
-            f"cpu=${si.taskMetrics.executorCpuTime / 1000000}ms " +
-            f"deser=${si.taskMetrics.executorDeserializeTime}ms " +
-            f"gc=${si.taskMetrics.jvmGCTime}ms")
-        }
-      })
-    }
 
     val jsons = writeScenes(nScenes)
     val (ds, schemas) = StacParse.parseItems(spark, spark.createDataset(jsons))
@@ -149,8 +129,6 @@ object RasterBench {
     val warpMode = sys.env.get("SPARK_GRAFT_RB_MODE").contains("warp")
     def runOnce(): (Double, Long) = {
       val r = loadOnce(spark, items, schemas, warpMode)
-      if (sys.env.contains("GRAFT_RBENCH_DEBUG"))
-        println(f"[rbench] plan=${r.planSec}%.3fs exec=${r.execSec}%.3fs")
       (r.planSec + r.execSec, r.npix)
     }
     runOnce() // warmup (codegen + file cache)

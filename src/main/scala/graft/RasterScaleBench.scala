@@ -4,7 +4,6 @@ import graft.geo.{Affine, Crs, GeoBox, Geom}
 import graft.load.Load
 import graft.raster.Grb
 import graft.stac.StacParse
-import org.apache.spark.sql.SparkSession
 
 /** Scene-scaled benchmark for the raster ANALYTICS family (the gap the
   * r13 verdict named: the 56 `raster_*` contract queries run at fixture
@@ -131,16 +130,8 @@ object RasterScaleBench {
     val grid = opt("--grid").getOrElse(2)
     val n = opt("--scenes")
       .getOrElse(grid * grid * opt("--ntimes").getOrElse(16))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus
+    val spark = Harness.session(cpus)
     import spark.implicits._
 
     val jsons = writeScenes(n, grid)
@@ -202,15 +193,10 @@ object RasterScaleBench {
       "zonal_stats" -> (() =>
         graft.load.Zonal.zonalStats(spark, res.tiles, res.geobox, zones)))
 
-    def once(build: () => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      build().write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
     val timed = analytics.map { case (name, build) =>
-      once(build) // warm (codegen + planning)
+      Harness.timeNoop(build()) // warm (codegen + planning)
       System.gc()
-      val runs = Seq.fill(3)(once(build))
+      val runs = Seq.fill(3)(Harness.timeNoop(build()))
       name -> runs.sorted.apply(1)
     }
     val qj = timed.map { case (k, v) => s""""$k":$v""" }.mkString(",")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only smoke: print every test table's Spark-side schema + a row. */
 object Smoke {
   def main(args: Array[String]): Unit = {
@@ -15,24 +13,10 @@ object Smoke {
       require(orphans.isEmpty, s"oracles without queries: $orphans")
       return
     }
-    if (args.contains("entry")) {
-      val spark = SparkSession.builder().master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      val rows = SparkEntry.entry(spark).count()
-      println(s"== entry rows=$rows")
-      spark.stop()
-      return
-    }
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.names.foreach { n =>
+    val spark = Harness.session(Harness.cpus)
+    if (args.contains("entry"))
+      println(s"== entry rows=${SparkEntry.entry(spark).count()}")
+    else Tables.names.foreach { n =>
       try {
         val df = Tables.load(spark, dir, n)
         println(s"== $n: ${df.schema.simpleString}")

@@ -59,13 +59,18 @@ object Tables {
   /** Register every table that exists in `dir` as a temp view. Skipped
     * when this session's views already point at `dir` (temp views are
     * session-global, so only the LAST dir registered counts) — repeated
-    * query invocations then skip the ten footer reads + view creations. */
+    * query invocations then skip the ten footer reads + view creations.
+    * The memo is set only once every view registered: a load that throws
+    * leaves it cleared, so the next call retries instead of serving a
+    * mix of views from `dir` and the previous dir. */
   def register(spark: SparkSession, dir: String): Unit =
-    if (lastDir.put(spark, dir) != dir) {
+    if (lastDir.get(spark) != dir) {
+      lastDir.remove(spark)
       names.foreach { n =>
         if (new java.io.File(path(dir, n)).exists())
           load(spark, dir, n).createOrReplaceTempView(n)
       }
+      lastDir.put(spark, dir)
     }
 
   /** Lift a SQL string into the driver's query signature. */

@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Large-scale document deduplication operators (north-star extensions,
@@ -584,7 +584,6 @@ object Dedup {
       unpersistCheckpoint(labels)
       labels = next.drop("chg")
       iter += 1
-      if (sys.env.contains("GRAFT_DEBUG_CC")) System.err.println(s"[cc] iter=$iter changed=$changed")
     }
     edges.unpersist(false)
     labels.select(col("doc_id"), col("label").as("canonical"))

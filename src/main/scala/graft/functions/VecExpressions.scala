@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression for cosine similarity over `Array[Float]`
   * embedding columns — the hot kernel of similarity search and

@@ -40,17 +40,15 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *
   * Starvation test (driver-side, metadata-only, cached): fewer files than
   * cores AND fewer row groups than cores AND more than
-  * `spark.graft.scan.minSplitMB` (default 24, env fallback
-  * `SPARK_GRAFT_SCAN_MIN_SPLIT_MB`, <=0 disables) compressed bytes per
-  * group. Tables with >= cores files skip the footer reads entirely, so
-  * a genuinely large (100 TB) table costs one directory listing already
-  * done by the file index, never a footer sweep.
+  * `spark.graft.scan.minSplitMB` (default 24, <=0 disables) compressed
+  * bytes per group. Tables with >= cores files skip the footer reads
+  * entirely, so a genuinely large (100 TB) table costs one directory
+  * listing already done by the file index, never a footer sweep.
   */
 case class ScanRebalanceRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val minSplitMB = spark.conf.getOption("spark.graft.scan.minSplitMB")
-      .orElse(sys.env.get("SPARK_GRAFT_SCAN_MIN_SPLIT_MB"))
       .map(_.toDouble).getOrElse(24.0)
     if (minSplitMB <= 0) plan
     else {

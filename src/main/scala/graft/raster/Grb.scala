@@ -1,7 +1,7 @@
 package graft.raster
 
 import graft.geo.{Affine, Crs, GeoBox}
-import java.io.{DataOutputStream, BufferedOutputStream, FileOutputStream, RandomAccessFile}
+import java.io.{DataOutputStream, BufferedOutputStream, FileOutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 
 /** GRB — a minimal single-band raster container standing in for

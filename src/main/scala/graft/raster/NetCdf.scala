@@ -2,9 +2,8 @@ package graft.raster
 
 import graft.geo.{Affine, Crs, GeoBox}
 
-import java.io.{ByteArrayOutputStream, DataOutputStream, RandomAccessFile}
+import java.io.{ByteArrayOutputStream, DataOutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.file.{Files, Paths}
 
 /** Minimal netCDF *classic* (CDF-1/CDF-2) container I/O — the legacy
   * multi-variable format whose named variables are the original

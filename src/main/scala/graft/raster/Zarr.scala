@@ -3,7 +3,6 @@ package graft.raster
 import graft.geo.{Affine, Crs, GeoBox}
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import java.io.File
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 

@@ -1,10 +1,8 @@
 package graft.rasterops
-import graft.eo3.Eo3
-import graft.geo.{BBox, Geom}
+import graft.geo.Geom
 import graft.load.{Fuse, Load}
 import graft.planner.Planner
 import graft.raster.Fixtures
-import graft.stac.{StacParse, StacSearch}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -76,7 +74,6 @@ private[rasterops] trait RasterAnalyticsQueries {
        |GROUP BY zone, band, tidx
        |ORDER BY zone, band, "tIdx"""".stripMargin
   def temporalFill(spark: SparkSession): DataFrame = {
-    import spark.implicits._
     val jsons = Fixtures.writeScenesGap(3)
     val (items, schemas) = parsedOf(spark, jsons)
     val res = Load.load(spark, items, schemas, bands = Seq("red"),
@@ -154,7 +151,6 @@ private[rasterops] trait RasterAnalyticsQueries {
     * only (tIdx 2..4 of 7): full-window SG is the one
     * edge-handling-free contract. */
   def temporalSmooth(spark: SparkSession): DataFrame = {
-    import spark.implicits._
     val jsons = Fixtures.writeScenesGap(7)
     val (items, schemas) = parsedOf(spark, jsons)
     val res = Load.load(spark, items, schemas, bands = Seq("red"),
@@ -208,7 +204,6 @@ private[rasterops] trait RasterAnalyticsQueries {
     * LoadResult the operator under test then consumes. */
   private def landGapSeries(spark: SparkSession, path: String,
       withTsec: Boolean = true): graft.load.LoadResult = {
-    import spark.implicits._
     val jsons = Fixtures.writeScenesGap(7)
     val (items, schemas) = parsedOf(spark, jsons)
     val res = Load.load(spark, items, schemas, bands = Seq("red"),
@@ -1049,7 +1044,6 @@ private[rasterops] trait RasterAnalyticsQueries {
        |FROM lv GROUP BY s, band, tidx, ty, tx
        |ORDER BY level, band, "tIdx", ty, tx""".stripMargin
   def maskedComposite(spark: SparkSession): DataFrame = {
-    import spark.implicits._
     val jsons = Fixtures.writeScenesQa(3)
     val (items, schemas) = parsedOf(spark, jsons)
     val res = Load.load(spark, items, schemas, bands = Seq("red", "qa"),

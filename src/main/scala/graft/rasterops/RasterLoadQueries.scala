@@ -1,10 +1,7 @@
 package graft.rasterops
-import graft.eo3.Eo3
-import graft.geo.{BBox, Geom}
+import graft.geo.Geom
 import graft.load.{Fuse, Load}
-import graft.planner.Planner
 import graft.raster.Fixtures
-import graft.stac.{StacParse, StacSearch}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -330,7 +327,6 @@ private[rasterops] trait RasterLoadQueries {
     * must equal native(gy // 2, gx // 2) — the dst-center → floor
     * source-index convention of the warp's nearest kernel. */
   def loadMultigrid(spark: SparkSession): DataFrame = {
-    import spark.implicits._
     val jsons = Fixtures.writeScenesMultigrid(NScenes)
     val (items, schemas) = parsedOf(spark, jsons)
     val decode = udf { (data: Array[Byte], dtype: String) =>
@@ -430,7 +426,6 @@ private[rasterops] trait RasterLoadQueries {
     * overview subimages through TiffReader — per-tile checksums must
     * equal the GRB container's (pinned by LoadSpec parity too). */
   def loadTiff(spark: SparkSession): DataFrame = {
-    import spark.implicits._
     val jsons = Fixtures.writeScenesTiff(NScenes)
     val (items, schemas) = parsedOf(spark, jsons)
     val single = summarize(
@@ -467,7 +462,6 @@ private[rasterops] trait RasterLoadQueries {
     * (pinned by LoadSpec parity too), plus the overview path reading the
     * `red.ovr2` sidecar variable at 4x output resolution. */
   def loadZarr(spark: SparkSession): DataFrame = {
-    import spark.implicits._
     val jsons = Fixtures.writeScenesZarr(NScenes)
     val (items, schemas) = parsedOf(spark, jsons)
     val full = summarize(
@@ -490,7 +484,6 @@ private[rasterops] trait RasterLoadQueries {
     * NetCdfReader — per-tile checksums must equal the GRB container's
     * (pinned by LoadSpec parity too). */
   def loadNetcdf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
     val jsons = Fixtures.writeScenesNc(NScenes)
     val (items, schemas) = parsedOf(spark, jsons)
     summarize(

@@ -1,7 +1,6 @@
 package graft.rasterops
 import graft.eo3.Eo3
-import graft.geo.{BBox, Geom}
-import graft.load.{Fuse, Load}
+import graft.geo.BBox
 import graft.planner.Planner
 import graft.raster.Fixtures
 import graft.stac.{StacParse, StacSearch}

@@ -1,11 +1,8 @@
 package graft.rasterops
 
-import graft.eo3.Eo3
-import graft.geo.{BBox, Geom}
 import graft.load.{Fuse, Load}
-import graft.planner.Planner
 import graft.raster.Fixtures
-import graft.stac.{StacParse, StacSearch}
+import graft.stac.StacParse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 

@@ -1,10 +1,8 @@
 package graft.rasterops
-import graft.eo3.Eo3
-import graft.geo.{BBox, Geom}
 import graft.load.{Fuse, Load}
 import graft.planner.Planner
 import graft.raster.Fixtures
-import graft.stac.{StacParse, StacSearch}
+import graft.stac.StacParse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,7 +29,6 @@ private[rasterops] trait RasterStreamQueries {
     * band; no state store is involved because the group key (item id)
     * never spans batches. */
   def streamRasterIngest(spark: SparkSession): DataFrame = {
-    import spark.implicits._
     val jsons = Fixtures.writeScenes(NScenes).map(_.replaceAll("\n", " "))
     // incremental ingest lands on a STANDING grid declared up front
     // (the MGRS-tile analog) — per-batch auto-planning would re-anchor
@@ -106,7 +103,6 @@ private[rasterops] trait RasterStreamQueries {
         Seq[(String,
           (org.apache.spark.sql.Column, org.apache.spark.sql.Column)
             => org.apache.spark.sql.Column)])]): Seq[String] = {
-    import spark.implicits._
     def resetDir(p: java.nio.file.Path): java.nio.file.Path = {
       def rm(d: java.io.File): Unit = {
         Option(d.listFiles()).foreach(_.foreach(rm))
@@ -736,7 +732,6 @@ private[rasterops] trait RasterStreamQueries {
     * items) with the ray cast from the landed zone edges — a batch
     * dropped, double-counted, or mis-painted shifts the totals. */
   def streamZonal(spark: SparkSession): DataFrame = {
-    import spark.implicits._
     val jsons = Fixtures.writeScenes(NScenes).map(_.replaceAll("\n", " "))
     val (allItems, allSchemas) = parsed(spark)
     val grid = Planner.outputGeobox(allItems, allSchemas).get

@@ -610,7 +610,6 @@ object Relational {
     * static — the form that scales); Catalyst compiles it to the same
     * single-pass CASE aggregation the oracle spells explicitly. */
   private def pivotQuery(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     Tables.register(spark, dir)
     spark.table("events")
       .selectExpr("CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d", "event_type")

@@ -134,7 +134,6 @@ object Kmeans {
   private def initSeeds(q: org.apache.spark.sql.Dataset[(Long, Array[Long])],
       k: Int, initMod: Long): Array[Array[Long]] = {
     val spark = q.sparkSession
-    import spark.implicits._
     val ordered =
       if (initMod > 0) q.orderBy(expr(s"vec_id % ${initMod}L"), col("vec_id"))
       else q.orderBy("vec_id")

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.model.CollectionMetadata
 import graft.stac.StacParse
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming STAC ingest (SURVEY §2.10): items land as JSON files, each

@@ -33,16 +33,11 @@ object StreamingOps {
     * showed 384 parked `ChecksumCheckpointFileManager` threads). These
     * queries run Trigger.AvailableNow over TEMPORARY checkpoints that are
     * discarded at query end, so corruption detection buys nothing here;
-    * a durable production checkpoint would keep the default. Overridable
-    * per-run via `SPARK_GRAFT_CKPT_CHECKSUM=true`. */
+    * a durable production checkpoint would keep the default. */
   private[graft] def withTempCheckpointConf[T](spark: SparkSession)(f: => T): T = {
     val ck = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
     val prevCk = spark.conf.getOption(ck)
-    // normalize the env override to a strict boolean string: anything
-    // other than "true" (case-insensitive) keeps checksums off, so a
-    // value like "1" or "yes" can never fail the boolean conf-set
-    spark.conf.set(ck, sys.env.get("SPARK_GRAFT_CKPT_CHECKSUM")
-      .exists(_.equalsIgnoreCase("true")).toString)
+    spark.conf.set(ck, "false")
     try f finally prevCk match {
       case Some(v) => spark.conf.set(ck, v)
       case None => spark.conf.unset(ck)
@@ -445,7 +440,7 @@ object StreamingOps {
     * table is exactly the final compacted state — DuckDB-checkable. */
   def streamUpsert(spark: SparkSession, dir: String): DataFrame =
       withStreamPartitions(spark, 8) {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, GroupState}
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, GroupState}
     import spark.implicits._
     withEventsStream(spark, dir) { src =>
       val name = s"graft_upsert_${counter.incrementAndGet()}"
@@ -707,9 +702,6 @@ object StreamingOps {
     * interval — the standard streaming answer is watermark-bounded
     * rejection, and this fold makes the contract LOUD (require) rather
     * than silently corrupting history. */
-  /** The scd2 streaming core (source projection + keyed fold), shared
-    * by the registered query and the floor-attribution probe
-    * ([[scd2Probe]]) so the A/B measures exactly the shipped plan. */
   private def scd2Versions(spark: SparkSession,
       src: () => DataFrame): org.apache.spark.sql.Dataset[ScdOut] = {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, GroupState}
@@ -766,65 +758,6 @@ object StreamingOps {
           col("m.valid_to").as("valid_to"),
           col("m.is_current").as("is_current"), col("m.value").as("value"))
         .orderBy("user_id", "event_type", "valid_from", "version_id")
-    } }
-
-  /** Floor-attribution probe for the scd2 family (BASELINE.md
-    * round-15; verdict r14 task 5): the RocksDB A/B proved the sf10
-    * 48 GiB driver floor is not state-store residency, so this runs the
-    * EXACT shipped streaming core ([[scd2Versions]]) once per sink —
-    * `noop` (no result retention: isolates source replay + per-batch
-    * planning + state machinery) vs `memory` (adds the sink's row
-    * collection in the driver heap) — while a
-    * `StreamingQueryListener` sums the per-batch
-    * `StreamingQueryProgress` duration breakdown (addBatch /
-    * getBatch / latestOffset / queryPlanning / walCommit /
-    * commitOffsets / triggerExecution) and the state-operator
-    * update/commit times and memory. The memory−noop delta is the
-    * sink's share; within a sink, addBatch vs the offset/planning
-    * entries splits execution from micro-batch overhead. */
-  private[graft] def scd2Probe(spark: SparkSession, dir: String,
-      sink: String): Map[String, Long] = withStreamPartitions(spark, 8) {
-    withEventsStream(spark, dir) { src =>
-      val sums = scala.collection.mutable.Map.empty[String, Long]
-      def add(k: String, v: Long): Unit = sums.synchronized {
-        sums.update(k, sums.getOrElse(k, 0L) + v)
-      }
-      def peak(k: String, v: Long): Unit = sums.synchronized {
-        sums.update(k, math.max(sums.getOrElse(k, 0L), v))
-      }
-      val listener = new org.apache.spark.sql.streaming
-          .StreamingQueryListener {
-        import org.apache.spark.sql.streaming.StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit = {
-          val p = e.progress
-          p.durationMs.forEach((k, v) => add(k, v.longValue()))
-          add("batches", 1L)
-          add("inputRows", p.numInputRows)
-          p.stateOperators.foreach { so =>
-            add("stateUpdateMs", so.allUpdatesTimeMs)
-            add("stateCommitMs", so.commitTimeMs)
-            peak("stateRowsPeak", so.numRowsTotal)
-            peak("stateMemPeakBytes", so.memoryUsedBytes)
-          }
-        }
-      }
-      spark.streams.addListener(listener)
-      try {
-        val w = scd2Versions(spark, src).writeStream
-          .outputMode("update")
-          .trigger(Trigger.AvailableNow())
-        val q = (if (sink == "memory")
-          w.format("memory")
-            .queryName(s"graft_scd2_probe_${counter.incrementAndGet()}")
-        else w.format(sink)).start()
-        q.awaitTermination()
-        // the async listener bus can deliver the last progress after
-        // termination; a short drain keeps the sums complete
-        Thread.sleep(500)
-      } finally spark.streams.removeListener(listener)
-      sums.synchronized(sums.toMap)
     } }
 
   private val streamCorrOracle: String =

@@ -13,7 +13,6 @@ class BucketingSpec extends AnyFunSuite {
   private lazy val spark = GraftSpark.spark
 
   test("bucketed join on the bucket key plans without shuffle exchanges") {
-    import org.apache.spark.sql.functions._
     val sf = GraftSpark.sf
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ

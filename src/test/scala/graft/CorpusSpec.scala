@@ -21,7 +21,6 @@ class CorpusSpec extends AnyFunSuite {
   private val sf = GraftSpark.sf
 
   test("corpus_pack: distributed scan equals single-window prefix sum") {
-    import spark.implicits._
     val got = text.Corpus.pack(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     // naive spelling: one global window (what the DuckDB oracle runs)

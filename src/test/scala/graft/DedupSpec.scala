@@ -257,7 +257,6 @@ class DedupSpec extends AnyFunSuite {
     }
     // reconstruction error must be below residual energy: the codebooks
     // actually learned structure (zero coder == predicting the cell mean)
-    import org.apache.spark.sql.functions._
     val cents = similarity.Similarity.ivfIndexCentroids(spark, sf)
     val stats = encoded.select("embedding", "cell", "codes").collect().map { r =>
       val e = r.getSeq[Float](0); val c = cents(r.getInt(1)); val cs = r.getSeq[Int](2)

@@ -19,7 +19,10 @@ class ExtensionsSpec extends AnyFunSuite {
     // value (Class.forName the configured name, no-arg instantiate,
     // apply to the builder's extensions), which pins the same
     // deployment contract: the class is loadable by name and its
-    // injections register.
+    // injections register. The shared context comes from GraftSpark
+    // first, so suite order never leaves a local[2] context behind for
+    // the specs that pin the harness shape.
+    GraftSpark.spark
     val prior = SparkSession.getDefaultSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()

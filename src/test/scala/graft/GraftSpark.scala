@@ -2,18 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared local session for specs. */
+/** Shared local session for specs: the [[Harness]] shape at 4 cores. */
 object GraftSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  val cpus: Int = 4
+  lazy val spark: SparkSession = Harness.session(cpus)
   val sf: String = "/root/testdata/sf0.001"
 }

@@ -9,7 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class SkewSpec extends AnyFunSuite {
 
   private lazy val spark = GraftSpark.spark
-  import GraftSpark._
 
   private lazy val skewed = {
     import spark.implicits._

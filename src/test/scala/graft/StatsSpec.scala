@@ -41,7 +41,6 @@ class StatsSpec extends AnyFunSuite {
 
   test("hll sketches: every ndv within bound, union consistent with " +
     "re-estimating the merged sketch") {
-    import org.apache.spark.sql.functions._
     Tables.register(spark, sf)
     val rows = relational.Stats.hllDistinct(spark, sf).collect()
     assert(rows.nonEmpty && rows.forall(_.getLong(2) == 1L),

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, StandardCopyOption}
 
 /** Checkpoint recovery — the exactly-once property the streaming family
   * rests on at 100 TB/day: a query killed mid-stream and restarted with

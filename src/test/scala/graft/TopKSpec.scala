@@ -1,7 +1,7 @@
 package graft
 
 import graft.relational.TopK
-import org.apache.spark.sql.{Encoders, Row}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
