@@ -161,7 +161,7 @@ object GenCorpus {
     // window (mult× streaming state, the part that matters).
     val base = "/root/testdata/sf0.1"
     def keyMax(name: String, c: String): Long =
-      Tables.load(spark, base, name).agg(max(col(c))).head.getLong(0) + 1
+      Tables.load(spark, base, name).agg(max(col(c))).head().getLong(0) + 1
     val (kc, ks, kp, ko) = (keyMax("customer", "c_custkey"),
       keyMax("supplier", "s_suppkey"), keyMax("part", "p_partkey"),
       keyMax("orders", "o_orderkey"))

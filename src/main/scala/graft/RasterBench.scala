@@ -49,7 +49,7 @@ object RasterBench {
           val px = new Array[Double](SceneW * SceneH)
           var i = 0
           while (i < px.length) {
-            px(i) = 1 + ((i * 2654435761L + k * 97 + band.hashCode) >>> 40) % 60000
+            px(i) = (1 + ((i * 2654435761L + k * 97 + band.hashCode) >>> 40) % 60000).toDouble
             i += 1
           }
           // nodata stripe so fusing has real holes

@@ -82,7 +82,7 @@ object RasterScaleBench {
           val px = new Array[Double](SceneW * SceneH)
           var i = 0
           while (i < px.length) {
-            px(i) = 1 + ((i * 2654435761L + k * 97 + band.hashCode) >>> 40) % 60000
+            px(i) = (1 + ((i * 2654435761L + k * 97 + band.hashCode) >>> 40) % 60000).toDouble
             i += 1
           }
           var y = 0

@@ -1,5 +1,6 @@
 package graft.eo3
 
+import com.fasterxml.jackson.databind.JsonNode
 import graft.model.{BandKey, CollectionMetadata, ParsedItem}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
@@ -75,18 +76,18 @@ object Eo3 {
       if (gridName != "default" && md.hasProj) m.put("grid", gridName)
       // key by the normalized band name — bands of a multi-band asset
       // ("data", "data.2") must not overwrite each other
-      measurements.set(bk.norm, m)
+      measurements.set[JsonNode](bk.norm, m)
       src.geobox.foreach { g =>
         if (crs.isEmpty) crs = Some(g.crs)
         if (!grids.has(gridName)) {
           val gn = mapper.createObjectNode()
           val shape = mapper.createArrayNode()
           shape.add(g.height); shape.add(g.width)
-          gn.set("shape", shape)
+          gn.set[JsonNode]("shape", shape)
           val t = mapper.createArrayNode()
           g.transform.foreach(t.add)
-          gn.set("transform", t)
-          grids.set(gridName, gn)
+          gn.set[JsonNode]("transform", t)
+          grids.set[JsonNode](gridName, gn)
         }
       }
     }
@@ -95,24 +96,24 @@ object Eo3 {
         val one = graft.geo.GeoBox.oneByOne(g.toGeom)
         val gn = mapper.createObjectNode()
         val shape = mapper.createArrayNode(); shape.add(1); shape.add(1)
-        gn.set("shape", shape)
+        gn.set[JsonNode]("shape", shape)
         val t = mapper.createArrayNode()
         one.transform.toArray.foreach(t.add)
-        gn.set("transform", t)
-        grids.set("default", gn)
+        gn.set[JsonNode]("transform", t)
+        grids.set[JsonNode]("default", gn)
         crs = Some(one.crs.code)
       }
     }
     root.put("crs", crs.getOrElse("EPSG:4326"))
-    root.set("grids", grids)
+    root.set[JsonNode]("grids", grids)
     root.put("location", "")
-    root.set("measurements", measurements)
+    root.set[JsonNode]("measurements", measurements)
     val props = mapper.createObjectNode()
     item.properties.toSeq.sortBy(_._1).foreach { case (k, v) =>
       props.put(StacToEo3Renames.getOrElse(k, k), v)
     }
-    root.set("properties", props)
-    root.set("lineage", mapper.createObjectNode())
+    root.set[JsonNode]("properties", props)
+    root.set[JsonNode]("lineage", mapper.createObjectNode())
     mapper.writeValueAsString(root)
   }
 
@@ -126,8 +127,8 @@ object Eo3 {
     val metadata = mapper.createObjectNode()
     val product = mapper.createObjectNode()
     product.put("name", md.name.replace("-", "_"))
-    metadata.set("product", product)
-    root.set("metadata", metadata)
+    metadata.set[JsonNode]("product", product)
+    root.set[JsonNode]("metadata", metadata)
     val ms = mapper.createArrayNode()
     md.bands.toSeq.sortBy(k => (k._1.asset, k._1.idx)).foreach { case (bk, b) =>
       val m = mapper.createObjectNode()
@@ -137,7 +138,7 @@ object Eo3 {
       m.put("units", b.unit)
       ms.add(m)
     }
-    root.set("measurements", ms)
+    root.set[JsonNode]("measurements", ms)
     mapper.writeValueAsString(root)
   }
 

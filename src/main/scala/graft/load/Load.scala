@@ -494,7 +494,7 @@ final case class LoadResult(tiles: DataFrame, geobox: GeoBox,
     * scale-true shape at 100 TB (no plane assembly, no shuffle, no
     * driver collect; each task writes its own partition's tiles).
     * The exported directory reads straight back through
-    * `spark.read.format("gtiff")` with plan-time pruning. Returns the
+    * `spark.read.format("raster")` with plan-time pruning. Returns the
     * number of files written. */
   def exportCogTiles(outDir: String): Long = {
     val gbox = geobox
@@ -536,7 +536,7 @@ final case class LoadResult(tiles: DataFrame, geobox: GeoBox,
     * 100 TB (no plane assembly, no shuffle, no driver pixel traffic).
     * Load tiles are chunk-grid-aligned by construction (F14), so tile
     * (ty, tx) IS chunk (cy, cx); `chunk` must equal the load's chunk
-    * size. Reads straight back through [[graft.raster.ZarrReader]].
+    * size. Reads straight back through [[graft.raster.AutoReader]].
     * Returns the number of chunk files written. */
   def exportZarr(store: String, chunk: Int, zlib: Boolean = false): Long = {
     val gbox = geobox

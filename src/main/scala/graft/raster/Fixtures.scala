@@ -87,7 +87,7 @@ object Fixtures {
   }
 
   /** Same scenes as tiled GeoTIFFs (overview subimages included) with
-    * item hrefs pointing at the .tif files — exercises the TiffReader
+    * item hrefs pointing at the .tif files — exercises the TIFF reader
     * end-to-end path (`loader/test_reader.py:72-125` analog). */
   def writeScenesTiff(nItems: Int): Seq[String] = {
     (0 until nItems).map { k =>

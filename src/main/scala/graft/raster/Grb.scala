@@ -118,11 +118,11 @@ object Grb {
 
   def readHeader(path: String): Header = {
     val raf = RasterIO.open(path)
-    try readHeader(raf) finally raf.close()
+    try readHeader(raf, path) finally raf.close()
   }
 
-  private def readHeader(raf: RasterInput): Header = {
-    require(raf.readInt() == Magic, "not a GRB file")
+  private def readHeader(raf: RasterInput, path: String): Header = {
+    require(raf.readInt() == Magic, s"not a GRB file: $path")
     val dtype = CodeDtypes(raf.readByte().toInt)
     val w = raf.readInt(); val h = raf.readInt()
     val hasNodata = raf.readByte() == 1
@@ -151,7 +151,7 @@ object Grb {
   def readWindow(path: String, x0: Int, y0: Int, w: Int, h: Int): (Header, Array[Double]) = {
     val raf = RasterIO.open(path)
     try {
-      val hd = readHeader(raf)
+      val hd = readHeader(raf, path)
       require(x0 >= 0 && y0 >= 0 && x0 + w <= hd.width && y0 + h <= hd.height,
         s"window ($x0,$y0,$w,$h) out of bounds ${hd.width}x${hd.height}")
       val px = new Array[Double](w * h)
@@ -199,7 +199,7 @@ object Grb {
     val raf = RasterIO.open(path)
     var filled = 0L
     try {
-      val hd = readHeader(raf)
+      val hd = readHeader(raf, path)
       require(x0 >= 0 && y0 >= 0 && x0 + w <= hd.width && y0 + h <= hd.height,
         s"window ($x0,$y0,$w,$h) out of bounds ${hd.width}x${hd.height}")
       val sz = dtypeSize(hd.dtype)

@@ -8,19 +8,6 @@ final case class Roi(x0: Int, y0: Int, w: Int, h: Int) {
   def isEmpty: Boolean = w <= 0 || h <= 0
 }
 
-/** Pluggable reader protocol (S9, `loader/types.py:142-157`): open a
-  * source URI and fill a window of the destination grid. Implementations
-  * mirror the reference reader's planning (`_rio.py:314-475`):
-  *
-  *  1. compute the dst ROI overlapping the source extent; empty -> skip;
-  *  2. **paste path** when grids align (same CRS, same res within ttol,
-  *     sub-pixel aligned): windowed read, no resampling (F15);
-  *  3. else **warp path**: per-dst-pixel inverse projection with nearest /
-  *     bilinear / average / mode / sum resampling (F16);
-  *  4. overview selection when shrinking (S8) — reads the decimated
-  *     level (sidecar file or reduced-resolution subimage) instead of the
-  *     base image.
-  */
 /** Separable convolution kernel weights (F16): cubic = Catmull-Rom
   * (cubic convolution with a = -0.5, GDAL's kernel), lanczos =
   * sinc-windowed sinc a = 3, cubic_spline = cubic B-spline (smoothing,
@@ -58,6 +45,19 @@ object Kernels {
   }
 }
 
+/** Pluggable reader protocol (S9, `loader/types.py:142-157`): open a
+  * source URI and fill a window of the destination grid. Implementations
+  * mirror the reference reader's planning (`_rio.py:314-475`):
+  *
+  *  1. compute the dst ROI overlapping the source extent; empty -> skip;
+  *  2. **paste path** when grids align (same CRS, same res within ttol,
+  *     sub-pixel aligned): windowed read, no resampling (F15);
+  *  3. else **warp path**: per-dst-pixel inverse projection with nearest /
+  *     bilinear / average / mode / sum resampling (F16);
+  *  4. overview selection when shrinking (S8) — reads the decimated
+  *     level (sidecar file or reduced-resolution subimage) instead of the
+  *     base image.
+  */
 trait RasterReader extends Serializable {
   /** Read the part of `src` covering `dstGeobox`; returns the dst ROI and
     * row-major pixels (length roi.w*roi.h) in **source** value space with
@@ -67,112 +67,91 @@ trait RasterReader extends Serializable {
 
   /** Fused read+mosaic step (A2 hot path): write `src`'s pixels into the
     * still-`dstNodata` positions of `out` (row-major over `dstGeobox`),
-    * first-valid-wins. Returns the number of newly filled pixels. The
-    * default delegates to `read` (correct for any reader); performance-
-    * critical readers override to skip the intermediate ROI buffer. */
+    * first-valid-wins. Returns the number of newly filled pixels. */
   def readInto(src: RasterSource, cfg: RasterLoadParams, dstGeobox: GeoBox,
-               dstNodata: Double, out: Array[Double]): Long =
-    read(src, cfg, dstGeobox, dstNodata) match {
-      case Some((roi, pix)) =>
-        var filled = 0L
-        var y = 0
-        while (y < roi.h) {
-          var x = 0
-          while (x < roi.w) {
-            val di = (roi.y0 + y) * dstGeobox.width + (roi.x0 + x)
-            val cur = out(di)
-            if (cur.isNaN || cur == dstNodata) {
-              val v = pix(y * roi.w + x)
-              if (!(v.isNaN || v == dstNodata)) { out(di) = v; filled += 1 }
-            }
-            x += 1
-          }
-          y += 1
-        }
-        filled
-      case None => 0L
-    }
+               dstNodata: Double, out: Array[Double]): Long
 }
 
-/** Shared windowed-read planner over a pluggable storage format. A format
-  * supplies header decode, windowed pixel reads, and its overview-pyramid
-  * enumeration (sidecar files for GRB, reduced-resolution subimages for
-  * TIFF — level handles are themselves URIs); the paste/warp planning,
-  * resampling kernels, and the approximating row transformer are format-
-  * independent and live here. */
-abstract class WindowedReader extends RasterReader {
+/** Planned read: dst ROI + resolved src nodata; `pasteAt` is the src
+  * window origin when the F15 paste fast path applies, None -> warp. */
+private[raster] final case class ReadPlan(header: Grb.Header,
+                                          srcNodata: Option[Double], roi: Roi,
+                                          pasteAt: Option[(Int, Int)])
 
-  /** Parse the format header: dims, dtype, nodata, geobox. `band` is the
-    * 1-based sample band the source addresses (multi-band assets);
-    * formats that cannot address it must throw, not read band 1. */
-  protected def formatHeader(uri: String, band: Int): Grb.Header
-
-  /** Windowed pixel read of one band (row-major doubles, unsigned
-    * widened). */
-  protected def formatWindow(uri: String, x0: Int, y0: Int,
-                             w: Int, h: Int, band: Int): Array[Double]
-
-  /** Available decimation levels, ascending scale: (scale, level-uri).
-    * A level-uri must itself be readable by formatHeader/formatWindow. */
-  protected def formatOverviews(uri: String): Seq[(Int, String)]
-
-  /** Resolve named-subdataset addressing into the format's URI space
-    * (reference `loader/types.py:44-56` — netCDF/HDF variable
-    * containers; here multi-image TIFF containers). Formats without
-    * container support must throw, not silently read the base image —
-    * same loud-validation contract as the band path. */
-  protected def resolveSubdataset(uri: String, sub: String): String =
-    throw new IllegalArgumentException(
-      s"$uri: format does not support subdataset addressing " +
-        s"(subdataset='$sub' requested)")
+/** The one windowed reader over every container format. Each source's
+  * format comes from [[RasterFormat.of]], which supplies header decode,
+  * windowed pixel reads, overview levels and subdataset resolution; the
+  * paste/warp planning, resampling kernels, fused mosaic and the
+  * approximating row transformer are format-independent and live here.
+  * [[AutoReader]] is the instance the loader uses. */
+class WindowedReader extends RasterReader {
 
   /** Normalize a source for reading: strip the file scheme and resolve
-    * `subdataset` to a concrete image URI. */
-  protected final def resolveSource(src0: RasterSource): RasterSource = {
+    * `subdataset` to a concrete image URI of its format. */
+  private def resolve(src0: RasterSource): (RasterSource, RasterFormat) = {
     val src = src0.copy(uri = src0.uri.stripPrefix("file://"))
-    src.subdataset.fold(src)(sub =>
-      src.copy(uri = resolveSubdataset(src.uri, sub), subdataset = None))
+    val fmt = RasterFormat.of(src.uri)
+    (src.subdataset.fold(src)(sub =>
+      src.copy(uri = fmt.subdataset(src.uri, sub), subdataset = None)), fmt)
   }
+
+  /** The one permissive catch (`_rio.py:402-436`): with `failOnError` off
+    * a failing source is logged and contributes `nothing`. */
+  private def permissive[T](src: RasterSource, cfg: RasterLoadParams,
+                            nothing: => T)(body: => T): T =
+    try body
+    catch {
+      case e: Exception if !cfg.failOnError =>
+        System.err.println(s"[graft.reader] ${src.uri}: ${e.getMessage}")
+        nothing
+    }
 
   /** Sub-pixel tolerance for the paste decision (`_rio.py:444-447`):
     * loose for nearest, tight otherwise. */
   private def ttol(resampling: String): Double =
     if (resampling == "nearest") 0.9 else 0.05
 
-  def read(src: RasterSource, cfg: RasterLoadParams, dstGeobox: GeoBox,
-           dstNodata: Double): Option[(Roi, Array[Double])] = {
-    try readImpl(src, cfg, dstGeobox, dstNodata)
-    catch {
-      case e: Exception if !cfg.failOnError =>
-        // permissive mode (`_rio.py:402-436`): log and contribute nothing
-        System.err.println(s"[graft.reader] ${src.uri}: ${e.getMessage}")
-        None
+  def read(src0: RasterSource, cfg: RasterLoadParams, dstGeobox: GeoBox,
+           dstNodata: Double): Option[(Roi, Array[Double])] =
+    permissive(src0, cfg, Option.empty[(Roi, Array[Double])]) {
+      val (src, fmt) = resolve(src0)
+      plan(src, fmt, cfg, dstGeobox).flatMap {
+        case ReadPlan(header, srcNodata, roi, Some((sx0, sy0))) =>
+          paste(src, fmt, header, srcNodata, dstGeobox, roi, sx0, sy0, dstNodata)
+        case p => warp(src, fmt, p, cfg, dstGeobox, dstNodata)
+      }
     }
-  }
 
-  private def readImpl(src0: RasterSource, cfg: RasterLoadParams,
-                       dstGeobox: GeoBox, dstNodata: Double): Option[(Roi, Array[Double])] = {
-    val src = resolveSource(src0)
-    plan(src, cfg, dstGeobox) match {
-      case None => None
-      case Some(ReadPlan(header, srcNodata, roi, Some((sx0, sy0)))) =>
-        paste(src, header, srcNodata, dstGeobox, roi, sx0, sy0, dstNodata)
-      case Some(ReadPlan(header, srcNodata, roi, None)) =>
-        warp(src, header, cfg, srcNodata, dstGeobox, roi, dstNodata)
+  /** Paste-aligned sources fuse straight from the window into `out` (no
+    * ROI array, no remap pass); warp-path sources fuse the resampled ROI
+    * with the same first-valid rule ([[RasterFormat.fuseInto]]). */
+  def readInto(src0: RasterSource, cfg: RasterLoadParams, dstGeobox: GeoBox,
+               dstNodata: Double, out: Array[Double]): Long =
+    permissive(src0, cfg, 0L) {
+      val (src, fmt) = resolve(src0)
+      plan(src, fmt, cfg, dstGeobox) match {
+        case None => 0L
+        case Some(ReadPlan(header, srcNodata, roi, Some((sx0, sy0)))) =>
+          val (cx0, cy0, wx0, wy0, w, h) = clipPaste(header, roi, sx0, sy0)
+          if (w <= 0 || h <= 0) 0L
+          else fmt.fuseWindowInto(src.uri, wx0, wy0, w, h, src.band, srcNodata,
+            out, dstGeobox.width, roi.x0 + cx0, roi.y0 + cy0, dstNodata,
+            permissive = !cfg.failOnError)
+        case Some(p) =>
+          warp(src, fmt, p, cfg, dstGeobox, dstNodata).fold(0L) {
+            case (roi, pix) =>
+              // warp output is already nodata-remapped to dstNodata
+              RasterFormat.fuseInto(pix, roi.w, roi.h, dstNodata, out,
+                dstGeobox.width, roi.x0, roi.y0, dstNodata)
+          }
+      }
     }
-  }
-
-  /** Planned read: dst ROI + resolved src nodata; `pasteAt` is the src
-    * window origin when the F15 paste fast path applies, None -> warp. */
-  protected final case class ReadPlan(header: Grb.Header,
-                                      srcNodata: Option[Double], roi: Roi,
-                                      pasteAt: Option[(Int, Int)])
 
   /** Shared F15/F16 planning (`_rio.py:314-475` analog). None = no
     * overlap with the destination. */
-  protected def plan(src: RasterSource, cfg: RasterLoadParams,
-                     dstGeobox: GeoBox): Option[ReadPlan] = {
-    val header = formatHeader(src.uri, src.band)
+  private def plan(src: RasterSource, fmt: RasterFormat, cfg: RasterLoadParams,
+                   dstGeobox: GeoBox): Option[ReadPlan] = {
+    val header = fmt.header(src.uri, src.band)
     val srcGeobox = header.geobox
     val srcNodata = cfg.srcNodataOverride
       .orElse(header.nodata)
@@ -218,7 +197,7 @@ abstract class WindowedReader extends RasterReader {
   /** Clip a paste window to the source image. Returns
     * (dstOffX, dstOffY, srcX0, srcY0, w, h); w/h <= 0 means no overlap.
     * Shared by the buffered (`paste`) and fused (`readInto`) paths. */
-  protected def clipPaste(header: Grb.Header, roi: Roi, sx0: Int, sy0: Int)
+  private def clipPaste(header: Grb.Header, roi: Roi, sx0: Int, sy0: Int)
   : (Int, Int, Int, Int, Int, Int) = {
     val cx0 = math.max(0, -sx0)
     val cy0 = math.max(0, -sy0)
@@ -228,12 +207,12 @@ abstract class WindowedReader extends RasterReader {
   }
 
   /** Direct windowed read — grids align (F15 fast path). */
-  private def paste(src: RasterSource, header: Grb.Header, srcNodata: Option[Double],
-                    dstGeobox: GeoBox, roi: Roi, sx0: Int, sy0: Int,
-                    dstNodata: Double): Option[(Roi, Array[Double])] = {
+  private def paste(src: RasterSource, fmt: RasterFormat, header: Grb.Header,
+                    srcNodata: Option[Double], dstGeobox: GeoBox, roi: Roi,
+                    sx0: Int, sy0: Int, dstNodata: Double): Option[(Roi, Array[Double])] = {
     val (cx0, cy0, wx0, wy0, w, h) = clipPaste(header, roi, sx0, sy0)
     if (w <= 0 || h <= 0) return None
-    val pix = formatWindow(src.uri, wx0, wy0, w, h, src.band)
+    val pix = fmt.window(src.uri, wx0, wy0, w, h, src.band)
     val out = new Array[Double](roi.w * roi.h)
     if (cx0 > 0 || cy0 > 0 || w < roi.w || h < roi.h)
       java.util.Arrays.fill(out, dstNodata)
@@ -256,19 +235,20 @@ abstract class WindowedReader extends RasterReader {
 
   /** Per-pixel reproject + resample (F16). Reads a source window sized to
     * the ROI (with overview selection when shrinking, S8). */
-  private def warp(src: RasterSource, header: Grb.Header, cfg: RasterLoadParams,
-                   srcNodata: Option[Double], dstGeobox: GeoBox, roi: Roi,
+  private def warp(src: RasterSource, fmt: RasterFormat, p: ReadPlan,
+                   cfg: RasterLoadParams, dstGeobox: GeoBox,
                    dstNodata: Double): Option[(Roi, Array[Double])] = {
+    val ReadPlan(header, srcNodata, roi, _) = p
     val srcGeobox0 = header.geobox
     // read shrink: how many src pixels per dst pixel
     val shrink = math.max(1, math.floor(dstGeobox.gsd / srcGeobox0.gsd).toInt)
     val (uri, srcGeobox) =
       if (cfg.useOverviews && shrink > 1) {
-        val levels = formatOverviews(src.uri)
+        val levels = fmt.overviews(src.uri)
         Grb.pickOverview(shrink, levels.map(_._1)) match {
           case Some(i) =>
             val u = levels(i)._2
-            (u, formatHeader(u, src.band).geobox)
+            (u, fmt.header(u, src.band).geobox)
           case None => (src.uri, srcGeobox0)
         }
       } else (src.uri, srcGeobox0)
@@ -298,7 +278,7 @@ abstract class WindowedReader extends RasterReader {
     val wy1 = math.min(srcGeobox.height, math.ceil(scorners.map(_._2).max).toInt + 1)
     if (wx1 <= wx0 || wy1 <= wy0) return None
     val (sw, sh) = (wx1 - wx0, wy1 - wy0)
-    val spix = formatWindow(uri, wx0, wy0, sw, sh, src.band)
+    val spix = fmt.window(uri, wx0, wy0, sw, sh, src.band)
 
     // primitive nodata (NaN = none) — keeps Option out of the pixel loop
     val sn = srcNodata.getOrElse(Double.NaN)
@@ -546,166 +526,6 @@ abstract class WindowedReader extends RasterReader {
   }
 }
 
-object GrbReader extends WindowedReader {
-
-  protected def formatHeader(uri: String, band: Int): Grb.Header = {
-    require(band == 1,
-      s"GRB containers are single-band by format; band $band requested of $uri")
-    Grb.readHeader(uri)
-  }
-
-  protected def formatWindow(uri: String, x0: Int, y0: Int,
-                             w: Int, h: Int, band: Int): Array[Double] = {
-    require(band == 1,
-      s"GRB containers are single-band by format; band $band requested of $uri")
-    Grb.readWindow(uri, x0, y0, w, h)._2
-  }
-
-  /** Any `.ovr<N>` sidecar participates (S8 generalized — deep pyramids
-    * 8x/16x included), not a hardcoded 2/4 list. */
-  protected def formatOverviews(uri: String): Seq[(Int, String)] = {
-    val (dir, name) = RasterIO.parentAndName(uri)
-    val prefix = name + ".ovr"
-    RasterIO.list(dir)
-      .flatMap { n =>
-        if (n.startsWith(prefix))
-          n.stripPrefix(prefix).toIntOption.map(s => s -> s"$dir/$n")
-        else None
-      }
-      .sortBy(_._1)
-  }
-
-  /** Paste-aligned sources fuse straight from the read buffer into the
-    * destination (no ROI array, no remap pass — `Grb.fuseWindowInto`);
-    * warp-path sources fall back to the generic read+fuse. */
-  override def readInto(src0: RasterSource, cfg: RasterLoadParams,
-                        dstGeobox: GeoBox, dstNodata: Double,
-                        out: Array[Double]): Long = {
-    try {
-      val src = resolveSource(src0)
-      plan(src, cfg, dstGeobox) match {
-        case None => 0L
-        case Some(ReadPlan(header, srcNodata, roi, Some((sx0, sy0)))) =>
-          val (cx0, cy0, wx0, wy0, w, h) = clipPaste(header, roi, sx0, sy0)
-          if (w <= 0 || h <= 0) 0L
-          else Grb.fuseWindowInto(src.uri, wx0, wy0, w, h, srcNodata,
-            out, dstGeobox.width, roi.x0 + cx0, roi.y0 + cy0, dstNodata,
-            permissive = !cfg.failOnError)
-        case Some(ReadPlan(_, _, _, None)) =>
-          super.readInto(src0, cfg, dstGeobox, dstNodata, out)
-      }
-    } catch {
-      case e: Exception if !cfg.failOnError =>
-        System.err.println(s"[graft.reader] ${src0.uri}: ${e.getMessage}")
-        0L
-    }
-  }
-
-  /** Nodata test incl. NaN semantics (F5, `loader/_reader.py:117-134`). */
-  def isNodata(v: Double, nodata: Option[Double]): Boolean =
-    v.isNaN || nodata.exists(n => if (n.isNaN) v.isNaN else v == n)
-}
-
-/** GeoTIFF reader over the JDK's bundled `javax.imageio` TIFF plugin:
-  * windowed reads via `ImageReadParam.setSourceRegion`, geokeys from the
-  * TIFF tags, overview selection from reduced-resolution subimages
-  * (addressed as `uri#<image-index>`). See [[Tiff]] for the tag plumbing.
-  * Mirrors the reference's rasterio reader shape (`_rio.py:374-475`). */
-object TiffReader extends WindowedReader {
-  /** Subdataset -> page-named image index (`path#<idx>`), loud on a
-    * miss. A source cannot address BOTH an explicit image index and a
-    * named subdataset. */
-  override protected def resolveSubdataset(uri: String, sub: String): String = {
-    require(!uri.contains("#"),
-      s"$uri already addresses an image index; cannot also resolve " +
-        s"subdataset '$sub'")
-    s"$uri#${Tiff.resolveSubdataset(uri, sub)}"
-  }
-  protected def formatHeader(uri: String, band: Int): Grb.Header =
-    Tiff.readHeader(uri, band)
-  protected def formatWindow(uri: String, x0: Int, y0: Int,
-                             w: Int, h: Int, band: Int): Array[Double] =
-    Tiff.readWindow(uri, x0, y0, w, h, band)
-  protected def formatOverviews(uri: String): Seq[(Int, String)] =
-    Tiff.overviewLevels(uri)
-}
-
-/** Zarr v2 store reader: chunked-directory containers whose variables
-  * are the subdataset surface (`store.zarr#red` — the modern netCDF
-  * analog the reference's `RasterSource.subdataset` models,
-  * `loader/types.py:44-56`). Windowed reads decode only intersecting
-  * chunks (one object-store GET per needed chunk at scale); overview
-  * levels are `<var>.ovrN` sidecar variables (the GRB convention). */
-object ZarrReader extends WindowedReader {
-  override protected def resolveSubdataset(uri: String, sub: String): String = {
-    require(!uri.contains("#"),
-      s"$uri already addresses a variable; cannot also resolve " +
-        s"subdataset '$sub'")
-    Zarr.requireVariable(uri, sub) // loud at plan time, lists variables
-    s"$uri#$sub"
-  }
-  protected def formatHeader(uri: String, band: Int): Grb.Header = {
-    require(band == 1,
-      s"zarr variables are single-band planes; band $band requested of " +
-        s"$uri — address additional variables as store.zarr#<variable>")
-    Zarr.readHeader(uri)
-  }
-  protected def formatWindow(uri: String, x0: Int, y0: Int,
-                             w: Int, h: Int, band: Int): Array[Double] = {
-    require(band == 1,
-      s"zarr variables are single-band planes; band $band requested of $uri")
-    Zarr.readWindow(uri, x0, y0, w, h)
-  }
-  protected def formatOverviews(uri: String): Seq[(Int, String)] =
-    Zarr.overviewLevels(uri)
-}
-
-/** netCDF classic container reader: named 2-D variables are the
-  * subdataset surface (`file.nc#red` — the original container format
-  * the reference's `RasterSource.subdataset` models,
-  * `loader/types.py:44-56`). Contiguous row-major storage means each
-  * window row is one byte-ranged read; the format has no overview
-  * convention, so pyramid selection falls back to base resolution. */
-object NetCdfReader extends WindowedReader {
-  override protected def resolveSubdataset(uri: String, sub: String): String = {
-    require(!uri.contains("#"),
-      s"$uri already addresses a variable; cannot also resolve " +
-        s"subdataset '$sub'")
-    NetCdf.requireVariable(uri, sub) // loud at plan time, lists variables
-    s"$uri#$sub"
-  }
-  protected def formatHeader(uri: String, band: Int): Grb.Header = {
-    require(band == 1,
-      s"netCDF variables are single-band planes; band $band requested of " +
-        s"$uri — address additional variables as file.nc#<variable>")
-    NetCdf.readHeader(uri)
-  }
-  protected def formatWindow(uri: String, x0: Int, y0: Int,
-                             w: Int, h: Int, band: Int): Array[Double] = {
-    require(band == 1,
-      s"netCDF variables are single-band planes; band $band requested of $uri")
-    NetCdf.readWindow(uri, x0, y0, w, h)
-  }
-  protected def formatOverviews(uri: String): Seq[(Int, String)] = Seq.empty
-}
-
-/** Default reader: routes per-source by file extension (S9 driver
-  * indirection) — GeoTIFF to [[TiffReader]], zarr stores to
-  * [[ZarrReader]], netCDF classic to [[NetCdfReader]], everything else
-  * to the GRB container reader. */
-object AutoReader extends RasterReader {
-  private def pick(uri: String): RasterReader = {
-    val u = uri.toLowerCase.takeWhile(_ != '#')
-    if (u.endsWith(".tif") || u.endsWith(".tiff")) TiffReader
-    else if (u.endsWith(".zarr")) ZarrReader
-    else if (u.endsWith(".nc")) NetCdfReader
-    else GrbReader
-  }
-  def read(src: RasterSource, cfg: RasterLoadParams, dstGeobox: GeoBox,
-           dstNodata: Double): Option[(Roi, Array[Double])] =
-    pick(src.uri).read(src, cfg, dstGeobox, dstNodata)
-  override def readInto(src: RasterSource, cfg: RasterLoadParams,
-                        dstGeobox: GeoBox, dstNodata: Double,
-                        out: Array[Double]): Long =
-    pick(src.uri).readInto(src, cfg, dstGeobox, dstNodata, out)
-}
+/** Default reader: the [[WindowedReader]] that routes each source through
+  * [[RasterFormat.of]] (S9 driver indirection, `loader/types.py:142-157`). */
+object AutoReader extends WindowedReader

@@ -12,7 +12,7 @@ import javax.imageio.plugins.tiff.{BaselineTIFFTagSet, TIFFDirectory, TIFFField,
 /** GeoTIFF I/O on the JDK's bundled `javax.imageio` TIFF plugin (public
   * API since Java 9: `javax.imageio.plugins.tiff`) — no GDAL required.
   *
-  * Read side (what [[TiffReader]] consumes):
+  * Read side (what [[RasterFormat.TiffFormat]] consumes):
   *  - geo-referencing from ModelPixelScaleTag (33550) + ModelTiepointTag
   *    (33922), CRS from the GeoKeyDirectoryTag (34735) projected/
   *    geographic EPSG keys, nodata from GDAL_NODATA (42113) — the same

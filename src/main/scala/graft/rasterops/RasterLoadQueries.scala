@@ -423,7 +423,7 @@ private[rasterops] trait RasterLoadQueries {
 
   /** GeoTIFF end-to-end (S7 on real TIFF containers): the same mosaic
     * workload as `raster_load_mosaic` but reading tiled GeoTIFFs with
-    * overview subimages through TiffReader — per-tile checksums must
+    * overview subimages through the TIFF format — per-tile checksums must
     * equal the GRB container's (pinned by LoadSpec parity too). */
   def loadTiff(spark: SparkSession): DataFrame = {
     val jsons = Fixtures.writeScenesTiff(NScenes)
@@ -458,7 +458,7 @@ private[rasterops] trait RasterLoadQueries {
   /** Zarr store end-to-end (S7 on the chunked-directory container;
     * variables = subdatasets): the same mosaic workload as
     * `raster_load_mosaic` reading `store.zarr#var` sources through
-    * ZarrReader — per-tile checksums must equal the GRB container's
+    * the zarr format — per-tile checksums must equal the GRB container's
     * (pinned by LoadSpec parity too), plus the overview path reading the
     * `red.ovr2` sidecar variable at 4x output resolution. */
   def loadZarr(spark: SparkSession): DataFrame = {
@@ -481,7 +481,7 @@ private[rasterops] trait RasterLoadQueries {
   /** netCDF classic container end-to-end (S7 on the legacy multi-variable
     * container; variables = subdatasets): the same mosaic workload as
     * `raster_load_mosaic` reading `file.nc#var` sources through
-    * NetCdfReader — per-tile checksums must equal the GRB container's
+    * the netCDF format — per-tile checksums must equal the GRB container's
     * (pinned by LoadSpec parity too). */
   def loadNetcdf(spark: SparkSession): DataFrame = {
     val jsons = Fixtures.writeScenesNc(NScenes)
@@ -494,14 +494,17 @@ private[rasterops] trait RasterLoadQueries {
       .orderBy("band", "tIdx", "ty", "tx")
   }
 
-  /** DSv2 GRB table (SURVEY §4 "COG table"): SQL over raw pixels with an
-    * ROI predicate pushed into the windowed scan. */
+  /** DSv2 `raster` table over GRB scenes (SURVEY §4 "COG table"): SQL
+    * over raw pixels with an ROI predicate pushed into the windowed scan.
+    * The pushed `.grb` suffix predicate prunes the directory's other
+    * containers before planning reads their headers. */
   def grbSourceSql(spark: SparkSession): DataFrame = {
     Fixtures.writeScenes(NScenes)
     // pin to the NScenes contract scenes: the fixture dir is shared with
     // specs that write more, and a deterministic row set is what lets
     // the DuckDB oracle re-derive this from the landed native planes
-    spark.read.format("grb").load(Fixtures.dir.toString)
+    spark.read.format("raster").load(Fixtures.dir.toString)
+      .where(col("uri").endsWith(".grb"))
       .where(col("uri").rlike("/scene[0-3]-(red|nir)\\.grb$"))
       .where(col("x") < 48 && col("y") >= 8 && col("value") =!= 0)
       .groupBy("uri")
@@ -512,12 +515,14 @@ private[rasterops] trait RasterLoadQueries {
       .orderBy("uri")
   }
 
-  /** GeoTIFF DSv2 sibling of grbSourceSql: SQL over the packed 3-band
-    * MSI scenes with a band predicate — plan-time band pruning means the
-    * non-addressed planes of the stack are never decoded. */
+  /** GeoTIFF sibling of grbSourceSql: SQL over the packed 3-band MSI
+    * scenes with a band predicate — plan-time band pruning means the
+    * non-addressed planes of the stack are never decoded; the pushed
+    * `.tif` suffix predicate prunes the other containers. */
   def gtiffSourceSql(spark: SparkSession): DataFrame = {
     Fixtures.writeScenesMultiband(NScenes)
-    spark.read.format("gtiff").load(Fixtures.dir.toString)
+    spark.read.format("raster").load(Fixtures.dir.toString)
+      .where(col("uri").endsWith(".tif"))
       .where(col("uri").rlike("/scene[0-3]-msi\\.tif$") && col("band") === 2 &&
         col("x") < 48 && col("y") >= 8 && col("value") =!= 0)
       .groupBy("uri", "band")
@@ -564,7 +569,7 @@ private[rasterops] trait RasterLoadQueries {
 
   /** S10 sink analog at scale: the fused cube exported as per-tile
     * georeferenced COGs (executor-side, zero-shuffle, no driver
-    * assembly), then read BACK through the gtiff DSv2 table — the full
+    * assembly), then read BACK through the `raster` DSv2 table — the full
     * write-then-SQL raster lifecycle. */
   def cogExport(spark: SparkSession): DataFrame = {
     val (items, schemas) = parsed(spark)
@@ -573,7 +578,7 @@ private[rasterops] trait RasterLoadQueries {
     val out = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), "graft_cog_export").toString
     res.exportCogTiles(out)
-    spark.read.format("gtiff").load(out)
+    spark.read.format("raster").load(out)
       .where(col("value") =!= coalesce(col("nodata"), lit(Double.NaN)))
       .withColumn("band", regexp_extract(col("uri"), "([a-z]+)_t\\d", 1))
       .groupBy("band")

@@ -1,19 +1,17 @@
 package graft.sources
 
-import graft.raster.Grb
+import graft.raster.RasterFormat
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The shared DSv2 scan skeleton of the pixel-table sources (`grb`,
-  * `gtiff`, `raster`): ONE copy of the prune-only filter pushdown, the
-  * row-band partition planner, and the column-pruned row-emit loop.
-  * Per-format behavior (header/window/band-count) lives behind
-  * [[PixelFormat]]; each source contributes only its path resolution
-  * and format routing.
+/** The DSv2 scan of the `raster` pixel table: the prune-only filter
+  * pushdown, the row-band partition planner, and the column-pruned
+  * row-emit loop. Per-format behavior (header/window/band-count) comes
+  * from [[RasterFormat.of]] for each uri.
   *
   * Pushdown design (SURVEY §4 "COG table"):
   *  - **ROI pushdown** (`SupportsPushDownFilters`): x/y comparison
@@ -26,21 +24,27 @@ import org.apache.spark.unsafe.types.UTF8String
   *    drop whole files (and container subdatasets) at build time;
   *  - **column pruning** (`SupportsPushDownRequiredColumns`): world
   *    coordinates are computed only when projected;
-  *  - **parallel scan**: files split into ~[[GrbTable.TargetPartitionPx]]
+  *  - **parallel scan**: files split into ~[[PixelScan.TargetPartitionPx]]
   *    row-band partitions, so scan parallelism tracks pixel volume, not
   *    file count.
   *
   * Pushed filters are also returned as residual — Spark re-checks them
   * (parquet row-group semantics: pushdown is a prune, not a correctness
   * contract). */
-private[sources] trait PixelFormat extends Serializable {
-  /** Number of addressable planes; sources without a `band` column
-    * return 1 and never see band predicates (the column doesn't exist
-    * in their schema, so Catalyst can't push one). */
-  def numBands(uri: String): Int
-  def header(uri: String, band: Int): Grb.Header
-  def window(uri: String, x0: Int, y0: Int, w: Int, h: Int,
-             band: Int): Array[Double]
+object PixelScan {
+  /** Row shape: one row per pixel per addressed band. */
+  val Schema: StructType = StructType(Seq(
+    StructField("uri", StringType, nullable = false),
+    StructField("band", IntegerType, nullable = false),
+    StructField("x", IntegerType, nullable = false),
+    StructField("y", IntegerType, nullable = false),
+    StructField("wx", DoubleType, nullable = false),
+    StructField("wy", DoubleType, nullable = false),
+    StructField("value", DoubleType, nullable = false),
+    StructField("nodata", DoubleType, nullable = true)))
+
+  /** ~pixels per input partition (row-band split granularity). */
+  val TargetPartitionPx: Long = 4L << 20
 }
 
 /** Pixel-coordinate ROI accumulated from pushed filters. */
@@ -56,9 +60,7 @@ object PixelBounds {
     PixelBounds(Int.MinValue, Int.MaxValue, Int.MinValue, Int.MaxValue)
 }
 
-private[sources] class PixelScanBuilder(
-    scanName: String, uris: Seq[String], schema: StructType,
-    fmt: PixelFormat)
+private[sources] class PixelScanBuilder(uris: Seq[String])
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
@@ -66,7 +68,7 @@ private[sources] class PixelScanBuilder(
   private var uriPred: String => Boolean = _ => true
   private var bandPred: Int => Boolean = _ => true
   private var pushed = Array.empty[Filter]
-  private var required: StructType = schema
+  private var required: StructType = PixelScan.Schema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     def narrow(f: Filter): Boolean = f match {
@@ -109,18 +111,17 @@ private[sources] class PixelScanBuilder(
     required = requiredSchema
 
   override def build(): Scan =
-    new PixelScan(scanName, uris.filter(uriPred), bounds, bandPred,
-      required, fmt)
+    new PixelScan(uris.filter(uriPred), bounds, bandPred, required)
 }
 
 private[sources] class PixelScan(
-    scanName: String, uris: Seq[String], bounds: PixelBounds,
-    bandPred: Int => Boolean, required: StructType, fmt: PixelFormat)
+    uris: Seq[String], bounds: PixelBounds,
+    bandPred: Int => Boolean, required: StructType)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"$scanName window=[x ${bounds.xMin}..${bounds.xMax}, y ${bounds.yMin}..${bounds.yMax}] " +
+    s"RasterAnyScan window=[x ${bounds.xMin}..${bounds.xMax}, y ${bounds.yMin}..${bounds.yMax}] " +
       s"columns=${required.fieldNames.mkString(",")}"
 
   /** One partition per (surviving band, row-band of the pushed window)
@@ -131,13 +132,14 @@ private[sources] class PixelScan(
     * table spans thousands of files. */
   override def planInputPartitions(): Array[InputPartition] = {
     PlanUtil.parMap(uris) { u =>
+      val fmt = RasterFormat.of(u)
       val hd = fmt.header(u, 1)
       val nBands = fmt.numBands(u)
       val b = bounds.clampTo(hd.width, hd.height)
       if (b.isEmpty) Seq.empty
       else {
         val w = b.xMax - b.xMin + 1
-        val rowsPer = math.max(1, (GrbTable.TargetPartitionPx / math.max(1, w)).toInt)
+        val rowsPer = math.max(1, (PixelScan.TargetPartitionPx / math.max(1, w)).toInt)
         for {
           band <- 1 to nBands if bandPred(band)
           y0 <- b.yMin to b.yMax by rowsPer
@@ -150,28 +152,28 @@ private[sources] class PixelScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PixelReaderFactory(required.fieldNames, fmt)
+    new PixelReaderFactory(required.fieldNames)
 }
 
 final case class PixelInputPartition(uri: String, band: Int,
                                      x0: Int, y0: Int,
                                      w: Int, h: Int) extends InputPartition
 
-private[sources] class PixelReaderFactory(columns: Array[String],
-                                          fmt: PixelFormat)
+private[sources] class PixelReaderFactory(columns: Array[String])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new PixelPartitionReader(
-      partition.asInstanceOf[PixelInputPartition], columns, fmt)
+      partition.asInstanceOf[PixelInputPartition], columns)
 }
 
 /** Streams the partition's window as pixel rows, materializing only the
   * pruned columns; the decode touches only the window (single span /
   * window-intersecting tiles). */
 private[sources] class PixelPartitionReader(
-    part: PixelInputPartition, columns: Array[String], fmt: PixelFormat)
+    part: PixelInputPartition, columns: Array[String])
     extends PartitionReader[InternalRow] {
 
+  private val fmt = RasterFormat.of(part.uri)
   private val header = fmt.header(part.uri, part.band)
   private val pixels =
     fmt.window(part.uri, part.x0, part.y0, part.w, part.h, part.band)
@@ -183,7 +185,6 @@ private[sources] class PixelPartitionReader(
   private val row = new GenericInternalRow(columns.length)
   // column dispatch hoisted out of the pixel loop: one int code per
   // projected column, and one shared transform eval when wx/wy project.
-  // Band-less sources (grb) simply never project a "band" column.
   private val codes: Array[Int] = columns.map {
     case "uri" => 0; case "band" => 1; case "x" => 2; case "y" => 3
     case "wx" => 4; case "wy" => 5; case "value" => 6; case "nodata" => 7

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.raster.{Grb, NetCdf, Tiff, Zarr}
+import graft.raster.RasterFormat
 import java.util
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -9,73 +9,27 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** Unified DataSource V2 table over EVERY raster container the engine
-  * reads (`spark.read.format("raster")`): GeoTIFF, GRB, zarr v2 stores
-  * and netCDF classic files share one pixel-table surface. Container
-  * formats are expanded at resolve time — each zarr variable / netCDF
-  * variable becomes its own `uri#variable` row source, so `uri` LIKE
-  * predicates select subdatasets the same way they select files.
+/** DataSource V2 table over EVERY raster container the engine reads
+  * (`spark.read.format("raster")`) — the "COG table" of SURVEY §4: GRB,
+  * GeoTIFF, zarr v2 stores and netCDF classic files share one pixel-table
+  * surface. Container formats are expanded at resolve time — each zarr
+  * variable / netCDF variable becomes its own `uri#variable` row source,
+  * so `uri` predicates select subdatasets the same way they select files.
   *
   * All scan machinery (ROI/band/uri pushdown, row-band partition
-  * planning, column-pruned emit) is the shared [[PixelScan]] skeleton;
-  * the per-format work is confined to [[AnyFormat]].
+  * planning, column-pruned emit) is [[PixelScan]]; the per-format work is
+  * [[RasterFormat]]'s.
   *
-  * Row shape: `(uri, band, x, y, wx, wy, value, nodata)`.
+  * Row shape: `(uri, band, x, y, wx, wy, value, nodata)` — one row per
+  * pixel per addressed band, joinable with everything in the engine.
   */
 class RasterAnyDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "raster"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GTiffTable.Schema // shared pixel-table schema
+    PixelScan.Schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
     new RasterAnyTable(RasterAnyTable.resolvePaths(properties.get("path")))
-}
-
-/** Format routing: the per-format calls the generic scan needs.
-  * Extensions are decided on the path part (before any `#fragment`). */
-private[sources] object AnyFormat extends PixelFormat {
-  private val Known = Seq(".tif", ".tiff", ".grb", ".zarr", ".nc")
-
-  def isRaster(path: String): Boolean = {
-    val p = path.toLowerCase
-    Known.exists(p.endsWith)
-  }
-
-  private def pathPart(uri: String): String = {
-    val p = uri.takeWhile(_ != '#').toLowerCase
-    p
-  }
-
-  /** Container → one uri per subdataset; plain files pass through. */
-  def expand(path: String): Seq[String] = pathPart(path) match {
-    case p if p.endsWith(".zarr") && !path.contains("#") =>
-      Zarr.variables(path).map(v => s"$path#$v")
-    case p if p.endsWith(".nc") && !path.contains("#") =>
-      NetCdf.variables(path).map(v => s"$path#$v")
-    case _ => Seq(path)
-  }
-
-  override def numBands(uri: String): Int = pathPart(uri) match {
-    case p if p.endsWith(".tif") || p.endsWith(".tiff") => Tiff.numBands(uri)
-    case _ => 1 // grb planes and zarr/nc variables are single-band
-  }
-
-  override def header(uri: String, band: Int): Grb.Header = pathPart(uri) match {
-    case p if p.endsWith(".tif") || p.endsWith(".tiff") =>
-      Tiff.readHeader(uri, band)
-    case p if p.endsWith(".zarr") => Zarr.readHeader(uri)
-    case p if p.endsWith(".nc") => NetCdf.readHeader(uri)
-    case _ => Grb.readHeader(uri)
-  }
-
-  override def window(uri: String, x0: Int, y0: Int, w: Int, h: Int,
-                      band: Int): Array[Double] = pathPart(uri) match {
-    case p if p.endsWith(".tif") || p.endsWith(".tiff") =>
-      Tiff.readWindow(uri, x0, y0, w, h, band)
-    case p if p.endsWith(".zarr") => Zarr.readWindow(uri, x0, y0, w, h)
-    case p if p.endsWith(".nc") => NetCdf.readWindow(uri, x0, y0, w, h)
-    case _ => Grb.readWindow(uri, x0, y0, w, h)._2
-  }
 }
 
 object RasterAnyTable {
@@ -86,20 +40,20 @@ object RasterAnyTable {
       "raster source requires exactly one path (file, store or directory)")
     val f = new java.io.File(path.stripPrefix("file:").takeWhile(_ != '#'))
     val frag = path.dropWhile(_ != '#') // '#variable' or empty
-    if (f.isDirectory && !f.getName.endsWith(".zarr")) {
+    if (f.isDirectory && RasterFormat.of(f.getPath) != RasterFormat.ZarrFormat) {
       val listed = f.listFiles()
       require(listed != null, s"cannot list directory: ${f.getPath}")
-      listed.toSeq.map(_.getPath).filter(AnyFormat.isRaster)
-        .sorted.flatMap(AnyFormat.expand)
-    } else AnyFormat.expand(f.getPath + frag)
+      listed.toSeq.map(_.getPath).filter(RasterFormat.isRaster)
+        .sorted.flatMap(p => RasterFormat.of(p).expand(p))
+    } else RasterFormat.of(f.getPath).expand(f.getPath + frag)
   }
 }
 
 class RasterAnyTable(uris: Seq[String]) extends Table with SupportsRead {
   override def name(): String = s"raster(${uris.mkString(",")})"
-  override def schema(): StructType = GTiffTable.Schema
+  override def schema(): StructType = PixelScan.Schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new PixelScanBuilder("RasterAnyScan", uris, GTiffTable.Schema, AnyFormat)
+    new PixelScanBuilder(uris)
 }

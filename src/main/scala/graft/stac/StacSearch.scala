@@ -112,7 +112,7 @@ object StacSearch {
     if (!base.isObject || !over.isObject) over
     else {
       val out = base.deepCopy[ObjectNode]()
-      over.fields().asScala.foreach { e =>
+      over.properties().asScala.foreach { e =>
         val existing = out.get(e.getKey)
         if (existing != null && existing.isObject && e.getValue.isObject)
           out.set[JsonNode](e.getKey, deepMerge(existing, e.getValue))

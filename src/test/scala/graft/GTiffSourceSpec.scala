@@ -5,9 +5,9 @@ import graft.raster.Tiff
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
-/** DataSource V2 GeoTIFF table: SQL over pixels of real TIFF containers,
-  * with ROI + band pruning at plan time (multi-band stacks scan only the
-  * addressed plane). */
+/** The `raster` DataSource V2 table over GeoTIFF: SQL over pixels of real
+  * TIFF containers, with ROI + band pruning at plan time (multi-band
+  * stacks scan only the addressed plane). */
 class GTiffSourceSpec extends AnyFunSuite {
 
   private lazy val spark = GraftSpark.spark
@@ -40,7 +40,7 @@ class GTiffSourceSpec extends AnyFunSuite {
 
   test("full scan: rows = pixels x bands; values and world coords exact") {
     val path = writeMulti("m3", 40, 20, nBands = 3)
-    val df = spark.read.format("gtiff").load(path)
+    val df = spark.read.format("raster").load(path)
     assert(df.count() == 40L * 20 * 3)
     val r = df.where("x = 3 AND y = 2 AND band = 2")
       .selectExpr("value", "wx", "wy").head()
@@ -51,7 +51,7 @@ class GTiffSourceSpec extends AnyFunSuite {
 
   test("band = k prunes the other planes' partitions at plan time") {
     val path = writeMulti("m5", 64, 32, nBands = 5)
-    val df = spark.read.format("gtiff").load(path)
+    val df = spark.read.format("raster").load(path)
     val all = partitions(df)
     val one = partitions(df.where("band = 4"))
     assert(all == 5 * one, s"all=$all one=$one")
@@ -62,7 +62,7 @@ class GTiffSourceSpec extends AnyFunSuite {
 
   test("ROI filters prune row-band partitions; result stays exact") {
     val path = writeSingle("big", 2048, 10000)
-    val df = spark.read.format("gtiff").load(path)
+    val df = spark.read.format("raster").load(path)
     val full = partitions(df)
     val pruned = partitions(df.where("y >= 100 AND y < 200"))
     assert(full > 1, s"expected multiple partitions, got $full")
@@ -82,10 +82,10 @@ class GTiffSourceSpec extends AnyFunSuite {
     assert(Tiff.readHeader(s"$path#mask").geobox == gbox(w, h))
     assert(Tiff.readWindow(s"$path#mask", 0, 0, 1, 1).head == 200.0)
     // ...including the DSv2 source
-    val df = spark.read.format("gtiff").load(s"$path#sst")
+    val df = spark.read.format("raster").load(s"$path#sst")
     assert(df.count() == w.toLong * h)
     assert(df.selectExpr("min(value)").head().getDouble(0) == 100.0)
-    val df2 = spark.read.format("gtiff").load(s"$path#mask")
+    val df2 = spark.read.format("raster").load(s"$path#mask")
     assert(df2.selectExpr("min(value)").head().getDouble(0) == 200.0)
   }
 
@@ -122,7 +122,7 @@ class GTiffSourceSpec extends AnyFunSuite {
   test("uri pruning + per-file SQL aggregate over a directory") {
     writeSingle("d1", 32, 32)
     writeSingle("d2", 32, 16)
-    val dirDf = spark.read.format("gtiff").load(tmp)
+    val dirDf = spark.read.format("raster").load(tmp)
     val pruned = partitions(dirDf.where(s"uri = '$tmp/d1.tif'"))
     assert(pruned == 1)
     dirDf.createOrReplaceTempView("gtiff_px")

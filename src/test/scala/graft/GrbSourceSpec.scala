@@ -5,8 +5,8 @@ import graft.raster.Grb
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
-/** DataSource V2 GRB table: SQL over pixels, ROI pushdown pruning
-  * partitions at plan time, column pruning. */
+/** The `raster` DataSource V2 table over GRB files: SQL over pixels, ROI
+  * pushdown pruning partitions at plan time, column pruning. */
 class GrbSourceSpec extends AnyFunSuite {
 
   private lazy val spark = GraftSpark.spark
@@ -25,7 +25,7 @@ class GrbSourceSpec extends AnyFunSuite {
 
   test("full scan row count and values match the raster") {
     val path = writeRaster("a", 100, 40)
-    val df = spark.read.format("grb").load(path)
+    val df = spark.read.format("raster").load(path)
     assert(df.count() == 100L * 40)
     val r = df.where("x = 3 AND y = 2").selectExpr("value", "wx", "wy").head()
     assert(r.getDouble(0) == (2 * 100 + 3) % 1000)
@@ -36,7 +36,7 @@ class GrbSourceSpec extends AnyFunSuite {
   test("ROI filters prune input partitions at plan time") {
     // 2048 x 10000 = 20 Mpx -> 5 row-band partitions at the 4 Mpx target
     val path = writeRaster("b", 2048, 10000)
-    val df = spark.read.format("grb").load(path)
+    val df = spark.read.format("raster").load(path)
     def partitions(q: org.apache.spark.sql.DataFrame): Int =
       q.queryExecution.executedPlan.collect {
         case s: BatchScanExec => s.partitions.size
@@ -52,7 +52,7 @@ class GrbSourceSpec extends AnyFunSuite {
   test("uri filters prune files at plan time") {
     writeRaster("p1", 16, 16)
     writeRaster("p2", 16, 16)
-    val df = spark.read.format("grb").load(tmp)
+    val df = spark.read.format("raster").load(tmp)
     def partitions(q: org.apache.spark.sql.DataFrame): Int =
       q.queryExecution.executedPlan.collect {
         case s: BatchScanExec => s.partitions.size
@@ -66,7 +66,7 @@ class GrbSourceSpec extends AnyFunSuite {
   test("directory scan unions all rasters; SQL aggregates per file") {
     writeRaster("c1", 32, 32)
     writeRaster("c2", 32, 16)
-    val dirDf = spark.read.format("grb").load(tmp)
+    val dirDf = spark.read.format("raster").load(tmp)
     dirDf.createOrReplaceTempView("grb_px")
     val rows = spark.sql(
       """SELECT uri, COUNT(*) AS n, ROUND(AVG(value), 2) AS mean

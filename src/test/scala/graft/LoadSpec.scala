@@ -450,7 +450,7 @@ class LoadSpec extends AnyFunSuite {
     // formats without container support reject, never read the base image
     val grbWithSub = items.head.bands("red").copy(subdataset = Some("red"))
     assertThrows[IllegalArgumentException] {
-      graft.raster.GrbReader.read(grbWithSub,
+      graft.raster.AutoReader.read(grbWithSub,
         graft.model.RasterLoadParams(failOnError = true),
         Fixtures.sceneGeobox(0), 0.0)
     }
@@ -601,8 +601,8 @@ class LoadSpec extends AnyFunSuite {
       val got = graft.raster.Tiff.readWindow(path, 0, 0, w, h).toSeq
       assert(got == expect, s"pixel mismatch in $path")
     }
-    // and the directory is a live SQL table through the gtiff source
-    val n = spark.read.format("gtiff").load(out).count()
+    // and the directory is a live SQL table through the raster source
+    val n = spark.read.format("raster").load(out).count()
     assert(n == rows.map(r =>
       r.getAs[Int]("width").toLong * r.getAs[Int]("height")).sum)
   }
@@ -617,7 +617,7 @@ class LoadSpec extends AnyFunSuite {
     }
     val res = Load.load(spark, broken, schemas, bands = Seq("red"),
       groupby = "id", chunks = 64,
-      reader = graft.raster.GrbReader)
+      reader = graft.raster.AutoReader)
     // strict mode: the job must fail
     assertThrows[org.apache.spark.SparkException] {
       res.tiles.collect()

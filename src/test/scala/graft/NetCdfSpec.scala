@@ -1,7 +1,7 @@
 package graft
 
 import graft.geo._
-import graft.raster.{Fixtures, Grb, NetCdf, NetCdfReader}
+import graft.raster.{AutoReader, Fixtures, Grb, NetCdf}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** netCDF classic (CDF-1) container I/O: header parse, windowed ranged
@@ -126,13 +126,13 @@ class NetCdfSpec extends AnyFunSuite {
     val px = ramp(w, h)
     NetCdf.write(path, Seq("b" -> px), g, "int16", Some(0.0))
     val src = graft.model.RasterSource(uri = path, subdataset = Some("b"))
-    val Some((roi, out)) = NetCdfReader.read(src,
+    val Some((roi, out)) = AutoReader.read(src,
       graft.model.RasterLoadParams(failOnError = true), g, 0.0)
     assert(roi.w == w && roi.h == h)
     assert(out.toSeq == px.toSeq)
     // 2-D variables are single-band; band 2 must fail loudly
     assertThrows[IllegalArgumentException] {
-      NetCdfReader.read(src.copy(band = 2),
+      AutoReader.read(src.copy(band = 2),
         graft.model.RasterLoadParams(failOnError = true), g, 0.0)
     }
   }

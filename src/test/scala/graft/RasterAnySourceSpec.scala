@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Unified `raster` DataSource V2 table: one pixel-table surface over
   * GeoTIFF + GRB + zarr + netCDF mixes, containers expanded to
-  * `uri#variable` sources, with the gtiff/grb pushdown semantics. */
+  * `uri#variable` sources, with ROI/band/uri pushdown. */
 class RasterAnySourceSpec extends AnyFunSuite {
 
   private lazy val spark = GraftSpark.spark
@@ -73,6 +73,16 @@ class RasterAnySourceSpec extends AnyFunSuite {
     assert(r.getDouble(1) == 500000 + 3.5 * 10)
     assert(r.getDouble(2) == 8000000 - 2.5 * 10)
     assert(df.where("y >= 10 AND y < 20").count() == w.toLong * 10)
+  }
+
+  test("an upper-case .ZARR store path loads as a store, not a directory") {
+    val store = s"$tmp/upper/S.ZARR" // own dir: `dir` lists tmp itself
+    Zarr.write(store, "red", red, gbox(w, h), "uint16", Some(0.0))
+    Zarr.write(store, "nir", nir, gbox(w, h), "uint16", Some(0.0))
+    val df = spark.read.format("raster").load(store)
+    assert(df.select("uri").distinct().collect().map(_.getString(0)).toSet ==
+      Set(s"$store#red", s"$store#nir"))
+    assert(df.count() == 2L * w * h)
   }
 
   test("multi-band TIFF through the unified source: band pruning holds") {

@@ -54,11 +54,11 @@ class RasterSpec extends AnyFunSuite {
     val src = RasterSource(path, geobox = None)
     val cfg = RasterLoadParams()
     // identical grid
-    val Some((roi, out)) = GrbReader.read(src, cfg, g, 0.0)
+    val Some((roi, out)) = AutoReader.read(src, cfg, g, 0.0)
     assert(roi == Roi(0, 0, 64, 32) && out.toSeq == px.toSeq)
     // dst shifted 16px east + 8px down, same res -> partial overlap
     val dst2 = gbox(64, 32, ox = 500000 + 16 * 10, oy = 8000000 - 8 * 10)
-    val Some((roi2, out2)) = GrbReader.read(src, cfg, dst2, 0.0)
+    val Some((roi2, out2)) = AutoReader.read(src, cfg, dst2, 0.0)
     assert(roi2 == Roi(0, 0, 48, 24))
     assert(out2(0) == px(8 * 64 + 16))
   }
@@ -69,9 +69,9 @@ class RasterSpec extends AnyFunSuite {
     val path = s"$tmp/nodata.grb"
     Grb.write(path, px, g, "uint16", Some(0))
     val src = RasterSource(path)
-    val Some((_, remap)) = GrbReader.read(src, RasterLoadParams(), g, -99.0)
+    val Some((_, remap)) = AutoReader.read(src, RasterLoadParams(), g, -99.0)
     assert(remap.take(4).forall(_ == -99.0) && remap(4) == 7.0)
-    val Some((_, asNan)) = GrbReader.read(src, RasterLoadParams(), g, Double.NaN)
+    val Some((_, asNan)) = AutoReader.read(src, RasterLoadParams(), g, Double.NaN)
     assert(asNan.take(4).forall(_.isNaN) && asNan(4) == 7.0)
   }
 
@@ -82,13 +82,13 @@ class RasterSpec extends AnyFunSuite {
     Grb.writeWithOverviews(path, px, g, "float32", None, shrinks = Seq(2, 4))
     val src = RasterSource(path)
     val dst = GeoBox(32, 32, Affine.grid(500000, 8000000, 20, -20), crs)
-    val Some((roi, out)) = GrbReader.read(src, RasterLoadParams(), dst, Double.NaN)
+    val Some((roi, out)) = AutoReader.read(src, RasterLoadParams(), dst, Double.NaN)
     assert(roi == Roi(0, 0, 32, 32))
     // overview level 2 holds px[2y][2x]; nearest sampling of it at dst
     // pixel centers must reproduce those exact values
     assert(out(0) == 0.0 && out(1) == 2.0 && out(32) == 2.0 * 64)
     // disabling overviews samples the base image instead
-    val Some((_, base)) = GrbReader.read(src,
+    val Some((_, base)) = AutoReader.read(src,
       RasterLoadParams(useOverviews = false), dst, Double.NaN)
     // dst(1,0) center = world(500030, 7999990) -> base px (3,1) -> 64+3
     assert(base(1) == 67.0)
@@ -103,7 +103,7 @@ class RasterSpec extends AnyFunSuite {
     val fp = g.footprint(Crs.WebMercator)
     val dst = GeoBox.fromBBox(fp.bbox, 12, Crs.WebMercator)
     val src = RasterSource(path)
-    val Some((_, out)) = GrbReader.read(src, RasterLoadParams(), dst, Double.NaN)
+    val Some((_, out)) = AutoReader.read(src, RasterLoadParams(), dst, Double.NaN)
     val valid = out.filterNot(_.isNaN)
     assert(valid.nonEmpty)
     // column index increases west->east in both CRSs; check monotone trend
@@ -112,11 +112,32 @@ class RasterSpec extends AnyFunSuite {
 
   test("permissive mode returns None on missing file; strict throws") {
     val src = RasterSource(s"$tmp/definitely-missing.grb")
-    assert(GrbReader.read(src, RasterLoadParams(failOnError = false),
+    assert(AutoReader.read(src, RasterLoadParams(failOnError = false),
       gbox(4, 4), 0.0).isEmpty)
     assertThrows[Exception] {
-      GrbReader.read(src, RasterLoadParams(failOnError = true), gbox(4, 4), 0.0)
+      AutoReader.read(src, RasterLoadParams(failOnError = true), gbox(4, 4), 0.0)
     }
+  }
+
+  test("strict read of a GRB with bad magic names the file") {
+    val path = s"$tmp/badmagic.grb"
+    java.nio.file.Files.write(java.nio.file.Paths.get(path), new Array[Byte](64))
+    val e = intercept[IllegalArgumentException] {
+      AutoReader.read(RasterSource(path), RasterLoadParams(failOnError = true),
+        gbox(4, 4), 0.0)
+    }
+    assert(e.getMessage.contains(path), e.getMessage)
+  }
+
+  test("RasterFormat.of: one case-folded extension switch, GRB by default") {
+    import RasterFormat._
+    val cases = Seq(
+      "d/x.tif" -> TiffFormat, "d/X.TIF" -> TiffFormat, "d/x.tiff" -> TiffFormat,
+      "d/x.grb" -> GrbFormat, "d/x.zarr#v" -> ZarrFormat,
+      "d/x.nc#v" -> NetCdfFormat, "d/x.dat" -> GrbFormat)
+    for ((uri, fmt) <- cases) assert(RasterFormat.of(uri) == fmt, uri)
+    // directory listings keep only the recognised extensions
+    assert(RasterFormat.isRaster("d/S.ZARR") && !RasterFormat.isRaster("d/x.dat"))
   }
 
   test("fuse: first valid pixel wins, later sources fill holes only (A2)") {
@@ -129,14 +150,14 @@ class RasterSpec extends AnyFunSuite {
     Grb.write(s"$tmp/fb.grb", pb, g, "uint16", Some(0))
     val (fused, valid) = Fuse.fill2dSlice(
       Seq(RasterSource(s"$tmp/fa.grb"), RasterSource(s"$tmp/fb.grb")),
-      g, RasterLoadParams(), GrbReader, 0.0)
+      g, RasterLoadParams(), AutoReader, 0.0)
     assert(valid == 32)
     for (y <- 0 until 4; x <- 0 until 8)
       assert(fused(y * 8 + x) == (if (x < 4) 1.0 else 2.0))
     // order swapped: B first -> everything 2
     val (fused2, _) = Fuse.fill2dSlice(
       Seq(RasterSource(s"$tmp/fb.grb"), RasterSource(s"$tmp/fa.grb")),
-      g, RasterLoadParams(), GrbReader, 0.0)
+      g, RasterLoadParams(), AutoReader, 0.0)
     assert(fused2.forall(_ == 2.0))
   }
 
@@ -149,7 +170,7 @@ class RasterSpec extends AnyFunSuite {
     val px = ramp(4, 4, (x, y) => 10.0 + y * 4 + x)
     Grb.write(s"$tmp/off.grb", px, srcG, "uint16", Some(0))
     val out = Array.fill(8 * 4)(0.0)
-    val filled = GrbReader.readInto(RasterSource(s"$tmp/off.grb"),
+    val filled = AutoReader.readInto(RasterSource(s"$tmp/off.grb"),
       RasterLoadParams(), dst, 0.0, out)
     assert(filled == 8) // 4 wide x 2 tall overlap
     for (y <- 0 until 4; x <- 0 until 8) {
@@ -158,7 +179,7 @@ class RasterSpec extends AnyFunSuite {
       assert(out(y * 8 + x) == expect, s"($x,$y)")
     }
     // equivalence with the two-pass read() path
-    val (roi, pix) = GrbReader.read(RasterSource(s"$tmp/off.grb"),
+    val (roi, pix) = AutoReader.read(RasterSource(s"$tmp/off.grb"),
       RasterLoadParams(), dst, 0.0).get
     for (y <- 0 until roi.h; x <- 0 until roi.w)
       assert(pix(y * roi.w + x) == out((roi.y0 + y) * 8 + (roi.x0 + x)))
@@ -169,7 +190,7 @@ class RasterSpec extends AnyFunSuite {
     val px = Array(1.0, Double.NaN, 3.0, Double.NaN, 5.0, 6.0, Double.NaN, 8.0)
     Grb.write(s"$tmp/nansrc.grb", px, g, "float32", None) // no nodata: NaN-only
     val out = Array.fill(8)(Double.NaN)
-    val filled = GrbReader.readInto(RasterSource(s"$tmp/nansrc.grb"),
+    val filled = AutoReader.readInto(RasterSource(s"$tmp/nansrc.grb"),
       RasterLoadParams(), g, Double.NaN, out)
     assert(filled == 5)
     assert(out.toSeq.zip(px.toSeq).forall { case (o, p) =>
@@ -185,11 +206,19 @@ class RasterSpec extends AnyFunSuite {
     val cfg = RasterLoadParams()
     val (fused, valid) = Fuse.fill2dSlice(
       Seq(RasterSource(s"$tmp/eqa.grb"), RasterSource(s"$tmp/eqb.grb")),
-      g, cfg, GrbReader, 0.0) // dst nodata 0 collides with A's valid 0
+      g, cfg, AutoReader, 0.0) // dst nodata 0 collides with A's valid 0
     // A's 0 is written (reference paste semantics) but indistinguishable
     // from a hole, so B refills it with 9; no double-count in validCount
     assert(fused.toSeq == Seq(7.0, 9.0, 7.0, 7.0))
     assert(valid == 4)
+    // TIFF sources take the same fused paste path, with the same rule
+    Tiff.write(s"$tmp/eqa.tif", Array(7.0, 0.0, 7.0, 7.0), g, "uint16", None)
+    Tiff.write(s"$tmp/eqb.tif", Array(9.0, 9.0, 9.0, 9.0), g, "uint16", None)
+    val (fusedT, validT) = Fuse.fill2dSlice(
+      Seq(RasterSource(s"$tmp/eqa.tif"), RasterSource(s"$tmp/eqb.tif")),
+      g, cfg, AutoReader, 0.0)
+    assert(fusedT.toSeq == Seq(7.0, 9.0, 7.0, 7.0))
+    assert(validT == 4)
   }
   test("warp resampling kernels: bilinear interpolates, average pools (F16)") {
     // 2x2 checkerboard of 0/100 at res 10, read at 2x coarser (res 20):
@@ -198,14 +227,14 @@ class RasterSpec extends AnyFunSuite {
     Grb.write(s"$tmp/rs.grb", Array(0.0, 100.0, 100.0, 0.0), g, "float64", None)
     val src = RasterSource(s"$tmp/rs.grb")
     val dst = GeoBox(1, 1, Affine.grid(500000, 8000000, 20, -20), crs)
-    val Some((_, near)) = GrbReader.read(src,
+    val Some((_, near)) = AutoReader.read(src,
       RasterLoadParams(useOverviews = false), dst, Double.NaN)
     assert(near(0) == 0.0 || near(0) == 100.0)
-    val Some((_, bil)) = GrbReader.read(src,
+    val Some((_, bil)) = AutoReader.read(src,
       RasterLoadParams(resampling = "bilinear", useOverviews = false),
       dst, Double.NaN)
     assert(bil(0) == 50.0, s"bilinear at the center of 0/100/100/0 = 50, got ${bil(0)}")
-    val Some((_, avg)) = GrbReader.read(src,
+    val Some((_, avg)) = AutoReader.read(src,
       RasterLoadParams(resampling = "average", useOverviews = false),
       dst, Double.NaN)
     assert(avg(0) == 50.0, s"average of 0/100/100/0 = 50, got ${avg(0)}")
@@ -216,7 +245,7 @@ class RasterSpec extends AnyFunSuite {
     // one nodata corner: bilinear at the center averages the other three
     Grb.write(s"$tmp/rsn.grb", Array(0.0, 100.0, 100.0, -1.0), g, "float64", Some(-1.0))
     val dst = GeoBox(1, 1, Affine.grid(500000, 8000000, 20, -20), crs)
-    val Some((_, bil)) = GrbReader.read(RasterSource(s"$tmp/rsn.grb"),
+    val Some((_, bil)) = AutoReader.read(RasterSource(s"$tmp/rsn.grb"),
       RasterLoadParams(resampling = "bilinear", useOverviews = false),
       dst, Double.NaN)
     // equal weights at the center; renormalized over the 3 valid corners
@@ -229,7 +258,7 @@ class RasterSpec extends AnyFunSuite {
     Grb.write(s"$tmp/rsc.grb", Array.fill(64)(7.0), g, "float64", None)
     for (mode <- Seq("cubic", "lanczos")) {
       val dst = GeoBox(2, 2, Affine.grid(500015, 7999985, 15, -15), crs)
-      val Some((_, out)) = GrbReader.read(RasterSource(s"$tmp/rsc.grb"),
+      val Some((_, out)) = AutoReader.read(RasterSource(s"$tmp/rsc.grb"),
         RasterLoadParams(resampling = mode, useOverviews = false),
         dst, Double.NaN)
       out.foreach(v => assert(math.abs(v - 7.0) < 1e-9, s"$mode constant: $v"))
@@ -240,12 +269,12 @@ class RasterSpec extends AnyFunSuite {
     Grb.write(s"$tmp/rsl.grb", ramp, g, "float64", None)
     // dst 1x1 res 15 at (500020, 7999980): center -> src px (2.75, 2.75)
     val dst1 = GeoBox(1, 1, Affine.grid(500020, 7999980, 15, -15), crs)
-    val Some((_, cub)) = GrbReader.read(RasterSource(s"$tmp/rsl.grb"),
+    val Some((_, cub)) = AutoReader.read(RasterSource(s"$tmp/rsl.grb"),
       RasterLoadParams(resampling = "cubic", useOverviews = false),
       dst1, Double.NaN)
     assert(math.abs(cub(0) - 2.25) < 1e-9, s"cubic on ramp: ${cub(0)} != 2.25")
     // lanczos approximates the ramp closely (windowed sinc: not exact)
-    val Some((_, lcz)) = GrbReader.read(RasterSource(s"$tmp/rsl.grb"),
+    val Some((_, lcz)) = AutoReader.read(RasterSource(s"$tmp/rsl.grb"),
       RasterLoadParams(resampling = "lanczos", useOverviews = false),
       dst1, Double.NaN)
     assert(math.abs(lcz(0) - 2.25) < 0.1, s"lanczos on ramp: ${lcz(0)}")
@@ -256,7 +285,7 @@ class RasterSpec extends AnyFunSuite {
     // all-nodata source: kernel must emit dst nodata, not 0/NaN garbage
     Grb.write(s"$tmp/rsnd.grb", Array.fill(64)(-1.0), g, "float64", Some(-1.0))
     val dst = GeoBox(1, 1, Affine.grid(500020, 7999980, 15, -15), crs)
-    val Some((_, nd)) = GrbReader.read(RasterSource(s"$tmp/rsnd.grb"),
+    val Some((_, nd)) = AutoReader.read(RasterSource(s"$tmp/rsnd.grb"),
       RasterLoadParams(resampling = "cubic", useOverviews = false),
       dst, Double.NaN)
     assert(nd(0).isNaN, s"expected dst nodata, got ${nd(0)}")
@@ -277,7 +306,7 @@ class RasterSpec extends AnyFunSuite {
     val src = RasterSource(s"$tmp/rsp.grb")
     val dst = GeoBox(1, 1, Affine.grid(500000, 8000000, 20, -20), crs)
     def run(mode: String): Double =
-      GrbReader.read(src, RasterLoadParams(resampling = mode,
+      AutoReader.read(src, RasterLoadParams(resampling = mode,
         useOverviews = false), dst, Double.NaN).get._2(0)
     assert(run("min") == 0.0)
     assert(run("max") == 100.0)
@@ -295,7 +324,7 @@ class RasterSpec extends AnyFunSuite {
     val ramp = Array.tabulate(64)(i => (i % 8).toDouble)
     Grb.write(s"$tmp/rsbs.grb", ramp, g8, "float64", None)
     val dst1 = GeoBox(1, 1, Affine.grid(500020, 7999980, 15, -15), crs)
-    val Some((_, bs)) = GrbReader.read(RasterSource(s"$tmp/rsbs.grb"),
+    val Some((_, bs)) = AutoReader.read(RasterSource(s"$tmp/rsbs.grb"),
       RasterLoadParams(resampling = "cubic_spline", useOverviews = false),
       dst1, Double.NaN)
     assert(math.abs(bs(0) - 2.25) < 1e-9, s"cubic_spline on ramp: ${bs(0)}")
@@ -328,7 +357,7 @@ class RasterSpec extends AnyFunSuite {
     val px = ramp(8, 8, (x, y) => (y * 8 + x).toDouble)
     Grb.writeWithOverviews(s"$tmp/avovr.grb", px, g, "float64", None, shrinks = Seq(4))
     val dst = GeoBox(2, 2, Affine.grid(500000, 8000000, 40, -40), crs)
-    val Some((_, out)) = GrbReader.read(RasterSource(s"$tmp/avovr.grb"),
+    val Some((_, out)) = AutoReader.read(RasterSource(s"$tmp/avovr.grb"),
       RasterLoadParams(resampling = "average"), dst, Double.NaN)
     // ovr4 pixels are base px[4y][4x]: (0, 4, 32, 36); a 1-px average
     // window returns them exactly (the old base-shrink window blended all)
@@ -369,15 +398,15 @@ class RasterSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Tiff.readHeader(path, band = 4))
     intercept[IllegalArgumentException](
       Tiff.readWindow(path, 0, 0, 8, 8, band = 4))
-    // TiffReader honors RasterSource.band end-to-end
+    // the TIFF read path honors RasterSource.band end-to-end
     val cfg = RasterLoadParams()
-    val Some((_, out)) = TiffReader.read(RasterSource(path, band = 2), cfg, g, 0.0)
+    val Some((_, out)) = AutoReader.read(RasterSource(path, band = 2), cfg, g, 0.0)
     assert(out.toSeq == planes(1).toSeq)
     // GRB is single-band by format: band 2 must error, not read band 1
     val grb = s"$tmp/mb_guard.grb"
     Grb.write(grb, planes.head, g, "uint16", Some(0))
     intercept[IllegalArgumentException] {
-      GrbReader.read(RasterSource(grb, band = 2), cfg, g, 0.0)
+      AutoReader.read(RasterSource(grb, band = 2), cfg, g, 0.0)
     }
     // 5-band stack (no standard java.awt color space) also round-trips
     val p5 = (1 to 5).map(b =>
@@ -411,16 +440,16 @@ class RasterSpec extends AnyFunSuite {
     Tiff.write(tifPath, px, g, "uint16", Some(0.0))
     val cfg = RasterLoadParams()
     // paste: identical grid
-    val Some((rg, og)) = GrbReader.read(RasterSource(grbPath), cfg, g, 0.0)
-    val Some((rt, ot)) = TiffReader.read(RasterSource(tifPath), cfg, g, 0.0)
+    val Some((rg, og)) = AutoReader.read(RasterSource(grbPath), cfg, g, 0.0)
+    val Some((rt, ot)) = AutoReader.read(RasterSource(tifPath), cfg, g, 0.0)
     assert(rg == rt && og.toSeq == ot.toSeq)
     // warp: cross-CRS destination
     val dst = GeoBox.fromBBox(g.footprint(Crs.WebMercator).bbox, 12,
       Crs.WebMercator)
-    val Some((rg2, og2)) = GrbReader.read(RasterSource(grbPath), cfg, dst, 0.0)
-    val Some((rt2, ot2)) = TiffReader.read(RasterSource(tifPath), cfg, dst, 0.0)
+    val Some((rg2, og2)) = AutoReader.read(RasterSource(grbPath), cfg, dst, 0.0)
+    val Some((rt2, ot2)) = AutoReader.read(RasterSource(tifPath), cfg, dst, 0.0)
     assert(rg2 == rt2 && og2.toSeq == ot2.toSeq)
-    // AutoReader routes by extension to the same results
+    // and both equal the written pixels
     assert(AutoReader.read(RasterSource(tifPath), cfg, g, 0.0)
       .map(_._2.toSeq) == Some(px.toSeq))
     assert(AutoReader.read(RasterSource(grbPath), cfg, g, 0.0)
@@ -440,13 +469,13 @@ class RasterSpec extends AnyFunSuite {
     // level's own grid returns the decimation samples
     val dst = GeoBox(8, 8, Affine.grid(500000, 8000000, 80, -80), crs)
     val cfg = RasterLoadParams() // useOverviews = true
-    val Some((_, out)) = TiffReader.read(RasterSource(path), cfg, dst, -1.0)
+    val Some((_, out)) = AutoReader.read(RasterSource(path), cfg, dst, -1.0)
     // decimated level picks px(8y*64 + 8x)
     for (y <- 0 until 8; x <- 0 until 8)
       assert(out(y * 8 + x) == px(8 * y * 64 + 8 * x),
         s"overview pixel ($x,$y)")
     // with overviews disabled the base image feeds the same nearest warp
-    val Some((_, base)) = TiffReader.read(RasterSource(path),
+    val Some((_, base)) = AutoReader.read(RasterSource(path),
       cfg.copy(useOverviews = false), dst, -1.0)
     for (y <- 0 until 8; x <- 0 until 8)
       assert(base(y * 8 + x) == px((8 * y + 4) * 64 + (8 * x + 4)))
@@ -458,7 +487,7 @@ class RasterSpec extends AnyFunSuite {
     val path = s"$tmp/deep.grb"
     Grb.writeWithOverviews(path, px, g, "float64", None, shrinks = Seq(2, 4, 8))
     val dst = GeoBox(8, 8, Affine.grid(500000, 8000000, 80, -80), crs)
-    val Some((_, out)) = GrbReader.read(RasterSource(path),
+    val Some((_, out)) = AutoReader.read(RasterSource(path),
       RasterLoadParams(), dst, -1.0)
     for (y <- 0 until 8; x <- 0 until 8)
       assert(out(y * 8 + x) == px(8 * y * 64 + 8 * x))
@@ -475,11 +504,11 @@ class RasterSpec extends AnyFunSuite {
     // destination 2x2 at 4x coarser: each dst pixel pools a 4x4 window
     val dst = GeoBox(2, 2, Affine.grid(500000, 8000000, 40, -40), crs)
     val cfgMode = RasterLoadParams(resampling = "mode", useOverviews = false)
-    val Some((_, m)) = GrbReader.read(RasterSource(path), cfgMode, dst, -1.0)
+    val Some((_, m)) = AutoReader.read(RasterSource(path), cfgMode, dst, -1.0)
     assert(m.toSeq == Seq(1.0, 2.0, 1.0, 2.0))
     // sum: flux totals over the pooled window
     val cfgSum = RasterLoadParams(resampling = "sum", useOverviews = false)
-    val Some((_, s)) = GrbReader.read(RasterSource(path), cfgSum, dst, -1.0)
+    val Some((_, s)) = AutoReader.read(RasterSource(path), cfgSum, dst, -1.0)
     // upper-left: 15 ones + one 9 = 24; right quads: 16 twos = 32
     assert(s.toSeq == Seq(24.0, 32.0, 16.0, 32.0))
   }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.geo._
-import graft.raster.{Zarr, ZarrReader}
+import graft.raster.{AutoReader, Zarr}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Zarr v2 store I/O: chunked windowed reads, zlib chunks, fill_value
@@ -102,13 +102,13 @@ class ZarrSpec extends AnyFunSuite {
     val px = ramp(w, h)
     Zarr.write(store, "b", px, g, "uint16", Some(0.0))
     val src = graft.model.RasterSource(uri = store, subdataset = Some("b"))
-    val Some((roi, out)) = ZarrReader.read(src,
+    val Some((roi, out)) = AutoReader.read(src,
       graft.model.RasterLoadParams(failOnError = true), g, 0.0)
     assert(roi.w == w && roi.h == h)
     assert(out.toSeq == px.toSeq)
     // 2-D variables are single-band; band 2 must fail loudly
     assertThrows[IllegalArgumentException] {
-      ZarrReader.read(src.copy(band = 2),
+      AutoReader.read(src.copy(band = 2),
         graft.model.RasterLoadParams(failOnError = true), g, 0.0)
     }
   }
