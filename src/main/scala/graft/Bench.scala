@@ -4,7 +4,9 @@ package graft
   * `SPARK_GRAFT_SF_DIR`, forcing full execution through the `noop` sink
   * ([[Harness.timeNoop]]), and prints the full JSON line, then a compact
   * summary line last. A warmup query absorbs session/codegen init so
-  * per-query numbers reflect steady-state throughput.
+  * per-query numbers reflect steady-state throughput. Every
+  * [[BoundedCache]] is cleared after each query; the full line carries
+  * each query's cache `[hits, misses]`, the summary line their totals.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -40,30 +42,37 @@ object Bench {
 
     // session-level warmup (parquet footers, noop sink, shuffle service)
     once("q01_scan_filter")
+    BoundedCache.clearAll()
 
     // optional family scoping (e.g. '^(dedup|corpus|sim|text)_' for the
     // sf1 cap-proof run) — the driver contract (no filter set) is unchanged
     val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => filter.forall(_.findFirstIn(n).isDefined))
+    // release every cached artifact AFTER each query's timing loop: the
+    // warm run still fills the caches for the 3 timed runs, but each
+    // query pays its own builds, independent of suite order. Hits and
+    // misses cover the warm plus timed runs.
     val results = names.map { n =>
-      val r = n -> force(n)
-      // release per-query persisted intermediates (cusum's two-phase
-      // scan) AFTER the timing loop: the warm run still lands the
-      // persist for the 3 timed runs (protocol unchanged), but the
-      // pinned projection never competes with later queries' memory
-      graft.relational.Stats.releaseCusum()
-      r
+      val (h0, m0) = BoundedCache.totals
+      val t = force(n)
+      val (h1, m1) = BoundedCache.totals
+      BoundedCache.clearAll()
+      (n, t, (h1 - h0, m1 - m0))
     }
-    val qs = results.map { case (k, (med, _)) => "\"" + k + "\":" + med }
+    val qs = results.map { case (k, (med, _), _) => "\"" + k + "\":" + med }
       .mkString("{", ",", "}")
-    val qsMin = results.map { case (k, (_, mn)) => "\"" + k + "\":" + mn }
+    val qsMin = results.map { case (k, (_, mn), _) => "\"" + k + "\":" + mn }
       .mkString("{", ",", "}")
-    val failed = results.collect { case (k, (med, _)) if med < 0 => "\"" + k + "\"" }
+    val cache = results.map { case (k, _, (h, m)) => s""""$k":[$h,$m]""" }
+      .mkString("{", ",", "}")
+    val cacheHits = results.map(_._3._1).sum
+    val cacheMisses = results.map(_._3._2).sum
+    val failed = results.collect { case (k, (med, _), _) if med < 0 => "\"" + k + "\"" }
     val total = results.map(_._2._1).filter(_ >= 0).sum
     val json = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""protocol":"median_of_3_post_warm","queries":$qs,""" +
-      s""""queries_min":$qsMin,""" +
+      s""""queries_min":$qsMin,"cache":$cache,""" +
       s""""failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir"}"""
     println(json)
     // stdout scraping truncates long lines in some harnesses; the full
@@ -89,6 +98,7 @@ object Bench {
     val compact = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""total":$total,"n":${results.size},""" +
       s""""failed":${failed.mkString("[", ",", "]")},""" +
+      s""""cache_hits":$cacheHits,"cache_misses":$cacheMisses,""" +
       s""""per_query_file":"${outPath.toAbsolutePath.normalize}",""" +
       s""""sf":"$sfDir"}"""
     println(compact)

@@ -43,10 +43,10 @@ object Verify {
         catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        // drop per-query persisted intermediates (cusum's two-phase
-        // scan) once the output is on disk — a no-op for every other
-        // query, and the next cusum call would just rebuild
-        graft.relational.Stats.releaseCusum()
+        // release every cached artifact once the output is on disk:
+        // the next query rebuilds what it needs, so no query reads an
+        // artifact pinned by an earlier one
+        BoundedCache.clearAll()
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -520,21 +520,20 @@ object Dedup {
     * map is a build-once artifact of the dedup pipeline — `clusters` and
     * `keepList` both derive from it, and neither should pay the pair
     * graph + propagation twice. The table is already materialized
-    * (localCheckpoint) when it lands here. */
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * (localCheckpoint) when it lands here; eviction frees those blocks.
+    * 4 = scale dirs visited per application. */
+  private val clusterCache = new graft.BoundedCache[DataFrame](
+    max = 4, onEvict = graft.BoundedCache.freeCheckpoint)
 
-  private def clusterTable(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + " " + dir
-    clusterCache.computeIfAbsent(key, _ => {
+  private def clusterTable(spark: SparkSession, dir: String): DataFrame =
+    clusterCache.get(graft.BoundedCache.key(spark, dir)) {
       graft.functions.VecFunctions.register(spark)
       val pairs = Tables.sql(ngramJaccardSparkSql)(spark, dir)
         .select(col("doc_a"), col("doc_b")).cache()
       val out = propagateLabels(pairs)
       pairs.unpersist(false)
       out
-    })
-  }
+    }
 
   def clusters(spark: SparkSession, dir: String): DataFrame =
     clusterTable(spark, dir).orderBy("doc_id")
@@ -581,7 +580,7 @@ object Dedup {
           (coalesce(col("nlabel"), col("label")) < col("label")).as("chg"))
         .localCheckpoint() // eager: one materializing job per iteration
       changed = next.where(col("chg")).count() // local block scan, no re-join
-      unpersistCheckpoint(labels)
+      graft.BoundedCache.freeCheckpoint(labels)
       labels = next.drop("chg")
       iter += 1
     }
@@ -589,16 +588,6 @@ object Dedup {
     labels.select(col("doc_id"), col("label").as("canonical"))
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
-
-  /** Free the blocks behind a `localCheckpoint()`ed DataFrame. The
-    * checkpointed data lives in the RDD wrapped by the plan's LogicalRDD
-    * leaf (not the CacheManager), so `Dataset.unpersist` can't reach it. */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Survivorship election — the policy layer above cluster assignment:
     * within each near-dup cluster the member with the highest quality

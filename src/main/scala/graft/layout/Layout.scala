@@ -140,19 +140,20 @@ object Layout {
 
   // ---- bucketed standing layout + exchange-free join --------------------
 
-  // one build per (session, dir): the standing tables are the artifact,
-  // rebuilt only when the source dir changes (no executor storage to
-  // release on evict — external tables are plain files)
+  // one build per (application, dir): the standing tables are the
+  // artifact, registered in the shared catalog so every session of the
+  // application sees them (no executor storage to release on evict —
+  // external tables are plain files)
   private val bucketedBuilt = new graft.BoundedCache[String](
     max = 8, onEvict = _ => ())
 
   /** Register `orders` / `lineitem` as standing bucketed tables (8
     * buckets on the join key, one file per bucket) rooted under the JVM
-    * tmpdir, once per (session, dir). */
+    * tmpdir, once per (application, dir). */
   private def bucketedTables(spark: SparkSession, dir: String): (String, String) = {
     val tag = java.lang.Integer.toHexString(dir.hashCode) // unsigned hex, fs-safe
     val (ot, lt) = (s"orders_bj_$tag", s"lineitem_bj_$tag")
-    bucketedBuilt.get(s"${System.identityHashCode(spark)}|$dir") {
+    bucketedBuilt.get(graft.BoundedCache.key(spark, dir)) {
       val root = java.nio.file.Paths.get(
         sys.props("java.io.tmpdir"), s"graft_bucketed_$tag").toString
       Seq(ot -> "orders", lt -> "lineitem").foreach { case (name, src) =>
@@ -218,14 +219,14 @@ object Layout {
   private val dppBuilt = new graft.BoundedCache[String](max = 8, onEvict = _ => ())
 
   /** Standing `events` layout partitioned by event day (hive-style
-    * `d=YYYY-MM-DD/` directories), built once per (session, dir) — the
+    * `d=YYYY-MM-DD/` directories), built once per (application, dir) — the
     * canonical fact-table layout at 100 TB, where day is THE pruning
     * dimension. One writer task per day → one file per partition. */
   private[graft] def partitionedEvents(spark: SparkSession, dir: String): String = {
     val tag = java.lang.Integer.toHexString(dir.hashCode)
     val path = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), s"graft_dpp_$tag", "events_by_day").toString
-    dppBuilt.get(s"${System.identityHashCode(spark)}|$dir") {
+    dppBuilt.get(graft.BoundedCache.key(spark, dir)) {
       graft.Tables.load(spark, dir, "events")
         .withColumn("d", date_format(col("ts"), "yyyy-MM-dd"))
         .repartition(col("d"))

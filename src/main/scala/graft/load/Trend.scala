@@ -148,7 +148,7 @@ object Trend {
     * estimator, so it is the scale path, not the oracle path). */
   private def theilSenKernel(
       planes: scala.collection.IndexedSeq[(Array[Double], Double, Double)],
-      n: Int, maxPairs: Int = 0)
+      n: Int, maxPairs: Int)
       : (Array[Double], Array[Double], Array[Int]) = {
     val slopeOut = new Array[Double](n)
     val iceptOut = new Array[Double](n)

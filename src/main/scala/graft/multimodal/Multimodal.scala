@@ -104,20 +104,21 @@ object Multimodal {
     if (mime.startsWith("image/")) decodeImageOrFail(id, mime, payload)
     else (w0, h0, decodeStub(payload, w0, h0))
 
-  /** Rendered media tables, cached per (session, scale dir): the three mm
-    * queries share one render instead of re-encoding every PNG 3×. Tiny
-    * relative to executor memory (payloads are ≤64×64 grayscale PNGs). */
-  private val mediaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  /** Rendered media tables, cached per (session, scale dir, kind): the
+    * three mm queries share one render instead of re-encoding every PNG
+    * 3×. Tiny relative to executor memory (payloads are ≤64×64 grayscale
+    * PNGs). 8 = image + audio over the scale dirs visited per
+    * application; eviction unpersists. */
+  private val mediaCache = new graft.BoundedCache[DataFrame](
+    max = 8, onEvict = _.unpersist(blocking = false))
 
   /** documents → media table: (doc_id, mime, width, height, payload) with
     * payload a real PNG encoding of the deterministic image. Repartitioned
     * to every core BEFORE the render (documents.parquet may be 1 file). */
-  def mediaTable(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + " " + dir
-    mediaCache.computeIfAbsent(key, _ => {
+  def mediaTable(spark: SparkSession, dir: String): DataFrame =
+    mediaCache.get(graft.BoundedCache.key(spark, "image", dir)) {
       import spark.implicits._
-      val df = Tables.load(spark, dir, "documents").select(col("doc_id")).as[Long]
+      Tables.load(spark, dir, "documents").select(col("doc_id")).as[Long]
         .repartition(spark.sparkContext.defaultParallelism)
         .mapPartitions { it =>
           it.map { id =>
@@ -128,9 +129,7 @@ object Multimodal {
         }
         .toDF("doc_id", "mime", "width", "height", "payload")
         .persist()
-      df
-    })
-  }
+    }
 
   /** Typed-metadata scan: payload size + dimensions. Oracle-checkable
     * because octet_length(text) is engine-agnostic. */
@@ -773,9 +772,8 @@ object Multimodal {
   /** documents → audio table: (doc_id, mime, rate, n, payload) with
     * payload a real WAV encoding of the deterministic signal. Cached and
     * pre-partitioned like the image table. */
-  def audioTable(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + " audio " + dir
-    mediaCache.computeIfAbsent(key, _ => {
+  def audioTable(spark: SparkSession, dir: String): DataFrame =
+    mediaCache.get(graft.BoundedCache.key(spark, "audio", dir)) {
       import spark.implicits._
       Tables.load(spark, dir, "documents").select(col("doc_id")).as[Long]
         .repartition(spark.sparkContext.defaultParallelism)
@@ -788,8 +786,7 @@ object Multimodal {
         }
         .toDF("doc_id", "mime", "rate", "n_samples", "payload")
         .persist()
-    })
-  }
+    }
 
   /** Audio resample to a common 8 kHz — the rate-normalization pass a
     * multimodal pipeline runs before feature extraction. Real WAV decode

@@ -194,9 +194,11 @@ object ScanRebalance {
     * cached per (path, length, mtime) fingerprint so an artifact
     * rewritten at the same path (landed indexes under /tmp) never serves
     * stale stats. Only consulted for relations with fewer files than
-    * cores, so the status + footer sweep is O(cores) reads worst case. */
+    * cores, so the status + footer sweep is O(cores) reads worst case.
+    * Bounded: streaming appends re-fingerprint every batch, so a
+    * long-lived session evicts its oldest fingerprints. */
   private val footerCache =
-    new java.util.concurrent.ConcurrentHashMap[Seq[String], (Long, Long)]()
+    new graft.BoundedCache[(Long, Long)](max = 1024, _ => ())
 
   private[plans] def footerStats(
       spark: SparkSession, files: Seq[String]): (Long, Long) = {
@@ -206,14 +208,10 @@ object ScanRebalance {
       val path = new org.apache.hadoop.fs.Path(f)
       (path, path.getFileSystem(conf).getFileStatus(path))
     }
-    val key = statuses.map { case (p, s) =>
+    val key = graft.BoundedCache.key(spark, statuses.map { case (p, s) =>
       s"$p:${s.getLen}:${s.getModificationTime}"
-    }
-    // rewritten artifacts at the same path produce fresh fingerprints;
-    // drop the map wholesale before it can grow without bound in a
-    // long-lived session (streaming appends re-fingerprint every batch)
-    if (footerCache.size > 1024) footerCache.clear()
-    footerCache.computeIfAbsent(key, { _ =>
+    }: _*)
+    footerCache.get(key) {
       var groups = 0L
       var bytes = 0L
       statuses.foreach { case (path, status) =>
@@ -225,7 +223,7 @@ object ScanRebalance {
         bytes += status.getLen
       }
       (groups, bytes)
-    })
+    }
   }
 
   /** Install on a running session (the `spark.sql.extensions` path

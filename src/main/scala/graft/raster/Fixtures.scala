@@ -367,8 +367,6 @@ object Fixtures {
         Grb.writeWithOverviews(swirPath(k), swirPixels(k), g20,
           "uint16", Some(0.0))
       }
-      val t10 = g10.transform
-      val t20 = g20.transform
       val fp = g10.footprint(Crs.LonLat)
       val ring = (fp.ring :+ fp.ring.head)
         .map { case (x, y) => s"[$x,$y]" }.mkString("[", ",", "]")

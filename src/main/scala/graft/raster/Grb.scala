@@ -52,9 +52,6 @@ object Grb {
   /** Widest-dtype election helper (A6, `_stac_load.py:391-397`). */
   def itemSize(dtype: String): Int = dtypeSize(dtype)
 
-  private def headerSize(crs: String): Int =
-    4 + 1 + 4 + 4 + 1 + 8 + 48 + 2 + crs.getBytes("UTF-8").length
-
   def write(path: String, pixels: Array[Double], geobox: GeoBox,
             dtype: String, nodata: Option[Double]): Unit = {
     require(pixels.length == geobox.width * geobox.height)

@@ -248,7 +248,7 @@ object Tiff {
     * arrive via a different magic); handles both byte orders and inline
     * values. */
   private def rawAsciiTag(path: String, tagNum: Int,
-                          ifdIdx: Int = 0): Option[String] = {
+                          ifdIdx: Int): Option[String] = {
     val raf = RasterIO.open(path)
     try {
       val b0 = raf.read(); val b1 = raf.read()

@@ -1319,20 +1319,13 @@ object Stats {
   /** Intermediates of [[cusumScan]], persisted so the offset pass and
     * the finish pass see the SAME range boundaries (the Corpus.pack
     * policy — an evicted intermediate recomputed with re-sampled
-    * boundaries would make the broadcast offsets lie). */
-  private val cusumCache =
-    new graft.BoundedCache[(DataFrame, org.apache.spark.sql.Dataset[_])](
-      max = 4, onEvict = _._2.unpersist(blocking = false))
-
-  /** Unpersist the scan intermediates once the caller has materialized
-    * the result (r14 advice: only the two passes need the persisted
-    * events projection; keeping it pinned for the application lifetime
-    * makes it compete with every later query's executor memory at
-    * larger SFs). Verify calls this after writing each query's output;
-    * Bench after each query's timing loop — WITHIN the loop the warm
-    * run still lands the persist for the timed runs, so the measured
-    * protocol is unchanged. A post-release call just rebuilds. */
-  def releaseCusum(): Unit = cusumCache.clear()
+    * boundaries would make the broadcast offsets lie). Released by the
+    * harness's per-query [[graft.BoundedCache.clearAll]], so the
+    * persisted events projection never competes with later queries'
+    * executor memory. */
+  private val cusumCache = new graft.BoundedCache[
+    (DataFrame, org.apache.spark.sql.Dataset[(String, Long)])](
+    max = 4, onEvict = _._2.unpersist(blocking = false))
 
   /** CUSUM via the two-phase distributed segmented scan — the 100 TB
     * spelling of [[cusumSql]]. The windowed form partitions by
@@ -1361,9 +1354,7 @@ object Stats {
     * pair of associative scans. */
   def cusumScan(spark: SparkSession, dir: String,
                 chunks: Int = 0): DataFrame = {
-    val key = spark.sparkContext.applicationId + " cusum " + dir +
-      " " + chunks
-    cusumCache.get(key) {
+    cusumCache.get(graft.BoundedCache.key(spark, dir, chunks)) {
       cusumScanFrom(spark, Tables.load(spark, dir, "events"), chunks)
     }._1
   }
@@ -1373,7 +1364,8 @@ object Stats {
     * by `CusumPropsSpec` over randomized inputs. Returns the result
     * plus the persisted intermediate the caller owns. */
   private[graft] def cusumScanFrom(spark: SparkSession, events: DataFrame,
-      chunks: Int): (DataFrame, org.apache.spark.sql.Dataset[_]) = {
+      chunks: Int)
+      : (DataFrame, org.apache.spark.sql.Dataset[(String, Long)]) = {
     {
       import spark.implicits._
       import org.apache.spark.TaskContext

@@ -39,26 +39,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Release a retired frontier's localCheckpoint blocks. Each loop
-    * round checkpoints a new frontier; without this the suite carries
-    * every round of every run in the block manager until JVM GC gets
-    * around to it — dead weight that competes with later queries'
-    * execution memory (guide §5). Only RETIRED rounds are freed; the
-    * final frontier stays, since the returned DataFrame reads it
-    * lazily.
-    *
-    * INVARIANT (caller-enforced): the freed DataFrame must never be
-    * executed again — localCheckpoint truncated its lineage, so once
-    * the blocks are dropped it is NOT recomputable. The loops uphold
-    * this by freeing a round only after the NEXT round's frontier is
-    * eagerly materialized and the convergence count has run. */
-  private def free(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Scale-adaptive shuffle width for the iterative kernels: an
     * O(log n)-round loop pays every exchange 6+ times, so partition
     * count follows the FRONTIER size (~500k label rows per task — a
@@ -133,7 +113,9 @@ object Graph {
       // the already-materialized checkpoint
       converged = next.where(col("new_lbl") < col("lbl")).limit(1)
         .count() == 0L
-      free(labels) // retired round — next is materialized and independent
+      // retired round — next is materialized and independent; only
+      // retired rounds are freed (the returned frontier reads lazily)
+      graft.BoundedCache.freeCheckpoint(labels)
       labels = next.select(col("vec_id"), col("new_lbl").as("lbl"))
     }
     require(converged, s"components did not converge in $maxIters rounds")
@@ -264,7 +246,8 @@ object Graph {
         .select(col("vec_id"),
           coalesce(col("lbl"), col("new_lbl")).as("lbl"))
         .localCheckpoint(true)
-      free(prev) // retired round — lab is eagerly materialized
+      // retired round — lab is eagerly materialized
+      graft.BoundedCache.freeCheckpoint(prev)
     }
     e.unpersist(blocking = false)
     lab

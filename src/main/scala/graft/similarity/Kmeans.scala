@@ -133,7 +133,6 @@ object Kmeans {
 
   private def initSeeds(q: org.apache.spark.sql.Dataset[(Long, Array[Long])],
       k: Int, initMod: Long): Array[Array[Long]] = {
-    val spark = q.sparkSession
     val ordered =
       if (initMod > 0) q.orderBy(expr(s"vec_id % ${initMod}L"), col("vec_id"))
       else q.orderBy("vec_id")
@@ -200,7 +199,7 @@ object Kmeans {
     * strongly retain it, and evaporate on executor loss at cluster
     * scale; a parquet artifact is durable, session-free, and exactly
     * what a 100 TB deployment stores anyway. Landed-ness is tracked
-    * per (application, dir) via `computeIfAbsent`, which gives three
+    * per (application, dir) in a [[graft.BoundedCache]], which gives three
     * guarantees the bare latch-then-write lacked: concurrent first
     * consumers serialize on the build (nobody reads a half-written
     * path), a failed build/write propagates AND leaves the key
@@ -210,19 +209,19 @@ object Kmeans {
     * dir ([[graft.TmpLanding]], which also sweeps dead JVMs' leftover
     * artifacts), so two concurrent applications (or two dirs with
     * colliding hashCodes) never share an on-disk artifact and the
-    * per-pid dirs never accumulate unboundedly. The first consumer in
-    * a bench run pays the build+write; later consumers read the file
-    * (documented order dependence in the bench records). Per-query
-    * results are byte-identical to the uncached spelling. */
+    * per-pid dirs never accumulate unboundedly. The first consumer
+    * after a cache clear (the harness clears after every query) pays
+    * the build+write; later consumers within the query read the file.
+    * A rebuild rewrites the same rows, so per-query results are
+    * byte-identical to the uncached spelling. */
   private def knnGraphPath(dir: String): String =
     graft.TmpLanding.path("graft_knn_graph", dir)
 
-  private val knnLanded =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Landed-path latch (nothing pinned to release). */
+  private val knnLanded = new graft.BoundedCache[String](max = 4, _ => ())
 
   def knnGraphCached(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + " " + dir
-    val path = knnLanded.computeIfAbsent(key, _ => {
+    val path = knnLanded.get(graft.BoundedCache.key(spark, dir)) {
       val p = knnGraphPath(dir)
       // single file: the edge list is N·KnnK rows (MBs at bench SFs) and
       // one file makes the re-read order deterministic; a cluster-scale
@@ -230,7 +229,7 @@ object Kmeans {
       knnGraph(spark, dir).coalesce(1)
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
     spark.read.parquet(path)
   }
 

@@ -48,7 +48,6 @@ object PageRank {
     * edge list and (vec_id) node set — the kernel, fixture-testable. */
   private[graft] def rank(nodes: DataFrame, edges: DataFrame,
       iters: Int = Iters): DataFrame = {
-    val spark = nodes.sparkSession
     val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // built once, walked every iteration: persist cuts the (expensive)
     // upstream graph build out of the per-iteration lineage

@@ -395,7 +395,7 @@ object Similarity {
     * join and distinct shuffle ~16 bytes/row instead of full embeddings;
     * vectors are joined back only for surviving candidate pairs. The
     * signature itself is one native map-side projection (`rhp_sig`). */
-  private def chunkRows(emb: DataFrame, chunkBits: Int = ChunkBits): DataFrame =
+  private def chunkRows(emb: DataFrame, chunkBits: Int): DataFrame =
     emb.select(col("vec_id"),
         call_function("rhp_sig", col("embedding")).as("sig"))
       .select(col("vec_id"), posexplode(expr(
@@ -550,32 +550,28 @@ object Similarity {
     * candidates. At 100 TB the assignment column doubles as the physical
     * partition key, so a probe touches `probes/centroids` of the data.
     * Output schema matches bruteforce (qid, cid, rn, cos). */
-  /** Built IVF index: coarse-quantizer centroids + cell-assigned corpus.
-    * Cached per (session, dir) — an IVF index is a build-once artifact
-    * (at 100 TB it would live as a bucketed table + centroid sidecar);
-    * repeated queries must pay probe cost, not rebuild cost. */
-  private val ivfIndexCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[org.apache.spark.ml.linalg.Vector], DataFrame)]()
+  /** Built IVF index: the fitted coarse quantizer (its
+    * `clusterCenters` are the centroids) + cell-assigned corpus. Cached
+    * per (session, dir) — an IVF index is a build-once artifact (at
+    * 100 TB it would live as a bucketed table + centroid sidecar);
+    * repeated probes within a query must pay probe cost, not rebuild
+    * cost. 4 = scale dirs visited per application; eviction unpersists
+    * the assigned corpus. */
+  private val ivfIndexCache = new graft.BoundedCache[
+    (org.apache.spark.ml.clustering.KMeansModel, DataFrame)](
+    max = 4, onEvict = _._2.unpersist(blocking = false))
 
-  /** The fitted coarse quantizer itself — kept so a stream can assign
+  /** Coarse quantizer for (session, dir) — kept so a stream can assign
     * NEW vectors to the same cells (index freshness: batch-built index,
     * incrementally ingested updates). */
-  private val ivfModelCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.ml.clustering.KMeansModel]()
-
-  /** Coarse quantizer for (session, dir); builds the index if needed. */
   private[graft] def ivfModel(spark: SparkSession, dir: String)
-  : org.apache.spark.ml.clustering.KMeansModel = {
-    ivfIndex(spark, dir)
-    ivfModelCache.get(spark.sparkContext.applicationId + " " + dir)
-  }
+  : org.apache.spark.ml.clustering.KMeansModel = ivfIndex(spark, dir)._1
 
   private def ivfIndex(spark: SparkSession, dir: String)
-  : (Array[org.apache.spark.ml.linalg.Vector], DataFrame) = {
+  : (org.apache.spark.ml.clustering.KMeansModel, DataFrame) = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    val key = spark.sparkContext.applicationId + " " + dir
-    ivfIndexCache.computeIfAbsent(key, _ => {
+    ivfIndexCache.get(graft.BoundedCache.key(spark, dir)) {
       val emb = Tables.load(spark, dir, "embeddings")
         .withColumn("vec", array_to_vector(
           expr("transform(embedding, x -> CAST(x AS DOUBLE))")))
@@ -594,9 +590,8 @@ object Similarity {
         .select(col("vec_id"), col("embedding"), col("cell"))
         .persist()
       emb.unpersist(false)
-      ivfModelCache.put(key, model)
-      (model.clusterCenters, assigned)
-    })
+      (model, assigned)
+    }
   }
 
   /** Batch per-cell occupancy of the IVF index (spec baseline for the
@@ -609,8 +604,8 @@ object Similarity {
 
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
     VecFunctions.register(spark)
-    val (centroids, assigned) = ivfIndex(spark, dir)
-    ivfTopKFrom(centroids, assigned)
+    val (model, assigned) = ivfIndex(spark, dir)
+    ivfTopKFrom(model.clusterCenters, assigned)
   }
 
   /** Probe + re-rank over an explicit index — the same path serves the
@@ -693,8 +688,8 @@ object Similarity {
     * map-side cell assignment + partitioned append. */
   def saveIvfIndex(spark: SparkSession, dir: String, path: String): Unit = {
     import spark.implicits._
-    val (centroids, assigned) = ivfIndex(spark, dir)
-    centroids.zipWithIndex
+    val (model, assigned) = ivfIndex(spark, dir)
+    model.clusterCenters.zipWithIndex
       .map { case (c, i) => (i, c.toArray) }.toSeq
       .toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
@@ -789,16 +784,17 @@ object Similarity {
 
   /** Built PQ index: shared residual codebooks [m][ks][subDim] + the
     * encoded corpus (vec_id, cell, codes, xnorm, embedding). Cached per
-    * (session, dir) like the IVF index it extends. */
-  private val pqIndexCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Array[Double]]], DataFrame)]()
+    * (session, dir) like the IVF index it extends; eviction unpersists
+    * the encoded corpus. */
+  private val pqIndexCache =
+    new graft.BoundedCache[(Array[Array[Array[Double]]], DataFrame)](
+      max = 4, onEvict = _._2.unpersist(blocking = false))
 
   private[graft] def pqIndex(spark: SparkSession, dir: String)
-  : (Array[Array[Array[Double]]], DataFrame) = {
-    val key = spark.sparkContext.applicationId + " " + dir
-    pqIndexCache.computeIfAbsent(key, _ => {
-      val (centroids, assigned) = ivfIndex(spark, dir)
-      val cents: Array[Array[Double]] = centroids.map(_.toArray)
+  : (Array[Array[Array[Double]]], DataFrame) =
+    pqIndexCache.get(graft.BoundedCache.key(spark, dir)) {
+      val (model, assigned) = ivfIndex(spark, dir)
+      val cents: Array[Array[Double]] = model.clusterCenters.map(_.toArray)
       val dim = cents.head.length
       require(dim % PqM == 0, s"dim $dim not divisible by PqM=$PqM")
       val subDim = dim / PqM
@@ -852,8 +848,7 @@ object Similarity {
         .persist()
       encoded.count() // materialize before handing out
       (codebooks, encoded)
-    })
-  }
+    }
 
   /** IVF-PQ approximate top-k — asymmetric distance computation (ADC):
     * queries stay exact, candidates are scored from their PQ codes via a
@@ -865,13 +860,12 @@ object Similarity {
     * per query). */
   /** Coarse-quantizer centroids as plain arrays (spec access). */
   private[graft] def ivfIndexCentroids(spark: SparkSession, dir: String)
-  : Array[Array[Double]] = ivfIndex(spark, dir)._1.map(_.toArray)
+  : Array[Array[Double]] = ivfModel(spark, dir).clusterCenters.map(_.toArray)
 
   def ivfPqTopK(spark: SparkSession, dir: String): DataFrame = {
     VecFunctions.register(spark)
-    val (centroids, _) = ivfIndex(spark, dir)
+    val cents = ivfModel(spark, dir).clusterCenters.map(_.toArray)
     val (codebooks, encoded) = pqIndex(spark, dir)
-    val cents = centroids.map(_.toArray)
     val dim = cents.head.length
     val subDim = dim / PqM
     val k = cents.length
@@ -945,7 +939,7 @@ object Similarity {
     // ground truth is deterministic and reused across the three ANN
     // comparisons (and across bench reruns): materialize once per
     // (session, dir) — the standing eval-set shape of recall monitoring.
-    val exact = exactCache.get(spark.sparkContext.applicationId + " " + dir) {
+    val exact = exactCache.get(graft.BoundedCache.key(spark, dir)) {
       Tables.sql(bruteforceSparkSql)(spark, dir)
         .select(col("qid"), col("cid")).cache()
     }
@@ -1624,8 +1618,7 @@ object Similarity {
     new graft.BoundedCache[DataFrame](max = 8, _.unpersist())
 
   private def portSigTable(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + " " + dir
-    portSigCache.get(key)(
+    portSigCache.get(graft.BoundedCache.key(spark, dir))(
       Tables.load(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding"), expr(
           s"""transform(sequence(0, ${PortPlanes - 1}), p -> IF(
@@ -1793,8 +1786,8 @@ object Similarity {
     import spark.implicits._
     VecFunctions.register(spark)
     val path = ivfPortPath(dir)
-    val (centroids, assigned) = ivfIndex(spark, dir)
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toArray) }.toSeq
+    val (model, assigned) = ivfIndex(spark, dir)
+    model.clusterCenters.zipWithIndex.map { case (c, i) => (i, c.toArray) }.toSeq
       .toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     assigned
@@ -1912,18 +1905,17 @@ object Similarity {
   private[graft] def annEdgePath(dir: String): String =
     graft.TmpLanding.path("graft_ann_edges", dir)
 
-  private val annLanded =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Landed-path latch (nothing pinned to release). */
+  private val annLanded = new graft.BoundedCache[String](max = 4, _ => ())
 
   /** The landed ANN edge list, built at most once per (application,
-    * dir) via `computeIfAbsent` (the `knnGraphCached` contract:
+    * dir) between cache clears (the `knnGraphCached` contract:
     * concurrent first consumers serialize, a failed build leaves the
     * key unlatched, the path records only after a successful write).
     * All four `graph_*_ann` analytics and every oracle read this one
-    * artifact. */
+    * artifact; a rebuild rewrites it with the same rows. */
   private[graft] def annEdges(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + " " + dir
-    val path = annLanded.computeIfAbsent(key, _ => {
+    val path = annLanded.get(graft.BoundedCache.key(spark, dir)) {
       VecFunctions.register(spark)
       val p = annEdgePath(dir)
       val (_, assigned) = ivfIndex(spark, dir)
@@ -1948,7 +1940,7 @@ object Similarity {
         .select(col("vec_id").as("src"), explode(col("t.ids")).as("dst"))
         .coalesce(1).write.mode("overwrite").parquet(p)
       p
-    })
+    }
     spark.read.parquet(path)
   }
 
@@ -1982,7 +1974,7 @@ object Similarity {
     import spark.implicits._
     VecFunctions.register(spark)
     val path = pqPortPath(dir)
-    val (centroids, _) = ivfIndex(spark, dir)
+    val centroids = ivfModel(spark, dir).clusterCenters
     val (codebooks, encoded) = pqIndex(spark, dir)
     centroids.zipWithIndex.map { case (c, i) => (i, c.toArray) }.toSeq
       .toDF("cell", "centroid")

@@ -53,8 +53,7 @@ object Bpe {
 
   private def trainedMerges(spark: SparkSession,
                             dir: String): Array[(String, String, Long)] = {
-    val key = spark.sparkContext.applicationId + " " + dir
-    mergeCache.get(key)(
+    mergeCache.get(graft.BoundedCache.key(spark, dir))(
       trainMerges(spark, dir).map { case (_, a, b, n) => (a, b, n) }.toArray)
   }
 

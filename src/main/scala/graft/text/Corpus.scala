@@ -50,8 +50,7 @@ object Corpus {
     * `CorpusSpec` pins equality with the single-window spelling. */
   def pack(spark: SparkSession, dir: String,
            budget: Long = ShardBudget): DataFrame = {
-    val key = spark.sparkContext.applicationId + " " + dir + " " + budget
-    cachedScan(key) {
+    cachedScan(graft.BoundedCache.key(spark, "pack", dir, budget)) {
       import spark.implicits._
       val p = spark.sparkContext.defaultParallelism
       val toks = Tables.load(spark, dir, "documents")
@@ -103,8 +102,7 @@ object Corpus {
     * assignment end to end from the raw corpus. */
   def packBpe(spark: SparkSession, dir: String,
               budget: Long = ShardBudget): DataFrame = {
-    val key = spark.sparkContext.applicationId + " packbpe " + dir + " " + budget
-    cachedScan(key) {
+    cachedScan(graft.BoundedCache.key(spark, "packbpe", dir, budget)) {
       import spark.implicits._
       val p = spark.sparkContext.defaultParallelism
       val toks = Bpe.bpeEncode(spark, dir)
@@ -173,8 +171,7 @@ object Corpus {
     * skew), count per partition (P longs to the driver), broadcast
     * exclusive offsets, resume per-partition ranks map-side. */
   def shuffle(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + " shuffle " + dir
-    cachedScan(key) {
+    cachedScan(graft.BoundedCache.key(spark, "shuffle", dir)) {
       import spark.implicits._
       val p = spark.sparkContext.defaultParallelism
       val keyed = Tables.load(spark, dir, "documents")
@@ -221,9 +218,7 @@ object Corpus {
     * order fails the oracle hash. */
   def packShuffled(spark: SparkSession, dir: String,
                    budget: Long = ShardBudget): DataFrame = {
-    val key = spark.sparkContext.applicationId + " packShuffled " + dir +
-      " " + budget
-    cachedScan(key) {
+    cachedScan(graft.BoundedCache.key(spark, "packShuffled", dir, budget)) {
       import spark.implicits._
       val p = spark.sparkContext.defaultParallelism
       val keyed = Tables.load(spark, dir, "documents")

@@ -959,11 +959,7 @@ object TextAnalysis {
         coalesce(col("kept"), lit(false)).as("kept"))
       .write.mode("overwrite").parquet(idxPath)
     // free the checkpoint blocks: the standing table is the parquet now
-    idx0.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+    graft.BoundedCache.freeCheckpoint(idx0)
     spark.read.parquet(idxPath).createOrReplaceTempView("graft_sparse_idx")
     spark.sql(sparseProbeSparkSql)
   }
@@ -1100,8 +1096,7 @@ object TextAnalysis {
       .setInputCols(Array("f_nw", "f_rep", "f_stop", "f_wlen"))
       .setOutputCol("features")
       .transform(signals)
-    val model = qualityModelCache.get(
-      spark.sparkContext.applicationId + " " + dir)(
+    val model = qualityModelCache.get(graft.BoundedCache.key(spark, dir))(
       new org.apache.spark.ml.classification.DecisionTreeClassifier()
         .setMaxDepth(8).setSeed(11).setLabelCol("label")
         .fit(assembled.where("doc_id % 5 < 4")))

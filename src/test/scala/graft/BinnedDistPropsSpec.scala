@@ -54,7 +54,7 @@ class BinnedDistPropsSpec extends AnyFunSuite {
       val (lo, hi) = extents(pri)
       (c - lo) * 64 / (hi - lo + 1)
     }
-    out.foreach { case (pri, bin, _, q, pr, cd) =>
+    out.foreach { case (_, bin, _, q, pr, cd) =>
       assert(bin >= 0 && bin < 64, s"bin $bin out of range")
       assert(q >= 1 && q <= 4, s"quartile $q out of range")
       assert(pr >= 0 && pr <= 1000000 && cd >= 0 && cd <= 1000000)
