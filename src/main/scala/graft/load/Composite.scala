@@ -1,6 +1,6 @@
 package graft.load
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -20,16 +20,16 @@ import org.apache.spark.sql.functions._
 object Composite {
 
   /** Default cap on one task's DECODED plane state for the
-    * non-mergeable composites (median/quantile/masked/geomedian/MAD):
-    * those gather every time plane of a tile into one task, which is
-    * O(B·T·tileBytes) — unbounded in archive depth T. When the caller
-    * supplies `planesPerTile` (= B·T, driver-side metadata every
-    * `LoadResult` knows), the tile is SLICED into row bands sized so
+    * non-mergeable across-time operators: gathering every time plane
+    * of a whole tile into one task would be O(B·T·tileBytes) —
+    * unbounded in archive depth T. So the caller supplies
+    * `planesPerTile` (= B·T, driver-side metadata every `LoadResult`
+    * knows), and [[rechunk]] SLICES the tile into row bands sized so
     * `planesPerTile · width · sliceRows · 8 ≤ budget` BEFORE the
-    * rechunk shuffle, and full output planes are reassembled in a
-    * second, output-sized shuffle (1/T of the input — negligible).
-    * This is odc-algo's pre-geomedian rechunk rule: spatial chunks
-    * chosen as a function of time depth. */
+    * rechunk shuffle, and reassembles full output planes in a second,
+    * output-sized shuffle (1/T of the input — negligible). This is
+    * odc-algo's pre-geomedian rechunk rule: spatial chunks chosen as a
+    * function of time depth. */
   val DefaultStateBudgetBytes: Long = 256L << 20
 
   /** Row-band height honoring the state budget: the largest
@@ -138,11 +138,9 @@ object Composite {
 
   /** Across-time composite of a `Load` tile DataFrame: one row per
     * (band, ty, tx) with per-pixel mean/min/max/count planes. */
-  /** Tile rows keyed `(band, ty, tx)` with per-row `TileIn` values —
-    * the shared prelude of every across-time composite. */
-  private def keyedTiles(spark: SparkSession, tiles: DataFrame)
-      : org.apache.spark.sql.KeyValueGroupedDataset[(String, Int, Int), TileIn] = {
+  def acrossTime(spark: SparkSession, tiles: DataFrame): DataFrame = {
     import spark.implicits._
+    val agg = new PixelComposite().toColumn
     tiles
       .select(col("band"), col("ty"), col("tx"),
         col("data"), col("dtype"), col("nodata"),
@@ -152,12 +150,6 @@ object Composite {
       .mapValues { case (_, _, _, data, dtype, nodata, w, h) =>
         TileIn(data, dtype, nodata, w, h)
       }
-  }
-
-  def acrossTime(spark: SparkSession, tiles: DataFrame): DataFrame = {
-    import spark.implicits._
-    val agg = new PixelComposite().toColumn
-    keyedTiles(spark, tiles)
       .agg(agg)
       .map { case ((band, ty, tx), out) =>
         (band, ty, tx, out.mean, out.min, out.max, out.count)
@@ -171,31 +163,43 @@ object Composite {
     *
     * Median is not mergeable, so there is no partial-agg shape: every
     * valid value of a pixel must meet in one task. The scale-true plan
-    * is the rechunk odc-algo performs before its geomedian: ONE shuffle
-    * of tile rows keyed `(band, ty, tx)`, then per-group selection over
-    * the bounded time depth — task state is ≤ T decoded planes of one
-    * tile (T = time depth, tens to hundreds), never the cube.
-    * `mapGroups` rather than an `Aggregator`: a collect-list buffer
-    * would shuffle the same bytes while pretending mergeability. */
+    * is the rechunk odc-algo performs before its geomedian — see
+    * [[rechunk]]: row-band slices keyed `(band, ty, tx, slice)`, then
+    * per-group selection with task state under the byte budget at any
+    * archive depth. `planesPerTile` is the B·T plane count of a tile
+    * (`LoadResult.medianComposite` passes it). */
   def medianAcrossTime(spark: SparkSession, tiles: DataFrame,
-                       planesPerTile: Int = 0,
+                       planesPerTile: Int,
                        stateBudgetBytes: Long = DefaultStateBudgetBytes,
                        stateProbe: Option[MaxAcc] = None): DataFrame =
     selectionAcrossTime(spark, tiles, 0.5, planesPerTile, stateBudgetBytes,
       stateProbe).toDF("band", "ty", "tx", "median", "count")
 
   /** Per-pixel interpolated QUANTILE across time (q in [0,1]) — the
-    * percentile composite (seasonal p25/p75 products): same one-shuffle
-    * rechunk shape as the median, same interpolation convention as
+    * percentile composite (seasonal p25/p75 products): same rechunk
+    * plan as the median, same interpolation convention as
     * SQL `quantile_cont`/numpy `percentile` (position q·(m−1), linear
     * between the straddling order statistics; q=0.5 reduces exactly to
     * the median). */
   def quantileAcrossTime(spark: SparkSession, tiles: DataFrame,
-                         q: Double, planesPerTile: Int = 0,
+                         q: Double, planesPerTile: Int,
                          stateBudgetBytes: Long = DefaultStateBudgetBytes,
                          stateProbe: Option[MaxAcc] = None): DataFrame =
     selectionAcrossTime(spark, tiles, q, planesPerTile, stateBudgetBytes,
       stateProbe).toDF("band", "ty", "tx", "quantile", "count")
+
+  private def selectionAcrossTime(spark: SparkSession, tiles: DataFrame,
+                                  q: Double, planesPerTile: Int,
+                                  budgetBytes: Long,
+                                  stateProbe: Option[MaxAcc]) = {
+    import spark.implicits._
+    require(q >= 0 && q <= 1, s"quantile out of range: $q")
+    rechunk(spark, tiles, planesPerTile, budgetBytes, stateProbe,
+        jointBands = false) { (planes, n) =>
+      val (out, cnt) = selectionKernel(planes.map(p => (p.px, p.nodata)), n, q)
+      Iterator((planes(0).band, 0, Array(out), cnt))
+    }.map(t => (t.band, t.ty, t.tx, t.planes(0), t.cnt))
+  }
 
   /** Cloud-masked median — the signature EO composite (cloud-free
     * mosaic): per-pixel median of `dataBand` across time, using ONLY
@@ -206,69 +210,30 @@ object Composite {
     * value reaches `clear` with nodata already mapped to NaN (so a
     * nodata mask pixel fails any equality predicate and masks out).
     *
-    * Scale shape: the same single rechunk as the unmasked median, just
-    * keyed so the data AND mask planes of a tile meet in one task —
-    * the shuffle carries both bands' planes once, state is ≤ 2T planes.
-    */
+    * Scale shape: the same rechunk as the unmasked median, just keyed
+    * `(ty, tx, slice)` so the data AND mask slices of a tile meet in
+    * one task — the shuffle carries both bands' planes once. */
   def maskedMedianAcrossTime(spark: SparkSession, tiles: DataFrame,
                              dataBand: String, maskBand: String,
                              clear: Double => Boolean,
-                             planesPerTile: Int = 0,
+                             planesPerTile: Int,
                              stateBudgetBytes: Long = DefaultStateBudgetBytes,
                              stateProbe: Option[MaxAcc] = None): DataFrame = {
     import spark.implicits._
-    val masked = tiles.where(col("band").isin(dataBand, maskBand))
-    if (planesPerTile <= 0) {
-      masked
-        .select(col("band"), col("tIdx"), col("ty"), col("tx"),
-          col("data"), col("dtype"), col("nodata"),
-          col("width"), col("height"))
-        .as[(String, Int, Int, Int, Array[Byte], String, Double, Int, Int)]
-        .groupByKey { case (_, _, ty, tx, _, _, _, _, _) => (ty, tx) }
-        .mapGroups { (key, it) =>
-          val (ty, tx) = key
-          var w = 0
-          var h = 0
-          val dataPl = scala.collection.mutable.Map.empty[Int, (Array[Double], Double)]
-          val maskPl = scala.collection.mutable.Map.empty[Int, (Array[Double], Double)]
-          it.foreach { case (band, tIdx, _, _, data, dtype, nodata, tw, th) =>
-            if (w == 0) { w = tw; h = th }
-            require(w == tw && h == th,
-              s"tile shape mismatch at ($ty,$tx): ${w}x$h vs ${tw}x$th")
-            val pl = (Fuse.decode(data, dtype), nodata)
-            if (band == dataBand) dataPl(tIdx) = pl else maskPl(tIdx) = pl
-          }
-          val (med, cnt) = maskedMedianKernel(dataPl, maskPl, w * h, clear)
-          (dataBand, ty, tx, med, cnt)
-        }
-        .toDF("band", "ty", "tx", "median", "count")
-    } else {
-      val probe = stateProbe
-      val sliced = slicedTiles(spark, masked, planesPerTile, stateBudgetBytes)
-        .groupByKey(s => (s.ty, s.tx, s.slice))
-        .mapGroups { (key, it) =>
-          val (ty, tx, slice) = key
-          var w = 0
-          var sh = 0
-          val dataPl = scala.collection.mutable.Map.empty[Int, (Array[Double], Double)]
-          val maskPl = scala.collection.mutable.Map.empty[Int, (Array[Double], Double)]
-          it.foreach { s =>
-            if (w == 0) { w = s.width; sh = s.sliceH }
-            require(w == s.width && sh == s.sliceH,
-              s"slice shape mismatch at ($ty,$tx): ${w}x$sh vs ${s.width}x${s.sliceH}")
-            val pl = (Fuse.decode(s.data, s.dtype), s.nodata)
-            if (s.band == dataBand) dataPl(s.tIdx) = pl else maskPl(s.tIdx) = pl
-          }
-          probe.foreach(_.add((dataPl.size + maskPl.size).toLong * w * sh * 8L))
-          val (med, cnt) = maskedMedianKernel(dataPl, maskPl, w * sh, clear)
-          (dataBand, ty, tx, slice, med, cnt)
-        }
-      reassemble(sliced).toDF("band", "ty", "tx", "median", "count")
-    }
+    rechunk(spark, tiles.where(col("band").isin(dataBand, maskBand)),
+        planesPerTile, stateBudgetBytes, stateProbe,
+        jointBands = true) { (planes, n) =>
+      def byTime(ps: Array[Plane]) = scala.collection.mutable.HashMap.from(
+        ps.iterator.map(p => p.tIdx -> ((p.px, p.nodata))))
+      val (data, mask) = planes.partition(_.band == dataBand)
+      val (med, cnt) = maskedMedianKernel(byTime(data), byTime(mask), n, clear)
+      Iterator((dataBand, 0, Array(med), cnt))
+    }.map(t => (t.band, t.ty, t.tx, t.planes(0), t.cnt))
+      .toDF("band", "ty", "tx", "median", "count")
   }
 
-  /** Masked-median kernel over gathered (already full or sliced) data +
-    * mask planes keyed by tIdx — shared by both plan shapes. */
+  /** Masked-median kernel over one slice group's data + mask planes
+    * keyed by tIdx. */
   private def maskedMedianKernel(
       dataPl: scala.collection.Map[Int, (Array[Double], Double)],
       maskPl: scala.collection.Map[Int, (Array[Double], Double)],
@@ -307,9 +272,8 @@ object Composite {
   }
 
   /** Per-pixel interpolated quantile over `planes` (each `n` pixels,
-    * paired with its nodata) — the shared kernel of the full-tile and
-    * sliced paths (identical arithmetic, so slicing cannot change a
-    * single output value). */
+    * paired with its nodata). Pixels are independent, so the row-band
+    * slicing cannot change a single output value. */
   private def selectionKernel(
       planes: scala.collection.IndexedSeq[(Array[Double], Double)],
       n: Int, q: Double): (Array[Double], Array[Int]) = {
@@ -343,132 +307,136 @@ object Composite {
   }
 
   /** One sliced tile-plane row band: the encoded bytes of rows
-    * `[r0, r0+sh)` of a plane (contiguous in the row-major payload, so
-    * slicing is one arraycopy of ENCODED data — never a decode). */
-  final case class SliceIn(band: String, tIdx: Int, ty: Int, tx: Int,
-                           slice: Int, data: Array[Byte], dtype: String,
-                           nodata: Double, width: Int, sliceH: Int,
-                           height: Int)
+    * `[r0, r0+sh)` of a plane acquired at epoch second `tSec`
+    * (contiguous in the row-major payload, so slicing is one arraycopy
+    * of ENCODED data — never a decode). */
+  final case class SliceIn(band: String, tIdx: Int, tSec: Long, ty: Int,
+                           tx: Int, slice: Int, data: Array[Byte],
+                           dtype: String, nodata: Double, width: Int,
+                           sliceH: Int)
+
+  /** One decoded slice plane as a kernel sees it. */
+  final case class Plane(band: String, tIdx: Int, tSec: Long,
+                         px: Array[Double], nodata: Double)
+
+  /** What a kernel emits for its slice group: `(band, tIdx, planes,
+    * cnt)`, the fragment of output row `(band, tIdx, ty, tx)` over the
+    * slice's pixels. An operator that does not split its output by band
+    * or by time emits a constant there. */
+  type Frag = (String, Int, Array[Array[Double]], Array[Int])
+
+  /** A kernel fragment placed in its tile and slice. */
+  final case class SliceOut(band: String, tIdx: Int, ty: Int, tx: Int,
+                            slice: Int, planes: Array[Array[Double]],
+                            cnt: Array[Int])
+
+  /** One output row reassembled from the fragments of every slice. */
+  final case class TileOut(band: String, tIdx: Int, ty: Int, tx: Int,
+                           planes: Array[Array[Double]], cnt: Array[Int])
+
+  /** The one plan of every non-mergeable across-time operator
+    * (median/quantile/masked median/geomedian/MAD, Theil–Sen, temporal
+    * fill):
+    *  1. cut every tile plane into row bands sized so that
+    *     `planesPerTile · statePerPlane` decoded planes fit
+    *     `budgetBytes` ([[sliceRowsFor]]);
+    *  2. ONE rechunk shuffle keyed `(band, ty, tx, slice)` — or
+    *     `(ty, tx, slice)` when `jointBands` co-locates every band of a
+    *     tile — so slice `s` of every time plane meets in one task;
+    *  3. decode the group's planes in `(time, tIdx)` order (a total
+    *     order: same-time planes cannot swap with shuffle arrival) and
+    *     run `kernel(planes, pixelsPerPlane)`;
+    *  4. ONE output-sized shuffle that concatenates each output row's
+    *     slice fragments ([[reassemble]]).
+    * Task state is `statePerPlane · planes · w · sliceRows · 8` bytes,
+    * under the budget at any archive depth; `stateProbe` records its
+    * peak. */
+  private[graft] def rechunk(spark: SparkSession, tiles: DataFrame,
+      planesPerTile: Int, budgetBytes: Long, stateProbe: Option[MaxAcc],
+      jointBands: Boolean, statePerPlane: Int = 1)(
+      kernel: (Array[Plane], Int) => Iterator[Frag]): Dataset[TileOut] = {
+    import spark.implicits._
+    require(planesPerTile > 0,
+      s"planesPerTile (B·T planes per tile) must be positive: $planesPerTile")
+    val sliced = slicedTiles(spark, tiles, planesPerTile * statePerPlane,
+        budgetBytes)
+      .groupByKey(s => (if (jointBands) "" else s.band, s.ty, s.tx, s.slice))
+      .flatMapGroups { (key, it) =>
+        val (_, ty, tx, slice) = key
+        var w = -1
+        var sh = -1
+        val planes = it.map { s =>
+          if (w < 0) { w = s.width; sh = s.sliceH }
+          require(w == s.width && sh == s.sliceH,
+            s"slice shape mismatch at ($ty,$tx): ${w}x$sh vs ${s.width}x${s.sliceH}")
+          Plane(s.band, s.tIdx, s.tSec, Fuse.decode(s.data, s.dtype), s.nodata)
+        }.toArray.sortBy(p => (p.tSec, p.tIdx))
+        stateProbe.foreach(
+          _.add(statePerPlane.toLong * planes.length * w * sh * 8L))
+        kernel(planes, w * sh).map { case (band, tIdx, ps, cnt) =>
+          SliceOut(band, tIdx, ty, tx, slice, ps, cnt)
+        }
+      }
+    reassemble(sliced)
+  }
 
   /** Cut every tile row into row-band slices honoring the state budget.
     * All planes of a tile share (w, h), so every row of a group
     * computes the same slicing — slice `s` of every time plane lands in
     * the same `(…, s)` group. */
-  private[graft] def slicedTiles(spark: SparkSession, tiles: DataFrame,
+  private def slicedTiles(spark: SparkSession, tiles: DataFrame,
                           planesPerTile: Int, budgetBytes: Long)
-      : org.apache.spark.sql.Dataset[SliceIn] = {
+      : Dataset[SliceIn] = {
     import spark.implicits._
     tiles
-      .select(col("band"), col("tIdx"), col("ty"), col("tx"),
-        col("data"), col("dtype"), col("nodata"),
+      .select(col("band"), col("tIdx"), unix_timestamp(col("time")),
+        col("ty"), col("tx"), col("data"), col("dtype"), col("nodata"),
         col("width"), col("height"))
-      .as[(String, Int, Int, Int, Array[Byte], String, Double, Int, Int)]
-      .flatMap { case (band, tIdx, ty, tx, data, dtype, nodata, w, h) =>
+      .as[(String, Int, Long, Int, Int, Array[Byte], String, Double, Int, Int)]
+      .flatMap { case (band, tIdx, tSec, ty, tx, data, dtype, nodata, w, h) =>
         val sr = sliceRowsFor(planesPerTile, w, h, budgetBytes)
         val rowBytes = w * graft.raster.Grb.dtypeSize(dtype)
         (0 until h by sr).iterator.map { r0 =>
           val sh = math.min(sr, h - r0)
           val cut = java.util.Arrays.copyOfRange(
             data, r0 * rowBytes, (r0 + sh) * rowBytes)
-          SliceIn(band, tIdx, ty, tx, r0 / sr, cut, dtype, nodata, w, sh, h)
+          SliceIn(band, tIdx, tSec, ty, tx, r0 / sr, cut, dtype, nodata, w, sh)
         }
       }
   }
 
-  /** Concatenate slice-ordered plane fragments — the ONE arraycopy
-    * kernel every bounded reassembly shares: `parts(i) = (sliceIdx,
-    * doublePlanes, cntSlice)`, all parts carrying the same number of
-    * double planes. Sorts by slice index in place. */
+  /** Concatenate slice-ordered fragments — the ONE arraycopy kernel of
+    * the reassembly: `parts(i) = (sliceIdx, planes, cnt)`, all parts
+    * carrying the same number of planes. Plane `b` of the result joins
+    * every part's plane `b`; `cnt` joins every part's `cnt`
+    * independently (per-pixel counts, or one count per slice). Sorts
+    * by slice index in place. */
   private[graft] def concatSlices(
       parts: Array[(Int, Array[Array[Double]], Array[Int])])
       : (Array[Array[Double]], Array[Int]) = {
     scala.util.Sorting.stableSort(parts,
       (a: (Int, Array[Array[Double]], Array[Int]),
        b: (Int, Array[Array[Double]], Array[Int])) => a._1 < b._1)
-    val nPlanes = parts(0)._2.length
-    val n = parts.iterator.map(_._3.length).sum
-    val planes = Array.fill(nPlanes)(new Array[Double](n))
-    val cnt = new Array[Int](n)
-    var off = 0
-    parts.foreach { case (_, ps, c) =>
-      var b = 0
-      while (b < nPlanes) {
-        System.arraycopy(ps(b), 0, planes(b), off, c.length)
-        b += 1
-      }
-      System.arraycopy(c, 0, cnt, off, c.length)
-      off += c.length
-    }
-    (planes, cnt)
+    val ps = parts.toIndexedSeq
+    val planes = Array.tabulate(ps(0)._2.length)(b =>
+      Array.concat(ps.map(_._2(b)): _*))
+    (planes, Array.concat(ps.map(_._3): _*))
   }
 
-  /** Reassemble full output planes from per-slice results: one
-    * output-sized shuffle keyed (band, ty, tx); task state is the S
-    * slices of ONE tile's output planes — i.e. exactly the contract
-    * row being built, bounded by tile size, independent of T. */
-  private def reassemble(
-      ds: org.apache.spark.sql.Dataset[(String, Int, Int, Int,
-        Array[Double], Array[Int])])(implicit
-      e: Encoder[(String, Int, Int, Array[Double], Array[Int])])
-      : org.apache.spark.sql.Dataset[(String, Int, Int, Array[Double], Array[Int])] =
-    ds.groupByKey { case (band, ty, tx, _, _, _) => (band, ty, tx) }(
-        Encoders.tuple(Encoders.STRING, Encoders.scalaInt, Encoders.scalaInt))
-      .mapGroups { (key, it) =>
-        val (band, ty, tx) = key
-        val parts = it.map { case (_, _, _, s, o, c) => (s, Array(o), c) }
-          .toArray
-        val (planes, cnt) = concatSlices(parts)
-        (band, ty, tx, planes(0), cnt)
-      }
-
-  private def selectionAcrossTime(spark: SparkSession, tiles: DataFrame,
-                                  q: Double, planesPerTile: Int,
-                                  budgetBytes: Long,
-                                  stateProbe: Option[MaxAcc]) = {
+  /** Reassemble full output rows from per-slice fragments: one
+    * output-sized shuffle keyed (band, tIdx, ty, tx); task state is the
+    * S slices of ONE output row — bounded by tile size, independent
+    * of T. */
+  private def reassemble(ds: Dataset[SliceOut]): Dataset[TileOut] = {
+    val spark = ds.sparkSession
     import spark.implicits._
-    require(q >= 0 && q <= 1, s"quantile out of range: $q")
-    if (planesPerTile <= 0) {
-      // depth unknown: full-tile groups (state ≤ T planes of one tile;
-      // callers at archive scale pass planesPerTile from LoadResult)
-      keyedTiles(spark, tiles)
-        .mapGroups { (key: (String, Int, Int), it: Iterator[TileIn]) =>
-          val (band, ty, tx) = key
-          var w = 0
-          var h = 0
-          val planes =
-            scala.collection.mutable.ArrayBuffer.empty[(Array[Double], Double)]
-          it.foreach { t =>
-            if (planes.isEmpty) { w = t.width; h = t.height }
-            require(w == t.width && h == t.height,
-              s"tile shape mismatch: ${w}x$h vs ${t.width}x${t.height}")
-            planes += ((Fuse.decode(t.data, t.dtype), t.nodata))
-          }
-          val (out, cnt) = selectionKernel(planes, w * h, q)
-          (band, ty, tx, out, cnt)
-        }
-    } else {
-      // bounded path: slice → rechunk → kernel per slice → reassemble
-      val probe = stateProbe
-      val sliced = slicedTiles(spark, tiles, planesPerTile, budgetBytes)
-        .groupByKey(s => (s.band, s.ty, s.tx, s.slice))
-        .mapGroups { (key, it) =>
-          val (band, ty, tx, slice) = key
-          var w = 0
-          var sh = 0
-          val planes =
-            scala.collection.mutable.ArrayBuffer.empty[(Array[Double], Double)]
-          it.foreach { s =>
-            if (planes.isEmpty) { w = s.width; sh = s.sliceH }
-            require(w == s.width && sh == s.sliceH,
-              s"slice shape mismatch: ${w}x$sh vs ${s.width}x${s.sliceH}")
-            planes += ((Fuse.decode(s.data, s.dtype), s.nodata))
-          }
-          probe.foreach(_.add(planes.length.toLong * w * sh * 8L))
-          val (out, cnt) = selectionKernel(planes, w * sh, q)
-          (band, ty, tx, slice, out, cnt)
-        }
-      reassemble(sliced)
-    }
+    ds.groupByKey(o => (o.band, o.tIdx, o.ty, o.tx))
+      .mapGroups { (key, it) =>
+        val (band, tIdx, ty, tx) = key
+        val (planes, cnt) =
+          concatSlices(it.map(o => (o.slice, o.planes, o.cnt)).toArray)
+        TileOut(band, tIdx, ty, tx, planes, cnt)
+      }
   }
 
   /** Geometric MEDIAN composite (the EO "geomedian" product — the
@@ -486,74 +454,42 @@ object Composite {
     * valid at that pixel (the joint-vector requirement); pixels with
     * zero complete observations emit NaN.
     *
-    * Scale shape: same single rechunk as the masked median — ONE
-    * shuffle keyed (ty, tx) co-locates every band's time planes for a
-    * tile, each task runs the per-pixel iterations locally, state is
-    * ≤ B·T planes. Weiszfeld is embarrassingly parallel across pixels;
-    * nothing iterates across tasks. */
+    * Scale shape: same rechunk as the masked median — keyed
+    * `(ty, tx, slice)` so every band's time planes of a row band meet
+    * in one task, which runs the per-pixel iterations locally.
+    * Weiszfeld is embarrassingly parallel across pixels; nothing
+    * iterates across tasks. `planesPerTile` is B·T. */
   def geomedianAcrossTime(spark: SparkSession, tiles: DataFrame,
-                          bands: Seq[String], iters: Int = 8,
-                          eps: Double = 1e-7, planesPerTile: Int = 0,
+                          bands: Seq[String], planesPerTile: Int,
+                          iters: Int = 8, eps: Double = 1e-7,
                           stateBudgetBytes: Long = DefaultStateBudgetBytes,
                           stateProbe: Option[MaxAcc] = None): DataFrame = {
     import spark.implicits._
     require(bands.nonEmpty, "geomedian needs at least one band")
     val nb = bands.length
     val bandIdx = bands.zipWithIndex.toMap
-    val bandTiles = tiles.where(col("band").isin(bands.map(x => x: Any): _*))
-    if (planesPerTile <= 0) {
-      bandTiles
-        .select(col("band"), col("tIdx"), col("ty"), col("tx"),
-          col("data"), col("dtype"), col("nodata"),
-          col("width"), col("height"))
-        .as[(String, Int, Int, Int, Array[Byte], String, Double, Int, Int)]
-        .groupByKey { case (_, _, ty, tx, _, _, _, _, _) => (ty, tx) }
-        .flatMapGroups { (key, it) =>
-          val (ty, tx) = key
-          var w = 0
-          var h = 0
-          // planes((tIdx, bandOrdinal)) -> (pixels, nodata)
-          val planes =
-            scala.collection.mutable.Map.empty[(Int, Int), (Array[Double], Double)]
-          it.foreach { case (band, tIdx, _, _, data, dtype, nodata, tw, th) =>
-            if (w == 0) { w = tw; h = th }
-            require(w == tw && h == th,
-              s"tile shape mismatch at ($ty,$tx): ${w}x$h vs ${tw}x$th")
-            planes((tIdx, bandIdx(band))) = (Fuse.decode(data, dtype), nodata)
-          }
-          val (geo, cnt) = geomedianKernel(planes, nb, w * h, iters, eps)
-          bands.indices.iterator.map(b => (bands(b), ty, tx, geo(b), cnt))
-        }
-        .toDF("band", "ty", "tx", "geomedian", "count")
-    } else {
-      val probe = stateProbe
-      val sliced = slicedTiles(spark, bandTiles, planesPerTile, stateBudgetBytes)
-        .groupByKey(s => (s.ty, s.tx, s.slice))
-        .flatMapGroups { (key, it) =>
-          val (ty, tx, slice) = key
-          var w = 0
-          var sh = 0
-          val planes =
-            scala.collection.mutable.Map.empty[(Int, Int), (Array[Double], Double)]
-          it.foreach { s =>
-            if (w == 0) { w = s.width; sh = s.sliceH }
-            require(w == s.width && sh == s.sliceH,
-              s"slice shape mismatch at ($ty,$tx): ${w}x$sh vs ${s.width}x${s.sliceH}")
-            planes((s.tIdx, bandIdx(s.band))) = (Fuse.decode(s.data, s.dtype), s.nodata)
-          }
-          probe.foreach(_.add(planes.size.toLong * w * sh * 8L))
-          val (geo, cnt) = geomedianKernel(planes, nb, w * sh, iters, eps)
-          bands.indices.iterator.map(b =>
-            (bands(b), ty, tx, slice, geo(b), cnt))
-        }
-      reassemble(sliced).toDF("band", "ty", "tx", "geomedian", "count")
-    }
+    rechunk(spark, tiles.where(col("band").isin(bands.map(x => x: Any): _*)),
+        planesPerTile, stateBudgetBytes, stateProbe,
+        jointBands = true) { (planes, n) =>
+      val (geo, cnt) =
+        geomedianKernel(byTimeAndBand(planes, bandIdx), nb, n, iters, eps)
+      bands.indices.iterator.map(b => (bands(b), 0, Array(geo(b)), cnt))
+    }.map(t => (t.band, t.ty, t.tx, t.planes(0), t.cnt))
+      .toDF("band", "ty", "tx", "geomedian", "count")
   }
+
+  /** A joint-band group's planes keyed (tIdx, bandOrdinal) — the input
+    * of [[geomedianKernel]] and [[geomadKernel]]. A mutable hash map:
+    * the kernels look a plane up per pixel, where it is faster than the
+    * immutable one. */
+  private def byTimeAndBand(planes: Array[Plane], bandIdx: Map[String, Int])
+      : scala.collection.Map[(Int, Int), (Array[Double], Double)] =
+    scala.collection.mutable.HashMap.from(planes.iterator.map(p =>
+      (p.tIdx, bandIdx(p.band)) -> ((p.px, p.nodata))))
 
   /** Geomedian kernel over gathered (tIdx, bandOrdinal)-keyed planes of
     * `n` pixels: complete-observation gather (time-ascending) + the
-    * fixed-iteration Weiszfeld solve — shared by the full-tile and
-    * sliced plan shapes, so slicing cannot change a value. */
+    * fixed-iteration Weiszfeld solve. */
   private[graft] def geomedianKernel(
       planes: scala.collection.Map[(Int, Int), (Array[Double], Double)],
       nb: Int, n: Int, iters: Int,
@@ -658,81 +594,32 @@ object Composite {
     *   EMAD  = median ‖pₜ − x‖₂            (Euclidean distance)
     *   SMAD  = median 1 − cos(pₜ, x)       (spectral / angular)
     *   BCMAD = median Σ|pₜ−x| / Σ|pₜ+x|   (Bray–Curtis)
-    * Zero denominators yield 0 (not NaN) in both engines. Same single
-    * (ty, tx)-keyed rechunk and fixed-iteration Weiszfeld as
+    * Zero denominators yield 0 (not NaN) in both engines. Same
+    * `(ty, tx, slice)`-keyed rechunk and fixed-iteration Weiszfeld as
     * [[geomedianAcrossTime]] — the MADs are a per-pixel postpass over
     * the same gathered observations. */
   def geomadAcrossTime(spark: SparkSession, tiles: DataFrame,
-                       bands: Seq[String], iters: Int = 8,
-                       eps: Double = 1e-7, planesPerTile: Int = 0,
+                       bands: Seq[String], planesPerTile: Int,
+                       iters: Int = 8, eps: Double = 1e-7,
                        stateBudgetBytes: Long = DefaultStateBudgetBytes,
                        stateProbe: Option[MaxAcc] = None): DataFrame = {
     import spark.implicits._
     require(bands.nonEmpty, "geomad needs at least one band")
     val nb = bands.length
     val bandIdx = bands.zipWithIndex.toMap
-    val bandTiles = tiles.where(col("band").isin(bands.map(x => x: Any): _*))
-    if (planesPerTile <= 0) {
-      bandTiles
-        .select(col("band"), col("tIdx"), col("ty"), col("tx"),
-          col("data"), col("dtype"), col("nodata"),
-          col("width"), col("height"))
-        .as[(String, Int, Int, Int, Array[Byte], String, Double, Int, Int)]
-        .groupByKey { case (_, _, ty, tx, _, _, _, _, _) => (ty, tx) }
-        .mapGroups { (key, it) =>
-          val (ty, tx) = key
-          var w = 0
-          var h = 0
-          val planes =
-            scala.collection.mutable.Map.empty[(Int, Int), (Array[Double], Double)]
-          it.foreach { case (band, tIdx, _, _, data, dtype, nodata, tw, th) =>
-            if (w == 0) { w = tw; h = th }
-            require(w == tw && h == th,
-              s"tile shape mismatch at ($ty,$tx): ${w}x$h vs ${tw}x$th")
-            planes((tIdx, bandIdx(band))) = (Fuse.decode(data, dtype), nodata)
-          }
-          val (emad, smad, bcmad, cnt) = geomadKernel(planes, nb, w * h, iters, eps)
-          (ty, tx, emad, smad, bcmad, cnt)
-        }
-        .toDF("ty", "tx", "emad", "smad", "bcmad", "count")
-    } else {
-      val probe = stateProbe
-      slicedTiles(spark, bandTiles, planesPerTile, stateBudgetBytes)
-        .groupByKey(s => (s.ty, s.tx, s.slice))
-        .mapGroups { (key, it) =>
-          val (ty, tx, slice) = key
-          var w = 0
-          var sh = 0
-          val planes =
-            scala.collection.mutable.Map.empty[(Int, Int), (Array[Double], Double)]
-          it.foreach { s =>
-            if (w == 0) { w = s.width; sh = s.sliceH }
-            require(w == s.width && sh == s.sliceH,
-              s"slice shape mismatch at ($ty,$tx): ${w}x$sh vs ${s.width}x${s.sliceH}")
-            planes((s.tIdx, bandIdx(s.band))) = (Fuse.decode(s.data, s.dtype), s.nodata)
-          }
-          probe.foreach(_.add(planes.size.toLong * w * sh * 8L))
-          val (emad, smad, bcmad, cnt) = geomadKernel(planes, nb, w * sh, iters, eps)
-          (ty, tx, slice, emad, smad, bcmad, cnt)
-        }
-        // output-sized reassembly: state = the S slices of ONE tile's
-        // four output planes — bounded by tile size, independent of T
-        .groupByKey { case (ty, tx, _, _, _, _, _) => (ty, tx) }
-        .mapGroups { (key, it) =>
-          val (ty, tx) = key
-          val parts = it.map { case (_, _, s, e, sm, bc, c) =>
-            (s, Array(e, sm, bc), c)
-          }.toArray
-          val (planes, cnt) = concatSlices(parts)
-          (ty, tx, planes(0), planes(1), planes(2), cnt)
-        }
-        .toDF("ty", "tx", "emad", "smad", "bcmad", "count")
-    }
+    rechunk(spark, tiles.where(col("band").isin(bands.map(x => x: Any): _*)),
+        planesPerTile, stateBudgetBytes, stateProbe,
+        jointBands = true) { (planes, n) =>
+      val (emad, smad, bcmad, cnt) =
+        geomadKernel(byTimeAndBand(planes, bandIdx), nb, n, iters, eps)
+      Iterator(("", 0, Array(emad, smad, bcmad), cnt))
+    }.map(t => (t.ty, t.tx, t.planes(0), t.planes(1), t.planes(2), t.cnt))
+      .toDF("ty", "tx", "emad", "smad", "bcmad", "count")
   }
 
   /** MAD-layer kernel over gathered (tIdx, bandOrdinal)-keyed planes of
     * `n` pixels — same gather + Weiszfeld as [[geomedianKernel]], then
-    * the three deviation medians. Shared by both plan shapes. */
+    * the three deviation medians. */
   private[graft] def geomadKernel(
       planes: scala.collection.Map[(Int, Int), (Array[Double], Double)],
       nb: Int, n: Int, iters: Int, eps: Double)

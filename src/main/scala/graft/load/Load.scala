@@ -417,55 +417,43 @@ final case class LoadResult(tiles: DataFrame, geobox: GeoBox,
 
   /** Across-time composites with the time-depth memory bound WIRED IN:
     * these overloads pass `planesPerTile` (the B·T plane count this
-    * result knows driver-side) to [[Composite]], so deep archives get
-    * the row-band-sliced bounded plan automatically — a caller using
-    * the raw `Composite.*(spark, tiles)` spellings must size the state
-    * hint itself. */
-  def medianComposite(
-      budgetBytes: Long = Composite.DefaultStateBudgetBytes): DataFrame =
-    Composite.medianAcrossTime(spark, tiles,
-      planesPerTile = times.length, stateBudgetBytes = budgetBytes)
+    * result knows driver-side) to [[Composite]], whose row-band rechunk
+    * keeps task state under `Composite.DefaultStateBudgetBytes` at any
+    * archive depth — a caller using the raw `Composite.*(spark, tiles,
+    * …)` spellings must size the state hint itself. */
+  def medianComposite(): DataFrame =
+    Composite.medianAcrossTime(spark, tiles, planesPerTile = times.length)
 
-  def quantileComposite(q: Double,
-      budgetBytes: Long = Composite.DefaultStateBudgetBytes): DataFrame =
-    Composite.quantileAcrossTime(spark, tiles, q,
-      planesPerTile = times.length, stateBudgetBytes = budgetBytes)
+  def quantileComposite(q: Double): DataFrame =
+    Composite.quantileAcrossTime(spark, tiles, q, planesPerTile = times.length)
 
   def maskedMedianComposite(dataBand: String, maskBand: String,
-      clear: Double => Boolean,
-      budgetBytes: Long = Composite.DefaultStateBudgetBytes): DataFrame =
+      clear: Double => Boolean): DataFrame =
     Composite.maskedMedianAcrossTime(spark, tiles, dataBand, maskBand, clear,
-      planesPerTile = 2 * times.length, stateBudgetBytes = budgetBytes)
+      planesPerTile = 2 * times.length)
 
-  def geomedianComposite(bands: Seq[String], iters: Int = 8,
-      budgetBytes: Long = Composite.DefaultStateBudgetBytes): DataFrame =
-    Composite.geomedianAcrossTime(spark, tiles, bands, iters = iters,
-      planesPerTile = bands.length * times.length,
-      stateBudgetBytes = budgetBytes)
+  def geomedianComposite(bands: Seq[String], iters: Int = 8): DataFrame =
+    Composite.geomedianAcrossTime(spark, tiles, bands,
+      planesPerTile = bands.length * times.length, iters = iters)
 
-  def geomadComposite(bands: Seq[String], iters: Int = 8,
-      budgetBytes: Long = Composite.DefaultStateBudgetBytes): DataFrame =
-    Composite.geomadAcrossTime(spark, tiles, bands, iters = iters,
-      planesPerTile = bands.length * times.length,
-      stateBudgetBytes = budgetBytes)
+  def geomadComposite(bands: Seq[String], iters: Int = 8): DataFrame =
+    Composite.geomadAcrossTime(spark, tiles, bands,
+      planesPerTile = bands.length * times.length, iters = iters)
 
   /** Mean/min/max/count composite — mergeable Aggregator, already
     * bounded (one buffer per group), no hint needed. */
   def meanComposite(): DataFrame = Composite.acrossTime(spark, tiles)
 
-  /** Temporal gap-fill with the bounded (row-band-sliced) plan: the
-    * fill buffers decoded + filled planes (2·T), and this wrapper
-    * passes T so one task never exceeds the state budget. */
-  def temporalFill(
-      budgetBytes: Long = Composite.DefaultStateBudgetBytes): DataFrame =
-    TemporalFill.fillAcrossTime(spark, tiles, timeDepth = times.length,
-      stateBudgetBytes = budgetBytes)
+  /** Temporal gap-fill on the row-band rechunk plan: the fill buffers
+    * decoded + filled planes (2·T), and this wrapper passes T so one
+    * task never exceeds the state budget. */
+  def temporalFill(): DataFrame =
+    TemporalFill.fillAcrossTime(spark, tiles, timeDepth = times.length)
 
   /** Gap-fill then Savitzky–Golay smooth along time — the standard
     * post-fill polish; interior full-window centers only. */
-  def temporalSmooth(
-      budgetBytes: Long = Composite.DefaultStateBudgetBytes): DataFrame =
-    TemporalSmooth.smoothAcrossTime(spark, temporalFill(budgetBytes)
+  def temporalSmooth(): DataFrame =
+    TemporalSmooth.smoothAcrossTime(spark, temporalFill()
       .select(org.apache.spark.sql.functions.col("band"),
         org.apache.spark.sql.functions.col("tIdx"),
         org.apache.spark.sql.functions.col("ty"),
@@ -480,13 +468,11 @@ final case class LoadResult(tiles: DataFrame, geobox: GeoBox,
       times.map(_.getTime / 1000L).min)
 
   /** Theil–Sen robust trend — the rechunk sibling of [[trend]]; this
-    * wrapper passes the time depth so the row-band-sliced bounded plan
-    * applies at any archive depth. */
-  def trendRobust(
-      budgetBytes: Long = Composite.DefaultStateBudgetBytes): DataFrame =
+    * wrapper passes the time depth so the row-band state bound applies
+    * at any archive depth. */
+  def trendRobust(): DataFrame =
     Trend.theilSenAcrossTime(spark, tiles,
-      times.map(_.getTime / 1000L).min,
-      planesPerTile = times.length, stateBudgetBytes = budgetBytes)
+      times.map(_.getTime / 1000L).min, planesPerTile = times.length)
 
   /** Distributed GeoTIFF export sink: every tile row becomes one
     * georeferenced `.tif` (`<band>_t<tIdx>_<ty>_<tx>.tif`) written

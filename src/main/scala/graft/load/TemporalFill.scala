@@ -1,7 +1,6 @@
 package graft.load
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Temporal gap-filling — per-pixel linear interpolation across the time
   * axis (cloud/SLC-off hole repair before compositing, the Landsat-7
@@ -13,133 +12,48 @@ import org.apache.spark.sql.functions._
   * interpolant `v_prev + (v_next − v_prev)·(t − t_prev)/(t_next −
   * t_prev)`; before the first / after the last valid observation the
   * nearest valid value carries (constant extrapolation); a pixel with no
-  * valid observation at all stays NaN.
+  * valid observation at all stays NaN. Planes are ordered by
+  * `(time, tIdx)`, so same-time planes have one fixed order.
   *
-  * Scale shape: identical to the median composite's rechunk — with
-  * `timeDepth` passed (what `LoadResult.temporalFill()` does), tiles
-  * are row-band-sliced before the `(band, ty, tx, slice)` shuffle so
-  * one task buffers at most the state budget of decoded+filled planes
-  * in ANY archive depth, and full planes reassemble in a second
-  * shuffle. Output is again tile-shaped (one filled plane per input
-  * plane), so downstream operators (composites, exports) consume it
-  * unchanged.
+  * Scale shape: the median composite's rechunk ([[Composite.rechunk]])
+  * — tiles are row-band-sliced before the `(band, ty, tx, slice)`
+  * shuffle so one task buffers at most the state budget of
+  * decoded+filled planes in ANY archive depth, and full planes
+  * reassemble in a second shuffle. Output is again tile-shaped (one
+  * filled plane per input plane), so downstream operators (composites,
+  * exports) consume it unchanged.
   */
 object TemporalFill {
-
-  private final case class PlaneIn(tIdx: Int, tSec: Long, data: Array[Byte],
-                                   dtype: String, nodata: Double,
-                                   width: Int, height: Int)
-
-  /** One sliced plane row band for the bounded fill path. Public for
-    * Spark codegen visibility (Load.TaskSeed convention). */
-  final case class FillSlice(band: String, tIdx: Int, tSec: Long,
-                             ty: Int, tx: Int, slice: Int,
-                             data: Array[Byte], dtype: String,
-                             nodata: Double, width: Int, sliceH: Int)
 
   /** Fill a `LoadResult.tiles` frame across time. Returns one row per
     * input plane: (band, tIdx, ty, tx, filled, n_filled) where `filled`
     * is the plane as doubles (NaN = still no data).
     *
-    * Pass `timeDepth` (T, known driver-side from `LoadResult.times`) to
-    * get the BOUNDED plan on deep archives: tiles are sliced into row
-    * bands before the rechunk so one task holds at most
-    * `stateBudgetBytes` of decoded+filled planes (the fill buffers 2·T
-    * planes — input and output — hence the 2× in the slice sizing),
-    * and full planes reassemble in a second shuffle. Same rule as the
-    * [[Composite]] selection family; `LoadResult.temporalFill()` wires
-    * the hint automatically. */
+    * `timeDepth` is T, known driver-side from `LoadResult.times`
+    * (`LoadResult.temporalFill()` passes it). The fill buffers 2·T
+    * planes — input and output — so slices are sized for 2·T planes
+    * and one task holds at most `stateBudgetBytes`. */
   def fillAcrossTime(spark: SparkSession, tiles: DataFrame,
-                     timeDepth: Int = 0,
+                     timeDepth: Int,
                      stateBudgetBytes: Long = Composite.DefaultStateBudgetBytes,
                      stateProbe: Option[Composite.MaxAcc] = None): DataFrame = {
     import spark.implicits._
-    if (timeDepth > 0) {
-      val probe = stateProbe
-      val budget = stateBudgetBytes
-      val planesPerTile = 2 * timeDepth
-      val sliced = tiles
-        .select(col("band"), col("tIdx"),
-          unix_timestamp(col("time")).as("tSec"),
-          col("ty"), col("tx"), col("data"), col("dtype"), col("nodata"),
-          col("width"), col("height"))
-        .as[(String, Int, Long, Int, Int, Array[Byte], String, Double, Int, Int)]
-        .flatMap { case (band, tIdx, tSec, ty, tx, data, dtype, nodata, w, h) =>
-          val sr = Composite.sliceRowsFor(planesPerTile, w, h, budget)
-          val rowBytes = w * graft.raster.Grb.dtypeSize(dtype)
-          (0 until h by sr).iterator.map { r0 =>
-            val sh = math.min(sr, h - r0)
-            val cut = java.util.Arrays.copyOfRange(
-              data, r0 * rowBytes, (r0 + sh) * rowBytes)
-            FillSlice(band, tIdx, tSec, ty, tx, r0 / sr, cut, dtype, nodata, w, sh)
-          }
-        }
-        .groupByKey(s => (s.band, s.ty, s.tx, s.slice))
-        .flatMapGroups { (key, it) =>
-          val (band, ty, tx, slice) = key
-          val planes = it.map(s =>
-            PlaneIn(s.tIdx, s.tSec, s.data, s.dtype, s.nodata, s.width, s.sliceH))
-            .toArray.sortBy(_.tSec)
-          val w = planes(0).width
-          val sh = planes(0).height
-          require(planes.forall(p => p.width == w && p.height == sh),
-            s"slice shape mismatch at ($band,$ty,$tx)")
-          probe.foreach(_.add(2L * planes.length * w * sh * 8L))
-          val (filled, nFilled) = fillKernel(planes, w * sh)
-          planes.indices.iterator.map(p =>
-            (band, planes(p).tIdx, ty, tx, slice, filled(p), nFilled(p)))
-        }
-      // output-sized reassembly per (band, tIdx, ty, tx): task state is
-      // the S slices of ONE filled plane — bounded by tile size
-      return sliced
-        .groupByKey { case (band, tIdx, ty, tx, _, _, _) => (band, tIdx, ty, tx) }
-        .mapGroups { (key, it) =>
-          val (band, tIdx, ty, tx) = key
-          val parts = it.map { case (_, _, _, _, s, f, nf) => (s, f, nf) }
-            .toArray.sortBy(_._1)
-          val n = parts.iterator.map(_._2.length).sum
-          val filled = new Array[Double](n)
-          var off = 0
-          var nFilled = 0
-          parts.foreach { case (_, f, nf) =>
-            System.arraycopy(f, 0, filled, off, f.length)
-            off += f.length
-            nFilled += nf
-          }
-          (band, tIdx, ty, tx, filled, nFilled)
-        }
-        .toDF("band", "tIdx", "ty", "tx", "filled", "n_filled")
-    }
-    tiles
-      .select(col("band"), col("ty"), col("tx"), col("tIdx"),
-        unix_timestamp(col("time")).as("tSec"),
-        col("data"), col("dtype"), col("nodata"),
-        col("width"), col("height"))
-      .as[(String, Int, Int, Int, Long, Array[Byte], String, Double, Int, Int)]
-      .groupByKey { case (band, ty, tx, _, _, _, _, _, _, _) => (band, ty, tx) }
-      .flatMapGroups { (key, it) =>
-        val (band, ty, tx) = key
-        val planes = it.map { case (_, _, _, tIdx, tSec, data, dtype, nodata, w, h) =>
-          PlaneIn(tIdx, tSec, data, dtype, nodata, w, h)
-        }.toArray.sortBy(_.tSec)
-        val w = planes(0).width
-        val h = planes(0).height
-        require(planes.forall(p => p.width == w && p.height == h),
-          s"tile shape mismatch at ($band,$ty,$tx)")
-        val (filled, nFilled) = fillKernel(planes, w * h)
-        planes.indices.iterator.map(p =>
-          (band, planes(p).tIdx, ty, tx, filled(p), nFilled(p)))
-      }
+    Composite.rechunk(spark, tiles, timeDepth, stateBudgetBytes, stateProbe,
+        jointBands = false, statePerPlane = 2) { (planes, n) =>
+      val (filled, nFilled) = fillKernel(planes, n)
+      planes.indices.iterator.map(p =>
+        (planes(p).band, planes(p).tIdx, Array(filled(p)), Array(nFilled(p))))
+    }.map(t => (t.band, t.tIdx, t.ty, t.tx, t.planes(0), t.cnt.sum))
       .toDF("band", "tIdx", "ty", "tx", "filled", "n_filled")
   }
 
   /** Per-pixel forward/backward interpolation sweep over `planes`
-    * (tSec-sorted, each `n` pixels) — shared by the full-tile and
-    * sliced plan shapes, so slicing cannot change a value. */
-  private def fillKernel(planes: Array[PlaneIn],
+    * (time-ascending, each `n` pixels); returns the filled planes and
+    * each plane's count of filled pixels. */
+  private def fillKernel(planes: Array[Composite.Plane],
                          n: Int): (Array[Array[Double]], Array[Int]) = {
     val t = planes.length
-    val px = planes.map(p => Fuse.decode(p.data, p.dtype))
+    val px = planes.map(_.px)
     val filled = Array.fill(t)(new Array[Double](n))
     val nFilled = new Array[Int](t)
     val prevIdx = new Array[Int](t)

@@ -239,86 +239,33 @@ object Trend {
   /** Theil–Sen ROBUST trend — the median-of-pairwise-slopes estimator
     * (up to ~29% outlier contamination without breakdown; the cloudy-
     * scene-tolerant sibling of [[trendAcrossTime]]'s OLS). The median
-    * is NOT mergeable, so unlike OLS this is the rechunk family: one
-    * shuffle keyed `(band, ty, tx, slice)` co-locates a tile's time
-    * planes — row-band-sliced via [[Composite.slicedTiles]] when
-    * `planesPerTile` is passed, so task state stays under the byte
-    * budget at ANY archive depth — then the O(T²)-per-pixel kernel
-    * runs task-locally and output planes reassemble in an output-sized
-    * second shuffle. Times snap to whole days as in OLS.
+    * is NOT mergeable, so unlike OLS this is the rechunk family
+    * ([[Composite.rechunk]]): row-band slices keyed
+    * `(band, ty, tx, slice)` co-locate a tile's time planes with task
+    * state under the byte budget at ANY archive depth, the O(T²)-per-
+    * pixel kernel runs task-locally over the time-ascending planes, and
+    * output planes reassemble in an output-sized second shuffle. Times
+    * snap to whole days as in OLS. `planesPerTile` is T.
     *
     * `maxPairsPerPixel` (0 = exact, the oracle path) bounds the
     * kernel's O(T²) CPU for deep archives via deterministic pair
     * subsampling — see [[theilSenKernel]] for the envelope numbers. */
   def theilSenAcrossTime(spark: SparkSession, tiles: DataFrame,
-                         t0Sec: Long, planesPerTile: Int = 0,
+                         t0Sec: Long, planesPerTile: Int,
                          stateBudgetBytes: Long =
                            Composite.DefaultStateBudgetBytes,
-                         maxPairsPerPixel: Int = 0): DataFrame = {
+                         maxPairsPerPixel: Int = 0,
+                         stateProbe: Option[Composite.MaxAcc] = None)
+      : DataFrame = {
     import spark.implicits._
-    val withT = tiles.withColumn("tDays",
-      floor(((unix_timestamp(col("time")) - t0Sec) / 86400.0) + 0.5)
-        .cast("double"))
-    if (planesPerTile <= 0) {
-      withT
-        .select(col("band"), col("ty"), col("tx"), col("tDays"),
-          col("data"), col("dtype"), col("nodata"),
-          col("width"), col("height"))
-        .as[(String, Int, Int, Double, Array[Byte], String, Double, Int, Int)]
-        .groupByKey { case (band, ty, tx, _, _, _, _, _, _) => (band, ty, tx) }
-        .mapGroups { (key, it) =>
-          val (band, ty, tx) = key
-          var w = 0; var h = 0
-          val planes = scala.collection.mutable
-            .ArrayBuffer.empty[(Array[Double], Double, Double)]
-          it.foreach { case (_, _, _, td, data, dtype, nodata, tw, th) =>
-            if (planes.isEmpty) { w = tw; h = th }
-            require(w == tw && h == th,
-              s"tile shape mismatch: ${w}x$h vs ${tw}x$th")
-            planes += ((Fuse.decode(data, dtype), nodata, td))
-          }
-          val sorted = planes.sortBy(_._3)
-          val (s, ic, c) = theilSenKernel(sorted, w * h, maxPairsPerPixel)
-          (band, ty, tx, s, ic, c)
-        }
-        .toDF("band", "ty", "tx", "slope", "icept", "count")
-    } else {
-      // bounded path: encoded row-band slices → one rechunk → kernel →
-      // output-sized reassembly (the Composite selection plan)
-      val dayOf = withT.select(col("tIdx"), col("tDays"))
-        .distinct().collect()
-        .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-      val sliced =
-        Composite.slicedTiles(spark, tiles, planesPerTile, stateBudgetBytes)
-          .groupByKey(s => (s.band, s.ty, s.tx, s.slice))
-          .mapGroups { (key, it) =>
-            val (band, ty, tx, slice) = key
-            var w = 0; var sh = 0
-            val planes = scala.collection.mutable
-              .ArrayBuffer.empty[(Array[Double], Double, Double)]
-            it.foreach { s =>
-              if (planes.isEmpty) { w = s.width; sh = s.sliceH }
-              require(w == s.width && sh == s.sliceH,
-                s"slice shape mismatch: ${w}x$sh vs ${s.width}x${s.sliceH}")
-              planes += ((Fuse.decode(s.data, s.dtype), s.nodata,
-                dayOf(s.tIdx)))
-            }
-            val sorted = planes.sortBy(_._3)
-            val (sl, ic, c) = theilSenKernel(sorted, w * sh, maxPairsPerPixel)
-            (band, ty, tx, slice, sl, ic, c)
-          }
-      sliced
-        .groupByKey { case (band, ty, tx, _, _, _, _) => (band, ty, tx) }
-        .mapGroups { (key, it) =>
-          val (band, ty, tx) = key
-          val parts = it.map { case (_, _, _, s, sl, ic, c) =>
-            (s, Array(sl, ic), c)
-          }.toArray
-          val (planes, cnt) = Composite.concatSlices(parts)
-          (band, ty, tx, planes(0), planes(1), cnt)
-        }
-        .toDF("band", "ty", "tx", "slope", "icept", "count")
-    }
+    Composite.rechunk(spark, tiles, planesPerTile, stateBudgetBytes,
+        stateProbe, jointBands = false) { (planes, n) =>
+      // the trendAcrossTime day axis: floor((t − t0)/86400 + 0.5)
+      val (sl, ic, c) = theilSenKernel(planes.map(p => (p.px, p.nodata,
+        math.floor((p.tSec - t0Sec) / 86400.0 + 0.5))), n, maxPairsPerPixel)
+      Iterator((planes(0).band, 0, Array(sl, ic), c))
+    }.map(t => (t.band, t.ty, t.tx, t.planes(0), t.planes(1), t.cnt))
+      .toDF("band", "ty", "tx", "slope", "icept", "count")
   }
 
   /** OLS trend of a `Load` tile DataFrame across time. `t0Sec` anchors

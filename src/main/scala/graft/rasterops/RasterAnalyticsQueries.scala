@@ -361,10 +361,7 @@ private[rasterops] trait RasterAnalyticsQueries {
     * recomputes the residual median — slopes are integer ratios, so
     * the doubles agree bit-for-bit. */
   def trendRobust(spark: SparkSession): DataFrame = {
-    val res = landGapSeries(spark, TrendRobustCellsPath)
-    val t0Sec = res.times.map(_.getTime / 1000L).min
-    graft.load.Trend.theilSenAcrossTime(spark, res.tiles, t0Sec,
-        planesPerTile = res.times.length)
+    landGapSeries(spark, TrendRobustCellsPath).trendRobust()
       .select(col("band"), col("ty"), col("tx"),
         expr("aggregate(count, 0, (s, c) -> s + c)").as("n_obs"),
         expr("aggregate(slope, 0, (s, v) -> s + if(isnan(v), 0, 1))")

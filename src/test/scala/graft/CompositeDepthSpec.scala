@@ -1,16 +1,20 @@
 package graft
 
-import graft.load.{Composite, Fuse}
+import graft.load.{Composite, Fuse, TemporalFill, Trend}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, expr}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Deep-time-stack memory bound for the non-mergeable composites
-  * (median/quantile/masked/geomedian/MAD): when the caller passes the
-  * B·T plane count, tiles are sliced into row bands BEFORE the rechunk
-  * shuffle so any one task buffers at most `stateBudgetBytes` of
-  * decoded planes regardless of archive depth T — and the sliced plan
-  * produces BIT-IDENTICAL results to the full-tile plan (shared
-  * per-pixel kernels). T=160 here satisfies the T ≥ 128 deep-stack
-  * requirement. */
+/** Deep-time-stack memory bound for the non-mergeable across-time
+  * operators (median/quantile/masked/geomedian/MAD, Theil–Sen,
+  * temporal fill): tiles are sliced into row bands sized from the B·T
+  * plane count BEFORE the rechunk shuffle, so any one task buffers at
+  * most `stateBudgetBytes` of decoded planes regardless of archive
+  * depth T — and many slices per tile give BIT-IDENTICAL results to one
+  * slice per tile (`stateBudgetBytes = Long.MaxValue`, the whole-tile
+  * groups). T=160 here satisfies the T ≥ 128 deep-stack requirement. */
 class CompositeDepthSpec extends AnyFunSuite {
   import GraftSpark.spark
 
@@ -20,7 +24,8 @@ class CompositeDepthSpec extends AnyFunSuite {
 
   /** Deterministic deep stack: `nb` bands × T times of one W×H uint16
     * tile, nodata=0, with per-pixel holes (pixel i invalid at time t
-    * when (t + i) % 7 == 0) and a few all-hole pixels. */
+    * when (t + i) % 7 == 0) and a few all-hole pixels; plane tIdx is
+    * acquired on day tIdx. */
   private def deepTiles(nb: Int) = {
     import spark.implicits._
     val bands = Seq("red", "nir", "qa").take(nb)
@@ -37,6 +42,8 @@ class CompositeDepthSpec extends AnyFunSuite {
     }
     rows.toDF("band", "tIdx", "ty", "tx", "data", "dtype", "nodata",
       "width", "height")
+      .withColumn("time",
+        expr("timestampadd(DAY, tIdx, timestamp'2020-06-01 00:00:00')"))
   }
 
   /** Budget forcing ~8 row-band slices for `planes` planes per group. */
@@ -48,12 +55,11 @@ class CompositeDepthSpec extends AnyFunSuite {
     a
   }
 
-  /** Canonical row dump (schemas are identical across the two plans, so
-    * whole-row string equality IS bit equality incl. NaN markers). */
-  private def planesOf(df: org.apache.spark.sql.DataFrame,
-                       cols: Seq[String]): Seq[String] = {
+  /** Canonical row dump (schemas are identical across the two budgets,
+    * so whole-row string equality IS bit equality incl. NaN markers). */
+  private def planesOf(df: DataFrame, cols: Seq[String]): Seq[String] = {
     val key = df.columns.filterNot(cols.contains).toSeq
-    df.select((key ++ cols).map(org.apache.spark.sql.functions.col): _*)
+    df.select((key ++ cols).map(col): _*)
       .collect().map(_.toString).sorted.toSeq
   }
 
@@ -74,7 +80,8 @@ class CompositeDepthSpec extends AnyFunSuite {
   test("median/quantile: sliced plan bit-identical to full-tile, state capped") {
     val tiles = deepTiles(1)
     val full = planesOf(
-      Composite.medianAcrossTime(spark, tiles), Seq("median", "count"))
+      Composite.medianAcrossTime(spark, tiles, planesPerTile = T,
+        stateBudgetBytes = Long.MaxValue), Seq("median", "count"))
     val acc = probe()
     val budget = budgetFor(T)
     val sliced = planesOf(
@@ -86,8 +93,8 @@ class CompositeDepthSpec extends AnyFunSuite {
       s"peak decoded state ${acc.value} exceeds budget $budget")
 
     val fullQ = planesOf(
-      Composite.quantileAcrossTime(spark, tiles, 0.25),
-      Seq("quantile", "count"))
+      Composite.quantileAcrossTime(spark, tiles, 0.25, planesPerTile = T,
+        stateBudgetBytes = Long.MaxValue), Seq("quantile", "count"))
     val slicedQ = planesOf(
       Composite.quantileAcrossTime(spark, tiles, 0.25, planesPerTile = T,
         stateBudgetBytes = budget), Seq("quantile", "count"))
@@ -97,7 +104,8 @@ class CompositeDepthSpec extends AnyFunSuite {
   test("masked median: sliced plan bit-identical, state capped (T=160 ×2 bands)") {
     val tiles = deepTiles(3).where("band in ('red','qa')")
     val full = planesOf(
-      Composite.maskedMedianAcrossTime(spark, tiles, "red", "qa", _ == 1.0),
+      Composite.maskedMedianAcrossTime(spark, tiles, "red", "qa", _ == 1.0,
+        planesPerTile = 2 * T, stateBudgetBytes = Long.MaxValue),
       Seq("median", "count"))
     val acc = probe()
     val budget = budgetFor(2 * T)
@@ -111,19 +119,17 @@ class CompositeDepthSpec extends AnyFunSuite {
   }
 
   test("temporal fill: sliced plan bit-identical, state capped (T=160)") {
-    import org.apache.spark.sql.functions.{col, expr}
-    // the fill keys planes by timestamp, so give each tIdx a real time
-    val tiles = deepTiles(1).withColumn("time",
-      expr("timestampadd(DAY, tIdx, timestamp'2020-06-01 00:00:00')"))
-    def canon(df: org.apache.spark.sql.DataFrame) =
+    val tiles = deepTiles(1)
+    def canon(df: DataFrame) =
       df.select(col("band"), col("tIdx"), col("ty"), col("tx"),
         col("n_filled"), col("filled"))
         .collect().map(_.toString).sorted.toSeq
-    val full = canon(graft.load.TemporalFill.fillAcrossTime(spark, tiles))
+    val full = canon(TemporalFill.fillAcrossTime(spark, tiles,
+      timeDepth = T, stateBudgetBytes = Long.MaxValue))
     val acc = probe()
     // the fill holds decoded + filled planes: 2·T enters the slicing
     val budget = budgetFor(2 * T)
-    val sliced = canon(graft.load.TemporalFill.fillAcrossTime(spark, tiles,
+    val sliced = canon(TemporalFill.fillAcrossTime(spark, tiles,
       timeDepth = T, stateBudgetBytes = budget, stateProbe = Some(acc)))
     assert(sliced == full)
     assert(acc.value > 0 && acc.value <= budget,
@@ -134,7 +140,8 @@ class CompositeDepthSpec extends AnyFunSuite {
     val tiles = deepTiles(2)
     val bands = Seq("red", "nir")
     val full = planesOf(
-      Composite.geomedianAcrossTime(spark, tiles, bands),
+      Composite.geomedianAcrossTime(spark, tiles, bands,
+        planesPerTile = 2 * T, stateBudgetBytes = Long.MaxValue),
       Seq("geomedian", "count"))
     val acc = probe()
     val budget = budgetFor(2 * T)
@@ -147,7 +154,8 @@ class CompositeDepthSpec extends AnyFunSuite {
       s"peak decoded state ${acc.value} exceeds budget $budget")
 
     val fullM = planesOf(
-      Composite.geomadAcrossTime(spark, tiles, bands),
+      Composite.geomadAcrossTime(spark, tiles, bands, planesPerTile = 2 * T,
+        stateBudgetBytes = Long.MaxValue),
       Seq("emad", "smad", "bcmad", "count"))
     val accM = probe()
     val slicedM = planesOf(
@@ -157,5 +165,55 @@ class CompositeDepthSpec extends AnyFunSuite {
     assert(slicedM == fullM)
     assert(accM.value > 0 && accM.value <= budget,
       s"peak decoded state ${accM.value} exceeds budget $budget")
+  }
+
+  test("theil-sen: sliced plan bit-identical, state capped (T=160)") {
+    val tiles = deepTiles(1)
+    val full = planesOf(
+      Trend.theilSenAcrossTime(spark, tiles, 0L, planesPerTile = T,
+        stateBudgetBytes = Long.MaxValue), Seq("slope", "icept", "count"))
+    val acc = probe()
+    val budget = budgetFor(T)
+    val sliced = planesOf(
+      Trend.theilSenAcrossTime(spark, tiles, 0L, planesPerTile = T,
+        stateBudgetBytes = budget, stateProbe = Some(acc)),
+      Seq("slope", "icept", "count"))
+    assert(sliced == full)
+    assert(acc.value > 0 && acc.value <= budget,
+      s"peak decoded state ${acc.value} exceeds budget $budget")
+  }
+
+  test("building a rechunk operator fires no Spark job") {
+    val tiles = deepTiles(2)
+    val bands = Seq("red", "nir")
+    val builders: Seq[(String, () => DataFrame)] = Seq(
+      "median" -> (() => Composite.medianAcrossTime(spark, tiles, T)),
+      "quantile" -> (() => Composite.quantileAcrossTime(spark, tiles, 0.25, T)),
+      "masked median" -> (() => Composite.maskedMedianAcrossTime(spark,
+        tiles, "red", "nir", _ > 500.0, planesPerTile = 2 * T)),
+      "geomedian" -> (() => Composite.geomedianAcrossTime(spark, tiles,
+        bands, planesPerTile = 2 * T)),
+      "geomad" -> (() => Composite.geomadAcrossTime(spark, tiles, bands,
+        planesPerTile = 2 * T)),
+      "theil-sen" -> (() => Trend.theilSenAcrossTime(spark, tiles, 0L, T)),
+      "temporal fill" -> (() => TemporalFill.fillAcrossTime(spark, tiles, T)))
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    // earlier specs' queued events must not reach the new listener
+    Harness.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val eager = builders.map { case (name, build) =>
+        jobs.set(0)
+        build()
+        Harness.drainListeners(spark)
+        name -> jobs.get
+      }.filter(_._2 > 0)
+      assert(eager.isEmpty, s"jobs fired while building: $eager")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

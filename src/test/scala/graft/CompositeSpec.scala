@@ -3,12 +3,19 @@ package graft
 import graft.load.{Composite, Fuse, Load}
 import graft.raster.Fixtures
 import graft.stac.StacParse
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.expr
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Across-time composite Aggregator: nodata-aware per-pixel mean/min/
   * max/count over time planes, partial-aggregation-safe. */
 class CompositeSpec extends AnyFunSuite {
   import GraftSpark.spark
+
+  /** Load's tile schema carries each plane's acquisition `time`, which
+    * the rechunk plan orders planes by; stamp plane `tIdx` at day tIdx. */
+  private def timed(rows: DataFrame): DataFrame = rows.withColumn("time",
+    expr("timestampadd(DAY, tIdx, timestamp'2020-06-01 00:00:00')"))
 
   test("mean/min/max/count over synthetic planes with holes") {
     import spark.implicits._
@@ -45,7 +52,8 @@ class CompositeSpec extends AnyFunSuite {
       ("b", 2, 0, 0, Fuse.encode(Array(900.0, 40.0, 0.0, 0.0), "uint16"),
         "uint16", 0.0, 2, 2)
     ).toDF("band", "tIdx", "ty", "tx", "data", "dtype", "nodata", "width", "height")
-    val out = Composite.medianAcrossTime(spark, rows).collect()
+    val out = Composite.medianAcrossTime(spark, timed(rows), planesPerTile = 3)
+      .collect()
     assert(out.length == 1)
     val r = out.head
     val med = r.getAs[scala.collection.Seq[Double]]("median").toSeq
@@ -68,15 +76,19 @@ class CompositeSpec extends AnyFunSuite {
       ("b", 2, 0, 0, Fuse.encode(Array(40.0, 40.0, 0.0, 0.0), "uint16"),
         "uint16", 0.0, 2, 2)
     ).toDF("band", "tIdx", "ty", "tx", "data", "dtype", "nodata", "width", "height")
-    val q25 = Composite.quantileAcrossTime(spark, rows, 0.25).collect().head
+    val q25 = Composite.quantileAcrossTime(spark, timed(rows), 0.25,
+      planesPerTile = 3).collect().head
       .getAs[scala.collection.Seq[Double]]("quantile").toSeq
     assert(q25(0) == 15.0 && q25(1) == 25.0 && q25(2) == 30.0 && q25(3).isNaN)
-    val q75 = Composite.quantileAcrossTime(spark, rows, 0.75).collect().head
+    val q75 = Composite.quantileAcrossTime(spark, timed(rows), 0.75,
+      planesPerTile = 3).collect().head
       .getAs[scala.collection.Seq[Double]]("quantile").toSeq
     assert(q75(0) == 30.0 && q75(1) == 35.0 && q75(2) == 30.0 && q75(3).isNaN)
-    val q50 = Composite.quantileAcrossTime(spark, rows, 0.5).collect().head
+    val q50 = Composite.quantileAcrossTime(spark, timed(rows), 0.5,
+      planesPerTile = 3).collect().head
       .getAs[scala.collection.Seq[Double]]("quantile").toSeq
-    val med = Composite.medianAcrossTime(spark, rows).collect().head
+    val med = Composite.medianAcrossTime(spark, timed(rows),
+      planesPerTile = 3).collect().head
       .getAs[scala.collection.Seq[Double]]("median").toSeq
     assert(q50.zip(med).forall { case (a, b) =>
       (a.isNaN && b.isNaN) || a == b })
@@ -102,8 +114,8 @@ class CompositeSpec extends AnyFunSuite {
       row("qa", 1, Array(1.0, 2.0, 0.0, 1.0))
     ).toDF("band", "tIdx", "ty", "tx", "data", "dtype", "nodata",
       "width", "height")
-    val out = Composite.maskedMedianAcrossTime(spark, rows, "red", "qa",
-      _ == 1.0).collect()
+    val out = Composite.maskedMedianAcrossTime(spark, timed(rows), "red",
+      "qa", _ == 1.0, planesPerTile = 2 * 3).collect()
     assert(out.length == 1)
     val med = out.head.getAs[scala.collection.Seq[Double]]("median").toSeq
     assert(med == Seq(30.0, 20.0, 20.0, 20.0))
@@ -132,7 +144,8 @@ class CompositeSpec extends AnyFunSuite {
     }
     // the median composite of the same load agrees with the Aggregator on
     // per-pixel coverage and sits inside the [min, max] envelope
-    val med = Composite.medianAcrossTime(spark, res.tiles).collect()
+    val med = Composite.medianAcrossTime(spark, res.tiles,
+      planesPerTile = res.times.length).collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2)) -> r).toMap
     comp.foreach { r =>
       val key = (r.getString(0), r.getInt(1), r.getInt(2))
@@ -151,7 +164,8 @@ class CompositeSpec extends AnyFunSuite {
     // automatically and must equal the raw spelling bit-for-bit
     val viaResult = res.medianComposite().collect()
       .map(_.toString).sorted.toSeq
-    val viaRaw = Composite.medianAcrossTime(spark, res.tiles).collect()
+    val viaRaw = Composite.medianAcrossTime(spark, res.tiles,
+      planesPerTile = res.times.length).collect()
       .map(_.toString).sorted.toSeq
     assert(viaResult == viaRaw)
   }
@@ -172,8 +186,8 @@ class CompositeSpec extends AnyFunSuite {
       t("red", 2, Array(90, 0)), t("nir", 2, Array(900, 700))
     ).toDF("band", "tIdx", "ty", "tx", "data", "dtype", "nodata",
       "width", "height")
-    val out = Composite.geomedianAcrossTime(spark, rows, Seq("red", "nir"))
-      .orderBy("band").collect()
+    val out = Composite.geomedianAcrossTime(spark, timed(rows),
+      Seq("red", "nir"), planesPerTile = 2 * 3).orderBy("band").collect()
     assert(out.map(_.getString(0)).toSeq == Seq("nir", "red"))
     val nir = out(0).getAs[scala.collection.Seq[Double]]("geomedian")
     val red = out(1).getAs[scala.collection.Seq[Double]]("geomedian")
@@ -196,8 +210,8 @@ class CompositeSpec extends AnyFunSuite {
       t("red", 1, Array(0.0)), t("nir", 1, Array(100))
     ).toDF("band", "tIdx", "ty", "tx", "data", "dtype", "nodata",
       "width", "height")
-    val out = Composite.geomedianAcrossTime(spark, rows, Seq("red", "nir"))
-      .collect()
+    val out = Composite.geomedianAcrossTime(spark, timed(rows),
+      Seq("red", "nir"), planesPerTile = 2 * 2).collect()
     assert(out.length == 2)
     out.foreach { r =>
       assert(r.getAs[scala.collection.Seq[Double]]("geomedian")(0).isNaN)
@@ -215,8 +229,8 @@ class CompositeSpec extends AnyFunSuite {
       t("red", 2, Array(90, 0)), t("nir", 2, Array(900, 700))
     ).toDF("band", "tIdx", "ty", "tx", "data", "dtype", "nodata",
       "width", "height")
-    val out = Composite.geomadAcrossTime(spark, rows, Seq("red", "nir"))
-      .collect()
+    val out = Composite.geomadAcrossTime(spark, timed(rows),
+      Seq("red", "nir"), planesPerTile = 2 * 3).collect()
     assert(out.length == 1)
     val r = out.head
     val emad = r.getAs[scala.collection.Seq[Double]]("emad")

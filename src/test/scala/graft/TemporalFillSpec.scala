@@ -26,7 +26,7 @@ class TemporalFillSpec extends AnyFunSuite {
         "uint16", 0.0, 2, 2)
     ).toDF("band", "tIdx", "ty", "tx", "time", "data", "dtype", "nodata",
       "width", "height")
-    val out = TemporalFill.fillAcrossTime(spark, rows)
+    val out = TemporalFill.fillAcrossTime(spark, rows, timeDepth = 3)
       .orderBy("tIdx").collect()
     assert(out.length == 3)
     def plane(i: Int): Seq[Double] =
@@ -50,11 +50,37 @@ class TemporalFillSpec extends AnyFunSuite {
         "uint16", 0.0, 2, 1)
     ).toDF("band", "tIdx", "ty", "tx", "time", "data", "dtype", "nodata",
       "width", "height")
-    val out = TemporalFill.fillAcrossTime(spark, rows).orderBy("tIdx").collect()
+    val out = TemporalFill.fillAcrossTime(spark, rows, timeDepth = 2)
+      .orderBy("tIdx").collect()
     assert(out.map(_.getAs[Int]("n_filled")).toSeq == Seq(0, 0))
     assert(out(0).getAs[scala.collection.Seq[Double]]("filled").toSeq ==
       Seq(1.0, 2.0))
     assert(out(1).getAs[scala.collection.Seq[Double]]("filled").toSeq ==
       Seq(3.0, 4.0))
+  }
+
+  test("same-time planes fill in (time, tIdx) order, whatever the arrival order") {
+    import spark.implicits._
+    // groupby="id" can give two planes one timestamp: tIdx 0 and 1 both
+    // at t=0 with different values, then a gap at t=10 that carries the
+    // last valid value before it — tIdx 1's 20, in either input order
+    val ts = Seq(0L, 0L, 10L).map(s => new java.sql.Timestamp(s * 1000))
+    val rows = Seq(
+      ("b", 0, 0, 0, ts(0), Fuse.encode(Array(10.0), "uint16"),
+        "uint16", 0.0, 1, 1),
+      ("b", 1, 0, 0, ts(1), Fuse.encode(Array(20.0), "uint16"),
+        "uint16", 0.0, 1, 1),
+      ("b", 2, 0, 0, ts(2), Fuse.encode(Array(0.0), "uint16"),
+        "uint16", 0.0, 1, 1))
+    def filled(in: Seq[(String, Int, Int, Int, java.sql.Timestamp,
+        Array[Byte], String, Double, Int, Int)]) =
+      TemporalFill.fillAcrossTime(spark,
+        in.toDF("band", "tIdx", "ty", "tx", "time", "data", "dtype",
+          "nodata", "width", "height").coalesce(1), timeDepth = 3)
+        .orderBy("tIdx").collect()
+        .map(_.getAs[scala.collection.Seq[Double]]("filled").toSeq).toSeq
+    val forward = filled(rows)
+    assert(forward == filled(rows.reverse))
+    assert(forward == Seq(Seq(10.0), Seq(20.0), Seq(20.0)))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.load.{Fuse, Trend}
+import graft.load.{Composite, Fuse, Trend}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -94,7 +94,9 @@ class TrendPropsSpec extends AnyFunSuite {
   }
 
   /** Tile frame with one 1×1 plane per (day, value) for the Theil–Sen
-    * operator (which consumes the Load tiles schema). */
+    * operator (which consumes the Load tiles schema). `bounded` runs
+    * the default state budget, otherwise `Long.MaxValue` (one slice per
+    * tile: the whole-tile groups). */
   private def tsFit(obs: Seq[(Int, Double)], bounded: Boolean,
                     maxPairs: Int = 0)
       : (Double, Double) = {
@@ -107,7 +109,9 @@ class TrendPropsSpec extends AnyFunSuite {
     val tiles = rows.toDF("band", "tIdx", "ty", "tx", "time",
       "data", "dtype", "nodata", "width", "height")
     val out = Trend.theilSenAcrossTime(spark, tiles, 0L,
-        planesPerTile = if (bounded) obs.length else 0,
+        planesPerTile = obs.length,
+        stateBudgetBytes =
+          if (bounded) Composite.DefaultStateBudgetBytes else Long.MaxValue,
         maxPairsPerPixel = maxPairs)
       .selectExpr("slope[0]", "icept[0]").head()
     (out.getDouble(0), out.getDouble(1))
