@@ -47,11 +47,9 @@ object BenchCli {
 
   def runBench(spark: SparkSession, nScenes: Int, mode: String,
                ntimes: Int, resultsFile: String): Seq[Rec] = {
-    import spark.implicits._
     val jsons = RasterBench.writeScenes(nScenes)
-    val (ds, schemas) = graft.stac.StacParse.parseItems(
-      spark, spark.createDataset(jsons))
-    val items = ds.collect().toSeq.sortBy(_.id)
+    val (parsed, schemas) = graft.stac.StacParse.parseItems(jsons)
+    val items = parsed.sortBy(_.id)
     val threads = spark.sparkContext.defaultParallelism
     RasterBench.loadOnce(spark, items, schemas, mode == "warp") // warmup
     val recs = (1 to ntimes).map { i =>

@@ -135,8 +135,8 @@ object RasterScaleBench {
     import spark.implicits._
 
     val jsons = writeScenes(n, grid)
-    val (ds, schemas) = StacParse.parseItems(spark, spark.createDataset(jsons))
-    val items = ds.collect().toSeq.sortBy(_.id)
+    val (parsed, schemas) = StacParse.parseItems(jsons)
+    val items = parsed.sortBy(_.id)
     val res = Load.load(spark, items, schemas, bands = Bands,
       groupby = "solar_day", chunks = 256)
     res.tiles.persist()

@@ -19,7 +19,7 @@ private[rasterops] trait RasterAnalyticsQueries {
   this: RasterQueries.type =>
   def zonalStats(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
     val crs = res.geobox.crs
@@ -75,7 +75,7 @@ private[rasterops] trait RasterAnalyticsQueries {
        |ORDER BY zone, band, "tIdx"""".stripMargin
   def temporalFill(spark: SparkSession): DataFrame = {
     val jsons = Fixtures.writeScenesGap(3)
-    val (items, schemas) = parsedOf(spark, jsons)
+    val (items, schemas) = parsedOf(jsons)
     val res = Load.load(spark, items, schemas, bands = Seq("red"),
       groupby = "id", chunks = 64, dtype = Some("float64"))
     val decode = udf { (data: Array[Byte], dtype: String) =>
@@ -152,7 +152,7 @@ private[rasterops] trait RasterAnalyticsQueries {
     * edge-handling-free contract. */
   def temporalSmooth(spark: SparkSession): DataFrame = {
     val jsons = Fixtures.writeScenesGap(7)
-    val (items, schemas) = parsedOf(spark, jsons)
+    val (items, schemas) = parsedOf(jsons)
     val res = Load.load(spark, items, schemas, bands = Seq("red"),
       groupby = "id", chunks = 64, dtype = Some("float64"))
     val fill = res.temporalFill()
@@ -205,7 +205,7 @@ private[rasterops] trait RasterAnalyticsQueries {
   private def landGapSeries(spark: SparkSession, path: String,
       withTsec: Boolean = true): graft.load.LoadResult = {
     val jsons = Fixtures.writeScenesGap(7)
-    val (items, schemas) = parsedOf(spark, jsons)
+    val (items, schemas) = parsedOf(jsons)
     val res = Load.load(spark, items, schemas, bands = Seq("red"),
       groupby = "id", chunks = 64, dtype = Some("float64"))
     val decode = udf { (data: Array[Byte], dtype: String) =>
@@ -576,7 +576,7 @@ private[rasterops] trait RasterAnalyticsQueries {
     * red and nir planes (`CellsPath`) on pixel position — same single
     * IEEE division, so the ×1e6 quantization is bit-agreeing. */
   def bandMathNdvi(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
     graft.load.BandMath
@@ -615,7 +615,7 @@ private[rasterops] trait RasterAnalyticsQueries {
     * re-aggregates per tile. A wrong or missing halo strip shifts every
     * boundary pixel's mean and breaks the checksum. */
   def focalMean(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
     graft.load.Focal.focalMean(spark, res.tiles, radius = 1)
@@ -632,7 +632,7 @@ private[rasterops] trait RasterAnalyticsQueries {
     * the standing repartition itself — with the strip re-key the only
     * operator-added shuffle). */
   def focalMeanStanding(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
     val standing = res.tiles.repartition(
@@ -683,7 +683,7 @@ private[rasterops] trait RasterAnalyticsQueries {
     * checksum. Integer pixel values make the weighted sums order-exact;
     * /8 and √ are IEEE-identical in both engines. */
   def terrain(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
     graft.load.Focal.horn(spark, res.tiles)
@@ -751,7 +751,7 @@ private[rasterops] trait RasterAnalyticsQueries {
     * mosaic plane as [[terrain]]; the oracle recomputes globally from
     * the 9 tap-shifted joins, so halo correctness is again load-bearing. */
   def hillshade(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
     graft.load.Focal.horn(spark, res.tiles)
@@ -819,7 +819,7 @@ private[rasterops] trait RasterAnalyticsQueries {
     * shuffle per iteration. */
   def rasterCluster(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
     val decode = udf { (data: Array[Byte], dtype: String) =>
@@ -864,7 +864,7 @@ private[rasterops] trait RasterAnalyticsQueries {
     * DuckDB re-samples the landed mosaic plane at the same global pixel
     * coords (floor((x−x0)/res) on both sides). */
   def drillPoints(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
     val points = Seq(
@@ -899,7 +899,7 @@ private[rasterops] trait RasterAnalyticsQueries {
     * (each pixel weighted by 1 + its chip-local index), so a fragment
     * placed one pixel off — not just a wrong value — breaks the hash. */
   def chipsQuery(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
     val points = Seq(
@@ -967,7 +967,7 @@ private[rasterops] trait RasterAnalyticsQueries {
     * offset, which the checksum verifies. DuckDB recomputes the change
     * plane by joining the landed mosaic's two time slices per pixel. */
   def changeDetect(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
     graft.load.BandMath.changeAcrossTime(spark, res.tiles, 0, 1)()
@@ -1008,7 +1008,7 @@ private[rasterops] trait RasterAnalyticsQueries {
     * identity `raster_overview_cells` pins on the READ side, now
     * re-proven for the build side. */
   def pyramidBuild(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
     Seq(2, 4).map { s =>
@@ -1042,7 +1042,7 @@ private[rasterops] trait RasterAnalyticsQueries {
        |ORDER BY level, band, "tIdx", ty, tx""".stripMargin
   def maskedComposite(spark: SparkSession): DataFrame = {
     val jsons = Fixtures.writeScenesQa(3)
-    val (items, schemas) = parsedOf(spark, jsons)
+    val (items, schemas) = parsedOf(jsons)
     val res = Load.load(spark, items, schemas, bands = Seq("red", "qa"),
       groupby = "id", chunks = 64)
     val decode = udf { (data: Array[Byte], dtype: String) =>
@@ -1098,7 +1098,7 @@ private[rasterops] trait RasterAnalyticsQueries {
     * (band × time × 16 bins) partial counts, never pixels. DuckDB
     * re-bins the landed plane with the same floor arithmetic. */
   def histogram(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
     val decode = udf { (data: Array[Byte], dtype: String) =>
@@ -1141,7 +1141,7 @@ private[rasterops] trait RasterAnalyticsQueries {
 
   def rasterizeZones(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val gbox = Planner.outputGeobox(items, schemas).get
     val zones = demoZones(gbox.crs)
     zones.zipWithIndex.flatMap { case ((zid, g), zidx) =>
@@ -1196,7 +1196,7 @@ private[rasterops] trait RasterAnalyticsQueries {
     * lookup against the landed mosaic plane — a divergence anywhere in
     * the chain (mask, sample set, OR values) reddens the row. */
   def sampleDrill(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
     val gbox = res.geobox
@@ -1263,7 +1263,7 @@ private[rasterops] trait RasterAnalyticsQueries {
     * from the landed mosaic plane with the same floor/fraction
     * arithmetic. */
   def drillBilinearPoints(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
     val points = Seq(
@@ -1332,7 +1332,7 @@ private[rasterops] trait RasterAnalyticsQueries {
     * observation gathering (ALL bands valid), the mean seed, the
     * weight/update arithmetic, and the quantized summary. */
   def geomedian(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "id", chunks = 64)
     val decode = udf { (data: Array[Byte], dtype: String) =>
@@ -1378,7 +1378,7 @@ private[rasterops] trait RasterAnalyticsQueries {
     * last ulp). Lands its own cells (idempotent, bit-identical to the
     * [[geomedian]] landing) because this query sorts before it. */
   def geomad(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "id", chunks = 64)
     val decode = udf { (data: Array[Byte], dtype: String) =>

@@ -25,7 +25,7 @@ private[rasterops] trait RasterCellsQueries {
     * Sum is integer-quantized (×100 → BIGINT) so it is
     * aggregation-order-exact across engines. */
   def mosaicCells(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
     val decode = udf { (data: Array[Byte], dtype: String) =>
@@ -59,7 +59,7 @@ private[rasterops] trait RasterCellsQueries {
        |GROUP BY band, tidx, ty, tx
        |ORDER BY band, tidx, ty, tx""".stripMargin
   def compositeCells(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "id", chunks = 64)
     val decode = udf { (data: Array[Byte], dtype: String) =>
@@ -97,7 +97,7 @@ private[rasterops] trait RasterCellsQueries {
        |FROM m GROUP BY band, ty, tx
        |ORDER BY band, ty, tx""".stripMargin
   def reprojectCells(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val decode = udf { (data: Array[Byte], dtype: String) =>
       Fuse.decode(data, dtype) }
     Seq("EPSG:3857" -> 20.0, "EPSG:6933" -> 20.0, "ESRI:54034" -> 20.0)
@@ -136,7 +136,7 @@ private[rasterops] trait RasterCellsQueries {
        |GROUP BY crs, band, tidx, ty, tx
        |ORDER BY crs, band, tidx, ty, tx""".stripMargin
   def resampleCells(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val decode = udf { (data: Array[Byte], dtype: String) =>
       Fuse.decode(data, dtype) }
     // native 10 m per-item planes in absolute grid coords; float64 output
@@ -278,7 +278,7 @@ private[rasterops] trait RasterCellsQueries {
   def resampleConv(spark: SparkSession): DataFrame = {
     import spark.implicits._
     import graft.raster.Kernels
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val decode = udf { (data: Array[Byte], dtype: String) =>
       Fuse.decode(data, dtype) }
     Load.load(spark, items, schemas, bands = Seq("red"), groupby = "id",
@@ -420,7 +420,7 @@ private[rasterops] trait RasterCellsQueries {
        |FROM ex GROUP BY mode, band, tidx, gpy
        |ORDER BY mode, band, tidx, gpy""".stripMargin
   def overviewCells(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val decode = udf { (data: Array[Byte], dtype: String) =>
       Fuse.decode(data, dtype) }
     Load.load(spark, items, schemas, bands = Seq("red"), groupby = "id",
@@ -511,7 +511,7 @@ private[rasterops] trait RasterCellsQueries {
   /** Across-time composite (custom Aggregator with map-side partials):
     * per-pixel mean/min/max/count over the per-item time planes. */
   def compositeMean(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "id", chunks = 64)
     graft.load.Composite.acrossTime(spark, res.tiles)
@@ -533,7 +533,7 @@ private[rasterops] trait RasterCellsQueries {
     * zero. Quartile interpolands of integer-valued fixtures are exact
     * binary fractions, so the ×100 quantization is tie-free. */
   def compositeQuantile(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "id", chunks = 64)
     Seq(0.25, 0.75).map { q =>
@@ -571,7 +571,7 @@ private[rasterops] trait RasterCellsQueries {
        |ORDER BY p, band, ty, tx""".stripMargin
 
   def compositeMedian(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "id", chunks = 64)
     res.medianComposite()

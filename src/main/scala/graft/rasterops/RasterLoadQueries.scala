@@ -17,13 +17,13 @@ private[rasterops] trait RasterLoadQueries {
   this: RasterQueries.type =>
 
   def loadMosaic(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     summarize(Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64).tiles)
   }
 
   def loadGroupById(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     summarize(Load.load(spark, items, schemas, bands = Seq("red"),
       groupby = "id", chunks = 64).tiles)
   }
@@ -34,7 +34,7 @@ private[rasterops] trait RasterLoadQueries {
     * (ESRI:54034, World CEA) — reference accepts any proj CRS via
     * rasterio, `_mdtools.py:63`. */
   def loadReproject(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     Seq("EPSG:3857" -> 20.0, "EPSG:6933" -> 20.0, "ESRI:54034" -> 20.0)
       .map { case (crs, res) =>
       summarize(Load.load(spark, items, schemas, bands = Seq("red"),
@@ -49,7 +49,7 @@ private[rasterops] trait RasterLoadQueries {
 
   /** Overview path (S8): 4x coarser output reads the .ovr4 level. */
   def loadOverview(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     summarize(Load.load(spark, items, schemas, bands = Seq("red"),
       groupby = "solar_day", chunks = 64, resolution = Some(40.0)).tiles)
   }
@@ -65,7 +65,7 @@ private[rasterops] trait RasterLoadQueries {
     * kernels themselves are cross-engine-checked at the pixel level by
     * `raster_resample_cells`/`raster_resample_conv`). */
   def loadResampling(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val decode = udf { (data: Array[Byte], dtype: String) =>
       Fuse.decode(data, dtype) }
     Seq("nearest", "bilinear", "average", "mode", "sum", "cubic", "lanczos").map { m =>
@@ -112,7 +112,7 @@ private[rasterops] trait RasterLoadQueries {
     * hash. */
   def loadPolygon(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val crs = graft.geo.Crs.Utm(35, south = true)
     val tri = Geom(IndexedSeq(
       (500640.0, 8000000.0),   // ROI grid's top-left corner
@@ -256,7 +256,7 @@ private[rasterops] trait RasterLoadQueries {
     * resolution that leaked one band's kernel onto the other breaks
     * the join — and re-aggregates the bilinear nir half. */
   def loadResamplingMixed(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val decode = udf { (data: Array[Byte], dtype: String) =>
       Fuse.decode(data, dtype) }
     Load.load(spark, items, schemas, bands = Seq("red", "nir"),
@@ -328,7 +328,7 @@ private[rasterops] trait RasterLoadQueries {
     * source-index convention of the warp's nearest kernel. */
   def loadMultigrid(spark: SparkSession): DataFrame = {
     val jsons = Fixtures.writeScenesMultigrid(NScenes)
-    val (items, schemas) = parsedOf(spark, jsons)
+    val (items, schemas) = parsedOf(jsons)
     val decode = udf { (data: Array[Byte], dtype: String) =>
       Fuse.decode(data, dtype) }
     def landCells(tiles: DataFrame, path: String): Unit =
@@ -427,7 +427,7 @@ private[rasterops] trait RasterLoadQueries {
     * equal the GRB container's (pinned by LoadSpec parity too). */
   def loadTiff(spark: SparkSession): DataFrame = {
     val jsons = Fixtures.writeScenesTiff(NScenes)
-    val (items, schemas) = parsedOf(spark, jsons)
+    val (items, schemas) = parsedOf(jsons)
     val single = summarize(
       Load.load(spark, items, schemas, bands = Seq("red", "nir"),
         groupby = "solar_day", chunks = 64).tiles)
@@ -435,7 +435,7 @@ private[rasterops] trait RasterLoadQueries {
     // packed multi-band asset: red/green/nir are planes 1..3 of ONE tif,
     // exercising RasterSource.band addressing end-to-end (S7 multi-band)
     val mJsons = Fixtures.writeScenesMultiband(NScenes)
-    val (mItems, mSchemas) = parsedOf(spark, mJsons)
+    val (mItems, mSchemas) = parsedOf(mJsons)
     val packed = summarize(
       Load.load(spark, mItems, mSchemas, bands = Seq("red", "green", "nir"),
         groupby = "solar_day", chunks = 64).tiles)
@@ -444,7 +444,7 @@ private[rasterops] trait RasterLoadQueries {
     // addressed via RasterSource.subdataset (S7 subdataset addressing);
     // checksums must equal the per-band-files layout's
     val sJsons = Fixtures.writeScenesSubdatasets(NScenes)
-    val (sItems, sSchemas) = parsedOf(spark, sJsons)
+    val (sItems, sSchemas) = parsedOf(sJsons)
     val subds = summarize(
       Load.load(spark, sItems, sSchemas, bands = Seq("red", "nir"),
         groupby = "solar_day", chunks = 64).tiles)
@@ -463,7 +463,7 @@ private[rasterops] trait RasterLoadQueries {
     * `red.ovr2` sidecar variable at 4x output resolution. */
   def loadZarr(spark: SparkSession): DataFrame = {
     val jsons = Fixtures.writeScenesZarr(NScenes)
-    val (items, schemas) = parsedOf(spark, jsons)
+    val (items, schemas) = parsedOf(jsons)
     val full = summarize(
       Load.load(spark, items, schemas, bands = Seq("red", "nir"),
         groupby = "solar_day", chunks = 64).tiles)
@@ -485,7 +485,7 @@ private[rasterops] trait RasterLoadQueries {
     * (pinned by LoadSpec parity too). */
   def loadNetcdf(spark: SparkSession): DataFrame = {
     val jsons = Fixtures.writeScenesNc(NScenes)
-    val (items, schemas) = parsedOf(spark, jsons)
+    val (items, schemas) = parsedOf(jsons)
     summarize(
       Load.load(spark, items, schemas, bands = Seq("red", "nir"),
         groupby = "solar_day", chunks = 64).tiles)
@@ -572,7 +572,7 @@ private[rasterops] trait RasterLoadQueries {
     * assembly), then read BACK through the `raster` DSv2 table — the full
     * write-then-SQL raster lifecycle. */
   def cogExport(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
     val out = java.nio.file.Paths.get(
@@ -595,7 +595,7 @@ private[rasterops] trait RasterLoadQueries {
     * the COG export's per-band totals (same cube, different container). */
   def zarrExport(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
     val store = java.nio.file.Paths.get(
@@ -625,7 +625,7 @@ private[rasterops] trait RasterLoadQueries {
     * persistence path — at 100 TB the fused cube lives as parquet tile
     * rows, partitioned by band, re-loadable without re-reading sources). */
   def tilesRoundtrip(spark: SparkSession): DataFrame = {
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
     val out = java.nio.file.Files.createTempDirectory("graft_tiles_rt").toString

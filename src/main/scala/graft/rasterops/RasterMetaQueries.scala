@@ -21,7 +21,7 @@ private[rasterops] trait RasterMetaQueries {
     import spark.implicits._
     Fixtures.writeScenes(NScenes).toDF("json")
       .coalesce(1).write.mode("overwrite").parquet(ParseItemsPath)
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val md = schemas(Fixtures.CollectionId)
     items.map { i =>
       (i.id, i.collection, i.bands.size,
@@ -127,8 +127,7 @@ private[rasterops] trait RasterMetaQueries {
     // summary from the dump itself (see [[stacSearchDuckSql]])
     items.toDF("json")
       .coalesce(1).write.mode("overwrite").parquet(StacSearchPath)
-    val (ds, _) = StacParse.parseItems(spark, spark.createDataset(items))
-    ds.map(i => (i.id, i.collection, i.bands.size))
+    StacParse.parseItems(items)._1.map(i => (i.id, i.collection, i.bands.size))
       .toDF("id", "collection", "n_bands")
       .withColumn("n_dumped", lit(n.toLong))
       .orderBy("id")
@@ -154,7 +153,7 @@ private[rasterops] trait RasterMetaQueries {
   def outputGeoboxPlans(spark: SparkSession): DataFrame = {
     import spark.implicits._
     import graft.geo.{Affine, Crs, GeoBox}
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
 
     // ---- landed replay inputs ----------------------------------------
     def gridRow(cse: String, idx: Int, g: GeoBox) = {
@@ -345,7 +344,7 @@ private[rasterops] trait RasterMetaQueries {
   /** J1 spatial binning summary: items per (t, ty, tx) bin. */
   def tyxBins(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val outGbox = Planner.outputGeobox(items, schemas).get
     val gbt = graft.geo.GeoBoxTiles(outGbox, 64, 64)
     val groups = Planner.groupItems(items, Planner.BySolarDay(Some(27.0)))
@@ -368,7 +367,7 @@ private[rasterops] trait RasterMetaQueries {
     import spark.implicits._
     Fixtures.writeScenes(NScenes).toDF("json")
       .coalesce(1).write.mode("overwrite").parquet(Eo3ExportPath)
-    val (items, schemas) = parsed(spark)
+    val (items, schemas) = parsed()
     val ds = spark.createDataset(items)
     Eo3.stac2ds(spark, ds, schemas).as[(String, String)]
       .map { case (id, doc) =>
@@ -411,7 +410,7 @@ private[rasterops] trait RasterMetaQueries {
     import spark.implicits._
     Fixtures.writeScenes(NScenes).toDF("json")
       .coalesce(1).write.mode("overwrite").parquet(Eo3ExportPath)
-    val (_, schemas) = parsed(spark)
+    val (_, schemas) = parsed()
     schemas.toSeq.sortBy(_._1).map { case (cid, md) =>
       val doc = Eo3.toProductDoc(md)
       val m = new com.fasterxml.jackson.databind.ObjectMapper()

@@ -34,7 +34,7 @@ private[rasterops] trait RasterStreamQueries {
     // (the MGRS-tile analog) — per-batch auto-planning would re-anchor
     // tile indices to each batch's extent and the standing table would
     // never line up with itself, let alone the batch load
-    val (allItems, allSchemas) = parsed(spark)
+    val (allItems, allSchemas) = parsed()
     val grid = Planner.outputGeobox(allItems, allSchemas).get
     val landing = java.nio.file.Files.createTempDirectory("graft_ring_land")
     jsons.zipWithIndex.foreach { case (j, i) =>
@@ -54,11 +54,9 @@ private[rasterops] trait RasterStreamQueries {
         val js = batch.select("value").as[String](
           org.apache.spark.sql.Encoders.STRING).collect().toSeq
         if (js.nonEmpty) {
-          // driver-side parse against the standing collection schemas
-          // (inferred once up front, like the standing grid): a
-          // metadata-sized batch gains nothing from two distributed
-          // parse jobs per trigger — the items are identical
-          val items = StacParse.parseItemsLocal(js, allSchemas).sortBy(_.id)
+          // parse against the standing collection schemas (inferred
+          // once up front, like the standing grid)
+          val items = StacParse.parseWithSchemas(js, allSchemas).sortBy(_.id)
           val res = Load.load(spark, items, allSchemas,
             bands = Seq("red", "nir"), groupby = "id", chunks = 64,
             geobox = Some(grid))
@@ -136,7 +134,7 @@ private[rasterops] trait RasterStreamQueries {
         if (js.nonEmpty && pending.nonEmpty) {
           // driver-side parse against the standing schemas — see
           // [[streamRasterIngest]]'s foreachBatch note
-          val items = StacParse.parseItemsLocal(js, schemas).sortBy(_.id)
+          val items = StacParse.parseWithSchemas(js, schemas).sortBy(_.id)
           val res = Load.load(spark, items, schemas,
             bands = Seq("red", "nir"), groupby = "id", chunks = 64,
             geobox = Some(grid))
@@ -170,7 +168,7 @@ private[rasterops] trait RasterStreamQueries {
     mergedStates.get(graft.BoundedCache.key(spark)) {
       val jsons =
         Fixtures.writeScenes(NScenes).map(_.replaceAll("\n", " "))
-      val (allItems, allSchemas) = parsed(spark)
+      val (allItems, allSchemas) = parsed()
       val grid = Planner.outputGeobox(allItems, allSchemas).get
       runMergeStream(spark, "graft_stream_merge_landing",
         jsons, grid, allSchemas, Seq(
@@ -253,7 +251,7 @@ private[rasterops] trait RasterStreamQueries {
     * zip_with breaks the hash. */
   def streamComposite(spark: SparkSession): DataFrame = {
     val statePath = ensureMergeStates(spark)(0)
-    val (allItems, allSchemas) = parsed(spark)
+    val (allItems, allSchemas) = parsed()
     val grid = Planner.outputGeobox(allItems, allSchemas).get
 
     // oracle anchor: the same scenes in ONE batch load, per-time pixel
@@ -460,7 +458,7 @@ private[rasterops] trait RasterStreamQueries {
 
   def streamTrend(spark: SparkSession): DataFrame = {
     val statePath = ensureMergeStates(spark)(1)
-    val (allItems, allSchemas) = parsed(spark)
+    val (allItems, allSchemas) = parsed()
     val grid = Planner.outputGeobox(allItems, allSchemas).get
 
     // oracle anchor: the same scenes in ONE batch load, raw per-time
@@ -586,7 +584,7 @@ private[rasterops] trait RasterStreamQueries {
     * the oracle recomputes from the landed raw series. */
   def streamPhenology(spark: SparkSession): DataFrame = {
     val statePath = ensureMergeStates(spark)(2)
-    val (allItems, allSchemas) = parsed(spark)
+    val (allItems, allSchemas) = parsed()
     val grid = Planner.outputGeobox(allItems, allSchemas).get
 
     // oracle anchor: the same scenes in ONE batch load, raw per-time
@@ -731,7 +729,7 @@ private[rasterops] trait RasterStreamQueries {
     * dropped, double-counted, or mis-painted shifts the totals. */
   def streamZonal(spark: SparkSession): DataFrame = {
     val jsons = Fixtures.writeScenes(NScenes).map(_.replaceAll("\n", " "))
-    val (allItems, allSchemas) = parsed(spark)
+    val (allItems, allSchemas) = parsed()
     val grid = Planner.outputGeobox(allItems, allSchemas).get
     // the zonal trio under the NAMES the landed zone-edge table uses
     val zones = demoZones(grid.crs).take(3)
@@ -757,7 +755,7 @@ private[rasterops] trait RasterStreamQueries {
         if (js.nonEmpty) {
           // driver-side parse against the standing schemas — see
           // [[streamRasterIngest]]'s foreachBatch note
-          val items = StacParse.parseItemsLocal(js, allSchemas).sortBy(_.id)
+          val items = StacParse.parseWithSchemas(js, allSchemas).sortBy(_.id)
           val res = Load.load(spark, items, allSchemas,
             bands = Seq("red", "nir"), groupby = "id", chunks = 64,
             geobox = Some(grid))

@@ -12,11 +12,10 @@ import scala.jdk.CollectionConverters._
   * Collection schema is inferred from the first item of each collection and
   * incrementally widened when later items reveal new assets — exactly the
   * reference's `_CMDAssembler` bootstrap/update (`_mdtools.py:482-639`).
-  * Parsing is executor-side (a pure function of the JSON string), so
-  * `parseItems` scales as a `Dataset` map; inference is a small driver
-  * aggregation over per-item asset summaries.
+  * Inference and parsing run in one pass on the driver, as in the
+  * reference, so the items must fit in driver memory.
   */
-object StacParse extends Serializable {
+object StacParse {
 
   /** User parse config (MDParseConfig, `model.py:417-442` + `stac_cfg`
     * docs `_stac_load.py:303-336`): band metadata overrides/defaults,
@@ -59,7 +58,7 @@ object StacParse extends Serializable {
     "application/hdf5", "application/x-netcdf", "application/netcdf",
     "application/x-zarr", "application/zarr")
 
-  @transient private lazy val mapper = new ObjectMapper()
+  private lazy val mapper = new ObjectMapper()
 
   private def opt(n: JsonNode, field: String): Option[JsonNode] =
     Option(n.get(field)).filterNot(_.isNull)
@@ -191,8 +190,11 @@ object StacParse extends Serializable {
   /** Collection schema from one item (S3 `_mdtools.py:620-639`); used as
     * bootstrap and widened by `merge`. */
   def extractCollectionMetadata(json: String,
-                                cfg: ParseConfig = ParseConfig()): CollectionMetadata = {
-    val item = mapper.readTree(json)
+                                cfg: ParseConfig = ParseConfig()): CollectionMetadata =
+    extractCollectionMetadata(mapper.readTree(json), cfg)
+
+  private def extractCollectionMetadata(item: JsonNode,
+                                        cfg: ParseConfig): CollectionMetadata = {
     val props = item.get("properties")
     // items without a collection share the "_" sentinel schema (reference
     // `_collection_id`) — falling back to the item id would give every such
@@ -247,8 +249,11 @@ object StacParse extends Serializable {
   /** Parse one item against its collection schema (S1,
     * `_mdtools.py:642-702`). */
   def parseItem(json: String, md: CollectionMetadata,
-                cfg: ParseConfig = ParseConfig()): ParsedItem = {
-    val item = mapper.readTree(json)
+                cfg: ParseConfig = ParseConfig()): ParsedItem =
+    parseItem(mapper.readTree(json), md, cfg)
+
+  private def parseItem(item: JsonNode, md: CollectionMetadata,
+                        cfg: ParseConfig): ParsedItem = {
     val props = item.get("properties")
     val id = opt(item, "id").map(_.asText()).getOrElse("")
     val assetsNode = opt(item, "assets").getOrElse(mapper.createObjectNode())
@@ -363,52 +368,60 @@ object StacParse extends Serializable {
   private def collectionOf(node: JsonNode): String =
     opt(node, "collection").map(_.asText()).getOrElse("_")
 
-  /** Driver-side parse of a SMALL batch of item JSONs against
-    * already-inferred collection schemas — the per-microbatch path: a
-    * streaming trigger delivers metadata-sized item batches, so
-    * launching two distributed jobs per batch (schema inference +
-    * parse, as [[parseItems]] does) is pure driver planning latency
-    * (optimization guide §2/§6 — don't replan invariant metadata per
-    * microbatch). Same [[parseItem]] against the same schema map, so
-    * the ParsedItems are identical to the distributed path's. */
-  def parseItemsLocal(jsons: Seq[String],
-                      schemas: Map[String, CollectionMetadata],
-                      cfg: StacCfg = StacCfg.empty): Seq[ParsedItem] =
-    jsons.map { j =>
-      val name = collectionOf(mapper.readTree(j))
-      parseItem(j, schemas(name), cfg.forCollection(name))
+  /** Parse items against standing schemas (the raster streams infer
+    * them once up front). Every item's collection must have one. */
+  def parseWithSchemas(jsons: Seq[String],
+                       schemas: Map[String, CollectionMetadata],
+                       cfg: StacCfg = StacCfg.empty): Seq[ParsedItem] =
+    parseWithSchemasOf(jsons.map(mapper.readTree), schemas, cfg)
+
+  private def parseWithSchemasOf(items: Seq[JsonNode],
+                                 schemas: Map[String, CollectionMetadata],
+                                 cfg: StacCfg): Seq[ParsedItem] =
+    items.map { item =>
+      val name = collectionOf(item)
+      require(schemas.contains(name),
+        s"item '${opt(item, "id").map(_.asText()).getOrElse("")}' belongs to " +
+          s"collection '$name', which has no schema")
+      parseItem(item, schemas(name), cfg.forCollection(name))
     }
 
-  /** Multi-collection item stream parse (S2, `_mdtools.py:705-723`):
-    * per-collection schemas inferred+widened distributedly, then items
-    * parsed executor-side against the broadcast schema map. */
-  def parseItems(spark: SparkSession, jsons: Dataset[String],
-                 cfg: StacCfg = StacCfg.empty)
+  /** Multi-collection item parse (S2, `_mdtools.py:705-723`): one
+    * driver-side pass, like the reference. The per-collection schemas are
+    * a left fold in input order (`_CMDAssembler`, `_mdtools.py:482-617`)
+    * that bootstraps each collection from its first item and widens it
+    * with [[merge]], so the first item seen wins for metadata two items
+    * disagree on; `known` seeds the fold, so a stream can widen its
+    * accumulated schemas batch by batch. Items are then parsed against
+    * the widened schemas. Items must fit on the driver, as
+    * [[graft.load.Load.load]] already requires. */
+  def parseItems(jsons: Seq[String], cfg: StacCfg = StacCfg.empty,
+                 known: Map[String, CollectionMetadata] = Map.empty)
+  : (Seq[ParsedItem], Map[String, CollectionMetadata]) = {
+    // reading the JSON dominates the parse, so each item is read once
+    val items = jsons.map(mapper.readTree)
+    val schemas = items.foldLeft(known) { (acc, item) =>
+      val name = collectionOf(item)
+      val md = extractCollectionMetadata(item, cfg.forCollection(name))
+      acc.updated(name, acc.get(name).fold(md)(merge(_, md)))
+    }
+    (parseWithSchemasOf(items, schemas, cfg), schemas)
+  }
+
+  /** [[parseItems]] for a `Dataset` of item JSONs: collects them and
+    * parses on the driver. On a local input (`spark.createDataset(seq)`)
+    * neither the collect nor the result's `collect` runs a Spark job. */
+  def parseItems(spark: SparkSession, jsons: Dataset[String])
   : (Dataset[ParsedItem], Map[String, CollectionMetadata]) = {
     import spark.implicits._
-    val bcCfg = spark.sparkContext.broadcast(cfg)
-    val schemas = jsons
-      .map { j =>
-        val name = collectionOf(mapper.readTree(j))
-        extractCollectionMetadata(j, bcCfg.value.forCollection(name))
-      }
-      .groupByKey(_.name)
-      .reduceGroups(merge _)
-      .collect().map { case (k, v) => k -> v }.toMap
-    val bc = spark.sparkContext.broadcast(schemas)
-    val parsed = jsons.map { j =>
-      val name = collectionOf(mapper.readTree(j))
-      parseItem(j, bc.value(name), bcCfg.value.forCollection(name))
-    }
-    (parsed, schemas)
+    val (items, schemas) = parseItems(jsons.collect().toSeq)
+    (spark.createDataset(items), schemas)
   }
 
   /** URL rewrite / signing hook (P5, `patch_urls` `_stac_load.py:60-84`):
     * map `edit` over the source URIs of the selected bands. */
-  def patchUrls(spark: SparkSession, items: Dataset[ParsedItem],
-                edit: String => String,
-                bands: Option[Set[String]] = None): Dataset[ParsedItem] = {
-    import spark.implicits._
+  def patchUrls(items: Seq[ParsedItem], edit: String => String,
+                bands: Option[Set[String]] = None): Seq[ParsedItem] =
     items.map { item =>
       item.copy(bands = item.bands.map { case (k, src) =>
         val hit = bands.forall(b =>
@@ -416,7 +429,6 @@ object StacParse extends Serializable {
         k -> (if (hit) src.copy(uri = edit(src.uri)) else src)
       })
     }
-  }
 
   /** GeoJSON FeatureCollection -> item JSON stream (S15, bench source
     * `bench/_run.py:386-422`). */

@@ -18,14 +18,13 @@ class StacSpec extends AnyFunSuite {
     val cfg = StacCfg(Map(Fixtures.CollectionId -> ParseConfig(
       bandCfg = Map("red" -> RasterBandMetadata(Some("float32"), Some(-1.0))),
       aliases = Map("crimson" -> BandKey("red", 1)))))
-    val (ds, schemas) = StacParse.parseItems(spark,
-      spark.createDataset(jsons), cfg)
+    val (items, schemas) = StacParse.parseItems(jsons, cfg)
     val md = schemas(Fixtures.CollectionId)
     assert(md.bands(BandKey("red", 1)) ==
       RasterBandMetadata(Some("float32"), Some(-1.0)))
     assert(md.bands(BandKey("nir", 1)).dataType.contains("uint16")) // untouched
     assert(md.bandKey("crimson") == BandKey("red", 1))
-    assert(ds.count() == 2)
+    assert(items.size == 2)
   }
 
   test("stac_cfg wildcard merges under collection-specific config") {
@@ -104,14 +103,14 @@ class StacSpec extends AnyFunSuite {
   }
 
   test("patch_urls rewrites only the selected bands (P5)") {
-    val (ds, _) = StacParse.parseItems(spark, spark.createDataset(jsons))
-    val patched = StacParse.patchUrls(spark, ds,
-      uri => uri + "?signed=1", bands = Some(Set("red"))).collect()
+    val (items, _) = StacParse.parseItems(jsons)
+    val patched = StacParse.patchUrls(items,
+      uri => uri + "?signed=1", bands = Some(Set("red")))
     patched.foreach { item =>
       assert(item.bands("red").uri.endsWith("?signed=1"))
       assert(!item.bands("nir").uri.contains("signed"))
     }
-    val all = StacParse.patchUrls(spark, ds, _ + "#x", None).collect()
+    val all = StacParse.patchUrls(items, _ + "#x", None)
     assert(all.forall(_.bands.values.forall(_.uri.endsWith("#x"))))
   }
 
