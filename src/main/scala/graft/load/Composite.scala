@@ -16,6 +16,14 @@ import org.apache.spark.sql.functions._
   * carries one buffer per (band, ty, tx) — never the raw time planes.
   * At 100 TB that is the difference between shuffling the cube and
   * shuffling one plane per tile.
+  *
+  * The non-mergeable operators (median, quantile, masked median,
+  * geomedian, MAD, Theil–Sen, temporal fill) share one plan, [[rechunk]],
+  * with two gathers. The `LoadResult` wrappers of a driver-binned load
+  * read the load's own bins in the task that reduces them (no pixel
+  * shuffle). The raw spellings here, over a tile frame of unknown
+  * origin (streams, cells, a copied or hand-built `LoadResult`, a
+  * distributed-binned load), rechunk the frame's rows with one shuffle.
   */
 object Composite {
 
@@ -25,12 +33,16 @@ object Composite {
     * unbounded in archive depth T. So the caller supplies
     * `planesPerTile` (= B·T, driver-side metadata every `LoadResult`
     * knows), and [[rechunk]] SLICES the tile into row bands sized so
-    * `planesPerTile · width · sliceRows · 8 ≤ budget` BEFORE the
-    * rechunk shuffle, and reassembles full output planes in a second,
-    * output-sized shuffle (1/T of the input — negligible). This is
-    * odc-algo's pre-geomedian rechunk rule: spatial chunks chosen as a
-    * function of time depth. */
+    * `planesPerTile · width · sliceRows · 8 ≤ budget` BEFORE it gathers
+    * the planes, and reassembles full output planes in an output-sized
+    * shuffle (1/T of the input — negligible) when a tile has more than
+    * one slice. This is odc-algo's pre-geomedian rechunk rule: spatial
+    * chunks chosen as a function of time depth. */
   val DefaultStateBudgetBytes: Long = 256L << 20
+
+  /** Weiszfeld's distance floor: the default `eps` of the geomedian
+    * and its MADs. */
+  val DefaultEps: Double = 1e-7
 
   /** Row-band height honoring the state budget: the largest
     * `sliceRows ∈ [1, h]` with `planesPerTile·w·sliceRows·8 ≤ budget`
@@ -172,7 +184,13 @@ object Composite {
                        planesPerTile: Int,
                        stateBudgetBytes: Long = DefaultStateBudgetBytes,
                        stateProbe: Option[MaxAcc] = None): DataFrame =
-    selectionAcrossTime(spark, tiles, 0.5, planesPerTile, stateBudgetBytes,
+    medianAcrossTime(spark, Shuffled(tiles), planesPerTile,
+      stateBudgetBytes, stateProbe)
+
+  private[graft] def medianAcrossTime(spark: SparkSession, in: Gather,
+      planesPerTile: Int, stateBudgetBytes: Long,
+      stateProbe: Option[MaxAcc]): DataFrame =
+    selectionAcrossTime(spark, in, 0.5, planesPerTile, stateBudgetBytes,
       stateProbe).toDF("band", "ty", "tx", "median", "count")
 
   /** Per-pixel interpolated QUANTILE across time (q in [0,1]) — the
@@ -185,16 +203,22 @@ object Composite {
                          q: Double, planesPerTile: Int,
                          stateBudgetBytes: Long = DefaultStateBudgetBytes,
                          stateProbe: Option[MaxAcc] = None): DataFrame =
-    selectionAcrossTime(spark, tiles, q, planesPerTile, stateBudgetBytes,
+    quantileAcrossTime(spark, Shuffled(tiles), q, planesPerTile,
+      stateBudgetBytes, stateProbe)
+
+  private[graft] def quantileAcrossTime(spark: SparkSession, in: Gather,
+      q: Double, planesPerTile: Int, stateBudgetBytes: Long,
+      stateProbe: Option[MaxAcc]): DataFrame =
+    selectionAcrossTime(spark, in, q, planesPerTile, stateBudgetBytes,
       stateProbe).toDF("band", "ty", "tx", "quantile", "count")
 
-  private def selectionAcrossTime(spark: SparkSession, tiles: DataFrame,
+  private def selectionAcrossTime(spark: SparkSession, in: Gather,
                                   q: Double, planesPerTile: Int,
                                   budgetBytes: Long,
                                   stateProbe: Option[MaxAcc]) = {
     import spark.implicits._
     require(q >= 0 && q <= 1, s"quantile out of range: $q")
-    rechunk(spark, tiles, planesPerTile, budgetBytes, stateProbe,
+    rechunk(spark, in, planesPerTile, budgetBytes, stateProbe,
         jointBands = false) { (planes, n) =>
       val (out, cnt) = selectionKernel(planes.map(p => (p.px, p.nodata)), n, q)
       Iterator((planes(0).band, 0, Array(out), cnt))
@@ -212,15 +236,22 @@ object Composite {
     *
     * Scale shape: the same rechunk as the unmasked median, just keyed
     * `(ty, tx, slice)` so the data AND mask slices of a tile meet in
-    * one task — the shuffle carries both bands' planes once. */
+    * one task. */
   def maskedMedianAcrossTime(spark: SparkSession, tiles: DataFrame,
                              dataBand: String, maskBand: String,
                              clear: Double => Boolean,
                              planesPerTile: Int,
                              stateBudgetBytes: Long = DefaultStateBudgetBytes,
-                             stateProbe: Option[MaxAcc] = None): DataFrame = {
+                             stateProbe: Option[MaxAcc] = None): DataFrame =
+    maskedMedianAcrossTime(spark, Shuffled(tiles), dataBand, maskBand,
+      clear, planesPerTile, stateBudgetBytes, stateProbe)
+
+  private[graft] def maskedMedianAcrossTime(spark: SparkSession, in: Gather,
+      dataBand: String, maskBand: String, clear: Double => Boolean,
+      planesPerTile: Int, stateBudgetBytes: Long,
+      stateProbe: Option[MaxAcc]): DataFrame = {
     import spark.implicits._
-    rechunk(spark, tiles.where(col("band").isin(dataBand, maskBand)),
+    rechunk(spark, in.only(Seq(dataBand, maskBand)),
         planesPerTile, stateBudgetBytes, stateProbe,
         jointBands = true) { (planes, n) =>
       def byTime(ps: Array[Plane]) = scala.collection.mutable.HashMap.from(
@@ -334,50 +365,145 @@ object Composite {
   final case class TileOut(band: String, tIdx: Int, ty: Int, tx: Int,
                            planes: Array[Array[Double]], cnt: Array[Int])
 
+  /** Where [[rechunk]] takes a slice group's planes from. */
+  private[graft] sealed trait Gather {
+    /** The same gather over `bands` only. */
+    def only(bands: Seq[String]): Gather
+  }
+
+  /** The rows of a tile frame of unknown origin, cut into row bands and
+    * moved to their group by one shuffle. */
+  private[graft] final case class Shuffled(tiles: DataFrame) extends Gather {
+    def only(bands: Seq[String]): Gather =
+      Shuffled(tiles.where(col("band").isin(bands.map(b => b: Any): _*)))
+  }
+
+  /** A driver-binned load's own bins, read and fused by the task that
+    * reduces their group. */
+  private[graft] final case class Fused(plan: Load.BinPlan) extends Gather {
+    def only(bands: Seq[String]): Gather =
+      Fused(plan.copy(bins = plan.bins.filter(b => bands.contains(b.band))))
+  }
+
+  /** One fused task unit: rows `[r0, r0 + rows)` of tile `(ty, tx)`,
+    * `width` pixels wide, over the group's bins. */
+  private final case class FusedUnit(ty: Int, tx: Int, slice: Int, r0: Int,
+                                     rows: Int, width: Int,
+                                     bins: Array[Load.TileBin])
+
   /** The one plan of every non-mergeable across-time operator
     * (median/quantile/masked median/geomedian/MAD, Theil–Sen, temporal
     * fill):
-    *  1. cut every tile plane into row bands sized so that
+    *  1. cut every tile into row bands sized so that
     *     `planesPerTile · statePerPlane` decoded planes fit
     *     `budgetBytes` ([[sliceRowsFor]]);
-    *  2. ONE rechunk shuffle keyed `(band, ty, tx, slice)` — or
-    *     `(ty, tx, slice)` when `jointBands` co-locates every band of a
-    *     tile — so slice `s` of every time plane meets in one task;
-    *  3. decode the group's planes in `(time, tIdx)` order (a total
-    *     order: same-time planes cannot swap with shuffle arrival) and
-    *     run `kernel(planes, pixelsPerPlane)`;
-    *  4. ONE output-sized shuffle that concatenates each output row's
-    *     slice fragments ([[reassemble]]).
+    *  2. gather slice `s` of every time plane of a tile into one group
+    *     keyed `(band, ty, tx, slice)` — or `(ty, tx, slice)` when
+    *     `jointBands` co-locates every band of a tile;
+    *  3. run `kernel(planes, pixelsPerPlane)` over the group's planes in
+    *     `(time, tIdx)` order (a total order: same-time planes keep one
+    *     fixed order);
+    *  4. with more than one slice per tile, concatenate each output
+    *     row's slice fragments in one output-sized shuffle
+    *     ([[reassemble]]).
+    * Step 2 has two gathers, with the same kernel behind both:
+    *  - [[Fused]]: one task per group reads and fuses the group's bins
+    *    over its row band, with no shuffle; with one slice per tile the
+    *    task emits output rows, so the whole operator is one stage;
+    *  - [[Shuffled]]: the frame's rows are cut into row bands
+    *    ([[slicedTiles]]) and moved by ONE rechunk shuffle.
     * Task state is `statePerPlane · planes · w · sliceRows · 8` bytes,
     * under the budget at any archive depth; `stateProbe` records its
     * peak. */
-  private[graft] def rechunk(spark: SparkSession, tiles: DataFrame,
+  private[graft] def rechunk(spark: SparkSession, in: Gather,
       planesPerTile: Int, budgetBytes: Long, stateProbe: Option[MaxAcc],
       jointBands: Boolean, statePerPlane: Int = 1)(
       kernel: (Array[Plane], Int) => Iterator[Frag]): Dataset[TileOut] = {
     import spark.implicits._
     require(planesPerTile > 0,
       s"planesPerTile (B·T planes per tile) must be positive: $planesPerTile")
-    val sliced = slicedTiles(spark, tiles, planesPerTile * statePerPlane,
-        budgetBytes)
-      .groupByKey(s => (if (jointBands) "" else s.band, s.ty, s.tx, s.slice))
-      .flatMapGroups { (key, it) =>
-        val (_, ty, tx, slice) = key
-        var w = -1
-        var sh = -1
-        val planes = it.map { s =>
-          if (w < 0) { w = s.width; sh = s.sliceH }
-          require(w == s.width && sh == s.sliceH,
-            s"slice shape mismatch at ($ty,$tx): ${w}x$sh vs ${s.width}x${s.sliceH}")
-          Plane(s.band, s.tIdx, s.tSec, Fuse.decode(s.data, s.dtype), s.nodata)
-        }.toArray.sortBy(p => (p.tSec, p.tIdx))
-        stateProbe.foreach(
-          _.add(statePerPlane.toLong * planes.length * w * sh * 8L))
-        kernel(planes, w * sh).map { case (band, tIdx, ps, cnt) =>
-          SliceOut(band, tIdx, ty, tx, slice, ps, cnt)
+    val statePlanes = planesPerTile * statePerPlane
+    // what both gathers run per slice group of `w`×`sh` planes
+    def reduce(ty: Int, tx: Int, slice: Int, planes: Array[Plane], w: Int,
+               sh: Int): Iterator[SliceOut] = {
+      val sorted = planes.sortBy(p => (p.tSec, p.tIdx))
+      stateProbe.foreach(
+        _.add(statePerPlane.toLong * sorted.length * w * sh * 8L))
+      kernel(sorted, w * sh).map { case (band, tIdx, ps, cnt) =>
+        SliceOut(band, tIdx, ty, tx, slice, ps, cnt)
+      }
+    }
+    in match {
+      case Fused(plan) =>
+        fusedGroups(spark, plan, statePlanes, budgetBytes, jointBands)(reduce)
+      case Shuffled(tiles) =>
+        reassemble(slicedTiles(spark, tiles, statePlanes, budgetBytes)
+          .groupByKey(s => (if (jointBands) "" else s.band, s.ty, s.tx,
+            s.slice))
+          .flatMapGroups { (key, it) =>
+            val (_, ty, tx, slice) = key
+            var w = -1
+            var sh = -1
+            val planes = it.map { s =>
+              if (w < 0) { w = s.width; sh = s.sliceH }
+              require(w == s.width && sh == s.sliceH,
+                s"slice shape mismatch at ($ty,$tx): ${w}x$sh vs ${s.width}x${s.sliceH}")
+              Plane(s.band, s.tIdx, s.tSec, Fuse.decode(s.data, s.dtype),
+                s.nodata)
+            }.toArray
+            reduce(ty, tx, slice, planes, w, sh)
+          })
+    }
+  }
+
+  /** The fused gather: the driver plans one unit per slice group from
+    * the load's bins (only bins that exist, so a time with no mask
+    * plane gives no plane), and one task per unit reads and fuses the
+    * unit's bins over its row band ([[Load.fusePlane]]), then runs
+    * `reduce`. Progress fires once per bin read, against that total. */
+  private def fusedGroups(spark: SparkSession, plan: Load.BinPlan,
+      statePlanes: Int, budgetBytes: Long, jointBands: Boolean)(
+      reduce: (Int, Int, Int, Array[Plane], Int, Int) => Iterator[SliceOut])
+      : Dataset[TileOut] = {
+    import spark.implicits._
+    val tiling = plan.tiling
+    val units = plan.bins
+      .groupBy(b => (if (jointBands) "" else b.band, b.ty, b.tx))
+      .toArray.sortBy(_._1)
+      .flatMap { case ((_, ty, tx), bins) =>
+        val tile = tiling.tileGeobox(ty, tx)
+        val (w, h) = (tile.width, tile.height)
+        val sr = sliceRowsFor(statePlanes, w, h, budgetBytes)
+        (0 until h by sr).map(r0 =>
+          FusedUnit(ty, tx, r0 / sr, r0, math.min(sr, h - r0), w, bins))
+      }
+    val oneSlice = units.forall(_.slice == 0)
+    val progressId = plan.progress.fold(-1L)(cb =>
+      Load.registerProgress(units.map(_.bins.length.toLong).sum, cb))
+    // task-side inputs as locals: the closure must not capture the plan
+    val (tw, th, reader) = (tiling.tileW, tiling.tileH, plan.reader)
+    val (bcGbox, bcCfg, bcDtypes, bcTimes, bcIo) =
+      (plan.gbox, plan.cfgs, plan.dtypes, plan.times, plan.io)
+    val slices = spark.sparkContext
+      .parallelize(units.toIndexedSeq, math.max(1, units.length))
+      .mapPartitions { it =>
+        bcIo.value.foreach(graft.raster.IoSession.restore(_))
+        val gbt = graft.geo.GeoBoxTiles(bcGbox.value.toGeoBox, tw, th)
+        val buf = new Array[Double](tw * th)
+        it.flatMap { u =>
+          val planes = u.bins.map { bin =>
+            val p = Load.fusePlane(bin, gbt, bcCfg.value, bcDtypes.value,
+              bcTimes.value, reader, buf, u.r0, u.rows)
+            if (progressId >= 0) Load.reportProgress(progressId)
+            p
+          }
+          reduce(u.ty, u.tx, u.slice, planes, u.width, u.rows)
         }
       }
-    reassemble(sliced)
+    if (oneSlice)
+      spark.createDataset(slices.map(o =>
+        TileOut(o.band, o.tIdx, o.ty, o.tx, o.planes, o.cnt)))
+    else reassemble(spark.createDataset(slices))
   }
 
   /** Cut every tile row into row-band slices honoring the state budget.
@@ -461,14 +587,20 @@ object Composite {
     * iterates across tasks. `planesPerTile` is B·T. */
   def geomedianAcrossTime(spark: SparkSession, tiles: DataFrame,
                           bands: Seq[String], planesPerTile: Int,
-                          iters: Int = 8, eps: Double = 1e-7,
+                          iters: Int = 8, eps: Double = DefaultEps,
                           stateBudgetBytes: Long = DefaultStateBudgetBytes,
-                          stateProbe: Option[MaxAcc] = None): DataFrame = {
+                          stateProbe: Option[MaxAcc] = None): DataFrame =
+    geomedianAcrossTime(spark, Shuffled(tiles), bands, planesPerTile, iters,
+      eps, stateBudgetBytes, stateProbe)
+
+  private[graft] def geomedianAcrossTime(spark: SparkSession, in: Gather,
+      bands: Seq[String], planesPerTile: Int, iters: Int, eps: Double,
+      stateBudgetBytes: Long, stateProbe: Option[MaxAcc]): DataFrame = {
     import spark.implicits._
     require(bands.nonEmpty, "geomedian needs at least one band")
     val nb = bands.length
     val bandIdx = bands.zipWithIndex.toMap
-    rechunk(spark, tiles.where(col("band").isin(bands.map(x => x: Any): _*)),
+    rechunk(spark, in.only(bands),
         planesPerTile, stateBudgetBytes, stateProbe,
         jointBands = true) { (planes, n) =>
       val (geo, cnt) =
@@ -600,14 +732,20 @@ object Composite {
     * the same gathered observations. */
   def geomadAcrossTime(spark: SparkSession, tiles: DataFrame,
                        bands: Seq[String], planesPerTile: Int,
-                       iters: Int = 8, eps: Double = 1e-7,
+                       iters: Int = 8, eps: Double = DefaultEps,
                        stateBudgetBytes: Long = DefaultStateBudgetBytes,
-                       stateProbe: Option[MaxAcc] = None): DataFrame = {
+                       stateProbe: Option[MaxAcc] = None): DataFrame =
+    geomadAcrossTime(spark, Shuffled(tiles), bands, planesPerTile, iters, eps,
+      stateBudgetBytes, stateProbe)
+
+  private[graft] def geomadAcrossTime(spark: SparkSession, in: Gather,
+      bands: Seq[String], planesPerTile: Int, iters: Int, eps: Double,
+      stateBudgetBytes: Long, stateProbe: Option[MaxAcc]): DataFrame = {
     import spark.implicits._
     require(bands.nonEmpty, "geomad needs at least one band")
     val nb = bands.length
     val bandIdx = bands.zipWithIndex.toMap
-    rechunk(spark, tiles.where(col("band").isin(bands.map(x => x: Any): _*)),
+    rechunk(spark, in.only(bands),
         planesPerTile, stateBudgetBytes, stateProbe,
         jointBands = true) { (planes, n) =>
       val (emad, smad, bcmad, cnt) =

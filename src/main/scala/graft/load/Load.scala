@@ -3,24 +3,30 @@ package graft.load
 import graft.geo._
 import graft.model._
 import graft.planner.Planner
-import graft.raster.{AutoReader, Grb, RasterReader}
+import graft.raster.{AutoReader, Grb, IoCredentials, RasterReader}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** The flagship query: STAC items -> gridded, fused raster tiles
   * (`odc.stac.load`, SURVEY §3.1). Stages 1-8 (arg normalization, parsing,
   * grid planning, band resolution, grouping, tiling, spatial binning) are
   * driver-side *metadata* work, exactly as in the reference; the pixel
-  * plane is a Spark job:
+  * plane is a Spark job. By default the driver bins too, and the job has
+  * no shuffle at all:
   *
-  *   items --flatMap--> (band, tIdx, ty, tx, rank, source)   [J1 explode]
-  *         --groupByKey--> per-tile source lists              [J1 bin]
-  *         --mapGroups--> read + first-valid fuse -> tile row [S7 + A2]
+  *   items --driver--> bins (band, tIdx, ty, tx) -> sources in fuse rank
+  *         --parallelize--> read + first-valid fuse -> tile row  [S7 + A2]
   *
-  * Scale properties: the shuffle carries only source *metadata* (uri +
-  * geobox, ~200 bytes/row) — pixels are read post-shuffle by the task that
-  * owns the output tile and never reshuffled. Tile tasks are independent
-  * and embarrassingly parallel; partition count = number of non-empty
-  * (band, t, ty, tx) bins, so a 1000-executor cluster saturates naturally.
+  * The bins (~200 bytes of source metadata each) ship with the tasks;
+  * pixels are read by the task that owns the output tile and never move
+  * again. Tile tasks are independent and embarrassingly parallel. A load
+  * whose bin estimate passes `maxDriverBins` expands the (item x tile)
+  * product on the executors instead: one `flatMap -> groupByKey` shuffle
+  * of source metadata forms the bins, and pixels still never shuffle.
+  *
+  * A driver-binned [[LoadResult]] keeps its bin plan, so its across-time
+  * composites read their own bins in the task that reduces them (the
+  * fused gather of [[Composite.rechunk]]): one job, no pixel shuffle.
   * First-valid fuse short-circuits: once a tile has no remaining nodata
   * pixels, later sources are skipped (reads avoided entirely — an
   * optimization the eager reference path lacks).
@@ -45,6 +51,20 @@ object Load {
     * the unit shipped to executors (a DSv2 InputPartition analog). */
   final case class TileBin(band: String, tIdx: Int, ty: Int, tx: Int,
                            srcs: Seq[RasterSource])
+
+  /** A driver-binned load's bin plan, kept privately on its
+    * [[LoadResult]]: the bins in `(band, tIdx, ty, tx)` order, the output
+    * tiling, and the broadcasts a task needs to read and fuse a bin.
+    * [[Composite.rechunk]]'s fused gather plans an across-time composite
+    * over it as one task per rechunk group. */
+  private[graft] final case class BinPlan(
+      bins: Array[TileBin], tiling: GeoBoxTiles,
+      gbox: Broadcast[GeoBoxData],
+      cfgs: Broadcast[Map[String, RasterLoadParams]],
+      dtypes: Broadcast[Map[String, String]],
+      times: Broadcast[IndexedSeq[java.sql.Timestamp]],
+      io: Broadcast[Option[IoCredentials]], reader: RasterReader,
+      progress: Option[(Long, Long) => Unit])
 
   /** Distributed-binning unit: one row per (group, item) with its
     * footprint and selected band sources. Executors expand to TaskSeeds
@@ -89,8 +109,10 @@ object Load {
   // (per-task granularity via standard metrics plumbing).
   //
   // Contract (same as a tqdm bar over the reference's eager loop): the
-  // hook tracks ONE full eager consumption of the tiles plan. Entries
-  // self-remove at done == total; partially evaluating the lazy plan
+  // hook tracks ONE full eager consumption of the tiles plan. A fused
+  // composite of the load reads the bins itself, so building one
+  // registers its own entry, whose total is the bins it reads.
+  // Entries self-remove at done == total; partially evaluating the lazy plan
   // (e.g. show(5)) then re-running counts the recomputed bins toward
   // the same total. Callbacks run serialized per load, so they must be
   // fast and non-blocking. Loads whose plan is never fully consumed
@@ -103,7 +125,7 @@ object Load {
     java.lang.Long,
     (java.util.concurrent.atomic.AtomicLong, Long, (Long, Long) => Unit)]()
 
-  private def registerProgress(total: Long,
+  private[load] def registerProgress(total: Long,
                                cb: (Long, Long) => Unit): Long = {
     if (progressRegistry.size >= ProgressRegistryMax) {
       // ids are monotonic: the smallest key is the oldest abandoned load
@@ -254,7 +276,7 @@ object Load {
       fp <- footprints(itemIdx).iterator
     } yield tileSpanCount(gbt, fp) * bandKeys.size).sum
 
-    val tiles: Dataset[TileRow] =
+    val (tiles, plan) =
       if (estBins <= maxDriverBins) {
         // DRIVER-SIDE binning (default) — the same move a DSv2 source makes
         // in planInputPartitions (Spark's own file sources list and split
@@ -299,7 +321,7 @@ object Load {
           .sortBy(i => (i % p, i / p)).map(taskUnits).toIndexedSeq
         val progressId: Long =
           progress.fold(-1L)(cb => registerProgress(bins.length, cb))
-        spark.createDataset(
+        (spark.createDataset(
           spark.sparkContext.parallelize(interleaved, p)
             .mapPartitions { it =>
               bcIo.value.foreach(graft.raster.IoSession.restore(_))
@@ -308,12 +330,14 @@ object Load {
               val buf = new Array[Double](tw * th)
               val gbt = GeoBoxTiles(bcGbox.value.toGeoBox, tw, th)
               it.flatMap(_.iterator.map { bin =>
-                val row = fuseBin(bin, gbt, tw, th, bcCfg.value,
-                  bcDtypes.value, bcTimes.value, reader, buf)
+                val row = fuseBin(bin, gbt, bcCfg.value, bcDtypes.value,
+                  bcTimes.value, reader, buf)
                 if (progressId >= 0) reportProgress(progressId)
                 row
               })
-            })
+            }),
+          Some(BinPlan(bins, gbt, bcGbox, bcCfg, bcDtypes, bcTimes, bcIo,
+            reader, progress)))
       } else {
         // DISTRIBUTED binning fallback: above the driver threshold the
         // (item x tile) expansion itself is the big product (a continental
@@ -351,7 +375,7 @@ object Load {
                 }
               }
           }
-        seedDs
+        (seedDs
           .groupByKey(s => (s.band, s.tIdx / tc, s.ty, s.tx))
           .flatMapGroups { (_: (String, Int, Int, Int), it: Iterator[TaskSeed]) =>
             bcIo.value.foreach(graft.raster.IoSession.restore(_))
@@ -362,35 +386,62 @@ object Load {
                 val sorted = ss.sortBy(_.rank)
                 val bin = TileBin(sorted.head.band, tIdx, sorted.head.ty,
                   sorted.head.tx, sorted.map(_.src))
-                val row = fuseBin(bin, gbt, tw, th, bcCfg.value, bcDtypes.value,
+                val row = fuseBin(bin, gbt, bcCfg.value, bcDtypes.value,
                   bcTimes.value, reader, buf)
                 if (progressId >= 0) reportProgress(progressId)
                 row
               }
-          }
+          }, None)
       }
 
-    LoadResult(tiles.toDF(), outGbox, times, outDtypes,
+    val res = LoadResult(tiles.toDF(), outGbox, times, outDtypes,
       outDtypes.map { case (b, dt) => b -> dstNodata(cfgs(b), dt) })
+    plan.fold(res)(res.withPlan)
   }
   // scalastyle:on parameter.number
 
   /** Read + first-valid fuse of one planned bin into a TileRow (shared by
-    * the driver-planned and distributed-planned paths). */
-  private def fuseBin(bin: TileBin, gbt: GeoBoxTiles, tw: Int, th: Int,
+    * the driver-planned and distributed-planned paths): over its whole
+    * tile, or over the row band `[r0, r0 + rows)` of it that a fused
+    * rechunk group reads ([[fusePlane]]). The geobox is built once per
+    * call, so a reader sees one new geobox instance per bin. */
+  private def fuseBin(bin: TileBin, gbt: GeoBoxTiles,
                       cfgs: Map[String, RasterLoadParams],
                       dtypes: Map[String, String],
                       times: IndexedSeq[java.sql.Timestamp],
-                      reader: RasterReader, buf: Array[Double]): TileRow = {
-    val tileGbox = gbt.tileGeobox(bin.ty, bin.tx)
+                      reader: RasterReader, buf: Array[Double],
+                      r0: Int = 0, rows: Int = Int.MaxValue): TileRow = {
+    val tile = gbt.tileGeobox(bin.ty, bin.tx)
+    val gbox =
+      if (r0 == 0 && rows >= tile.height) tile
+      else tile.slice(0, r0, tile.width, rows)
     val cfg = cfgs(bin.band)
     val outDtype = dtypes(bin.band)
     val nodataV = dstNodata(cfg, outDtype)
-    val valid = Fuse.fill2dSliceInto(bin.srcs, tileGbox, cfg, reader, nodataV, buf)
+    val valid = Fuse.fill2dSliceInto(bin.srcs, gbox, cfg, reader, nodataV, buf)
     TileRow(bin.band, bin.tIdx, bin.ty, bin.tx, times(bin.tIdx),
-      bin.tx * tw, bin.ty * th, tileGbox.width, tileGbox.height,
+      bin.tx * gbt.tileW, bin.ty * gbt.tileH + r0, gbox.width, gbox.height,
       outDtype, nodataV, valid,
-      Fuse.encode(buf, tileGbox.width * tileGbox.height, outDtype))
+      Fuse.encode(buf, gbox.width * gbox.height, outDtype))
+  }
+
+  /** The plane a rechunk group would decode from this bin's tile row,
+    * cut to rows `[r0, r0 + rows)`: read and fused over that row band,
+    * quantized through the output dtype as the tile row's payload is,
+    * at the epoch second `unix_timestamp` gives its time. A band short
+    * of the whole tile is read through its own geobox, whose origin is
+    * one more affine step: exact on the paste path, while a warped
+    * value may move in its last bit. */
+  private[load] def fusePlane(bin: TileBin, gbt: GeoBoxTiles,
+                              cfgs: Map[String, RasterLoadParams],
+                              dtypes: Map[String, String],
+                              times: IndexedSeq[java.sql.Timestamp],
+                              reader: RasterReader, buf: Array[Double],
+                              r0: Int, rows: Int): Composite.Plane = {
+    val row = fuseBin(bin, gbt, cfgs, dtypes, times, reader, buf, r0, rows)
+    Composite.Plane(row.band, row.tIdx,
+      Math.floorDiv(row.time.getTime, 1000L),
+      Fuse.decode(row.data, row.dtype), row.nodata)
   }
 
   /** Upper bound on tiles a footprint can touch: its bbox tile span. */
@@ -415,30 +466,52 @@ final case class LoadResult(tiles: DataFrame, geobox: GeoBox,
 
   private def spark = tiles.sparkSession
 
+  // The load's own bin plan: Load.load attaches it to the result it
+  // returns when the driver binned. A copy or a hand-built result has
+  // none, so its composites rechunk the `tiles` it was given.
+  private var plan: Option[Load.BinPlan] = None
+
+  private[load] def withPlan(p: Load.BinPlan): LoadResult = {
+    plan = Some(p)
+    this
+  }
+
+  /** Where this result's across-time composites take their planes from:
+    * the load's own bins, read and fused in the task that reduces them
+    * (no pixel shuffle), or else the rows of `tiles`, rechunked by one
+    * shuffle. */
+  private[graft] def gather: Composite.Gather =
+    plan.fold[Composite.Gather](Composite.Shuffled(tiles))(Composite.Fused)
+
   /** Across-time composites with the time-depth memory bound WIRED IN:
     * these overloads pass `planesPerTile` (the B·T plane count this
     * result knows driver-side) to [[Composite]], whose row-band rechunk
     * keeps task state under `Composite.DefaultStateBudgetBytes` at any
     * archive depth — a caller using the raw `Composite.*(spark, tiles,
-    * …)` spellings must size the state hint itself. */
+    * …)` spellings must size the state hint itself. On a driver-binned
+    * load they read their own bins: one job, no pixel shuffle. */
   def medianComposite(): DataFrame =
-    Composite.medianAcrossTime(spark, tiles, planesPerTile = times.length)
+    Composite.medianAcrossTime(spark, gather, times.length,
+      Composite.DefaultStateBudgetBytes, None)
 
   def quantileComposite(q: Double): DataFrame =
-    Composite.quantileAcrossTime(spark, tiles, q, planesPerTile = times.length)
+    Composite.quantileAcrossTime(spark, gather, q, times.length,
+      Composite.DefaultStateBudgetBytes, None)
 
   def maskedMedianComposite(dataBand: String, maskBand: String,
       clear: Double => Boolean): DataFrame =
-    Composite.maskedMedianAcrossTime(spark, tiles, dataBand, maskBand, clear,
-      planesPerTile = 2 * times.length)
+    Composite.maskedMedianAcrossTime(spark, gather, dataBand, maskBand,
+      clear, 2 * times.length, Composite.DefaultStateBudgetBytes, None)
 
   def geomedianComposite(bands: Seq[String], iters: Int = 8): DataFrame =
-    Composite.geomedianAcrossTime(spark, tiles, bands,
-      planesPerTile = bands.length * times.length, iters = iters)
+    Composite.geomedianAcrossTime(spark, gather, bands,
+      bands.length * times.length, iters, Composite.DefaultEps,
+      Composite.DefaultStateBudgetBytes, None)
 
   def geomadComposite(bands: Seq[String], iters: Int = 8): DataFrame =
-    Composite.geomadAcrossTime(spark, tiles, bands,
-      planesPerTile = bands.length * times.length, iters = iters)
+    Composite.geomadAcrossTime(spark, gather, bands,
+      bands.length * times.length, iters, Composite.DefaultEps,
+      Composite.DefaultStateBudgetBytes, None)
 
   /** Mean/min/max/count composite — mergeable Aggregator, already
     * bounded (one buffer per group), no hint needed. */
@@ -448,7 +521,8 @@ final case class LoadResult(tiles: DataFrame, geobox: GeoBox,
     * decoded + filled planes (2·T), and this wrapper passes T so one
     * task never exceeds the state budget. */
   def temporalFill(): DataFrame =
-    TemporalFill.fillAcrossTime(spark, tiles, timeDepth = times.length)
+    TemporalFill.fillAcrossTime(spark, gather, times.length,
+      Composite.DefaultStateBudgetBytes, None)
 
   /** Gap-fill then Savitzky–Golay smooth along time — the standard
     * post-fill polish; interior full-window centers only. */
@@ -471,8 +545,9 @@ final case class LoadResult(tiles: DataFrame, geobox: GeoBox,
     * wrapper passes the time depth so the row-band state bound applies
     * at any archive depth. */
   def trendRobust(): DataFrame =
-    Trend.theilSenAcrossTime(spark, tiles,
-      times.map(_.getTime / 1000L).min, planesPerTile = times.length)
+    Trend.theilSenAcrossTime(spark, gather,
+      times.map(_.getTime / 1000L).min, times.length,
+      Composite.DefaultStateBudgetBytes, 0, None)
 
   /** Distributed GeoTIFF export sink: every tile row becomes one
     * georeferenced `.tif` (`<band>_t<tIdx>_<ty>_<tx>.tif`) written

@@ -16,12 +16,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `(time, tIdx)`, so same-time planes have one fixed order.
   *
   * Scale shape: the median composite's rechunk ([[Composite.rechunk]])
-  * — tiles are row-band-sliced before the `(band, ty, tx, slice)`
-  * shuffle so one task buffers at most the state budget of
-  * decoded+filled planes in ANY archive depth, and full planes
-  * reassemble in a second shuffle. Output is again tile-shaped (one
-  * filled plane per input plane), so downstream operators (composites,
-  * exports) consume it unchanged.
+  * — tiles are cut into row bands grouped `(band, ty, tx, slice)`, so
+  * one task buffers at most the state budget of decoded+filled planes
+  * in ANY archive depth. `LoadResult.temporalFill` reads the load's own
+  * bins into those groups; a raw tile frame moves by one shuffle.
+  * Output is again tile-shaped (one filled plane per input plane), so
+  * downstream operators (composites, exports) consume it unchanged.
   */
 object TemporalFill {
 
@@ -36,9 +36,15 @@ object TemporalFill {
   def fillAcrossTime(spark: SparkSession, tiles: DataFrame,
                      timeDepth: Int,
                      stateBudgetBytes: Long = Composite.DefaultStateBudgetBytes,
-                     stateProbe: Option[Composite.MaxAcc] = None): DataFrame = {
+                     stateProbe: Option[Composite.MaxAcc] = None): DataFrame =
+    fillAcrossTime(spark, Composite.Shuffled(tiles), timeDepth,
+      stateBudgetBytes, stateProbe)
+
+  private[graft] def fillAcrossTime(spark: SparkSession,
+      in: Composite.Gather, timeDepth: Int, stateBudgetBytes: Long,
+      stateProbe: Option[Composite.MaxAcc]): DataFrame = {
     import spark.implicits._
-    Composite.rechunk(spark, tiles, timeDepth, stateBudgetBytes, stateProbe,
+    Composite.rechunk(spark, in, timeDepth, stateBudgetBytes, stateProbe,
         jointBands = false, statePerPlane = 2) { (planes, n) =>
       val (filled, nFilled) = fillKernel(planes, n)
       planes.indices.iterator.map(p =>

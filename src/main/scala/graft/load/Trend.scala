@@ -242,10 +242,11 @@ object Trend {
     * is NOT mergeable, so unlike OLS this is the rechunk family
     * ([[Composite.rechunk]]): row-band slices keyed
     * `(band, ty, tx, slice)` co-locate a tile's time planes with task
-    * state under the byte budget at ANY archive depth, the O(T²)-per-
-    * pixel kernel runs task-locally over the time-ascending planes, and
-    * output planes reassemble in an output-sized second shuffle. Times
-    * snap to whole days as in OLS. `planesPerTile` is T.
+    * state under the byte budget at ANY archive depth, and the
+    * O(T²)-per-pixel kernel runs task-locally over the time-ascending
+    * planes (`LoadResult.trendRobust` reads the load's own bins into
+    * the groups; a raw tile frame moves by one shuffle). Times snap to
+    * whole days as in OLS. `planesPerTile` is T.
     *
     * `maxPairsPerPixel` (0 = exact, the oracle path) bounds the
     * kernel's O(T²) CPU for deep archives via deterministic pair
@@ -256,9 +257,16 @@ object Trend {
                            Composite.DefaultStateBudgetBytes,
                          maxPairsPerPixel: Int = 0,
                          stateProbe: Option[Composite.MaxAcc] = None)
-      : DataFrame = {
+      : DataFrame =
+    theilSenAcrossTime(spark, Composite.Shuffled(tiles), t0Sec,
+      planesPerTile, stateBudgetBytes, maxPairsPerPixel, stateProbe)
+
+  private[graft] def theilSenAcrossTime(spark: SparkSession,
+      in: Composite.Gather, t0Sec: Long, planesPerTile: Int,
+      stateBudgetBytes: Long, maxPairsPerPixel: Int,
+      stateProbe: Option[Composite.MaxAcc]): DataFrame = {
     import spark.implicits._
-    Composite.rechunk(spark, tiles, planesPerTile, stateBudgetBytes,
+    Composite.rechunk(spark, in, planesPerTile, stateBudgetBytes,
         stateProbe, jointBands = false) { (planes, n) =>
       // the trendAcrossTime day axis: floor((t − t0)/86400 + 0.5)
       val (sl, ic, c) = theilSenKernel(planes.map(p => (p.px, p.nodata,

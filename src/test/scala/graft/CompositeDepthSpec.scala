@@ -1,6 +1,8 @@
 package graft
 
-import graft.load.{Composite, Fuse, TemporalFill, Trend}
+import graft.load.{Composite, Fuse, Load, TemporalFill, Trend}
+import graft.raster.Fixtures
+import graft.stac.StacParse
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -181,6 +183,49 @@ class CompositeDepthSpec extends AnyFunSuite {
     assert(sliced == full)
     assert(acc.value > 0 && acc.value <= budget,
       s"peak decoded state ${acc.value} exceeds budget $budget")
+  }
+
+  test("fused load composites: sliced units bit-identical to one slice, state capped (T=160)") {
+    // T = 160 time groups of a driver-binned load: the fused gather cuts
+    // each tile's unit into row bands sized for B·T planes
+    val (items, schemas) = StacParse.parseItems(Fixtures.writeScenes(T))
+    val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
+      groupby = "id", chunks = W,
+      geobox = Some(Fixtures.sceneGeobox(0).slice(64, 0, 2 * W, 2 * H)))
+    assert(res.times.length == T)
+    val in = res.gather
+    assert(in.isInstanceOf[Composite.Fused])
+    val bands = Seq("red", "nir")
+    type Run = (Long, Option[Composite.MaxAcc]) => DataFrame
+    // (operator, planes its slices are sized for, run under a budget)
+    val ops: Seq[(String, Int, Run)] = Seq(
+      ("median", T, (b, p) => Composite.medianAcrossTime(spark, in, T, b, p)),
+      ("quantile", T, (b, p) =>
+        Composite.quantileAcrossTime(spark, in, 0.25, T, b, p)),
+      ("masked median", 2 * T, (b, p) => Composite.maskedMedianAcrossTime(
+        spark, in, "red", "nir", _ > 6000.0, 2 * T, b, p)),
+      ("geomedian", 2 * T, (b, p) => Composite.geomedianAcrossTime(spark,
+        in, bands, 2 * T, 8, Composite.DefaultEps, b, p)),
+      ("geomad", 2 * T, (b, p) => Composite.geomadAcrossTime(spark, in,
+        bands, 2 * T, 8, Composite.DefaultEps, b, p)),
+      ("temporal fill", 2 * T, (b, p) =>
+        TemporalFill.fillAcrossTime(spark, in, T, b, p)),
+      ("theil-sen", T, (b, p) =>
+        Trend.theilSenAcrossTime(spark, in, 0L, T, b, 0, p)))
+    ops.foreach { case (name, planes, run) =>
+      val whole = probe()
+      val one = run(Long.MaxValue, Some(whole))
+        .collect().map(_.toString).sorted.toSeq
+      val acc = probe()
+      val budget = budgetFor(planes)
+      val sliced = run(budget, Some(acc))
+        .collect().map(_.toString).sorted.toSeq
+      assert(one.nonEmpty && sliced == one, s"$name: sliced rows differ")
+      assert(acc.value > 0 && acc.value <= budget,
+        s"$name: peak decoded state ${acc.value} exceeds budget $budget")
+      // the units really were cut: a slice holds less than a whole tile
+      assert(acc.value < whole.value, s"$name: units were not sliced")
+    }
   }
 
   test("building a rechunk operator fires no Spark job") {

@@ -404,6 +404,13 @@ class LoadSpec extends AnyFunSuite {
     // re-evaluating the (lazy) tiles plan does not fire a finished hook
     res.tiles.count()
     assert(calls.synchronized(calls.size) == nTiles)
+    // a composite reads the load's bins itself, and reports each bin
+    // it fuses against its own total
+    calls.synchronized(calls.clear())
+    res.geomedianComposite(Seq("red", "nir")).collect()
+    val geo = calls.synchronized(calls.toSeq)
+    assert(geo.map(_._1) == (1L to nTiles))
+    assert(geo.map(_._2).distinct == Seq(nTiles))
   }
 
   test("progress hook also fires in the distributed-binning branch (total=-1)") {
