@@ -20,10 +20,12 @@ import org.apache.spark.sql.functions._
   * The non-mergeable operators (median, quantile, masked median,
   * geomedian, MAD, Theil–Sen, temporal fill) share one plan, [[rechunk]],
   * with two gathers. The `LoadResult` wrappers of a driver-binned load
-  * read the load's own bins in the task that reduces them (no pixel
-  * shuffle). The raw spellings here, over a tile frame of unknown
-  * origin (streams, cells, a copied or hand-built `LoadResult`, a
-  * distributed-binned load), rechunk the frame's rows with one shuffle.
+  * whose tiles each fit one slice read the load's own bins in the task
+  * that reduces them (no pixel shuffle). Everything else rechunks the
+  * frame's rows with one shuffle: the raw spellings here over a tile
+  * frame of unknown origin (streams, cells, a copied, hand-built or
+  * persisted `LoadResult`, a distributed-binned load), and a load whose
+  * tiles need more than one slice.
   */
 object Composite {
 
@@ -35,9 +37,9 @@ object Composite {
     * knows), and [[rechunk]] SLICES the tile into row bands sized so
     * `planesPerTile · width · sliceRows · 8 ≤ budget` BEFORE it gathers
     * the planes, and reassembles full output planes in an output-sized
-    * shuffle (1/T of the input — negligible) when a tile has more than
-    * one slice. This is odc-algo's pre-geomedian rechunk rule: spatial
-    * chunks chosen as a function of time depth. */
+    * shuffle (1/T of the input — negligible). This is odc-algo's
+    * pre-geomedian rechunk rule: spatial chunks chosen as a function of
+    * time depth. */
   val DefaultStateBudgetBytes: Long = 256L << 20
 
   /** Weiszfeld's distance floor: the default `eps` of the geomedian
@@ -184,7 +186,7 @@ object Composite {
                        planesPerTile: Int,
                        stateBudgetBytes: Long = DefaultStateBudgetBytes,
                        stateProbe: Option[MaxAcc] = None): DataFrame =
-    medianAcrossTime(spark, Shuffled(tiles), planesPerTile,
+    medianAcrossTime(spark, Gather(tiles), planesPerTile,
       stateBudgetBytes, stateProbe)
 
   private[graft] def medianAcrossTime(spark: SparkSession, in: Gather,
@@ -203,7 +205,7 @@ object Composite {
                          q: Double, planesPerTile: Int,
                          stateBudgetBytes: Long = DefaultStateBudgetBytes,
                          stateProbe: Option[MaxAcc] = None): DataFrame =
-    quantileAcrossTime(spark, Shuffled(tiles), q, planesPerTile,
+    quantileAcrossTime(spark, Gather(tiles), q, planesPerTile,
       stateBudgetBytes, stateProbe)
 
   private[graft] def quantileAcrossTime(spark: SparkSession, in: Gather,
@@ -243,7 +245,7 @@ object Composite {
                              planesPerTile: Int,
                              stateBudgetBytes: Long = DefaultStateBudgetBytes,
                              stateProbe: Option[MaxAcc] = None): DataFrame =
-    maskedMedianAcrossTime(spark, Shuffled(tiles), dataBand, maskBand,
+    maskedMedianAcrossTime(spark, Gather(tiles), dataBand, maskBand,
       clear, planesPerTile, stateBudgetBytes, stateProbe)
 
   private[graft] def maskedMedianAcrossTime(spark: SparkSession, in: Gather,
@@ -365,31 +367,16 @@ object Composite {
   final case class TileOut(band: String, tIdx: Int, ty: Int, tx: Int,
                            planes: Array[Array[Double]], cnt: Array[Int])
 
-  /** Where [[rechunk]] takes a slice group's planes from. */
-  private[graft] sealed trait Gather {
+  /** Where [[rechunk]] takes its planes from: the rows of `tiles`, or,
+    * when `plan` is the bin plan of the driver-binned load those tiles
+    * are ([[LoadResult]] attaches it), the load's own bins. */
+  private[graft] final case class Gather(tiles: DataFrame,
+                                         plan: Option[Load.BinPlan] = None) {
     /** The same gather over `bands` only. */
-    def only(bands: Seq[String]): Gather
-  }
-
-  /** The rows of a tile frame of unknown origin, cut into row bands and
-    * moved to their group by one shuffle. */
-  private[graft] final case class Shuffled(tiles: DataFrame) extends Gather {
     def only(bands: Seq[String]): Gather =
-      Shuffled(tiles.where(col("band").isin(bands.map(b => b: Any): _*)))
+      Gather(tiles.where(col("band").isin(bands.map(b => b: Any): _*)),
+        plan.map(p => p.copy(bins = p.bins.filter(b => bands.contains(b.band)))))
   }
-
-  /** A driver-binned load's own bins, read and fused by the task that
-    * reduces their group. */
-  private[graft] final case class Fused(plan: Load.BinPlan) extends Gather {
-    def only(bands: Seq[String]): Gather =
-      Fused(plan.copy(bins = plan.bins.filter(b => bands.contains(b.band))))
-  }
-
-  /** One fused task unit: rows `[r0, r0 + rows)` of tile `(ty, tx)`,
-    * `width` pixels wide, over the group's bins. */
-  private final case class FusedUnit(ty: Int, tx: Int, slice: Int, r0: Int,
-                                     rows: Int, width: Int,
-                                     bins: Array[Load.TileBin])
 
   /** The one plan of every non-mergeable across-time operator
     * (median/quantile/masked median/geomedian/MAD, Theil–Sen, temporal
@@ -403,15 +390,18 @@ object Composite {
     *  3. run `kernel(planes, pixelsPerPlane)` over the group's planes in
     *     `(time, tIdx)` order (a total order: same-time planes keep one
     *     fixed order);
-    *  4. with more than one slice per tile, concatenate each output
-    *     row's slice fragments in one output-sized shuffle
-    *     ([[reassemble]]).
+    *  4. concatenate each output row's slice fragments in one
+    *     output-sized shuffle ([[reassemble]]).
     * Step 2 has two gathers, with the same kernel behind both:
-    *  - [[Fused]]: one task per group reads and fuses the group's bins
-    *    over its row band, with no shuffle; with one slice per tile the
-    *    task emits output rows, so the whole operator is one stage;
-    *  - [[Shuffled]]: the frame's rows are cut into row bands
-    *    ([[slicedTiles]]) and moved by ONE rechunk shuffle.
+    *  - fused ([[fusedGroups]]), when `in.plan` is set and every tile
+    *    fits one slice: one task per group reads and fuses the group's
+    *    bins and emits output rows, so the operator is one stage with no
+    *    shuffle and no step 4;
+    *  - shuffled, for everything else: the rows of `in.tiles` are cut
+    *    into row bands ([[slicedTiles]]) and moved by ONE rechunk
+    *    shuffle. A load whose tiles need more than one slice takes this
+    *    gather too: it reads each tile once, where a fused unit per slice
+    *    would open every source once per slice.
     * Task state is `statePerPlane · planes · w · sliceRows · 8` bytes,
     * under the budget at any archive depth; `stateProbe` records its
     * peak. */
@@ -433,11 +423,16 @@ object Composite {
         SliceOut(band, tIdx, ty, tx, slice, ps, cnt)
       }
     }
-    in match {
-      case Fused(plan) =>
-        fusedGroups(spark, plan, statePlanes, budgetBytes, jointBands)(reduce)
-      case Shuffled(tiles) =>
-        reassemble(slicedTiles(spark, tiles, statePlanes, budgetBytes)
+    val oneSlicePerTile = (plan: Load.BinPlan) =>
+      plan.bins.map(b => (b.ty, b.tx)).distinct.forall { case (ty, tx) =>
+        val tile = plan.tiling.tileGeobox(ty, tx)
+        sliceRowsFor(statePlanes, tile.width, tile.height, budgetBytes) >=
+          tile.height
+      }
+    in.plan.filter(oneSlicePerTile) match {
+      case Some(plan) => fusedGroups(spark, plan, jointBands)(reduce)
+      case None =>
+        reassemble(slicedTiles(spark, in.tiles, statePlanes, budgetBytes)
           .groupByKey(s => (if (jointBands) "" else s.band, s.ty, s.tx,
             s.slice))
           .flatMapGroups { (key, it) =>
@@ -456,54 +451,33 @@ object Composite {
     }
   }
 
-  /** The fused gather: the driver plans one unit per slice group from
-    * the load's bins (only bins that exist, so a time with no mask
-    * plane gives no plane), and one task per unit reads and fuses the
-    * unit's bins over its row band ([[Load.fusePlane]]), then runs
-    * `reduce`. Progress fires once per bin read, against that total. */
+  /** The fused gather: the driver plans one unit per group from the
+    * load's bins (only bins that exist, so a time with no mask plane
+    * gives no plane), and [[Load.BinPlan.mapUnits]] reads and fuses each
+    * unit's bins in one task, which decodes them as a rechunk group
+    * would decode the tile rows and runs `reduce` over the whole tile. */
   private def fusedGroups(spark: SparkSession, plan: Load.BinPlan,
-      statePlanes: Int, budgetBytes: Long, jointBands: Boolean)(
+      jointBands: Boolean)(
       reduce: (Int, Int, Int, Array[Plane], Int, Int) => Iterator[SliceOut])
       : Dataset[TileOut] = {
     import spark.implicits._
-    val tiling = plan.tiling
-    val units = plan.bins
+    val units = plan.bins.toSeq
       .groupBy(b => (if (jointBands) "" else b.band, b.ty, b.tx))
-      .toArray.sortBy(_._1)
-      .flatMap { case ((_, ty, tx), bins) =>
-        val tile = tiling.tileGeobox(ty, tx)
-        val (w, h) = (tile.width, tile.height)
-        val sr = sliceRowsFor(statePlanes, w, h, budgetBytes)
-        (0 until h by sr).map(r0 =>
-          FusedUnit(ty, tx, r0 / sr, r0, math.min(sr, h - r0), w, bins))
+      .toSeq.sortBy(_._1)
+      .map { case ((_, ty, tx), bins) =>
+        val tile = plan.tiling.tileGeobox(ty, tx)
+        ((ty, tx, tile.width, tile.height), bins)
       }
-    val oneSlice = units.forall(_.slice == 0)
-    val progressId = plan.progress.fold(-1L)(cb =>
-      Load.registerProgress(units.map(_.bins.length.toLong).sum, cb))
-    // task-side inputs as locals: the closure must not capture the plan
-    val (tw, th, reader) = (tiling.tileW, tiling.tileH, plan.reader)
-    val (bcGbox, bcCfg, bcDtypes, bcTimes, bcIo) =
-      (plan.gbox, plan.cfgs, plan.dtypes, plan.times, plan.io)
-    val slices = spark.sparkContext
-      .parallelize(units.toIndexedSeq, math.max(1, units.length))
-      .mapPartitions { it =>
-        bcIo.value.foreach(graft.raster.IoSession.restore(_))
-        val gbt = graft.geo.GeoBoxTiles(bcGbox.value.toGeoBox, tw, th)
-        val buf = new Array[Double](tw * th)
-        it.flatMap { u =>
-          val planes = u.bins.map { bin =>
-            val p = Load.fusePlane(bin, gbt, bcCfg.value, bcDtypes.value,
-              bcTimes.value, reader, buf, u.r0, u.rows)
-            if (progressId >= 0) Load.reportProgress(progressId)
-            p
-          }
-          reduce(u.ty, u.tx, u.slice, planes, u.width, u.rows)
-        }
-      }
-    if (oneSlice)
-      spark.createDataset(slices.map(o =>
-        TileOut(o.band, o.tIdx, o.ty, o.tx, o.planes, o.cnt)))
-    else reassemble(spark.createDataset(slices))
+    spark.createDataset(plan.mapUnits(spark, units, math.max(1, units.length)) {
+      case ((ty, tx, w, h), rows) =>
+        // the tile row's payload, decoded at the epoch second
+        // `unix_timestamp` gives its time, is what the shuffle gathers
+        val planes = rows.map(r => Plane(r.band, r.tIdx,
+          Math.floorDiv(r.time.getTime, 1000L), Fuse.decode(r.data, r.dtype),
+          r.nodata)).toArray
+        reduce(ty, tx, 0, planes, w, h).map(o =>
+          TileOut(o.band, o.tIdx, ty, tx, o.planes, o.cnt))
+    })
   }
 
   /** Cut every tile row into row-band slices honoring the state budget.
@@ -590,7 +564,7 @@ object Composite {
                           iters: Int = 8, eps: Double = DefaultEps,
                           stateBudgetBytes: Long = DefaultStateBudgetBytes,
                           stateProbe: Option[MaxAcc] = None): DataFrame =
-    geomedianAcrossTime(spark, Shuffled(tiles), bands, planesPerTile, iters,
+    geomedianAcrossTime(spark, Gather(tiles), bands, planesPerTile, iters,
       eps, stateBudgetBytes, stateProbe)
 
   private[graft] def geomedianAcrossTime(spark: SparkSession, in: Gather,
@@ -735,7 +709,7 @@ object Composite {
                        iters: Int = 8, eps: Double = DefaultEps,
                        stateBudgetBytes: Long = DefaultStateBudgetBytes,
                        stateProbe: Option[MaxAcc] = None): DataFrame =
-    geomadAcrossTime(spark, Shuffled(tiles), bands, planesPerTile, iters, eps,
+    geomadAcrossTime(spark, Gather(tiles), bands, planesPerTile, iters, eps,
       stateBudgetBytes, stateProbe)
 
   private[graft] def geomadAcrossTime(spark: SparkSession, in: Gather,

@@ -6,6 +6,7 @@ import graft.planner.Planner
 import graft.raster.{AutoReader, Grb, IoCredentials, RasterReader}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** The flagship query: STAC items -> gridded, fused raster tiles
   * (`odc.stac.load`, SURVEY §3.1). Stages 1-8 (arg normalization, parsing,
@@ -26,7 +27,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *
   * A driver-binned [[LoadResult]] keeps its bin plan, so its across-time
   * composites read their own bins in the task that reduces them (the
-  * fused gather of [[Composite.rechunk]]): one job, no pixel shuffle.
+  * fused gather of [[Composite.rechunk]]): one job, no pixel shuffle,
+  * while its tiles are not persisted and each tile fits one slice.
   * First-valid fuse short-circuits: once a tile has no remaining nodata
   * pixels, later sources are skipped (reads avoided entirely — an
   * optimization the eager reference path lacks).
@@ -55,8 +57,8 @@ object Load {
   /** A driver-binned load's bin plan, kept privately on its
     * [[LoadResult]]: the bins in `(band, tIdx, ty, tx)` order, the output
     * tiling, and the broadcasts a task needs to read and fuse a bin.
-    * [[Composite.rechunk]]'s fused gather plans an across-time composite
-    * over it as one task per rechunk group. */
+    * The load's own pixel job and [[Composite.rechunk]]'s fused gather
+    * both run over it through [[mapUnits]]. */
   private[graft] final case class BinPlan(
       bins: Array[TileBin], tiling: GeoBoxTiles,
       gbox: Broadcast[GeoBoxData],
@@ -64,7 +66,41 @@ object Load {
       dtypes: Broadcast[Map[String, String]],
       times: Broadcast[IndexedSeq[java.sql.Timestamp]],
       io: Broadcast[Option[IoCredentials]], reader: RasterReader,
-      progress: Option[(Long, Long) => Unit])
+      progress: Option[(Long, Long) => Unit]) {
+
+    /** Reads and fuses task units of these bins on the executors, in
+      * `numSlices` tasks: a task restores the load's IO credentials and
+      * builds the output tiling and one tile-sized pixel buffer once,
+      * then hands `f` each unit's key and its bins' tile rows, fused
+      * lazily in order. Progress fires once per bin fused, against the
+      * bins of all `units` (an entry registered by this call). */
+    def mapUnits[K, O: scala.reflect.ClassTag](spark: SparkSession,
+        units: Seq[(K, Seq[TileBin])], numSlices: Int)(
+        f: (K, Iterator[TileRow]) => Iterator[O])
+        : org.apache.spark.rdd.RDD[O] = {
+      val progressId = progress.fold(-1L)(cb =>
+        registerProgress(units.map(_._2.length.toLong).sum, cb))
+      // task-side inputs as locals: the closure must not capture the plan
+      val (tw, th, rd) = (tiling.tileW, tiling.tileH, reader)
+      val (bcGbox, bcCfg, bcDtypes, bcTimes, bcIo) =
+        (gbox, cfgs, dtypes, times, io)
+      spark.sparkContext.parallelize(units, numSlices).mapPartitions { it =>
+        bcIo.value.foreach(graft.raster.IoSession.restore(_))
+        // one reusable pixel buffer per task (tiles are tw*th max):
+        // cuts per-tile allocation from ~8 MB to the encoded payload
+        val buf = new Array[Double](tw * th)
+        val gbt = GeoBoxTiles(bcGbox.value.toGeoBox, tw, th)
+        it.flatMap { case (key, unitBins) =>
+          f(key, unitBins.iterator.map { bin =>
+            val row = fuseBin(bin, gbt, bcCfg.value, bcDtypes.value,
+              bcTimes.value, rd, buf)
+            if (progressId >= 0) reportProgress(progressId)
+            row
+          })
+        }
+      }
+    }
+  }
 
   /** Distributed-binning unit: one row per (group, item) with its
     * footprint and selected band sources. Executors expand to TaskSeeds
@@ -125,7 +161,7 @@ object Load {
     java.lang.Long,
     (java.util.concurrent.atomic.AtomicLong, Long, (Long, Long) => Unit)]()
 
-  private[load] def registerProgress(total: Long,
+  private def registerProgress(total: Long,
                                cb: (Long, Long) => Unit): Long = {
     if (progressRegistry.size >= ProgressRegistryMax) {
       // ids are monotonic: the smallest key is the oldest abandoned load
@@ -318,26 +354,12 @@ object Load {
         // round-robin unit->slice assignment: neighbours (which share
         // source overlap and cost) spread across tasks instead of clustering
         val interleaved = (0 until taskUnits.length)
-          .sortBy(i => (i % p, i / p)).map(taskUnits).toIndexedSeq
-        val progressId: Long =
-          progress.fold(-1L)(cb => registerProgress(bins.length, cb))
+          .sortBy(i => (i % p, i / p)).map(i => ((), taskUnits(i)))
+        val plan = BinPlan(bins, gbt, bcGbox, bcCfg, bcDtypes, bcTimes, bcIo,
+          reader, progress)
         (spark.createDataset(
-          spark.sparkContext.parallelize(interleaved, p)
-            .mapPartitions { it =>
-              bcIo.value.foreach(graft.raster.IoSession.restore(_))
-              // one reusable pixel buffer per task (tiles are tw*th max):
-              // cuts per-tile allocation from ~8 MB to the encoded payload
-              val buf = new Array[Double](tw * th)
-              val gbt = GeoBoxTiles(bcGbox.value.toGeoBox, tw, th)
-              it.flatMap(_.iterator.map { bin =>
-                val row = fuseBin(bin, gbt, bcCfg.value, bcDtypes.value,
-                  bcTimes.value, reader, buf)
-                if (progressId >= 0) reportProgress(progressId)
-                row
-              })
-            }),
-          Some(BinPlan(bins, gbt, bcGbox, bcCfg, bcDtypes, bcTimes, bcIo,
-            reader, progress)))
+          plan.mapUnits(spark, interleaved, p)((_, rows) => rows)),
+          Some(plan))
       } else {
         // DISTRIBUTED binning fallback: above the driver threshold the
         // (item x tile) expansion itself is the big product (a continental
@@ -401,47 +423,23 @@ object Load {
   // scalastyle:on parameter.number
 
   /** Read + first-valid fuse of one planned bin into a TileRow (shared by
-    * the driver-planned and distributed-planned paths): over its whole
-    * tile, or over the row band `[r0, r0 + rows)` of it that a fused
-    * rechunk group reads ([[fusePlane]]). The geobox is built once per
-    * call, so a reader sees one new geobox instance per bin. */
+    * the driver-planned and distributed-planned paths). The tile geobox
+    * is built once per call, so a reader sees one new geobox instance
+    * per bin. */
   private def fuseBin(bin: TileBin, gbt: GeoBoxTiles,
                       cfgs: Map[String, RasterLoadParams],
                       dtypes: Map[String, String],
                       times: IndexedSeq[java.sql.Timestamp],
-                      reader: RasterReader, buf: Array[Double],
-                      r0: Int = 0, rows: Int = Int.MaxValue): TileRow = {
-    val tile = gbt.tileGeobox(bin.ty, bin.tx)
-    val gbox =
-      if (r0 == 0 && rows >= tile.height) tile
-      else tile.slice(0, r0, tile.width, rows)
+                      reader: RasterReader, buf: Array[Double]): TileRow = {
+    val tileGbox = gbt.tileGeobox(bin.ty, bin.tx)
     val cfg = cfgs(bin.band)
     val outDtype = dtypes(bin.band)
     val nodataV = dstNodata(cfg, outDtype)
-    val valid = Fuse.fill2dSliceInto(bin.srcs, gbox, cfg, reader, nodataV, buf)
+    val valid = Fuse.fill2dSliceInto(bin.srcs, tileGbox, cfg, reader, nodataV, buf)
     TileRow(bin.band, bin.tIdx, bin.ty, bin.tx, times(bin.tIdx),
-      bin.tx * gbt.tileW, bin.ty * gbt.tileH + r0, gbox.width, gbox.height,
+      bin.tx * gbt.tileW, bin.ty * gbt.tileH, tileGbox.width, tileGbox.height,
       outDtype, nodataV, valid,
-      Fuse.encode(buf, gbox.width * gbox.height, outDtype))
-  }
-
-  /** The plane a rechunk group would decode from this bin's tile row,
-    * cut to rows `[r0, r0 + rows)`: read and fused over that row band,
-    * quantized through the output dtype as the tile row's payload is,
-    * at the epoch second `unix_timestamp` gives its time. A band short
-    * of the whole tile is read through its own geobox, whose origin is
-    * one more affine step: exact on the paste path, while a warped
-    * value may move in its last bit. */
-  private[load] def fusePlane(bin: TileBin, gbt: GeoBoxTiles,
-                              cfgs: Map[String, RasterLoadParams],
-                              dtypes: Map[String, String],
-                              times: IndexedSeq[java.sql.Timestamp],
-                              reader: RasterReader, buf: Array[Double],
-                              r0: Int, rows: Int): Composite.Plane = {
-    val row = fuseBin(bin, gbt, cfgs, dtypes, times, reader, buf, r0, rows)
-    Composite.Plane(row.band, row.tIdx,
-      Math.floorDiv(row.time.getTime, 1000L),
-      Fuse.decode(row.data, row.dtype), row.nodata)
+      Fuse.encode(buf, tileGbox.width * tileGbox.height, outDtype))
   }
 
   /** Upper bound on tiles a footprint can touch: its bbox tile span. */
@@ -477,11 +475,13 @@ final case class LoadResult(tiles: DataFrame, geobox: GeoBox,
   }
 
   /** Where this result's across-time composites take their planes from:
-    * the load's own bins, read and fused in the task that reduces them
-    * (no pixel shuffle), or else the rows of `tiles`, rechunked by one
-    * shuffle. */
+    * the rows of `tiles`, plus the load's own bin plan while `tiles` is
+    * not persisted ([[Composite.rechunk]] then reads and fuses the bins
+    * in the task that reduces them). Persisted tiles are already paid
+    * for, so composites read them from the cache. */
   private[graft] def gather: Composite.Gather =
-    plan.fold[Composite.Gather](Composite.Shuffled(tiles))(Composite.Fused)
+    Composite.Gather(tiles,
+      plan.filter(_ => tiles.storageLevel == StorageLevel.NONE))
 
   /** Across-time composites with the time-depth memory bound WIRED IN:
     * these overloads pass `planesPerTile` (the B·T plane count this
@@ -489,7 +489,8 @@ final case class LoadResult(tiles: DataFrame, geobox: GeoBox,
     * keeps task state under `Composite.DefaultStateBudgetBytes` at any
     * archive depth — a caller using the raw `Composite.*(spark, tiles,
     * …)` spellings must size the state hint itself. On a driver-binned
-    * load they read their own bins: one job, no pixel shuffle. */
+    * load they read their own bins ([[gather]]): one job, no pixel
+    * shuffle. */
   def medianComposite(): DataFrame =
     Composite.medianAcrossTime(spark, gather, times.length,
       Composite.DefaultStateBudgetBytes, None)

@@ -37,7 +37,7 @@ object TemporalFill {
                      timeDepth: Int,
                      stateBudgetBytes: Long = Composite.DefaultStateBudgetBytes,
                      stateProbe: Option[Composite.MaxAcc] = None): DataFrame =
-    fillAcrossTime(spark, Composite.Shuffled(tiles), timeDepth,
+    fillAcrossTime(spark, Composite.Gather(tiles), timeDepth,
       stateBudgetBytes, stateProbe)
 
   private[graft] def fillAcrossTime(spark: SparkSession,

@@ -258,7 +258,7 @@ object Trend {
                          maxPairsPerPixel: Int = 0,
                          stateProbe: Option[Composite.MaxAcc] = None)
       : DataFrame =
-    theilSenAcrossTime(spark, Composite.Shuffled(tiles), t0Sec,
+    theilSenAcrossTime(spark, Composite.Gather(tiles), t0Sec,
       planesPerTile, stateBudgetBytes, maxPairsPerPixel, stateProbe)
 
   private[graft] def theilSenAcrossTime(spark: SparkSession,

@@ -3,8 +3,9 @@ package graft
 import graft.load.{Composite, Fuse, Load, TemporalFill, Trend}
 import graft.raster.Fixtures
 import graft.stac.StacParse
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, expr}
 import org.scalatest.funsuite.AnyFunSuite
@@ -185,46 +186,73 @@ class CompositeDepthSpec extends AnyFunSuite {
       s"peak decoded state ${acc.value} exceeds budget $budget")
   }
 
-  test("fused load composites: sliced units bit-identical to one slice, state capped (T=160)") {
-    // T = 160 time groups of a driver-binned load: the fused gather cuts
-    // each tile's unit into row bands sized for B·T planes
-    val (items, schemas) = StacParse.parseItems(Fixtures.writeScenes(T))
-    val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
-      groupby = "id", chunks = W,
-      geobox = Some(Fixtures.sceneGeobox(0).slice(64, 0, 2 * W, 2 * H)))
-    assert(res.times.length == T)
-    val in = res.gather
-    assert(in.isInstanceOf[Composite.Fused])
-    val bands = Seq("red", "nir")
-    type Run = (Long, Option[Composite.MaxAcc]) => DataFrame
-    // (operator, planes its slices are sized for, run under a budget)
-    val ops: Seq[(String, Int, Run)] = Seq(
-      ("median", T, (b, p) => Composite.medianAcrossTime(spark, in, T, b, p)),
-      ("quantile", T, (b, p) =>
-        Composite.quantileAcrossTime(spark, in, 0.25, T, b, p)),
-      ("masked median", 2 * T, (b, p) => Composite.maskedMedianAcrossTime(
-        spark, in, "red", "nir", _ > 6000.0, 2 * T, b, p)),
-      ("geomedian", 2 * T, (b, p) => Composite.geomedianAcrossTime(spark,
-        in, bands, 2 * T, 8, Composite.DefaultEps, b, p)),
-      ("geomad", 2 * T, (b, p) => Composite.geomadAcrossTime(spark, in,
-        bands, 2 * T, 8, Composite.DefaultEps, b, p)),
-      ("temporal fill", 2 * T, (b, p) =>
-        TemporalFill.fillAcrossTime(spark, in, T, b, p)),
-      ("theil-sen", T, (b, p) =>
-        Trend.theilSenAcrossTime(spark, in, 0L, T, b, 0, p)))
-    ops.foreach { case (name, planes, run) =>
-      val whole = probe()
-      val one = run(Long.MaxValue, Some(whole))
-        .collect().map(_.toString).sorted.toSeq
-      val acc = probe()
-      val budget = budgetFor(planes)
-      val sliced = run(budget, Some(acc))
-        .collect().map(_.toString).sorted.toSeq
-      assert(one.nonEmpty && sliced == one, s"$name: sliced rows differ")
-      assert(acc.value > 0 && acc.value <= budget,
-        s"$name: peak decoded state ${acc.value} exceeds budget $budget")
-      // the units really were cut: a slice holds less than a whole tile
-      assert(acc.value < whole.value, s"$name: units were not sliced")
+  /** Sorted row dump of `df` and the shuffle bytes its collect wrote. */
+  private def collectCounting(df: DataFrame): (Seq[String], Long) = {
+    val bytes = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    Harness.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val rows = df.collect().map(_.toString).sorted.toSeq
+      Harness.drainListeners(spark)
+      (rows, bytes.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  // T = 160 time groups of a driver-binned load, on its native grid and
+  // bilinear-warped to EPSG:3857 (where the fused read's rounding shows)
+  private val area = Fixtures.sceneGeobox(0).slice(64, 0, 2 * W, 2 * H)
+  Seq("paste" -> false, "bilinear warp" -> true).foreach { case (kind, warp) =>
+    test(s"load composites past one slice take the shuffle, rows equal to the fused gather (T=160, $kind)") {
+      val (items, schemas) = StacParse.parseItems(Fixtures.writeScenes(T))
+      val res =
+        if (warp) Load.load(spark, items, schemas, bands = Seq("red", "nir"),
+          groupby = "id", chunks = W, crs = Some("EPSG:3857"),
+          resolution = Some(13.0),
+          geopolygon = Some(area.footprint(graft.geo.Crs.LonLat)),
+          resampling = Map("*" -> "bilinear"))
+        else Load.load(spark, items, schemas, bands = Seq("red", "nir"),
+          groupby = "id", chunks = W, geobox = Some(area))
+      assert(res.times.length == T)
+      val in = res.gather
+      assert(in.plan.isDefined)
+      val bands = Seq("red", "nir")
+      type Run = (Long, Option[Composite.MaxAcc]) => DataFrame
+      // (operator, planes its slices are sized for, run under a budget)
+      val ops: Seq[(String, Int, Run)] = Seq(
+        ("median", T, (b, p) => Composite.medianAcrossTime(spark, in, T, b, p)),
+        ("quantile", T, (b, p) =>
+          Composite.quantileAcrossTime(spark, in, 0.25, T, b, p)),
+        ("masked median", 2 * T, (b, p) => Composite.maskedMedianAcrossTime(
+          spark, in, "red", "nir", _ > 6000.0, 2 * T, b, p)),
+        ("geomedian", 2 * T, (b, p) => Composite.geomedianAcrossTime(spark,
+          in, bands, 2 * T, 8, Composite.DefaultEps, b, p)),
+        ("geomad", 2 * T, (b, p) => Composite.geomadAcrossTime(spark, in,
+          bands, 2 * T, 8, Composite.DefaultEps, b, p)),
+        ("temporal fill", 2 * T, (b, p) =>
+          TemporalFill.fillAcrossTime(spark, in, T, b, p)),
+        ("theil-sen", T, (b, p) =>
+          Trend.theilSenAcrossTime(spark, in, 0L, T, b, 0, p)))
+      ops.foreach { case (name, planes, run) =>
+        // one slice per tile: the fused gather, no shuffle
+        val whole = probe()
+        val (one, oneBytes) = collectCounting(run(Long.MaxValue, Some(whole)))
+        assert(one.nonEmpty && oneBytes == 0L,
+          s"$name: the one-slice run shuffled $oneBytes bytes")
+        // past one slice: the shuffle gather, each tile read once
+        val acc = probe()
+        val budget = budgetFor(planes)
+        val (sliced, slicedBytes) = collectCounting(run(budget, Some(acc)))
+        assert(slicedBytes > 0L, s"$name: the sliced run did not shuffle")
+        assert(sliced == one, s"$name: sliced rows differ")
+        assert(acc.value > 0 && acc.value <= budget,
+          s"$name: peak decoded state ${acc.value} exceeds budget $budget")
+        assert(acc.value < whole.value, s"$name: tiles were not sliced")
+      }
     }
   }
 

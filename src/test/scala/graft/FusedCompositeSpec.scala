@@ -1,7 +1,9 @@
 package graft
 
+import graft.geo.GeoBox
 import graft.load.{Composite, Load, LoadResult, TemporalFill, Trend}
-import graft.raster.Fixtures
+import graft.model.{RasterLoadParams, RasterSource}
+import graft.raster.{AutoReader, Fixtures, RasterReader}
 import graft.stac.StacParse
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
@@ -10,12 +12,24 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The default reader, counting the reads of every task in this JVM. */
+private object CountingReader extends RasterReader {
+  val reads = new AtomicLong
+  def read(src: RasterSource, cfg: RasterLoadParams, g: GeoBox, nd: Double) =
+    AutoReader.read(src, cfg, g, nd)
+  def readInto(src: RasterSource, cfg: RasterLoadParams, g: GeoBox,
+               nd: Double, out: Array[Double]): Long = {
+    reads.incrementAndGet()
+    AutoReader.readInto(src, cfg, g, nd, out)
+  }
+}
+
 /** The fused gather of `Composite.rechunk`: a driver-binned load's
   * composites read their own bins in the task that reduces them. Every
   * `LoadResult` wrapper must equal the raw `Composite.*` / `TemporalFill`
   * / `Trend` spelling over the same `tiles` (the shuffle gather) row for
   * row, run as one job with no shuffle, and fall back to the shuffle for
-  * tiles that are not the load's own. */
+  * tiles that are not the load's own or are persisted. */
 class FusedCompositeSpec extends AnyFunSuite {
   import GraftSpark.spark
 
@@ -65,7 +79,7 @@ class FusedCompositeSpec extends AnyFunSuite {
 
   test("fused == rechunk: GRB paste load with temporal holes") {
     val res = load(Fixtures.writeScenesGap(), Seq("red", "nir"), "solar_day")
-    assert(res.gather.isInstanceOf[Composite.Fused])
+    assert(res.gather.plan.isDefined)
     assertFusedEqualsRechunk(res, "red", "nir")
   }
 
@@ -112,14 +126,32 @@ class FusedCompositeSpec extends AnyFunSuite {
     val res = load(Fixtures.writeScenes(4), Seq("red", "nir"), "solar_day")
     val one = res.tiles.where(col("ty") === 0 && col("tx") === 1)
     val copied = res.copy(tiles = one)
-    assert(copied.gather == Composite.Shuffled(one))
+    assert(copied.gather == Composite.Gather(one))
     val rows = copied.medianComposite().collect()
     assert(rows.nonEmpty &&
       rows.forall(r => r.getAs[Int]("ty") == 0 && r.getAs[Int]("tx") == 1))
     assert(rows.map(_.toString).sorted.toSeq == rowsOf(
       res.medianComposite().where(col("ty") === 0 && col("tx") === 1)))
     val byHand = LoadResult(one, res.geobox, res.times, res.dtypes, res.nodata)
-    assert(byHand.gather == Composite.Shuffled(one))
+    assert(byHand.gather == Composite.Gather(one))
+  }
+
+  test("a persisted result's composites read its cached tiles") {
+    val reads = CountingReader.reads
+    val (items, schemas) = StacParse.parseItems(Fixtures.writeScenes(4))
+    val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
+      groupby = "solar_day", chunks = 48, reader = CountingReader)
+    val fused = rowsOf(res.medianComposite())
+    assert(reads.get > 0)
+    res.tiles.persist()
+    try {
+      assert(res.gather == Composite.Gather(res.tiles))
+      res.tiles.count()
+      reads.set(0)
+      assert(rowsOf(res.medianComposite()) == fused)
+      assert(reads.get == 0, s"${reads.get} raster reads past the cache")
+    } finally res.tiles.unpersist(blocking = true)
+    assert(res.gather.plan.isDefined)
   }
 
   test("count pin: a fused geomedian is one job with no shuffle bytes") {
@@ -148,7 +180,7 @@ class FusedCompositeSpec extends AnyFunSuite {
     assert(shuffled.get == 0L, s"${shuffled.get} shuffle bytes written")
     // distributed binning keeps no plan: the composite rechunks its tiles
     val fallback = load(jsons, bands, "solar_day", maxDriverBins = 0)
-    assert(fallback.gather.isInstanceOf[Composite.Shuffled])
+    assert(fallback.gather.plan.isEmpty)
     assert(rows.map(_.toString).sorted.toSeq ==
       rowsOf(fallback.geomedianComposite(bands)))
   }
