@@ -222,7 +222,8 @@ object Composite {
     require(q >= 0 && q <= 1, s"quantile out of range: $q")
     rechunk(spark, in, planesPerTile, budgetBytes, stateProbe,
         jointBands = false) { (planes, n) =>
-      val (out, cnt) = selectionKernel(planes.map(p => (p.px, p.nodata)), n, q)
+      val (out, cnt) =
+        selectionKernel(planes.map(_.px), planes.map(_.nodata), n, q)
       Iterator((planes(0).band, 0, Array(out), cnt))
     }.map(t => (t.band, t.ty, t.tx, t.planes(0), t.cnt))
   }
@@ -256,37 +257,38 @@ object Composite {
     rechunk(spark, in.only(Seq(dataBand, maskBand)),
         planesPerTile, stateBudgetBytes, stateProbe,
         jointBands = true) { (planes, n) =>
-      def byTime(ps: Array[Plane]) = scala.collection.mutable.HashMap.from(
-        ps.iterator.map(p => p.tIdx -> ((p.px, p.nodata))))
+      // one plane per tIdx (a later plane of a tIdx replaces an earlier
+      // one), the mask aligned to the data's times
+      def byTime(ps: Array[Plane]) = ps.iterator.map(p => p.tIdx -> p).toMap
       val (data, mask) = planes.partition(_.band == dataBand)
-      val (med, cnt) = maskedMedianKernel(byTime(data), byTime(mask), n, clear)
+      val dataAt = byTime(data)
+      val maskAt = byTime(mask)
+      val times = dataAt.keys.toArray.sorted
+      val (med, cnt) = maskedMedianKernel(times.map(dataAt),
+        times.map(maskAt.getOrElse(_, null)), n, clear)
       Iterator((dataBand, 0, Array(med), cnt))
     }.map(t => (t.band, t.ty, t.tx, t.planes(0), t.cnt))
       .toDF("band", "ty", "tx", "median", "count")
   }
 
-  /** Masked-median kernel over one slice group's data + mask planes
-    * keyed by tIdx. */
-  private def maskedMedianKernel(
-      dataPl: scala.collection.Map[Int, (Array[Double], Double)],
-      maskPl: scala.collection.Map[Int, (Array[Double], Double)],
+  /** Masked-median kernel over one slice group's data planes (time-
+    * ascending) and the mask plane of each of their times (null where a
+    * time has none). */
+  private def maskedMedianKernel(data: Array[Plane], mask: Array[Plane],
       n: Int, clear: Double => Boolean): (Array[Double], Array[Int]) = {
-    val times = dataPl.keys.toArray.sorted
     val med = new Array[Double](n)
     val cnt = new Array[Int](n)
-    val vals = new Array[Double](times.length)
+    val vals = new Array[Double](data.length)
     var i = 0
     while (i < n) {
       var m = 0
       var p = 0
-      while (p < times.length) {
-        val (px, nodata) = dataPl(times(p))
-        val v = px(i)
-        val ok = !(v.isNaN || v == nodata) && (maskPl.get(times(p)) match {
-          case Some((mp, mnd)) =>
-            val mv = mp(i)
-            clear(if (mv.isNaN || mv == mnd) Double.NaN else mv)
-          case None => true
+      while (p < data.length) {
+        val v = data(p).px(i)
+        val mk = mask(p)
+        val ok = !(v.isNaN || v == data(p).nodata) && (mk == null || {
+          val mv = mk.px(i)
+          clear(if (mv.isNaN || mv == mk.nodata) Double.NaN else mv)
         })
         if (ok) { vals(m) = v; m += 1 }
         p += 1
@@ -304,23 +306,22 @@ object Composite {
     (med, cnt)
   }
 
-  /** Per-pixel interpolated quantile over `planes` (each `n` pixels,
-    * paired with its nodata). Pixels are independent, so the row-band
-    * slicing cannot change a single output value. */
-  private def selectionKernel(
-      planes: scala.collection.IndexedSeq[(Array[Double], Double)],
-      n: Int, q: Double): (Array[Double], Array[Int]) = {
+  /** Per-pixel interpolated quantile over planes `px` (each `n` pixels,
+    * plane `p` with nodata `nodata(p)`). Pixels are independent, so the
+    * row-band slicing cannot change a single output value. */
+  private def selectionKernel(px: Array[Array[Double]],
+      nodata: Array[Double], n: Int,
+      q: Double): (Array[Double], Array[Int]) = {
     val out = new Array[Double](n)
     val cnt = new Array[Int](n)
-    val vals = new Array[Double](planes.length)
+    val vals = new Array[Double](px.length)
     var i = 0
     while (i < n) {
       var m = 0
       var p = 0
-      while (p < planes.length) {
-        val (px, nodata) = planes(p)
-        val v = px(i)
-        if (!(v.isNaN || v == nodata)) { vals(m) = v; m += 1 }
+      while (p < px.length) {
+        val v = px(p)(i)
+        if (!(v.isNaN || v == nodata(p))) { vals(m) = v; m += 1 }
         p += 1
       }
       if (m == 0) out(i) = Double.NaN
@@ -556,9 +557,12 @@ object Composite {
     *
     * Scale shape: same rechunk as the masked median — keyed
     * `(ty, tx, slice)` so every band's time planes of a row band meet
-    * in one task, which runs the per-pixel iterations locally.
+    * in one task, which solves its pixels in blocks ([[Weiszfeld]]).
     * Weiszfeld is embarrassingly parallel across pixels; nothing
-    * iterates across tasks. `planesPerTile` is B·T. */
+    * iterates across tasks. `planesPerTile` is B·T; the rechunk keeps
+    * 1/[[ScratchShare]] of the state budget for the solver's block
+    * scratch ([[solverRechunk]]). `eps` must be positive with a finite
+    * 1/eps. */
   def geomedianAcrossTime(spark: SparkSession, tiles: DataFrame,
                           bands: Seq[String], planesPerTile: Int,
                           iters: Int = 8, eps: Double = DefaultEps,
@@ -572,117 +576,279 @@ object Composite {
       stateBudgetBytes: Long, stateProbe: Option[MaxAcc]): DataFrame = {
     import spark.implicits._
     require(bands.nonEmpty, "geomedian needs at least one band")
-    val nb = bands.length
-    val bandIdx = bands.zipWithIndex.toMap
-    rechunk(spark, in.only(bands),
-        planesPerTile, stateBudgetBytes, stateProbe,
-        jointBands = true) { (planes, n) =>
-      val (geo, cnt) =
-        geomedianKernel(byTimeAndBand(planes, bandIdx), nb, n, iters, eps)
+    solverRechunk(spark, in, bands, planesPerTile, iters, eps,
+        stateBudgetBytes, stateProbe) { solver =>
+      val (geo, cnt) = geomedianKernel(solver)
       bands.indices.iterator.map(b => (bands(b), 0, Array(geo(b)), cnt))
     }.map(t => (t.band, t.ty, t.tx, t.planes(0), t.cnt))
       .toDF("band", "ty", "tx", "geomedian", "count")
   }
 
-  /** A joint-band group's planes keyed (tIdx, bandOrdinal) — the input
-    * of [[geomedianKernel]] and [[geomadKernel]]. A mutable hash map:
-    * the kernels look a plane up per pixel, where it is faster than the
-    * immutable one. */
-  private def byTimeAndBand(planes: Array[Plane], bandIdx: Map[String, Int])
-      : scala.collection.Map[(Int, Int), (Array[Double], Double)] =
-    scala.collection.mutable.HashMap.from(planes.iterator.map(p =>
-      (p.tIdx, bandIdx(p.band)) -> ((p.px, p.nodata))))
+  /** Share of a geomedian/geomad task's state budget kept for the
+    * solver's block scratch. */
+  private[graft] val ScratchShare = 64
 
-  /** Geomedian kernel over gathered (tIdx, bandOrdinal)-keyed planes of
-    * `n` pixels: complete-observation gather (time-ascending) + the
-    * fixed-iteration Weiszfeld solve. */
-  private[graft] def geomedianKernel(
-      planes: scala.collection.Map[(Int, Int), (Array[Double], Double)],
-      nb: Int, n: Int, iters: Int,
-      eps: Double): (Array[Array[Double]], Array[Int]) = {
-    // only times with a plane for EVERY band can contribute
-    val times = planes.keys.map(_._1).toSeq.distinct.sorted
-      .filter(t => (0 until nb).forall(b => planes.contains((t, b))))
-      .toArray
+  /** The rechunk of [[geomedianAcrossTime]] and [[geomadAcrossTime]]:
+    * the planes are sliced for the budget less its 1/[[ScratchShare]],
+    * and each group's [[Weiszfeld]] solver sizes its block scratch to
+    * that share, so decoded planes plus scratch stay within the budget
+    * (floor: one row of planes and one pixel of scratch). `stateProbe`
+    * records the two together. */
+  private def solverRechunk(spark: SparkSession, in: Gather,
+      bands: Seq[String], planesPerTile: Int, iters: Int, eps: Double,
+      budgetBytes: Long, stateProbe: Option[MaxAcc])(
+      kernel: Weiszfeld => Iterator[Frag]): Dataset[TileOut] = {
+    // an invalid observation's weight is masked by ·0.0, which is +0.0
+    // only while 1/max(√d2, eps) is finite
+    require(eps > 0 && !(1.0 / eps).isInfinite,
+      s"eps must be positive with a finite 1/eps: $eps")
+    val scratchBytes = budgetBytes / ScratchShare
+    rechunk(spark, in.only(bands), planesPerTile, budgetBytes - scratchBytes,
+        stateProbe, jointBands = true) { (planes, n) =>
+      val solver = Weiszfeld(JointStack(planes, bands), n, iters, eps,
+        scratchBytes)
+      // the group's decoded planes, as rechunk counts them, plus scratch
+      stateProbe.foreach(_.add(planes.length * n * 8L + solver.scratchBytes))
+      kernel(solver)
+    }
+  }
+
+  /** A joint-band group's complete times, resolved once: `px(t)(b)` is
+    * the plane of band `b` at the t-th tIdx (ascending) that has a plane
+    * for every one of the `nb` bands, `nodata(t)(b)` its nodata. The
+    * input of [[geomedianKernel]] and [[geomadKernel]]. */
+  private[graft] final case class JointStack(nb: Int,
+      px: Array[Array[Array[Double]]], nodata: Array[Array[Double]])
+
+  private[graft] object JointStack {
+    def apply(planes: Array[Plane], bands: Seq[String]): JointStack = {
+      val bandIdx = bands.zipWithIndex.toMap
+      // a later plane of a (tIdx, band) replaces an earlier one
+      val at = planes.iterator.map(p => (p.tIdx, bandIdx(p.band)) -> p).toMap
+      val times = at.keys.map(_._1).toArray.distinct.sorted
+        .filter(t => bands.indices.forall(b => at.contains((t, b))))
+      JointStack(bands.length,
+        times.map(t => Array.tabulate(bands.length)(b => at((t, b)).px)),
+        times.map(t => Array.tabulate(bands.length)(b => at((t, b)).nodata)))
+    }
+  }
+
+  /** Geomedian kernel over the [[Weiszfeld]] solve of a [[JointStack]]
+    * of `n` pixels: per band the geomedian plane, and per pixel the
+    * count of complete observations. */
+  private[graft] def geomedianKernel(solver: Weiszfeld)
+      : (Array[Array[Double]], Array[Int]) = {
+    val (nb, n) = (solver.s.nb, solver.n)
     val geo = Array.fill(nb)(new Array[Double](n))
     val cnt = new Array[Int](n)
-    val obs = Array.ofDim[Double](times.length, nb)
-    var i = 0
-    while (i < n) {
-      // gather complete observations, time-ascending
-      var m = 0
-      var p = 0
-      while (p < times.length) {
-        var ok = true
-        var b = 0
-        while (b < nb && ok) {
-          val (px, nodata) = planes((times(p), b))
-          val v = px(i)
-          if (v.isNaN || v == nodata) ok = false else obs(m)(b) = v
-          b += 1
-        }
-        if (ok) m += 1
-        p += 1
+    solver.blocks(cnt) { (i0, len) =>
+      var b = 0
+      while (b < nb) {
+        System.arraycopy(solver.x(b), 0, geo(b), i0, len); b += 1
       }
-      cnt(i) = m
-      if (m == 0) {
-        var b = 0
-        while (b < nb) { geo(b)(i) = Double.NaN; b += 1 }
-      } else {
-        val x = weiszfeld(obs, m, nb, iters, eps)
-        var b = 0
-        while (b < nb) { geo(b)(i) = x(b); b += 1 }
-      }
-      i += 1
     }
     (geo, cnt)
   }
 
-  /** Fixed-iteration Weiszfeld geometric median of `obs(0 until m)`
-    * (each a length-`nb` band vector): x⁰ = component mean, then
-    * xᵏ⁺¹ = Σ wₜ·pₜ / Σ wₜ with wₜ = 1/max(‖xᵏ−pₜ‖, eps). Every fold
-    * is time- then band-ascending — the deterministic contract the SQL
-    * oracles replay. */
-  private[graft] def weiszfeld(obs: Array[Array[Double]], m: Int, nb: Int,
-                        iters: Int, eps: Double): Array[Double] = {
-    // m = 1: the geomedian of one observation IS that observation —
-    // exactly, not via (p·w)/w with the clamped weight w = 1/eps, whose
-    // two roundings wobble the last ulp (the SQL oracles shortcut the
-    // same way, so the arithmetic stays replayable bit-for-bit)
-    if (m == 1) return java.util.Arrays.copyOf(obs(0), nb)
-    val x = new Array[Double](nb)
-    var b = 0
-    while (b < nb) {
-      var s = 0.0; var t = 0
-      while (t < m) { s += obs(t)(b); t += 1 }
-      x(b) = s / m
-      b += 1
+  /** Most pixels per block of the geomedian solver. */
+  private val MaxBlock = 512
+
+  /** Doubles of [[Weiszfeld]] block scratch per pixel of the block. */
+  private def scratchPerPixel(tc: Int, nb: Int): Long =
+    tc.toLong * (nb + 1) + 2L * nb + 4
+
+  /** Pixels per block of a [[Weiszfeld]] solve over `tc` complete times
+    * of `nb` bands and `n` pixels: at most [[MaxBlock]] and `n`, and
+    * small enough that the block scratch neither exceeds the stack's
+    * `tc·nb·n` decoded doubles nor `scratchBytes` — floor one pixel,
+    * whose scratch is the irreducible minimum. */
+  private[graft] def blockFor(tc: Int, nb: Int, n: Int,
+                              scratchBytes: Long): Int = {
+    val perPixel = scratchPerPixel(tc, nb)
+    math.max(1L, Seq(MaxBlock.toLong, n.toLong, tc.toLong * nb * n / perPixel,
+      scratchBytes / (8 * perPixel)).min).toInt
+  }
+
+  /** The fixed-iteration Weiszfeld solve behind [[geomedianKernel]] and
+    * [[geomadKernel]], over blocks of `blk` pixels. For each block it
+    * copies the observations into `obs(t)(b)(j)` — an observation with
+    * any band invalid is an exact 0.0, with `valid(t)(j)` = 0.0 (else
+    * 1.0) — and leaves the block's geomedian in `x(b)(j)`. Every
+    * innermost loop of the iterations is a counted loop over the
+    * block's pixels on primitive arrays, which C2 can vectorize, `sqrt`
+    * and divide included:
+    *   d2 += dd·dd (band-ascending), w = (1/max(√d2, eps))·valid,
+    *   den += w and num(b) += o·w (time-ascending).
+    * Per pixel this is the scalar recurrence bit for bit: the folds keep
+    * their order, and a masked term adds +0.0 to a sum that began at
+    * +0.0, which never changes it (Java does no FMA contraction). A
+    * pixel with no complete observation gets NaN, one with a single
+    * one gets that observation itself — exactly, not (p·w)/w with the
+    * clamped weight 1/eps, whose two roundings wobble the last ulp (the
+    * SQL oracles shortcut the same way). */
+  private[graft] final class Weiszfeld(val s: JointStack, val n: Int,
+      iters: Int, eps: Double, blk: Int) {
+    private val nb = s.nb
+    private val tc = s.px.length
+    /** Bytes of the block scratch below. */
+    val scratchBytes: Long = 8L * blk * scratchPerPixel(tc, nb)
+    val obs: Array[Array[Array[Double]]] = Array.ofDim[Double](tc, nb, blk)
+    val valid: Array[Array[Double]] = Array.ofDim[Double](tc, blk)
+    val x: Array[Array[Double]] = Array.ofDim[Double](nb, blk)
+    private val num = Array.ofDim[Double](nb, blk)
+    private val m = new Array[Double](blk)
+    private val den = new Array[Double](blk)
+    private val d2 = new Array[Double](blk)
+    private val w = new Array[Double](blk)
+
+    /** Solve every block of pixels in order, writing each pixel's count
+      * of complete observations into `cnt`, then call `f(i0, len)` with
+      * pixels `[i0, i0+len)` held in the scratch. */
+    def blocks(cnt: Array[Int])(f: (Int, Int) => Unit): Unit = {
+      var i0 = 0
+      while (i0 < n) {
+        val len = math.min(blk, n - i0)
+        solve(i0, len, cnt)
+        f(i0, len)
+        i0 += len
+      }
     }
-    var k = 0
-    while (k < iters) {
-      val wts = new Array[Double](m)
+
+    private def solve(i0: Int, len: Int, cnt: Array[Int]): Unit = {
+      gather(i0, len)
+      start(len)
+      var k = 0
+      while (k < iters) { step(len); k += 1 }
+      finish(i0, len, cnt)
+    }
+
+    /** Observations of pixels `[i0, i0+len)` into `obs`/`valid`, and
+      * each pixel's count of complete observations into `m` (a double
+      * count is exact). */
+    private def gather(i0: Int, len: Int): Unit = {
+      java.util.Arrays.fill(m, 0, len, 0.0)
       var t = 0
-      while (t < m) {
-        var d2 = 0.0; var b2 = 0
-        while (b2 < nb) {
-          val dd = obs(t)(b2) - x(b2); d2 += dd * dd; b2 += 1
+      while (t < tc) {
+        val ok = valid(t)
+        java.util.Arrays.fill(ok, 0, len, 1.0)
+        var b = 0
+        while (b < nb) {
+          val px = s.px(t)(b)
+          val nd = s.nodata(t)(b)
+          var j = 0
+          while (j < len) {
+            val v = px(i0 + j)
+            if (v.isNaN || v == nd) ok(j) = 0.0
+            j += 1
+          }
+          b += 1
         }
-        wts(t) = 1.0 / math.max(math.sqrt(d2), eps)
+        b = 0
+        while (b < nb) {
+          val px = s.px(t)(b)
+          val o = obs(t)(b)
+          var j = 0
+          while (j < len) {
+            o(j) = if (ok(j) != 0.0) px(i0 + j) else 0.0; j += 1
+          }
+          b += 1
+        }
+        var j = 0
+        while (j < len) { m(j) += ok(j); j += 1 }
         t += 1
       }
-      var den = 0.0
-      t = 0
-      while (t < m) { den += wts(t); t += 1 }
-      b = 0
+    }
+
+    /** x⁰ = component mean. */
+    private def start(len: Int): Unit = {
+      var b = 0
       while (b < nb) {
-        var num = 0.0; t = 0
-        while (t < m) { num += obs(t)(b) * wts(t); t += 1 }
-        x(b) = num / den
+        val xb = x(b)
+        java.util.Arrays.fill(xb, 0, len, 0.0)
+        var t = 0
+        while (t < tc) {
+          val o = obs(t)(b)
+          var j = 0
+          while (j < len) { xb(j) += o(j); j += 1 }
+          t += 1
+        }
+        var j = 0
+        while (j < len) { xb(j) = xb(j) / m(j); j += 1 }
         b += 1
       }
-      k += 1
     }
-    x
+
+    /** One Weiszfeld iteration: xᵏ⁺¹ = Σ wₜ·pₜ / Σ wₜ. */
+    private def step(len: Int): Unit = {
+      java.util.Arrays.fill(den, 0, len, 0.0)
+      var b = 0
+      while (b < nb) { java.util.Arrays.fill(num(b), 0, len, 0.0); b += 1 }
+      var t = 0
+      while (t < tc) {
+        java.util.Arrays.fill(d2, 0, len, 0.0)
+        b = 0
+        while (b < nb) {
+          val o = obs(t)(b)
+          val xb = x(b)
+          var j = 0
+          while (j < len) { val dd = o(j) - xb(j); d2(j) += dd * dd; j += 1 }
+          b += 1
+        }
+        val ok = valid(t)
+        var j = 0
+        while (j < len) {
+          val wj = (1.0 / math.max(math.sqrt(d2(j)), eps)) * ok(j)
+          w(j) = wj
+          den(j) += wj
+          j += 1
+        }
+        b = 0
+        while (b < nb) {
+          val o = obs(t)(b)
+          val nm = num(b)
+          j = 0
+          while (j < len) { nm(j) += o(j) * w(j); j += 1 }
+          b += 1
+        }
+        t += 1
+      }
+      b = 0
+      while (b < nb) {
+        val xb = x(b)
+        val nm = num(b)
+        var j = 0
+        while (j < len) { xb(j) = nm(j) / den(j); j += 1 }
+        b += 1
+      }
+    }
+
+    /** Counts out; NaN for no complete observation, the observation
+      * itself for one. */
+    private def finish(i0: Int, len: Int, cnt: Array[Int]): Unit = {
+      var j = 0
+      while (j < len) {
+        cnt(i0 + j) = m(j).toInt
+        if (m(j) == 0.0) {
+          var b = 0
+          while (b < nb) { x(b)(j) = Double.NaN; b += 1 }
+        } else if (m(j) == 1.0) {
+          var t = 0
+          while (valid(t)(j) == 0.0) t += 1
+          var b = 0
+          while (b < nb) { x(b)(j) = obs(t)(b)(j); b += 1 }
+        }
+        j += 1
+      }
+    }
+  }
+
+  private[graft] object Weiszfeld {
+    /** The solve of `s` in the largest block ([[blockFor]]) whose
+      * scratch fits `scratchBytes`. */
+    def apply(s: JointStack, n: Int, iters: Int, eps: Double,
+              scratchBytes: Long): Weiszfeld =
+      new Weiszfeld(s, n, iters, eps,
+        blockFor(s.px.length, s.nb, n, scratchBytes))
   }
 
   /** Median with the medianAcrossTime convention: middle value for odd
@@ -701,9 +867,10 @@ object Composite {
     *   SMAD  = median 1 − cos(pₜ, x)       (spectral / angular)
     *   BCMAD = median Σ|pₜ−x| / Σ|pₜ+x|   (Bray–Curtis)
     * Zero denominators yield 0 (not NaN) in both engines. Same
-    * `(ty, tx, slice)`-keyed rechunk and fixed-iteration Weiszfeld as
+    * `(ty, tx, slice)`-keyed rechunk and blocked Weiszfeld solve as
     * [[geomedianAcrossTime]] — the MADs are a per-pixel postpass over
-    * the same gathered observations. */
+    * each block's observations. `eps` must be positive with a finite
+    * 1/eps. */
   def geomadAcrossTime(spark: SparkSession, tiles: DataFrame,
                        bands: Seq[String], planesPerTile: Int,
                        iters: Int = 8, eps: Double = DefaultEps,
@@ -717,95 +884,87 @@ object Composite {
       stateBudgetBytes: Long, stateProbe: Option[MaxAcc]): DataFrame = {
     import spark.implicits._
     require(bands.nonEmpty, "geomad needs at least one band")
-    val nb = bands.length
-    val bandIdx = bands.zipWithIndex.toMap
-    rechunk(spark, in.only(bands),
-        planesPerTile, stateBudgetBytes, stateProbe,
-        jointBands = true) { (planes, n) =>
-      val (emad, smad, bcmad, cnt) =
-        geomadKernel(byTimeAndBand(planes, bandIdx), nb, n, iters, eps)
+    solverRechunk(spark, in, bands, planesPerTile, iters, eps,
+        stateBudgetBytes, stateProbe) { solver =>
+      val (emad, smad, bcmad, cnt) = geomadKernel(solver)
       Iterator(("", 0, Array(emad, smad, bcmad), cnt))
     }.map(t => (t.ty, t.tx, t.planes(0), t.planes(1), t.planes(2), t.cnt))
       .toDF("ty", "tx", "emad", "smad", "bcmad", "count")
   }
 
-  /** MAD-layer kernel over gathered (tIdx, bandOrdinal)-keyed planes of
-    * `n` pixels — same gather + Weiszfeld as [[geomedianKernel]], then
-    * the three deviation medians. */
-  private[graft] def geomadKernel(
-      planes: scala.collection.Map[(Int, Int), (Array[Double], Double)],
-      nb: Int, n: Int, iters: Int, eps: Double)
+  /** MAD-layer kernel over the [[Weiszfeld]] solve of a [[JointStack]]
+    * of `n` pixels, as in [[geomedianKernel]], then per pixel the three
+    * deviation medians over its complete observations in time order. */
+  private[graft] def geomadKernel(solver: Weiszfeld)
       : (Array[Double], Array[Double], Array[Double], Array[Int]) = {
-    val times = planes.keys.map(_._1).toSeq.distinct.sorted
-      .filter(t => (0 until nb).forall(b => planes.contains((t, b))))
-      .toArray
+    val (nb, n) = (solver.s.nb, solver.n)
+    val tc = solver.s.px.length
     val emad = new Array[Double](n)
     val smad = new Array[Double](n)
     val bcmad = new Array[Double](n)
     val cnt = new Array[Int](n)
-    val obs = Array.ofDim[Double](times.length, nb)
-    val dev = new Array[Double](times.length)
-    var i = 0
-    while (i < n) {
-      var m = 0
-      var p = 0
-      while (p < times.length) {
-        var ok = true
-        var b = 0
-        while (b < nb && ok) {
-          val (px, nodata) = planes((times(p), b))
-          val v = px(i)
-          if (v.isNaN || v == nodata) ok = false else obs(m)(b) = v
-          b += 1
-        }
-        if (ok) m += 1
-        p += 1
-      }
-      cnt(i) = m
-      if (m == 0) {
-        emad(i) = Double.NaN; smad(i) = Double.NaN; bcmad(i) = Double.NaN
-      } else {
-        val x = weiszfeld(obs, m, nb, iters, eps)
-        var xn2 = 0.0
-        var b = 0
-        while (b < nb) { xn2 += x(b) * x(b); b += 1 }
-        val xn = math.sqrt(xn2)
-        // EMAD
-        var t = 0
-        while (t < m) {
-          var d2 = 0.0; b = 0
-          while (b < nb) { val d = obs(t)(b) - x(b); d2 += d * d; b += 1 }
-          dev(t) = math.sqrt(d2)
-          t += 1
-        }
-        emad(i) = medianOf(dev, m)
-        // SMAD
-        t = 0
-        while (t < m) {
-          var dot = 0.0; var pn2 = 0.0; b = 0
-          while (b < nb) {
-            dot += obs(t)(b) * x(b); pn2 += obs(t)(b) * obs(t)(b); b += 1
+    val dev = new Array[Double](tc)
+    val (obs, valid, x) = (solver.obs, solver.valid, solver.x)
+    solver.blocks(cnt) { (i0, len) =>
+      var j = 0
+      while (j < len) {
+        val i = i0 + j
+        val m = cnt(i)
+        if (m == 0) {
+          emad(i) = Double.NaN; smad(i) = Double.NaN; bcmad(i) = Double.NaN
+        } else {
+          var xn2 = 0.0
+          var b = 0
+          while (b < nb) { xn2 += x(b)(j) * x(b)(j); b += 1 }
+          val xn = math.sqrt(xn2)
+          // EMAD
+          var k = 0
+          var t = 0
+          while (t < tc) {
+            if (valid(t)(j) != 0.0) {
+              var d2 = 0.0; b = 0
+              while (b < nb) {
+                val d = obs(t)(b)(j) - x(b)(j); d2 += d * d; b += 1
+              }
+              dev(k) = math.sqrt(d2); k += 1
+            }
+            t += 1
           }
-          val den = math.sqrt(pn2) * xn
-          dev(t) = if (den == 0.0) 0.0 else 1.0 - dot / den
-          t += 1
-        }
-        smad(i) = medianOf(dev, m)
-        // BCMAD
-        t = 0
-        while (t < m) {
-          var num = 0.0; var den = 0.0; b = 0
-          while (b < nb) {
-            num += math.abs(obs(t)(b) - x(b))
-            den += math.abs(obs(t)(b) + x(b))
-            b += 1
+          emad(i) = medianOf(dev, m)
+          // SMAD
+          k = 0; t = 0
+          while (t < tc) {
+            if (valid(t)(j) != 0.0) {
+              var dot = 0.0; var pn2 = 0.0; b = 0
+              while (b < nb) {
+                val o = obs(t)(b)(j)
+                dot += o * x(b)(j); pn2 += o * o; b += 1
+              }
+              val den = math.sqrt(pn2) * xn
+              dev(k) = if (den == 0.0) 0.0 else 1.0 - dot / den; k += 1
+            }
+            t += 1
           }
-          dev(t) = if (den == 0.0) 0.0 else num / den
-          t += 1
+          smad(i) = medianOf(dev, m)
+          // BCMAD
+          k = 0; t = 0
+          while (t < tc) {
+            if (valid(t)(j) != 0.0) {
+              var num = 0.0; var den = 0.0; b = 0
+              while (b < nb) {
+                val o = obs(t)(b)(j)
+                num += math.abs(o - x(b)(j))
+                den += math.abs(o + x(b)(j))
+                b += 1
+              }
+              dev(k) = if (den == 0.0) 0.0 else num / den; k += 1
+            }
+            t += 1
+          }
+          bcmad(i) = medianOf(dev, m)
         }
-        bcmad(i) = medianOf(dev, m)
+        j += 1
       }
-      i += 1
     }
     (emad, smad, bcmad, cnt)
   }

@@ -170,6 +170,28 @@ class CompositeDepthSpec extends AnyFunSuite {
       s"peak decoded state ${accM.value} exceeds budget $budget")
   }
 
+  test("geomedian + MADs: the state probe counts the solver's block scratch") {
+    val tiles = deepTiles(2)
+    val bands = Seq("red", "nir")
+    // one slice: all 2T planes of the 32×32 tile, plus the scratch of a
+    // block of the size the solver picks under the budget's scratch share
+    val blk = Composite.blockFor(T, 2, W * H,
+      Long.MaxValue / Composite.ScratchShare)
+    val expected = 2L * T * W * H * 8 + 8L * blk * (T * 3 + 2 * 2 + 4)
+    Seq(
+      (acc: Composite.MaxAcc) => Composite.geomedianAcrossTime(spark, tiles,
+        bands, planesPerTile = 2 * T, stateBudgetBytes = Long.MaxValue,
+        stateProbe = Some(acc)),
+      (acc: Composite.MaxAcc) => Composite.geomadAcrossTime(spark, tiles,
+        bands, planesPerTile = 2 * T, stateBudgetBytes = Long.MaxValue,
+        stateProbe = Some(acc))
+    ).foreach { run =>
+      val acc = probe()
+      run(acc).collect()
+      assert(blk > 1 && acc.value == expected, s"peak ${acc.value}")
+    }
+  }
+
   test("theil-sen: sliced plan bit-identical, state capped (T=160)") {
     val tiles = deepTiles(1)
     val full = planesOf(

@@ -246,4 +246,14 @@ class CompositeSpec extends AnyFunSuite {
     assert(emad(1) < 1e-6 && smad(1) < 1e-9 && bcmad(1) < 1e-9)
     assert(r.getAs[scala.collection.Seq[Int]]("count").toSeq == Seq(3, 1))
   }
+
+  test("geomedian/geomad reject an eps that is not positive or has an infinite 1/eps") {
+    val tiles = spark.emptyDataFrame
+    for (eps <- Seq(0.0, -1e-7, Double.NaN, Double.MinPositiveValue)) {
+      intercept[IllegalArgumentException](Composite.geomedianAcrossTime(
+        spark, tiles, Seq("red", "nir"), planesPerTile = 4, eps = eps))
+      intercept[IllegalArgumentException](Composite.geomadAcrossTime(
+        spark, tiles, Seq("red", "nir"), planesPerTile = 4, eps = eps))
+    }
+  }
 }
