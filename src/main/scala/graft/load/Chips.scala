@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
 object Chips {
 
   /** Chip fragments from one tile: chip-local indices + values. Public
-    * for Spark codegen visibility (Load.TaskSeed convention). */
+    * for Spark codegen visibility (Load.TileRow convention). */
   final case class Frag(pid: String, band: String, tIdx: Int,
                         idxs: Array[Int], vals: Array[Double])
 

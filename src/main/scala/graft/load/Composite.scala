@@ -19,13 +19,12 @@ import org.apache.spark.sql.functions._
   *
   * The non-mergeable operators (median, quantile, masked median,
   * geomedian, MAD, Theil–Sen, temporal fill) share one plan, [[rechunk]],
-  * with two gathers. The `LoadResult` wrappers of a driver-binned load
-  * whose tiles each fit one slice read the load's own bins in the task
-  * that reduces them (no pixel shuffle). Everything else rechunks the
-  * frame's rows with one shuffle: the raw spellings here over a tile
-  * frame of unknown origin (streams, cells, a copied, hand-built or
-  * persisted `LoadResult`, a distributed-binned load), and a load whose
-  * tiles need more than one slice.
+  * with two gathers. The `LoadResult` wrappers of a load whose tiles
+  * each fit one slice read the load's own bins in the task that reduces
+  * them (no pixel shuffle). Everything else rechunks the frame's rows
+  * with one shuffle: the raw spellings here over a tile frame of
+  * unknown origin (streams, cells, a copied, hand-built or persisted
+  * `LoadResult`), and a load whose tiles need more than one slice.
   */
 object Composite {
 
@@ -369,14 +368,14 @@ object Composite {
                            planes: Array[Array[Double]], cnt: Array[Int])
 
   /** Where [[rechunk]] takes its planes from: the rows of `tiles`, or,
-    * when `plan` is the bin plan of the driver-binned load those tiles
-    * are ([[LoadResult]] attaches it), the load's own bins. */
+    * when `plan` is the bin plan of the load those tiles are
+    * ([[LoadResult]] attaches it), the load's own bins. */
   private[graft] final case class Gather(tiles: DataFrame,
                                          plan: Option[Load.BinPlan] = None) {
     /** The same gather over `bands` only. */
     def only(bands: Seq[String]): Gather =
       Gather(tiles.where(col("band").isin(bands.map(b => b: Any): _*)),
-        plan.map(p => p.copy(bins = p.bins.filter(b => bands.contains(b.band)))))
+        plan.map(_.only(bands)))
   }
 
   /** The one plan of every non-mergeable across-time operator
@@ -395,9 +394,9 @@ object Composite {
     *     output-sized shuffle ([[reassemble]]).
     * Step 2 has two gathers, with the same kernel behind both:
     *  - fused ([[fusedGroups]]), when `in.plan` is set and every tile
-    *    fits one slice: one task per group reads and fuses the group's
-    *    bins and emits output rows, so the operator is one stage with no
-    *    shuffle and no step 4;
+    *    fits one slice: the task that holds a group reads and fuses the
+    *    group's bins and emits output rows, so the operator is one stage
+    *    with no shuffle and no step 4;
     *  - shuffled, for everything else: the rows of `in.tiles` are cut
     *    into row bands ([[slicedTiles]]) and moved by ONE rechunk
     *    shuffle. A load whose tiles need more than one slice takes this
@@ -425,8 +424,8 @@ object Composite {
       }
     }
     val oneSlicePerTile = (plan: Load.BinPlan) =>
-      plan.bins.map(b => (b.ty, b.tx)).distinct.forall { case (ty, tx) =>
-        val tile = plan.tiling.tileGeobox(ty, tx)
+      (0 until plan.bins.length).forall { i =>
+        val tile = plan.tiling.tileGeobox(plan.bins.ty(i), plan.bins.tx(i))
         sliceRowsFor(statePlanes, tile.width, tile.height, budgetBytes) >=
           tile.height
       }
@@ -455,29 +454,25 @@ object Composite {
   /** The fused gather: the driver plans one unit per group from the
     * load's bins (only bins that exist, so a time with no mask plane
     * gives no plane), and [[Load.BinPlan.mapUnits]] reads and fuses each
-    * unit's bins in one task, which decodes them as a rechunk group
-    * would decode the tile rows and runs `reduce` over the whole tile. */
+    * unit's bins in the task that holds it, which decodes them as a
+    * rechunk group would decode the tile rows and runs `reduce` over the
+    * whole tile. */
   private def fusedGroups(spark: SparkSession, plan: Load.BinPlan,
       jointBands: Boolean)(
       reduce: (Int, Int, Int, Array[Plane], Int, Int) => Iterator[SliceOut])
       : Dataset[TileOut] = {
     import spark.implicits._
-    val units = plan.bins.toSeq
-      .groupBy(b => (if (jointBands) "" else b.band, b.ty, b.tx))
-      .toSeq.sortBy(_._1)
-      .map { case ((_, ty, tx), bins) =>
-        val tile = plan.tiling.tileGeobox(ty, tx)
-        ((ty, tx, tile.width, tile.height), bins)
-      }
-    spark.createDataset(plan.mapUnits(spark, units, math.max(1, units.length)) {
-      case ((ty, tx, w, h), rows) =>
-        // the tile row's payload, decoded at the epoch second
-        // `unix_timestamp` gives its time, is what the shuffle gathers
-        val planes = rows.map(r => Plane(r.band, r.tIdx,
-          Math.floorDiv(r.time.getTime, 1000L), Fuse.decode(r.data, r.dtype),
-          r.nodata)).toArray
-        reduce(ty, tx, 0, planes, w, h).map(o =>
-          TileOut(o.band, o.tIdx, ty, tx, o.planes, o.cnt))
+    spark.createDataset(plan.mapUnits(spark, plan.tileGroups(jointBands)) { rows =>
+      val rs = rows.buffered
+      val (ty, tx, w, h) = (rs.head.ty, rs.head.tx, rs.head.width,
+        rs.head.height)
+      // the tile row's payload, decoded at the epoch second
+      // `unix_timestamp` gives its time, is what the shuffle gathers
+      val planes = rs.map(r => Plane(r.band, r.tIdx,
+        Math.floorDiv(r.time.getTime, 1000L), Fuse.decode(r.data, r.dtype),
+        r.nodata)).toArray
+      reduce(ty, tx, 0, planes, w, h).map(o =>
+        TileOut(o.band, o.tIdx, ty, tx, o.planes, o.cnt))
     })
   }
 

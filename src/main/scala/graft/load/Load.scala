@@ -5,27 +5,28 @@ import graft.model._
 import graft.planner.Planner
 import graft.raster.{AutoReader, Grb, IoCredentials, RasterReader}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** The flagship query: STAC items -> gridded, fused raster tiles
-  * (`odc.stac.load`, SURVEY §3.1). Stages 1-8 (arg normalization, parsing,
+  * (`odc.stac.load`, SURVEY §3.1). Stages 1-9 (arg normalization, parsing,
   * grid planning, band resolution, grouping, tiling, spatial binning) are
   * driver-side *metadata* work, exactly as in the reference; the pixel
-  * plane is a Spark job. By default the driver bins too, and the job has
-  * no shuffle at all:
+  * plane is a Spark job with no shuffle at all:
   *
   *   items --driver--> bins (band, tIdx, ty, tx) -> sources in fuse rank
   *         --parallelize--> read + first-valid fuse -> tile row  [S7 + A2]
   *
-  * The bins (~200 bytes of source metadata each) ship with the tasks;
-  * pixels are read by the task that owns the output tile and never move
-  * again. Tile tasks are independent and embarrassingly parallel. A load
-  * whose bin estimate passes `maxDriverBins` expands the (item x tile)
-  * product on the executors instead: one `flatMap -> groupByKey` shuffle
-  * of source metadata forms the bins, and pixels still never shuffle.
+  * The driver bins in one primitive pass ([[planBins]]). The bins ship
+  * as flat columns naming their sources by id into one broadcast source
+  * table, as the reference's tasks name items by index; pixels are read
+  * by the task that owns the output tile and never move again. The plan
+  * must fit driver memory: a result holds about 50 bytes per bin of one
+  * source (measured: 50 MB at 1 M bins, 205 MB at 4 M), and planning
+  * also holds 8 bytes per (item, tile, band) key until the bins are
+  * built.
   *
-  * A driver-binned [[LoadResult]] keeps its bin plan, so its across-time
+  * Every [[LoadResult]] of `load` keeps its bin plan, so its across-time
   * composites read their own bins in the task that reduces them (the
   * fused gather of [[Composite.rechunk]]): one job, no pixel shuffle,
   * while its tiles are not persisted and each tile fits one slice.
@@ -44,69 +45,145 @@ object Load {
                            dtype: String, nodata: Double,
                            validCount: Long, data: Array[Byte])
 
-  /** J1 seed row: (tile bin key, fuse rank, source metadata). Public for
-    * Spark codegen visibility. */
-  final case class TaskSeed(band: String, tIdx: Int, ty: Int, tx: Int,
-                            rank: Int, src: RasterSource)
+  /** Bins in flat primitive columns, in `(band, tIdx, ty, tx)` order: bin
+    * `i` is band `band(i)` (a rank into [[PlanTables.bands]]) at time
+    * `tIdx(i)` and tile `(ty(i), tx(i))`, and fuses the sources
+    * `srcIds(srcOff(i) until srcOff(i + 1))` (ids into
+    * [[PlanTables.sources]]) in fuse-rank order. */
+  private[graft] final case class Bins(band: Array[Int], tIdx: Array[Int],
+      ty: Array[Int], tx: Array[Int], srcOff: Array[Int],
+      srcIds: Array[Int]) {
+    def length: Int = band.length
 
-  /** One planned tile task: bin key + its sources in fuse-rank order —
-    * the unit shipped to executors (a DSv2 InputPartition analog). */
-  final case class TileBin(band: String, tIdx: Int, ty: Int, tx: Int,
-                           srcs: Seq[RasterSource])
+    /** Bins `idx(0)`, `idx(1)`, … in that order. */
+    def select(idx: Array[Int]): Bins = {
+      val off = idx.scanLeft(0)((o, i) => o + srcOff(i + 1) - srcOff(i))
+      val ids = new Array[Int](off.last)
+      for (k <- idx.indices)
+        System.arraycopy(srcIds, srcOff(idx(k)), ids, off(k), off(k + 1) - off(k))
+      Bins(idx.map(band), idx.map(tIdx), idx.map(ty), idx.map(tx), off, ids)
+    }
+  }
 
-  /** A driver-binned load's bin plan, kept privately on its
-    * [[LoadResult]]: the bins in `(band, tIdx, ty, tx)` order, the output
-    * tiling, and the broadcasts a task needs to read and fuse a bin.
-    * The load's own pixel job and [[Composite.rechunk]]'s fused gather
-    * both run over it through [[mapUnits]]. */
-  private[graft] final case class BinPlan(
-      bins: Array[TileBin], tiling: GeoBoxTiles,
-      gbox: Broadcast[GeoBoxData],
-      cfgs: Broadcast[Map[String, RasterLoadParams]],
-      dtypes: Broadcast[Map[String, String]],
-      times: Broadcast[IndexedSeq[java.sql.Timestamp]],
-      io: Broadcast[Option[IoCredentials]], reader: RasterReader,
+  /** Task units over a plan's bins: unit `u` reads and fuses the bins
+    * `order(off(u) until off(u + 1))`, in that order. */
+  private[graft] final case class Units(off: Array[Int], order: Array[Int]) {
+    def length: Int = off.length - 1
+  }
+
+  /** What every task of a load's bin jobs reads once, in one broadcast:
+    * the output tiling, the band names by rank, the source table (entry
+    * `item · bands.length + band`, null where the item lacks the band),
+    * the per-band load configs and output dtypes, the group timestamps
+    * and the load's IO credentials (plan-time capture, the reference's
+    * capture_rio_env → per-worker restore seam). */
+  private[graft] final case class PlanTables(tiling: GeoBoxTiles,
+      bands: Array[String], sources: Array[RasterSource],
+      cfgs: Map[String, RasterLoadParams], dtypes: Map[String, String],
+      times: IndexedSeq[java.sql.Timestamp], io: Option[IoCredentials])
+
+  /** A load's bin plan, kept privately on its [[LoadResult]]: the bins
+    * and the broadcast tables a task needs to read and fuse a bin. The
+    * load's own pixel job and [[Composite.rechunk]]'s fused gather both
+    * run over it through [[mapUnits]]. */
+  private[graft] final case class BinPlan(bins: Bins,
+      tables: Broadcast[PlanTables], reader: RasterReader,
       progress: Option[(Long, Long) => Unit]) {
+    lazy val tiling: GeoBoxTiles = tables.value.tiling
 
-    /** Reads and fuses task units of these bins on the executors, in
-      * `numSlices` tasks: a task restores the load's IO credentials and
-      * builds the output tiling and one tile-sized pixel buffer once,
-      * then hands `f` each unit's key and its bins' tile rows, fused
-      * lazily in order. Progress fires once per bin fused, against the
-      * bins of all `units` (an entry registered by this call). */
-    def mapUnits[K, O: scala.reflect.ClassTag](spark: SparkSession,
-        units: Seq[(K, Seq[TileBin])], numSlices: Int)(
-        f: (K, Iterator[TileRow]) => Iterator[O])
+    /** The same plan over the bins of `names` only. */
+    def only(names: Seq[String]): BinPlan = {
+      val keep = tables.value.bands.map(names.contains(_))
+      copy(bins = bins.select(
+        Array.range(0, bins.length).filter(i => keep(bins.band(i)))))
+    }
+
+    /** Groups the bins by `key`: one unit per distinct key, units in the
+      * order their first bins come, each unit's bins in bin order. */
+    private def units(key: Int => Long): Units = {
+      val n = bins.length
+      val keys = Array.range(0, n).map(key(_))
+      // distinct keys, sorted: a bin's unit is found by binary search
+      val sorted = keys.clone()
+      java.util.Arrays.sort(sorted)
+      var m = 0
+      for (i <- 0 until n if m == 0 || sorted(i) != sorted(m - 1)) {
+        sorted(m) = sorted(i); m += 1
+      }
+      // units numbered by the first bin that comes for them
+      val first = Array.fill(m)(-1)
+      var next = 0
+      val unitOf = keys.map { k =>
+        val s = java.util.Arrays.binarySearch(sorted, 0, m, k)
+        if (first(s) < 0) { first(s) = next; next += 1 }
+        first(s)
+      }
+      val off = new Array[Int](m + 1)
+      unitOf.foreach(u => off(u + 1) += 1)
+      for (u <- 0 until m) off(u + 1) += off(u)
+      val fill = off.clone()
+      val order = new Array[Int](n)
+      for (i <- 0 until n) { order(fill(unitOf(i))) = i; fill(unitOf(i)) += 1 }
+      Units(off, order)
+    }
+
+    /** The load job's units, F14 time chunking (`chunks={'time': N}`):
+      * one unit computes `tc` consecutive time planes of the same (band,
+      * ty, tx) — fewer, larger units when the time axis is long. */
+    def timeChunks(tc: Int): Units = {
+      val nt = tables.value.times.length.toLong
+      units(i => tileKey(bins.band(i) * nt + bins.tIdx(i) / tc, i))
+    }
+
+    /** The fused gather's units: every bin of a tile, one unit per band
+      * or, with `jointBands`, one for all bands. */
+    def tileGroups(jointBands: Boolean): Units =
+      units(i => tileKey(if (jointBands) 0L else bins.band(i).toLong, i))
+
+    private def tileKey(outer: Long, i: Int): Long =
+      (outer * tiling.ny + bins.ty(i)) * tiling.nx + bins.tx(i)
+
+    /** Reads and fuses `units` of these bins on the executors, in at most
+      * two tasks per core with the units dealt round-robin: neighbours
+      * (which share source overlap and cost) spread across tasks. Each
+      * task ships its own bins as flat columns; it restores the load's
+      * IO credentials and allocates one tile-sized pixel buffer once,
+      * then hands `f` each unit's tile rows, fused lazily in order.
+      * Progress fires once per bin fused, against the bins of all
+      * `units` (an entry registered by this call). */
+    def mapUnits[O: scala.reflect.ClassTag](spark: SparkSession,
+        units: Units)(f: Iterator[TileRow] => Iterator[O])
         : org.apache.spark.rdd.RDD[O] = {
+      val p = math.max(1, math.min(units.length,
+        spark.sparkContext.defaultParallelism * 2))
+      val slices = (0 until p).map { s =>
+        val us = (s until units.length by p).toArray
+        (us.scanLeft(0)((o, u) => o + units.off(u + 1) - units.off(u)),
+          bins.select(us.flatMap(u =>
+            units.order.slice(units.off(u), units.off(u + 1)))))
+      }
       val progressId = progress.fold(-1L)(cb =>
-        registerProgress(units.map(_._2.length.toLong).sum, cb))
+        registerProgress(units.order.length.toLong, cb))
       // task-side inputs as locals: the closure must not capture the plan
-      val (tw, th, rd) = (tiling.tileW, tiling.tileH, reader)
-      val (bcGbox, bcCfg, bcDtypes, bcTimes, bcIo) =
-        (gbox, cfgs, dtypes, times, io)
-      spark.sparkContext.parallelize(units, numSlices).mapPartitions { it =>
-        bcIo.value.foreach(graft.raster.IoSession.restore(_))
-        // one reusable pixel buffer per task (tiles are tw*th max):
+      val (bc, rd) = (tables, reader)
+      spark.sparkContext.parallelize(slices, p).mapPartitions { it =>
+        val t = bc.value
+        t.io.foreach(graft.raster.IoSession.restore(_))
+        // one reusable pixel buffer per task (tiles are tileW*tileH max):
         // cuts per-tile allocation from ~8 MB to the encoded payload
-        val buf = new Array[Double](tw * th)
-        val gbt = GeoBoxTiles(bcGbox.value.toGeoBox, tw, th)
-        it.flatMap { case (key, unitBins) =>
-          f(key, unitBins.iterator.map { bin =>
-            val row = fuseBin(bin, gbt, bcCfg.value, bcDtypes.value,
-              bcTimes.value, rd, buf)
-            if (progressId >= 0) reportProgress(progressId)
-            row
-          })
+        val buf = new Array[Double](t.tiling.tileW * t.tiling.tileH)
+        it.flatMap { case (unitOff, b) =>
+          Iterator.range(0, unitOff.length - 1).flatMap { u =>
+            f(Iterator.range(unitOff(u), unitOff(u + 1)).map { i =>
+              val row = fuseBin(t, b, i, rd, buf)
+              if (progressId >= 0) reportProgress(progressId)
+              row
+            })
+          }
         }
       }
     }
   }
-
-  /** Distributed-binning unit: one row per (group, item) with its
-    * footprint and selected band sources. Executors expand to TaskSeeds
-    * (tile intersection runs on the cluster, not the driver). */
-  final case class SeedUnit(tIdx: Int, rank: Int, fp: GeomData,
-                            srcs: Map[String, RasterSource])
 
   /** Per-band load-config resolution (F7, `loader/_reader.py:20-65`):
     * scalar-or-map user params expanded against band defaults. */
@@ -136,7 +213,8 @@ object Load {
 
   // ---- progress reporting (reference `_stac_load.py:110, 177-178`) ----
   // The tqdm-style hook of the reference's eager path: `progress` fires
-  // (done, total) once per completed bin while the pixel stage runs.
+  // (done, total) once per completed bin while the pixel stage runs;
+  // `total` is the planned bin count, known before the job starts.
   // JVM-local registry: tasks look their load's entry up by id. On
   // local[n] (the reference's single-process analog) every task shares
   // the driver JVM, so callbacks are exact and per-bin; on a multi-JVM
@@ -189,14 +267,9 @@ object Load {
     val entry = progressRegistry.get(id)
     if (entry != null) entry.synchronized {
       val (ctr, total, cb) = entry
-      // total < 0: distributed-binning mode — the bin count is only known
-      // as tasks drain, so the hook receives (done, -1) and the entry is
-      // reclaimed by the registry cap rather than self-removal
-      val done =
-        if (total < 0) ctr.incrementAndGet()
-        else math.min(ctr.incrementAndGet(), total)
+      val done = math.min(ctr.incrementAndGet(), total)
       cb(done, total)
-      if (total >= 0 && done >= total) progressRegistry.remove(id)
+      if (done >= total) progressRegistry.remove(id)
     }
   }
 
@@ -225,7 +298,6 @@ object Load {
            resampling: Map[String, String] = Map.empty,
            useOverviews: Boolean = true,
            preserveOriginalOrder: Boolean = false,
-           maxDriverBins: Long = 1000000L,
            progress: Option[(Long, Long) => Unit] = None,
            reader: RasterReader = AutoReader): LoadResult = {
     import spark.implicits._
@@ -293,165 +365,103 @@ object Load {
       }
     }
 
-    val bandKeys = resolved.map { case (name, _) => name -> md.bandKey(name).norm }
-    // plan-time credential capture (the reference's capture_rio_env →
-    // per-worker restore seam): rides a broadcast, never closure fields
-    val bcIo = spark.sparkContext.broadcast(graft.raster.IoSession.capture())
-    val bcGbox = spark.sparkContext.broadcast(GeoBoxData.from(outGbox))
-    val bcCfg = spark.sparkContext.broadcast(cfgs)
-    val bcDtypes = spark.sparkContext.broadcast(outDtypes)
-    val bcTimes = spark.sparkContext.broadcast(times.toIndexedSeq)
-    val (tw, th) = (chunks, chunks)
-    val tc = math.max(1, timeChunks)
+    // bands by rank of name: the bins' band order
+    val bandKeys = resolved.map { case (name, _) =>
+      name -> md.bandKey(name).norm }.distinct.sortBy(_._1)
+    val nb = bandKeys.length
+    val sources = new Array[RasterSource](items.length * nb)
+    for ((item, i) <- items.iterator.zipWithIndex;
+         ((_, key), b) <- bandKeys.iterator.zipWithIndex)
+      sources(i * nb + b) = item.bands.get(key).orNull
 
-    // Conservative bin estimate (bbox tile spans x bands) decides the
-    // planning path without materializing anything.
-    val estBins: Long = (for {
-      group <- groups.iterator
-      itemIdx <- group.iterator
-      fp <- footprints(itemIdx).iterator
-    } yield tileSpanCount(gbt, fp) * bandKeys.size).sum
-
-    val (tiles, plan) =
-      if (estBins <= maxDriverBins) {
-        // DRIVER-SIDE binning (default) — the same move a DSv2 source makes
-        // in planInputPartitions (Spark's own file sources list and split
-        // driver-side too). Bins are ~200 B of source metadata each, so a
-        // <=1e6-tile load plans comfortably in driver memory, and the pixel
-        // job starts with ZERO shuffle: parallelize ships each task only
-        // its own bins; pixels are read post-planning by the task that owns
-        // the output tile and never move again. (A seed-row shuffle was
-        // measured 10x the metadata cost at 32 threads — per-task encoder
-        // and exchange overhead dwarfs 200-byte rows; and AQE's byte-based
-        // coalescing would collapse metadata-small/compute-heavy exchanges
-        // to one task anyway.)
-        val seeds: Seq[TaskSeed] = for {
-          (group, tIdx) <- groups.zipWithIndex
-          (itemIdx, rank) <- group.zipWithIndex
-          item = items(itemIdx)
-          footprint <- footprints(itemIdx).toSeq
-          (ty, tx) <- roiTiles(footprint)
-          (bandName, srcKey) <- bandKeys
-          src <- item.bands.get(srcKey).toSeq
-        } yield TaskSeed(bandName, tIdx, ty, tx, rank, src.strip)
-
-        val bins: Array[TileBin] = seeds
-          .groupBy(s => (s.band, s.tIdx, s.ty, s.tx))
-          .map { case ((band, tIdx, ty, tx), ss) =>
-            TileBin(band, tIdx, ty, tx, ss.sortBy(_.rank).map(_.src))
-          }
-          .toArray.sortBy(b => (b.band, b.tIdx, b.ty, b.tx))
-        // F14 time chunking (`chunks={'time': N}`): one task computes N
-        // consecutive time planes of the same (band, ty, tx) — fewer,
-        // larger tasks when the time axis is long
-        val taskUnits: Array[Seq[TileBin]] =
-          if (tc == 1) bins.map(Seq(_))
-          else bins.groupBy(b => (b.band, b.tIdx / tc, b.ty, b.tx))
-            .values.map(_.sortBy(_.tIdx).toSeq).toArray
-            .sortBy(g => (g.head.band, g.head.tIdx, g.head.ty, g.head.tx))
-        val p = math.max(1, math.min(taskUnits.length,
-          spark.sparkContext.defaultParallelism * 2))
-        // round-robin unit->slice assignment: neighbours (which share
-        // source overlap and cost) spread across tasks instead of clustering
-        val interleaved = (0 until taskUnits.length)
-          .sortBy(i => (i % p, i / p)).map(i => ((), taskUnits(i)))
-        val plan = BinPlan(bins, gbt, bcGbox, bcCfg, bcDtypes, bcTimes, bcIo,
-          reader, progress)
-        (spark.createDataset(
-          plan.mapUnits(spark, interleaved, p)((_, rows) => rows)),
-          Some(plan))
-      } else {
-        // DISTRIBUTED binning fallback: above the driver threshold the
-        // (item x tile) expansion itself is the big product (a continental
-        // 100x load is ~1e8 bins), so expansion runs on executors — one
-        // SeedUnit row per (group, item) carries the footprint + band
-        // sources, flatMaps to seeds, and a single groupByKey shuffle of
-        // ~200 B metadata rows forms the bins. Pixels still never shuffle.
-        val units: Seq[SeedUnit] = for {
-          (group, tIdx) <- groups.zipWithIndex
-          (itemIdx, rank) <- group.zipWithIndex
-          item = items(itemIdx)
-          footprint <- footprints(itemIdx).toSeq
-        } yield SeedUnit(tIdx, rank, GeomData.from(footprint),
-          bandKeys.flatMap { case (b, k) =>
-            item.bands.get(k).map(b -> _.strip)
-          }.toMap)
-        val bcRoi = spark.sparkContext.broadcast(roiPoly.map(GeomData.from))
-        // total bin count is only discovered executor-side here, so the
-        // hook gets (done, -1): still monotonic, still once per bin
-        val progressId: Long =
-          progress.fold(-1L)(cb => registerProgress(-1L, cb))
-        val seedDs: Dataset[TaskSeed] = spark.createDataset(units)
-          .repartition(math.max(1, math.min(units.length,
-            spark.sparkContext.defaultParallelism * 2)))
-          .flatMap { u =>
-            val gbt = GeoBoxTiles(bcGbox.value.toGeoBox, tw, th)
-            val roi = bcRoi.value.map(_.toGeom)
-            gbt.tilesIntersecting(u.fp.toGeom).iterator
-              .filter { case (ty, tx) =>
-                roi.forall(_.intersectsBox(gbt.tileGeobox(ty, tx).extent))
-              }
-              .flatMap { case (ty, tx) =>
-                u.srcs.iterator.map { case (band, src) =>
-                  TaskSeed(band, u.tIdx, ty, tx, u.rank, src)
-                }
-              }
-          }
-        (seedDs
-          .groupByKey(s => (s.band, s.tIdx / tc, s.ty, s.tx))
-          .flatMapGroups { (_: (String, Int, Int, Int), it: Iterator[TaskSeed]) =>
-            bcIo.value.foreach(graft.raster.IoSession.restore(_))
-            val gbt = GeoBoxTiles(bcGbox.value.toGeoBox, tw, th)
-            val buf = new Array[Double](tw * th)
-            it.toSeq.groupBy(_.tIdx).toSeq.sortBy(_._1).iterator
-              .map { case (tIdx, ss) =>
-                val sorted = ss.sortBy(_.rank)
-                val bin = TileBin(sorted.head.band, tIdx, sorted.head.ty,
-                  sorted.head.tx, sorted.map(_.src))
-                val row = fuseBin(bin, gbt, bcCfg.value, bcDtypes.value,
-                  bcTimes.value, reader, buf)
-                if (progressId >= 0) reportProgress(progressId)
-                row
-              }
-          }, None)
-      }
-
-    val res = LoadResult(tiles.toDF(), outGbox, times, outDtypes,
+    // stage 9: spatial binning on the driver — the same move a DSv2
+    // source makes in planInputPartitions (Spark's own file sources list
+    // and split driver-side too), so the pixel job starts with ZERO
+    // shuffle. (A seed-row shuffle was measured 10x the metadata cost at
+    // 32 threads — per-task encoder and exchange overhead dwarfs 200-byte
+    // rows; and AQE's byte-based coalescing would collapse
+    // metadata-small/compute-heavy exchanges to one task anyway.)
+    val members = groups.map(_.toArray).toArray
+    val bins = planBins(members, nb, gbt, i => footprints(i).map(roiTiles),
+      sources)
+    val tables = spark.sparkContext.broadcast(PlanTables(gbt,
+      bandKeys.map(_._1).toArray, sources, cfgs, outDtypes,
+      times.toIndexedSeq, graft.raster.IoSession.capture()))
+    val plan = BinPlan(bins, tables, reader, progress)
+    val tiles = spark.createDataset(plan.mapUnits(spark,
+      plan.timeChunks(math.max(1, timeChunks)))(rows => rows))
+    LoadResult(tiles.toDF(), outGbox, times, outDtypes,
       outDtypes.map { case (b, dt) => b -> dstNodata(cfgs(b), dt) })
-    plan.fold(res)(res.withPlan)
+      .withPlan(plan)
   }
   // scalastyle:on parameter.number
 
-  /** Read + first-valid fuse of one planned bin into a TileRow (shared by
-    * the driver-planned and distributed-planned paths). The tile geobox
-    * is built once per call, so a reader sees one new geobox instance
-    * per bin. */
-  private def fuseBin(bin: TileBin, gbt: GeoBoxTiles,
-                      cfgs: Map[String, RasterLoadParams],
-                      dtypes: Map[String, String],
-                      times: IndexedSeq[java.sql.Timestamp],
-                      reader: RasterReader, buf: Array[Double]): TileRow = {
-    val tileGbox = gbt.tileGeobox(bin.ty, bin.tx)
-    val cfg = cfgs(bin.band)
-    val outDtype = dtypes(bin.band)
-    val nodataV = dstNodata(cfg, outDtype)
-    val valid = Fuse.fill2dSliceInto(bin.srcs, tileGbox, cfg, reader, nodataV, buf)
-    TileRow(bin.band, bin.tIdx, bin.ty, bin.tx, times(bin.tIdx),
-      bin.tx * gbt.tileW, bin.ty * gbt.tileH, tileGbox.width, tileGbox.height,
-      outDtype, nodataV, valid,
-      Fuse.encode(buf, tileGbox.width * tileGbox.height, outDtype))
+  /** The bins of items grouped into time groups (`members(tIdx)` lists
+    * item indices in fuse rank), in one primitive pass: every item's
+    * `tiles` (None: no footprint) times each band it has a source for
+    * (`sources(item · nb + band)`, the source id) append one packed key
+    * (band, tIdx, ty, tx, rank); one sort of the keys puts each bin's
+    * keys in a run, its sources in rank order. */
+  private def planBins(members: Array[Array[Int]], nb: Int,
+      gbt: GeoBoxTiles, tiles: Int => Option[Seq[(Int, Int)]],
+      sources: Array[RasterSource]): Bins = {
+    val nt = members.length
+    val nr = members.iterator.map(_.length).foldLeft(1)(math.max)
+    val (ny, nx) = (gbt.ny.toLong, gbt.nx.toLong)
+    require(BigInt(nb) * nt * ny * nx * nr <= BigInt(Long.MaxValue),
+      s"bin keys overflow: $nb bands x $nt times x ${ny}x$nx tiles x " +
+        s"$nr items per time")
+    val keys = new scala.collection.mutable.ArrayBuilder.ofLong
+    for (t <- 0 until nt; r <- members(t).indices) {
+      val item = members(t)(r)
+      for (ts <- tiles(item); (ty, tx) <- ts; b <- 0 until nb
+           if sources(item * nb + b) != null)
+        keys += (((b.toLong * nt + t) * ny + ty) * nx + tx) * nr + r
+    }
+    val seeds = keys.result()
+    java.util.Arrays.sort(seeds)
+    def binOf(k: Int): Long = seeds(k) / nr
+    val n = seeds.indices.count(k => k == 0 || binOf(k) != binOf(k - 1))
+    val (band, tIdx, ty, tx) =
+      (new Array[Int](n), new Array[Int](n), new Array[Int](n), new Array[Int](n))
+    val srcOff = new Array[Int](n + 1)
+    val srcIds = new Array[Int](seeds.length)
+    var i = -1
+    var k = 0
+    while (k < seeds.length) {
+      val bin = binOf(k)
+      if (k == 0 || bin != binOf(k - 1)) {
+        i += 1
+        srcOff(i) = k
+        tx(i) = (bin % nx).toInt
+        ty(i) = (bin / nx % ny).toInt
+        tIdx(i) = (bin / nx / ny % nt).toInt
+        band(i) = (bin / nx / ny / nt).toInt
+      }
+      srcIds(k) = members(tIdx(i))((seeds(k) % nr).toInt) * nb + band(i)
+      k += 1
+    }
+    srcOff(n) = seeds.length
+    Bins(band, tIdx, ty, tx, srcOff, srcIds)
   }
 
-  /** Upper bound on tiles a footprint can touch: its bbox tile span. */
-  private def tileSpanCount(gbt: GeoBoxTiles, fp: Geom): Long = {
-    val b = fp.bbox
-    val inv = gbt.base.transform.inverse
-    val cs = Seq(inv(b.x0, b.y0), inv(b.x1, b.y0), inv(b.x1, b.y1), inv(b.x0, b.y1))
-    val tx0 = math.max(0, math.floor(cs.map(_._1).min / gbt.tileW).toInt)
-    val tx1 = math.min(gbt.nx - 1, math.floor((cs.map(_._1).max - 1e-9) / gbt.tileW).toInt)
-    val ty0 = math.max(0, math.floor(cs.map(_._2).min / gbt.tileH).toInt)
-    val ty1 = math.min(gbt.ny - 1, math.floor((cs.map(_._2).max - 1e-9) / gbt.tileH).toInt)
-    math.max(0L, (tx1 - tx0 + 1).toLong) * math.max(0L, (ty1 - ty0 + 1).toLong)
+  /** Read + first-valid fuse of bin `i` of `b` into a TileRow. The tile
+    * geobox is built once per call, so a reader sees one new geobox
+    * instance per bin. */
+  private def fuseBin(t: PlanTables, b: Bins, i: Int, reader: RasterReader,
+                      buf: Array[Double]): TileRow = {
+    val gbt = t.tiling
+    val (band, tIdx, ty, tx) = (t.bands(b.band(i)), b.tIdx(i), b.ty(i), b.tx(i))
+    val srcs = (b.srcOff(i) until b.srcOff(i + 1)).map(k => t.sources(b.srcIds(k)))
+    val tileGbox = gbt.tileGeobox(ty, tx)
+    val cfg = t.cfgs(band)
+    val outDtype = t.dtypes(band)
+    val nodataV = dstNodata(cfg, outDtype)
+    val valid = Fuse.fill2dSliceInto(srcs, tileGbox, cfg, reader, nodataV, buf)
+    TileRow(band, tIdx, ty, tx, t.times(tIdx),
+      tx * gbt.tileW, ty * gbt.tileH, tileGbox.width, tileGbox.height,
+      outDtype, nodataV, valid,
+      Fuse.encode(buf, tileGbox.width * tileGbox.height, outDtype))
   }
 }
 
@@ -465,8 +475,8 @@ final case class LoadResult(tiles: DataFrame, geobox: GeoBox,
   private def spark = tiles.sparkSession
 
   // The load's own bin plan: Load.load attaches it to the result it
-  // returns when the driver binned. A copy or a hand-built result has
-  // none, so its composites rechunk the `tiles` it was given.
+  // returns. A copy or a hand-built result has none, so its composites
+  // rechunk the `tiles` it was given.
   private var plan: Option[Load.BinPlan] = None
 
   private[load] def withPlan(p: Load.BinPlan): LoadResult = {
@@ -488,9 +498,9 @@ final case class LoadResult(tiles: DataFrame, geobox: GeoBox,
     * result knows driver-side) to [[Composite]], whose row-band rechunk
     * keeps task state under `Composite.DefaultStateBudgetBytes` at any
     * archive depth — a caller using the raw `Composite.*(spark, tiles,
-    * …)` spellings must size the state hint itself. On a driver-binned
-    * load they read their own bins ([[gather]]): one job, no pixel
-    * shuffle. */
+    * …)` spellings must size the state hint itself. On the result of
+    * [[Load.load]] they read their own bins ([[gather]]): one job, no
+    * pixel shuffle. */
   def medianComposite(): DataFrame =
     Composite.medianAcrossTime(spark, gather, times.length,
       Composite.DefaultStateBudgetBytes, None)

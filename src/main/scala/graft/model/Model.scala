@@ -71,11 +71,7 @@ final case class RasterSource(uri: String,
                               geobox: Option[GeoBoxData] = None,
                               dataType: Option[String] = None,
                               nodata: Option[Double] = None,
-                              unit: String = "1") {
-  /** Projection-pruned copy for shipping to executors (P6,
-    * `types.py:61-67`) — geobox is needed by the reader, meta is not. */
-  def strip: RasterSource = this
-}
+                              unit: String = "1")
 
 /** Canonical band identity `(asset, 1-based index)` with the reference's
   * "asset.idx" string notation (`model.py:26-27, 461-472`). */

@@ -35,12 +35,11 @@ class FusedCompositeSpec extends AnyFunSuite {
 
   private def load(jsons: Seq[String], bands: Seq[String], groupby: String,
                    crs: Option[String] = None, resolution: Option[Double] = None,
-                   resampling: Map[String, String] = Map.empty,
-                   maxDriverBins: Long = 1000000L): LoadResult = {
+                   resampling: Map[String, String] = Map.empty): LoadResult = {
     val (items, schemas) = StacParse.parseItems(jsons)
     Load.load(spark, items, schemas, bands = bands, groupby = groupby,
       chunks = 48, crs = crs, resolution = resolution,
-      resampling = resampling, maxDriverBins = maxDriverBins)
+      resampling = resampling)
   }
 
   /** Whole-row string dump: equal dumps are bit-equal rows, NaN included. */
@@ -158,14 +157,17 @@ class FusedCompositeSpec extends AnyFunSuite {
     val jsons = Fixtures.writeScenes(4)
     val bands = Seq("red", "nir")
     val jobs = new AtomicInteger
+    val tasks = new AtomicInteger
     val shuffled = new AtomicLong
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet(); ()
       }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet()
         Option(e.taskMetrics).foreach(m =>
           shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+      }
     }
     val fused = load(jsons, bands, "solar_day").geomedianComposite(bands)
     Harness.drainListeners(spark)
@@ -178,10 +180,12 @@ class FusedCompositeSpec extends AnyFunSuite {
       } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get == 1, s"${jobs.get} jobs")
     assert(shuffled.get == 0L, s"${shuffled.get} shuffle bytes written")
-    // distributed binning keeps no plan: the composite rechunks its tiles
-    val fallback = load(jsons, bands, "solar_day", maxDriverBins = 0)
-    assert(fallback.gather.plan.isEmpty)
-    assert(rows.map(_.toString).sorted.toSeq ==
-      rowsOf(fallback.geomedianComposite(bands)))
+    // one slicing policy: more tile groups than two per core still run
+    // in at most two tasks per core
+    val maxTasks = 2 * spark.sparkContext.defaultParallelism
+    val groups = rows.map(r => (r.getAs[Int]("ty"), r.getAs[Int]("tx")))
+      .distinct.length
+    assert(groups > maxTasks, s"only $groups tile groups")
+    assert(tasks.get <= maxTasks, s"${tasks.get} tasks for $groups groups")
   }
 }

@@ -247,23 +247,6 @@ class LoadSpec extends AnyFunSuite {
         graft.load.Fuse.decode(data, r.getAs[String]("dtype")).sum)
     }.toSeq.sortBy(t => (t._1, t._2, t._3, t._4))
 
-  test("distributed binning fallback produces identical tiles to driver planning") {
-    val driver = tileSummary(Load.load(spark, items, schemas,
-      bands = Seq("red", "nir"), groupby = "solar_day", chunks = 48))
-    // maxDriverBins=0 forces the explode->groupByKey executor-side path
-    val dist = tileSummary(Load.load(spark, items, schemas,
-      bands = Seq("red", "nir"), groupby = "solar_day", chunks = 48,
-      maxDriverBins = 0))
-    assert(driver.nonEmpty && driver == dist)
-    // time chunking composes with the distributed path too
-    val distTc = tileSummary(Load.load(spark, items, schemas,
-      bands = Seq("red", "nir"), groupby = "id", chunks = 48,
-      timeChunks = 2, maxDriverBins = 0))
-    val driverTc = tileSummary(Load.load(spark, items, schemas,
-      bands = Seq("red", "nir"), groupby = "id", chunks = 48, timeChunks = 2))
-    assert(driverTc == distTc)
-  }
-
   test("geopolygon ROI: tiles outside the polygon are absent (not just bbox)") {
     // triangle over the lower-left of the footprint union: its BBOX covers
     // most tiles, the polygon itself does not
@@ -411,21 +394,6 @@ class LoadSpec extends AnyFunSuite {
     val geo = calls.synchronized(calls.toSeq)
     assert(geo.map(_._1) == (1L to nTiles))
     assert(geo.map(_._2).distinct == Seq(nTiles))
-  }
-
-  test("progress hook also fires in the distributed-binning branch (total=-1)") {
-    val calls = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val res = Load.load(spark, items, schemas, bands = Seq("red"),
-      groupby = "solar_day", chunks = 48, maxDriverBins = 0,
-      progress = Some((done, total) => calls.synchronized {
-        calls += ((done, total))
-      }))
-    val nTiles = res.tiles.count()
-    val snap = calls.synchronized(calls.toSeq)
-    // once per bin; total is -1 (bin count unknown until tasks drain)
-    assert(snap.size == nTiles, s"${snap.size} callbacks for $nTiles tiles")
-    assert(snap.map(_._1) == (1L to nTiles))
-    assert(snap.map(_._2).distinct == Seq(-1L))
   }
 
   test("subdataset container: named images load tile-identical to GRB (S7)") {
