@@ -22,9 +22,8 @@ import org.apache.spark.storage.StorageLevel
   * table, as the reference's tasks name items by index; pixels are read
   * by the task that owns the output tile and never move again. The plan
   * must fit driver memory: a result holds about 50 bytes per bin of one
-  * source (measured: 50 MB at 1 M bins, 205 MB at 4 M), and planning
-  * also holds 8 bytes per (item, tile, band) key until the bins are
-  * built.
+  * source (50 MB at 1 M bins, 206 MB at 4 M); planning adds 8 bytes per
+  * (item, tile, band).
   *
   * Every [[LoadResult]] of `load` keeps its bin plan, so its across-time
   * composites read their own bins in the task that reduces them (the
@@ -71,12 +70,10 @@ object Load {
     def length: Int = off.length - 1
   }
 
-  /** What every task of a load's bin jobs reads once, in one broadcast:
-    * the output tiling, the band names by rank, the source table (entry
-    * `item · bands.length + band`, null where the item lacks the band),
-    * the per-band load configs and output dtypes, the group timestamps
-    * and the load's IO credentials (plan-time capture, the reference's
-    * capture_rio_env → per-worker restore seam). */
+  /** What every task of a load's bin jobs reads once, in one broadcast.
+    * `sources` is the source table: entry `item · bands.length + band`,
+    * null where the item lacks the band. `io` is the plan-time credential
+    * capture (the reference's capture_rio_env → per-worker restore). */
   private[graft] final case class PlanTables(tiling: GeoBoxTiles,
       bands: Array[String], sources: Array[RasterSource],
       cfgs: Map[String, RasterLoadParams], dtypes: Map[String, String],
