@@ -20,14 +20,10 @@ import org.apache.spark.sql.SparkSession
   */
 object BenchCli {
 
-  private def opt(args: Array[String], name: String): Option[String] = {
-    val i = args.indexOf(s"--$name")
-    if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
-  }
-
   /** Materialize scenes + dump the item set as a FeatureCollection. */
   def prepare(nScenes: Int, outFile: String): String = {
-    val jsons = RasterBench.writeScenes(nScenes)
+    val jsons = RasterBench.writeScenes(RasterBench.Mosaic, nScenes,
+      RasterBench.mosaicGrid(nScenes))
     val fc = jsons.mkString(
       """{"type": "FeatureCollection", "features": [""", ",", "]}")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), fc)
@@ -47,7 +43,8 @@ object BenchCli {
 
   def runBench(spark: SparkSession, nScenes: Int, mode: String,
                ntimes: Int, resultsFile: String): Seq[Rec] = {
-    val jsons = RasterBench.writeScenes(nScenes)
+    val jsons = RasterBench.writeScenes(RasterBench.Mosaic, nScenes,
+      RasterBench.mosaicGrid(nScenes))
     val (parsed, schemas) = graft.stac.StacParse.parseItems(jsons)
     val items = parsed.sortBy(_.id)
     val threads = spark.sparkContext.defaultParallelism
@@ -99,25 +96,26 @@ object BenchCli {
 
   def main(args: Array[String]): Unit = args.headOption match {
     case Some("prepare") =>
-      val n = opt(args, "scenes").map(_.toInt).getOrElse(9)
-      val out = opt(args, "out").getOrElse(
+      val n = Harness.opt(args, "scenes").map(_.toInt).getOrElse(9)
+      val out = Harness.opt(args, "out").getOrElse(
         s"${sys.props("java.io.tmpdir")}/graft_rbench_site.geojson")
       prepare(n, out)
-      println(s"""{"scenes":$n,"bands":${RasterBench.Bands.size},""" +
-        s""""scene_px":${RasterBench.SceneW * RasterBench.SceneH},""" +
+      val shape = RasterBench.Mosaic
+      println(s"""{"scenes":$n,"bands":${shape.bands.size},""" +
+        s""""scene_px":${shape.w * shape.h},""" +
         s""""site_file":"$out"}""")
     case Some("run") =>
-      val n = opt(args, "scenes").map(_.toInt).getOrElse(9)
-      val mode = opt(args, "mode").getOrElse("paste")
+      val n = Harness.opt(args, "scenes").map(_.toInt).getOrElse(9)
+      val mode = Harness.opt(args, "mode").getOrElse("paste")
       require(mode == "paste" || mode == "warp", s"bad --mode $mode")
-      val ntimes = opt(args, "ntimes").map(_.toInt).getOrElse(3)
-      val results = opt(args, "results").getOrElse(
+      val ntimes = Harness.opt(args, "ntimes").map(_.toInt).getOrElse(3)
+      val results = Harness.opt(args, "results").getOrElse(
         s"${sys.props("java.io.tmpdir")}/graft_rbench_results.jsonl")
       val spark = Harness.session(Harness.cpus)
       try runBench(spark, n, mode, ntimes, results) finally spark.stop()
       println(s"""{"results_file":"$results","ntimes":$ntimes}""")
     case Some("report") =>
-      val results = opt(args, "results").getOrElse(
+      val results = Harness.opt(args, "results").getOrElse(
         s"${sys.props("java.io.tmpdir")}/graft_rbench_results.jsonl")
       print(report(results))
     case _ =>

@@ -4,13 +4,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one session shape every main (and the test session) runs under —
   * `local[cpus]`, shuffle partitions = cpus, AQE on, UTC, UI off, WARN
-  * logging — plus the `noop`-sink timing the bench mains share.
+  * logging — plus the `noop`-sink timing and the `--name value` flag
+  * lookup the mains share.
   */
 object Harness {
 
   /** `SPARK_GRAFT_CPUS`, else every core the JVM sees. */
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The value after `--<name>` in a main's `args`, if given. */
+  def opt(args: Array[String], name: String): Option[String] = {
+    val i = args.indexOf(s"--$name")
+    if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
+  }
 
   def session(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()

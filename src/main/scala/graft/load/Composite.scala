@@ -292,13 +292,7 @@ object Composite {
         if (ok) { vals(m) = v; m += 1 }
         p += 1
       }
-      if (m == 0) med(i) = Double.NaN
-      else {
-        java.util.Arrays.sort(vals, 0, m)
-        med(i) =
-          if (m % 2 == 1) vals(m / 2)
-          else (vals(m / 2 - 1) + vals(m / 2)) / 2.0
-      }
+      med(i) = if (m == 0) Double.NaN else medianOf(vals, m)
       cnt(i) = m
       i += 1
     }

@@ -58,13 +58,14 @@ object Fixtures {
   def tiffPath(k: Int, band: String): String =
     dir.resolve(s"scene$k-$band.tif").toString
 
-  /** Crash-safe idempotence: fixture writes are guarded by a COMPLETION
-    * MARKER stamped after the payload, not by payload existence — a
-    * process killed mid-write (the driver enforces turn limits) leaves
-    * no marker, so the next run rewrites the truncated files instead of
-    * reading them forever. */
-  private def completed(marker: String)(write: => Unit): Unit = {
-    val m = dir.resolve(marker + ".ok")
+  /** Crash-safe idempotence: scene writes are guarded by a COMPLETION
+    * MARKER (`<marker>.ok` in `in`) stamped after the payload, not by
+    * payload existence — a process killed mid-write leaves no marker, so
+    * the next run rewrites the truncated files instead of reading them
+    * forever. The fixtures and the bench scenes both write through it. */
+  private[graft] def completed(in: java.nio.file.Path, marker: String)(
+      write: => Unit): Unit = {
+    val m = in.resolve(marker + ".ok")
     if (!java.nio.file.Files.exists(m)) {
       write
       java.nio.file.Files.write(m, Array.emptyByteArray)
@@ -75,7 +76,7 @@ object Fixtures {
   def writeScenes(nItems: Int): Seq[String] = {
     (0 until nItems).map { k =>
       val gbox = sceneGeobox(k)
-      completed(s"scene$k-grb") {
+      completed(dir, s"scene$k-grb") {
         Seq("red", "nir").foreach { band =>
           val px = scenePixels(k).map(v =>
             if (band == "nir" && v != 0.0) v + 5000 else v)
@@ -92,7 +93,7 @@ object Fixtures {
   def writeScenesTiff(nItems: Int): Seq[String] = {
     (0 until nItems).map { k =>
       val gbox = sceneGeobox(k)
-      completed(s"scene$k-tif") {
+      completed(dir, s"scene$k-tif") {
         Seq("red", "nir").foreach { band =>
           val px = scenePixels(k).map(v =>
             if (band == "nir" && v != 0.0) v + 5000 else v)
@@ -118,7 +119,7 @@ object Fixtures {
   def writeScenesZarr(nItems: Int): Seq[String] =
     (0 until nItems).map { k =>
       val gbox = sceneGeobox(k)
-      completed(s"scene$k-zarr") {
+      completed(dir, s"scene$k-zarr") {
         Seq("red", "nir").foreach { band =>
           val px = scenePixels(k).map(v =>
             if (band == "nir" && v != 0.0) v + 5000 else v)
@@ -145,10 +146,9 @@ object Fixtures {
     * (`file://scene.zarr#red`) with the zarr media type — the parser
     * classifies them as raster data (S4 NonImageRasterMedia) and yields
     * `RasterSource.subdataset`. */
-  def itemJsonZarr(k: Int, gbox: GeoBox): String = {
-    val base = itemJson(k, gbox, (kk, band) => s"${zarrPath(kk)}#$band")
-    base.replace("image/tiff; application=geotiff", "application/x-zarr")
-  }
+  def itemJsonZarr(k: Int, gbox: GeoBox): String =
+    itemJson(k, gbox, (kk, band) => s"${zarrPath(kk)}#$band",
+      media = "application/x-zarr")
 
   def ncPath(k: Int): String = dir.resolve(s"scene$k.nc").toString
 
@@ -161,15 +161,15 @@ object Fixtures {
   def writeScenesNc(nItems: Int): Seq[String] =
     (0 until nItems).map { k =>
       val gbox = sceneGeobox(k)
-      completed(s"scene$k-nc") {
+      completed(dir, s"scene$k-nc") {
         val planes = Seq("red", "nir").map { band =>
           band -> scenePixels(k).map(v =>
             if (band == "nir" && v != 0.0) v + 5000 else v)
         }
         NetCdf.write(ncPath(k), planes, gbox, "int16", Some(0.0))
       }
-      itemJson(k, gbox, (kk, band) => s"${ncPath(kk)}#$band")
-        .replace("image/tiff; application=geotiff", "application/x-netcdf")
+      itemJson(k, gbox, (kk, band) => s"${ncPath(kk)}#$band",
+        media = "application/x-netcdf")
     }
 
   /** Same scenes as ONE multi-image container TIFF per item with named
@@ -180,7 +180,7 @@ object Fixtures {
   def writeScenesSubdatasets(nItems: Int): Seq[String] =
     (0 until nItems).map { k =>
       val gbox = sceneGeobox(k)
-      completed(s"scene$k-sub") {
+      completed(dir, s"scene$k-sub") {
         val subs = Seq("red", "nir").map { band =>
           val px = scenePixels(k).map(v =>
             if (band == "nir" && v != 0.0) v + 5000 else v)
@@ -203,7 +203,7 @@ object Fixtures {
   def writeScenesMultiband(nItems: Int): Seq[String] =
     (0 until nItems).map { k =>
       val gbox = sceneGeobox(k)
-      completed(s"scene$k-msi") {
+      completed(dir, s"scene$k-msi") {
         Tiff.writeBands(msiPath(k), (1 to 3).map(bandPixels(k, _)), gbox,
           "uint16", Some(0.0))
       }
@@ -213,52 +213,11 @@ object Fixtures {
   /** STAC item for the packed 3-band asset: one `msi` asset with three
     * eo:bands names and three raster:bands entries — the parser must
     * yield BandKey(msi, 1..3) and alias red/green/nir to them. */
-  def itemJsonMultiband(k: Int, gbox: GeoBox): String = {
-    val fp = gbox.footprint(Crs.LonLat)
-    val ring = (fp.ring :+ fp.ring.head)
-      .map { case (x, y) => s"[$x,$y]" }.mkString("[", ",", "]")
-    val dt = java.time.LocalDateTime.of(2020, 6, 6, 8, 0, 0)
-      .plusDays(k / 2).plusMinutes(k % 60)
-    val dtStr = dt.format(
-      java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss"))
-    val t = gbox.transform
-    val eoBands = Seq("red", "green", "nir").map(n =>
-      s"""{"name": "msi_$n", "common_name": "$n"}""").mkString(",")
-    val rasterBands = Seq.fill(3)(
-      """{"nodata": 0, "data_type": "uint16"}""").mkString(",")
-    s"""{
-       |  "type": "Feature",
-       |  "stac_version": "1.0.0",
-       |  "id": "mscene-$k",
-       |  "collection": "$CollectionId-msi",
-       |  "stac_extensions": [
-       |    "https://stac-extensions.github.io/projection/v1.1.0/schema.json",
-       |    "https://stac-extensions.github.io/raster/v1.1.0/schema.json",
-       |    "https://stac-extensions.github.io/eo/v1.1.0/schema.json"],
-       |  "geometry": {"type": "Polygon", "coordinates": [$ring]},
-       |  "properties": {
-       |    "datetime": "${dtStr}Z",
-       |    "proj:epsg": 32735,
-       |    "platform": "graft-${k % 2}"
-       |  },
-       |  "assets": {
-       |    "msi": {
-       |      "href": "file://${msiPath(k)}",
-       |      "type": "image/tiff; application=geotiff",
-       |      "roles": ["data"],
-       |      "gsd": $Res,
-       |      "eo:bands": [$eoBands],
-       |      "proj:shape": [${gbox.height}, ${gbox.width}],
-       |      "proj:transform": [${t.a}, ${t.b}, ${t.c}, ${t.d}, ${t.e}, ${t.f}],
-       |      "raster:bands": [$rasterBands]
-       |    }
-       |  }
-       |}""".stripMargin
-  }
+  def itemJsonMultiband(k: Int, gbox: GeoBox): String =
+    item(s"mscene-$k", s"$CollectionId-msi", gbox, sceneTime(k),
+      s"graft-${k % 2}", Seq(asset("msi", msiPath(k), gbox, Res,
+        Seq("red", "green", "nir").map(n => s"msi_$n" -> n))))
 
-  /** STAC item JSON with proj + raster + eo extensions populated the way
-    * real catalogs do (FIXTURES.md §1). Scenes alternate between two
-    * days; two scenes share a timestamp day for solar_day grouping. */
   def gapPath(k: Int): String = dir.resolve(s"gapscene$k-red.grb").toString
 
   /** Temporal-gap fixture: `n` scenes at the SAME geobox on consecutive
@@ -271,7 +230,7 @@ object Fixtures {
   def writeScenesGap(n: Int = 3): Seq[String] =
     (0 until n).map { k =>
       val gbox = sceneGeobox(0)
-      completed(s"gapscene$k") {
+      completed(dir, s"gapscene$k") {
         val px = scenePixels(0).map(v => if (v == 0.0) 0.0 else v + 100.0 * k)
         if (k == n / 2) {
           var y = 16
@@ -301,7 +260,7 @@ object Fixtures {
   def writeScenesQa(n: Int = 3): Seq[String] =
     (0 until n).map { k =>
       val gbox = sceneGeobox(0)
-      completed(s"qascene$k") {
+      completed(dir, s"qascene$k") {
         val inc = if (k == 0) 0.0 else if (k == 1) 100.0 else 400.0 + 100.0 * k
         val red = scenePixels(0).map(v => if (v == 0.0) 0.0 else v + inc)
         val qa = scenePixels(0).map(v => if (v == 0.0) 0.0 else 1.0)
@@ -317,8 +276,8 @@ object Fixtures {
         Grb.writeWithOverviews(qaMaskPath(k), qa, gbox, "uint16", Some(0.0))
       }
       itemJson(2 * k, gbox,
-        (kk, band) => if (band == "nir") qaMaskPath(kk / 2) else qaRedPath(kk / 2))
-        .replace("\"nir\"", "\"qa\"")
+        (kk, band) => if (band == "qa") qaMaskPath(kk / 2) else qaRedPath(kk / 2),
+        bands = Seq("red", "qa"))
     }
 
   /** 20 m companion grid of scene k: same extent and origin as the
@@ -361,82 +320,53 @@ object Fixtures {
     (0 until nItems).map { k =>
       val g10 = sceneGeobox(k)
       val g20 = swirGeobox(k)
-      completed(s"scene$k-mg") {
+      completed(dir, s"scene$k-mg") {
         Grb.writeWithOverviews(grbPath(k, "red"), scenePixels(k), g10,
           "uint16", Some(0.0))
         Grb.writeWithOverviews(swirPath(k), swirPixels(k), g20,
           "uint16", Some(0.0))
       }
-      val fp = g10.footprint(Crs.LonLat)
-      val ring = (fp.ring :+ fp.ring.head)
-        .map { case (x, y) => s"[$x,$y]" }.mkString("[", ",", "]")
-      val dt = java.time.LocalDateTime.of(2020, 6, 6, 8, 0, 0)
-        .plusDays(k / 2).plusMinutes(k % 60)
-      val dtStr = dt.format(
-        java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss"))
-      def asset(band: String, href: String, g: GeoBox, gsd: Double) = {
-        val t = g.transform
-        s"""
-           |    "$band": {
-           |      "href": "file://$href",
-           |      "type": "image/tiff; application=geotiff",
-           |      "roles": ["data"],
-           |      "gsd": $gsd,
-           |      "eo:bands": [{"name": "$band", "common_name": "$band"}],
-           |      "proj:shape": [${g.height}, ${g.width}],
-           |      "proj:transform": [${t.a}, ${t.b}, ${t.c}, ${t.d}, ${t.e}, ${t.f}],
-           |      "raster:bands": [{"nodata": 0, "data_type": "uint16"}]
-           |    }""".stripMargin
-      }
-      s"""{
-         |  "type": "Feature",
-         |  "stac_version": "1.0.0",
-         |  "id": "mgscene-$k",
-         |  "collection": "$CollectionId-mg",
-         |  "stac_extensions": [
-         |    "https://stac-extensions.github.io/projection/v1.1.0/schema.json",
-         |    "https://stac-extensions.github.io/raster/v1.1.0/schema.json",
-         |    "https://stac-extensions.github.io/eo/v1.1.0/schema.json"],
-         |  "geometry": {"type": "Polygon", "coordinates": [$ring]},
-         |  "properties": {
-         |    "datetime": "${dtStr}Z",
-         |    "proj:epsg": 32735,
-         |    "platform": "graft-${k % 2}"
-         |  },
-         |  "assets": {${asset("red", grbPath(k, "red"), g10, Res)},${
-          asset("swir", swirPath(k), g20, Res * 2)}
-         |  }
-         |}""".stripMargin
+      item(s"mgscene-$k", s"$CollectionId-mg", g10, sceneTime(k),
+        s"graft-${k % 2}", Seq(
+          asset("red", grbPath(k, "red"), g10, Res, Seq("red" -> "red")),
+          asset("swir", swirPath(k), g20, Res * 2, Seq("swir" -> "swir"))))
     }
 
+  /** STAC item JSON of fixture scene k with proj + raster + eo extensions
+    * populated the way real catalogs do (FIXTURES.md §1): one asset per
+    * band in `bands`, at `pathOf(k, band)`. */
   def itemJson(k: Int, gbox: GeoBox,
-               pathOf: (Int, String) => String = grbPath): String = {
-    val fp = gbox.footprint(Crs.LonLat)
+               pathOf: (Int, String) => String = grbPath,
+               media: String = TiffMedia,
+               bands: Seq[String] = Seq("red", "nir")): String =
+    item(s"scene-$k", CollectionId, gbox, sceneTime(k), s"graft-${k % 2}",
+      bands.map(b => asset(b, pathOf(k, b), gbox, Res, Seq(b -> b), media)))
+
+  /** Fixture scene k's datetime: two scenes per solar day, 08:00 plus k
+    * minutes (wrapping past 59) — so same-day scenes keep distinct times
+    * for any k. */
+  private def sceneTime(k: Int): java.time.LocalDateTime =
+    java.time.LocalDateTime.of(2020, 6, 6, 8, 0, 0)
+      .plusDays(k / 2).plusMinutes(k % 60)
+
+  private val TiffMedia = "image/tiff; application=geotiff"
+
+  /** The one synthetic STAC item envelope (UTM 35S, projection + raster
+    * + eo extensions): the fixtures and the bench scenes render every
+    * item through it, with [[asset]] blocks. */
+  private[graft] def item(id: String, collection: String, footprint: GeoBox,
+      time: java.time.LocalDateTime, platform: String,
+      assets: Seq[String]): String = {
+    val fp = footprint.footprint(Crs.LonLat)
     val ring = (fp.ring :+ fp.ring.head)
       .map { case (x, y) => s"[$x,$y]" }.mkString("[", ",", "]")
-    // two scenes per solar day; LocalDateTime keeps the timestamp valid
-    // for any k (day rollover past June, minute wrap past 59)
-    val dt = java.time.LocalDateTime.of(2020, 6, 6, 8, 0, 0)
-      .plusDays(k / 2).plusMinutes(k % 60)
-    val dtStr = dt.format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss"))
-    val t = gbox.transform
-    def asset(band: String, common: String) =
-      s"""
-         |    "$band": {
-         |      "href": "file://${pathOf(k, band)}",
-         |      "type": "image/tiff; application=geotiff",
-         |      "roles": ["data"],
-         |      "gsd": $Res,
-         |      "eo:bands": [{"name": "$band", "common_name": "$common"}],
-         |      "proj:shape": [${gbox.height}, ${gbox.width}],
-         |      "proj:transform": [${t.a}, ${t.b}, ${t.c}, ${t.d}, ${t.e}, ${t.f}],
-         |      "raster:bands": [{"nodata": 0, "data_type": "uint16"}]
-         |    }""".stripMargin
+    val dtStr = time.format(
+      java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss"))
     s"""{
        |  "type": "Feature",
        |  "stac_version": "1.0.0",
-       |  "id": "scene-$k",
-       |  "collection": "$CollectionId",
+       |  "id": "$id",
+       |  "collection": "$collection",
        |  "stac_extensions": [
        |    "https://stac-extensions.github.io/projection/v1.1.0/schema.json",
        |    "https://stac-extensions.github.io/raster/v1.1.0/schema.json",
@@ -445,13 +375,32 @@ object Fixtures {
        |  "properties": {
        |    "datetime": "${dtStr}Z",
        |    "proj:epsg": 32735,
-       |    "platform": "graft-${k % 2}"
+       |    "platform": "$platform"
        |  },
-       |  "assets": {${asset("red", "red")},${asset("nir", "nir")}
+       |  "assets": {${assets.mkString(",")}
        |  }
        |}""".stripMargin
   }
 
-  /** Item JSONs with GRB hrefs stripped of the file:// scheme. */
-  def itemUri(href: String): String = href.stripPrefix("file://")
+  /** One uint16 nodata-0 data asset `key` on grid `g`: one eo:bands and
+    * one raster:bands entry per `(name, common_name)` in `eoBands`. */
+  private[graft] def asset(key: String, href: String, g: GeoBox, gsd: Double,
+      eoBands: Seq[(String, String)], media: String = TiffMedia): String = {
+    val t = g.transform
+    val eo = eoBands.map { case (n, c) =>
+      s"""{"name": "$n", "common_name": "$c"}""" }.mkString(",")
+    val rb = Seq.fill(eoBands.size)(
+      """{"nodata": 0, "data_type": "uint16"}""").mkString(",")
+    s"""
+       |    "$key": {
+       |      "href": "file://$href",
+       |      "type": "$media",
+       |      "roles": ["data"],
+       |      "gsd": $gsd,
+       |      "eo:bands": [$eo],
+       |      "proj:shape": [${g.height}, ${g.width}],
+       |      "proj:transform": [${t.a}, ${t.b}, ${t.c}, ${t.d}, ${t.e}, ${t.f}],
+       |      "raster:bands": [$rb]
+       |    }""".stripMargin
+  }
 }
