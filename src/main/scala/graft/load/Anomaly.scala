@@ -1,7 +1,6 @@
 package graft.load
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-observation temporal ANOMALY scoring — each pixel observation
@@ -15,7 +14,7 @@ import org.apache.spark.sql.functions._
   * zero variance score NaN (a constant series has no anomaly scale).
   *
   * Scale shape: two co-keyed stages, both bounded. Stage 1 is a
-  * mergeable (Σv, Σv², n)-per-pixel [[Aggregator]] — fixed-size
+  * mergeable (Σv, Σv², n)-per-pixel [[PixelFold]] — fixed-size
   * buffers, map-side combine, the OLS-trend plan. Stage 2 joins the
   * ONE stats row per (band, ty, tx) back to that tile's T plane rows
   * (co-keyed equi join) and scores each plane in a single JVM kernel
@@ -29,52 +28,24 @@ object Anomaly {
 
   val MinObs = 3
 
-  final case class StatIn(data: Array[Byte], dtype: String, nodata: Double,
-                          width: Int, height: Int)
+  /** Running (Σv, Σv²) planes; the output is (n, Σv, Σv²). */
+  class PixelStats
+      extends PixelFold[(Array[Int], Array[Double], Array[Double])] {
+    protected def init: Array[Double] = Array(0.0, 0.0)
 
-  /** (n, Σv, Σv²) planes; sized lazily from the first tile. */
-  final case class SBuf(var n: Array[Int], var sv: Array[Double],
-                        var svv: Array[Double], var width: Int,
-                        var height: Int)
-
-  class PixelStats extends Aggregator[StatIn, SBuf, SBuf]
-      with Serializable {
-    override def zero: SBuf = SBuf(null, null, null, 0, 0)
-    override def reduce(b: SBuf, t: StatIn): SBuf = {
-      if (b.n == null) {
-        val m = t.width * t.height
-        b.n = new Array[Int](m); b.sv = new Array[Double](m)
-        b.svv = new Array[Double](m)
-        b.width = t.width; b.height = t.height
-      }
-      require(b.width == t.width && b.height == t.height,
-        s"tile shape mismatch: ${b.width}x${b.height} vs ${t.width}x${t.height}")
-      val px = Fuse.decode(t.data, t.dtype)
+    protected def add(s: Array[Array[Double]], px: Array[Double],
+                      t: Double): Unit = {
+      val sv = s(0); val svv = s(1)
       var i = 0
       while (i < px.length) {
         val v = px(i)
-        if (!(v.isNaN || v == t.nodata)) {
-          b.n(i) += 1; b.sv(i) += v; b.svv(i) += v * v
-        }
+        if (!v.isNaN) { sv(i) += v; svv(i) += v * v }
         i += 1
       }
-      b
     }
-    override def merge(a: SBuf, c: SBuf): SBuf = {
-      if (a.n == null) return c
-      if (c.n == null) return a
-      require(a.width == c.width && a.height == c.height,
-        s"tile shape mismatch in merge: ${a.width}x${a.height} vs ${c.width}x${c.height}")
-      var i = 0
-      while (i < a.n.length) {
-        a.n(i) += c.n(i); a.sv(i) += c.sv(i); a.svv(i) += c.svv(i)
-        i += 1
-      }
-      a
-    }
-    override def finish(b: SBuf): SBuf = b
-    override def bufferEncoder: Encoder[SBuf] = Encoders.product[SBuf]
-    override def outputEncoder: Encoder[SBuf] = Encoders.product[SBuf]
+
+    protected def result(n: Array[Int], s: Array[Array[Double]]) =
+      (n, s(0), s(1))
   }
 
   /** Score every observation of a `Load` tile frame. Returns one row
@@ -88,19 +59,12 @@ object Anomaly {
     * oracle replays it bit-for-bit. */
   def scoreAcrossTime(spark: SparkSession, tiles: DataFrame): DataFrame = {
     import spark.implicits._
-    val agg = new PixelStats().toColumn
-    val stats = tiles
-      .select(col("band"), col("ty"), col("tx"),
-        col("data"), col("dtype"), col("nodata"),
-        col("width"), col("height"))
-      .as[(String, Int, Int, Array[Byte], String, Double, Int, Int)]
-      .groupByKey { case (band, ty, tx, _, _, _, _, _) => (band, ty, tx) }
-      .mapValues { case (_, _, _, data, dtype, nodata, w, h) =>
-        StatIn(data, dtype, nodata, w, h)
-      }
-      .agg(agg)
-      .map { case ((band, ty, tx), s) => (band, ty, tx, s.n, s.sv, s.svv) }
-      .toDF("band", "ty", "tx", "sn", "sv", "svv")
+    val fold = new PixelStats
+    val stats = PixelFold.byTile(spark, tiles, fold).map {
+      case (band, ty, tx, b) =>
+        val (n, sv, svv) = fold.finish(b)
+        (band, ty, tx, n, sv, svv)
+    }.toDF("band", "ty", "tx", "sn", "sv", "svv")
     // one-pass JVM kernel: decode, z-score, and count in primitive
     // loops. Arithmetic is spelled in EXACTLY the order of the previous
     // zip_with expression (mean = sv/n recomputed per use, variance =

@@ -24,14 +24,12 @@ object BandMath {
   def map2(spark: SparkSession, tiles: DataFrame,
            bandA: String, bandB: String, outBand: String)
           (f: (Column, Column) => Column): DataFrame = {
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     def side(b: String, p: String) = tiles
       .where(col("band") === b)
       .select(col("tIdx"), col("ty"), col("tx"),
         col("x0"), col("y0"), col("width"), col("height"),
         col("time"),
-        decode(col("data"), col("dtype")).as(s"${p}_px"),
+        Fuse.decodeUdf(col("data"), col("dtype")).as(s"${p}_px"),
         col("nodata").as(s"${p}_nd"))
     val a = side(bandA, "a")
     val b = side(bandB, "b").drop("x0", "y0", "width", "height", "time")
@@ -61,13 +59,11 @@ object BandMath {
   def changeAcrossTime(spark: SparkSession, tiles: DataFrame,
                        tIdx0: Int, tIdx1: Int)
                       (f: (Column, Column) => Column = _ - _): DataFrame = {
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     def side(t: Int, p: String) = tiles
       .where(col("tIdx") === t)
       .select(col("band"), col("ty"), col("tx"),
         col("x0"), col("y0"), col("width"), col("height"),
-        decode(col("data"), col("dtype")).as(s"${p}_px"),
+        Fuse.decodeUdf(col("data"), col("dtype")).as(s"${p}_px"),
         col("nodata").as(s"${p}_nd"))
     val a = side(tIdx0, "a")
     val b = side(tIdx1, "b").drop("x0", "y0", "width", "height")

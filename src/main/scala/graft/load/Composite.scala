@@ -1,7 +1,6 @@
 package graft.load
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Across-time pixel composites — the analytics layer above the fused
@@ -9,12 +8,11 @@ import org.apache.spark.sql.functions._
   * TODO notes mask-based fusing, `loader/_builder.py:182`): per-pixel
   * mean / max / min / count over a tile's time planes, nodata-aware.
   *
-  * Implemented as a custom Spark `Aggregator` over tile rows (the one
-  * genuinely custom aggregation of the engine, SURVEY §4): partial
-  * buffers are (sum, count) planes that combine associatively, so
-  * Catalyst runs it with map-side partial aggregation and the shuffle
-  * carries one buffer per (band, ty, tx) — never the raw time planes.
-  * At 100 TB that is the difference between shuffling the cube and
+  * Implemented as a [[PixelFold]] (sum, min and max planes plus the
+  * valid count): partial buffers combine associatively, so Catalyst
+  * runs it with map-side partial aggregation and the shuffle carries
+  * one buffer per (band, ty, tx) — never the raw time planes. At
+  * 100 TB that is the difference between shuffling the cube and
   * shuffling one plane per tile.
   *
   * The non-mergeable operators (median, quantile, masked median,
@@ -22,9 +20,10 @@ import org.apache.spark.sql.functions._
   * with two gathers. The `LoadResult` wrappers of a load whose tiles
   * each fit one slice read the load's own bins in the task that reduces
   * them (no pixel shuffle). Everything else rechunks the frame's rows
-  * with one shuffle: the raw spellings here over a tile frame of
-  * unknown origin (streams, cells, a copied, hand-built or persisted
-  * `LoadResult`), and a load whose tiles need more than one slice.
+  * with one shuffle: a `LoadResult` without its bin plan (copied,
+  * hand-built or persisted), a load whose tiles need more than one
+  * slice, and the raw `DataFrame` spellings here, which are public
+  * entry points only (no main code path calls them).
   */
 object Composite {
 
@@ -68,106 +67,64 @@ object Composite {
     def value: Long = m
   }
 
-  /** One input tile plane for the aggregation. */
-  final case class TileIn(data: Array[Byte], dtype: String, nodata: Double,
-                          width: Int, height: Int)
-
-  /** (sum, min, max, count) planes; sized lazily from the first tile. */
-  final case class Buf(var sum: Array[Double], var min: Array[Double],
-                       var max: Array[Double], var cnt: Array[Int],
-                       var width: Int, var height: Int)
-
   final case class CompositeOut(mean: Array[Double], min: Array[Double],
                                 max: Array[Double], count: Array[Int])
 
-  class PixelComposite extends Aggregator[TileIn, Buf, CompositeOut]
-      with Serializable {
+  /** Planes (sum, min, max); min and max merge by comparison. */
+  class PixelComposite extends PixelFold[CompositeOut] {
+    protected def init: Array[Double] =
+      Array(0.0, Double.PositiveInfinity, Double.NegativeInfinity)
 
-    override def zero: Buf = Buf(null, null, null, null, 0, 0)
-
-    private def ensure(b: Buf, w: Int, h: Int): Unit =
-      if (b.sum == null) {
-        val n = w * h
-        b.sum = new Array[Double](n)
-        b.min = Array.fill(n)(Double.PositiveInfinity)
-        b.max = Array.fill(n)(Double.NegativeInfinity)
-        b.cnt = new Array[Int](n)
-        b.width = w; b.height = h
-      }
-
-    override def reduce(b: Buf, t: TileIn): Buf = {
-      ensure(b, t.width, t.height)
-      require(b.width == t.width && b.height == t.height,
-        s"tile shape mismatch: ${b.width}x${b.height} vs ${t.width}x${t.height}")
-      val px = Fuse.decode(t.data, t.dtype)
+    protected def add(s: Array[Array[Double]], px: Array[Double],
+                      t: Double): Unit = {
+      val sum = s(0); val mn = s(1); val mx = s(2)
       var i = 0
       while (i < px.length) {
         val v = px(i)
-        if (!(v.isNaN || v == t.nodata)) {
-          b.sum(i) += v
-          if (v < b.min(i)) b.min(i) = v
-          if (v > b.max(i)) b.max(i) = v
-          b.cnt(i) += 1
+        if (!v.isNaN) {
+          sum(i) += v
+          if (v < mn(i)) mn(i) = v
+          if (v > mx(i)) mx(i) = v
         }
         i += 1
       }
-      b
     }
 
-    override def merge(a: Buf, c: Buf): Buf = {
-      if (a.sum == null) return c
-      if (c.sum == null) return a
-      require(a.width == c.width && a.height == c.height,
-        s"tile shape mismatch in merge: ${a.width}x${a.height} vs ${c.width}x${c.height}")
+    override protected def mergePlanes(a: Array[Array[Double]],
+                                       c: Array[Array[Double]]): Unit = {
+      val sum = a(0); val mn = a(1); val mx = a(2)
+      val cs = c(0); val cmn = c(1); val cmx = c(2)
       var i = 0
-      while (i < a.sum.length) {
-        a.sum(i) += c.sum(i)
-        if (c.min(i) < a.min(i)) a.min(i) = c.min(i)
-        if (c.max(i) > a.max(i)) a.max(i) = c.max(i)
-        a.cnt(i) += c.cnt(i)
+      while (i < sum.length) {
+        sum(i) += cs(i)
+        if (cmn(i) < mn(i)) mn(i) = cmn(i)
+        if (cmx(i) > mx(i)) mx(i) = cmx(i)
         i += 1
       }
-      a
     }
 
-    override def finish(b: Buf): CompositeOut = {
-      if (b.sum == null) return CompositeOut(Array.empty, Array.empty,
-        Array.empty, Array.empty)
-      val n = b.sum.length
-      val mean = new Array[Double](n)
+    protected def result(n: Array[Int], s: Array[Array[Double]])
+        : CompositeOut = {
+      val mean = new Array[Double](n.length)
       var i = 0
-      while (i < n) {
-        if (b.cnt(i) > 0) mean(i) = b.sum(i) / b.cnt(i)
-        else { mean(i) = Double.NaN; b.min(i) = Double.NaN; b.max(i) = Double.NaN }
+      while (i < n.length) {
+        if (n(i) > 0) mean(i) = s(0)(i) / n(i)
+        else { mean(i) = Double.NaN; s(1)(i) = Double.NaN; s(2)(i) = Double.NaN }
         i += 1
       }
-      CompositeOut(mean, b.min, b.max, b.cnt)
+      CompositeOut(mean, s(1), s(2), n)
     }
-
-    override def bufferEncoder: Encoder[Buf] = Encoders.product[Buf]
-    override def outputEncoder: Encoder[CompositeOut] =
-      Encoders.product[CompositeOut]
   }
 
   /** Across-time composite of a `Load` tile DataFrame: one row per
     * (band, ty, tx) with per-pixel mean/min/max/count planes. */
   def acrossTime(spark: SparkSession, tiles: DataFrame): DataFrame = {
     import spark.implicits._
-    val agg = new PixelComposite().toColumn
-    tiles
-      .select(col("band"), col("ty"), col("tx"),
-        col("data"), col("dtype"), col("nodata"),
-        col("width"), col("height"))
-      .as[(String, Int, Int, Array[Byte], String, Double, Int, Int)]
-      .groupByKey { case (band, ty, tx, _, _, _, _, _) => (band, ty, tx) }
-      .mapValues { case (_, _, _, data, dtype, nodata, w, h) =>
-        TileIn(data, dtype, nodata, w, h)
-      }
-      .agg(agg)
-      .map { case ((band, ty, tx), out) =>
-        (band, ty, tx, out.mean, out.min, out.max, out.count)
-      }
-      .toDF("band", "ty", "tx", "mean", "min", "max", "count")
+    val fold = new PixelComposite
+    PixelFold.byTile(spark, tiles, fold).map { case (band, ty, tx, b) =>
+      val o = fold.finish(b)
+      (band, ty, tx, o.mean, o.min, o.max, o.count)
+    }.toDF("band", "ty", "tx", "mean", "min", "max", "count")
   }
 
   /** Per-pixel MEDIAN across time — the robust composite of the odc

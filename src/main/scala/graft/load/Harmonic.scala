@@ -1,7 +1,6 @@
 package graft.load
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-pixel HARMONIC (seasonal) regression across time — fit
@@ -12,7 +11,7 @@ import org.apache.spark.sql.functions._
   * Scale shape — same mergeable family as [[Trend.PixelTrend]]: the
   * normal equations need only nine running sums per pixel
   * (n, Σc, Σs, Σcc, Σss, Σcs, Σv, Σvc, Σvs), so the whole fit is ONE
-  * partial aggregate with map-side combine — fixed-size buffers at any
+  * [[PixelFold]] with map-side combine — fixed-size buffers at any
   * archive depth, no time-dimension rechunk. The 3×3 Cramer solve in
   * `finish` is spelled token-for-token like the DuckDB oracle, so on
   * integer-valued fixtures (exact sums) the coefficients match
@@ -25,95 +24,50 @@ import org.apache.spark.sql.functions._
   * integers instead of re-running libm (whose last-ulp may differ). */
 object Harmonic {
 
-  final case class HarmIn(cq: Double, sq: Double, data: Array[Byte],
-                          dtype: String, nodata: Double,
-                          width: Int, height: Int)
-
-  /** Nine running sums per pixel; sized lazily from the first tile. */
-  final case class HBuf(var n: Array[Int],
-                        var sc: Array[Double], var ss: Array[Double],
-                        var scc: Array[Double], var sss: Array[Double],
-                        var scs: Array[Double],
-                        var sv: Array[Double], var svc: Array[Double],
-                        var svs: Array[Double],
-                        var width: Int, var height: Int)
-
   final case class HarmOut(level: Array[Double], cosB: Array[Double],
                            sinB: Array[Double], count: Array[Int])
 
-  class PixelHarmonic extends Aggregator[HarmIn, HBuf, HarmOut]
-      with Serializable {
+  /** Eight running sum planes (Σc, Σs, Σcc, Σss, Σcs, Σv, Σvc, Σvs);
+    * `t` is a plane's epoch seconds, which `basis` maps to its landed
+    * (cq, sq) milli-unit basis. */
+  class PixelHarmonic(basis: Map[Long, (Double, Double)])
+      extends PixelFold[HarmOut] {
+    protected def init: Array[Double] = Array.fill(8)(0.0)
 
-    override def zero: HBuf =
-      HBuf(null, null, null, null, null, null, null, null, null, 0, 0)
-
-    private def ensure(b: HBuf, w: Int, h: Int): Unit =
-      if (b.n == null) {
-        val m = w * h
-        b.n = new Array[Int](m)
-        b.sc = new Array[Double](m); b.ss = new Array[Double](m)
-        b.scc = new Array[Double](m); b.sss = new Array[Double](m)
-        b.scs = new Array[Double](m)
-        b.sv = new Array[Double](m); b.svc = new Array[Double](m)
-        b.svs = new Array[Double](m)
-        b.width = w; b.height = h
-      }
-
-    override def reduce(b: HBuf, t: HarmIn): HBuf = {
-      ensure(b, t.width, t.height)
-      require(b.width == t.width && b.height == t.height,
-        s"tile shape mismatch: ${b.width}x${b.height} vs ${t.width}x${t.height}")
-      val px = Fuse.decode(t.data, t.dtype)
-      val cq = t.cq
-      val sq = t.sq
+    protected def add(s: Array[Array[Double]], px: Array[Double],
+                      t: Double): Unit = {
+      val (cq, sq) = basis(t.toLong)
+      val sc = s(0); val ss = s(1); val scc = s(2); val sss = s(3)
+      val scs = s(4); val sv = s(5); val svc = s(6); val svs = s(7)
       var i = 0
       while (i < px.length) {
         val v = px(i)
-        if (!(v.isNaN || v == t.nodata)) {
-          b.n(i) += 1
-          b.sc(i) += cq; b.ss(i) += sq
-          b.scc(i) += cq * cq; b.sss(i) += sq * sq; b.scs(i) += cq * sq
-          b.sv(i) += v; b.svc(i) += v * cq; b.svs(i) += v * sq
+        if (!v.isNaN) {
+          sc(i) += cq; ss(i) += sq
+          scc(i) += cq * cq; sss(i) += sq * sq; scs(i) += cq * sq
+          sv(i) += v; svc(i) += v * cq; svs(i) += v * sq
         }
         i += 1
       }
-      b
     }
 
-    override def merge(a: HBuf, c: HBuf): HBuf = {
-      if (a.n == null) return c
-      if (c.n == null) return a
-      require(a.width == c.width && a.height == c.height,
-        s"tile shape mismatch in merge: ${a.width}x${a.height} vs ${c.width}x${c.height}")
-      var i = 0
-      while (i < a.n.length) {
-        a.n(i) += c.n(i)
-        a.sc(i) += c.sc(i); a.ss(i) += c.ss(i)
-        a.scc(i) += c.scc(i); a.sss(i) += c.sss(i); a.scs(i) += c.scs(i)
-        a.sv(i) += c.sv(i); a.svc(i) += c.svc(i); a.svs(i) += c.svs(i)
-        i += 1
-      }
-      a
-    }
-
-    override def finish(b: HBuf): HarmOut = {
-      if (b.n == null)
-        return HarmOut(Array.empty, Array.empty, Array.empty, Array.empty)
-      val m = b.n.length
+    protected def result(cnt: Array[Int], p: Array[Array[Double]])
+        : HarmOut = {
+      val m = cnt.length
       val level = new Array[Double](m)
       val cosB = new Array[Double](m)
       val sinB = new Array[Double](m)
       var i = 0
       while (i < m) {
-        val n = b.n(i).toDouble
-        val sc = b.sc(i); val ss = b.ss(i)
-        val scc = b.scc(i); val sss = b.sss(i); val scs = b.scs(i)
-        val sv = b.sv(i); val svc = b.svc(i); val svs = b.svs(i)
+        val n = cnt(i).toDouble
+        val sc = p(0)(i); val ss = p(1)(i)
+        val scc = p(2)(i); val sss = p(3)(i); val scs = p(4)(i)
+        val sv = p(5)(i); val svc = p(6)(i); val svs = p(7)(i)
         // Cramer's rule — THE oracle spelling (RasterAnalyticsQueries.
         // harmonicDuckSql transcribes these lines token-for-token)
         val det = n * (scc * sss - scs * scs) - sc * (sc * sss - scs * ss) +
           ss * (sc * scs - scc * ss)
-        if (b.n(i) >= 3 && det != 0.0) {
+        if (cnt(i) >= 3 && det != 0.0) {
           level(i) = (sv * (scc * sss - scs * scs) -
             sc * (svc * sss - scs * svs) +
             ss * (svc * scs - scc * svs)) / det
@@ -128,11 +82,8 @@ object Harmonic {
         }
         i += 1
       }
-      HarmOut(level, cosB, sinB, b.n)
+      HarmOut(level, cosB, sinB, cnt)
     }
-
-    override def bufferEncoder: Encoder[HBuf] = Encoders.product[HBuf]
-    override def outputEncoder: Encoder[HarmOut] = Encoders.product[HarmOut]
   }
 
   /** Integer milli-unit basis for day `t` at `periodDays` — JVM trig,
@@ -152,23 +103,11 @@ object Harmonic {
   def harmonicAcrossTime(spark: SparkSession, tiles: DataFrame,
                          basis: Map[Long, (Double, Double)]): DataFrame = {
     import spark.implicits._
-    val agg = new PixelHarmonic().toColumn
-    val bc = spark.sparkContext.broadcast(basis)
-    tiles
-      .select(col("band"), col("ty"), col("tx"),
-        unix_timestamp(col("time")).as("tsec"),
-        col("data"), col("dtype"), col("nodata"),
-        col("width"), col("height"))
-      .as[(String, Int, Int, Long, Array[Byte], String, Double, Int, Int)]
-      .groupByKey { case (band, ty, tx, _, _, _, _, _, _) => (band, ty, tx) }
-      .mapValues { case (_, _, _, tsec, data, dtype, nodata, w, h) =>
-        val (cq, sq) = bc.value(tsec)
-        HarmIn(cq, sq, data, dtype, nodata, w, h)
-      }
-      .agg(agg)
-      .map { case ((band, ty, tx), out) =>
-        (band, ty, tx, out.level, out.cosB, out.sinB, out.count)
-      }
-      .toDF("band", "ty", "tx", "level", "cosb", "sinb", "count")
+    val fold = new PixelHarmonic(basis)
+    PixelFold.byTile(spark, tiles, fold, unix_timestamp(col("time"))).map {
+      case (band, ty, tx, b) =>
+        val o = fold.finish(b)
+        (band, ty, tx, o.level, o.cosB, o.sinB, o.count)
+    }.toDF("band", "ty", "tx", "level", "cosb", "sinb", "count")
   }
 }

@@ -6,6 +6,8 @@ import graft.planner.Planner
 import graft.raster.{AutoReader, Grb, IoCredentials, RasterReader}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.storage.StorageLevel
 
 /** The flagship query: STAC items -> gridded, fused raster tiles
@@ -738,6 +740,11 @@ object Fuse {
     }
     buf.array()
   }
+
+  /** [[decode]] as a Spark column function: `(data, dtype)` →
+    * `array<double>`. */
+  lazy val decodeUdf: UserDefinedFunction =
+    udf { (data: Array[Byte], dtype: String) => decode(data, dtype) }
 
   def decode(bytes: Array[Byte], dtype: String): Array[Double] = {
     val buf = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)

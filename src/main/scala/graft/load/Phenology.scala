@@ -1,8 +1,6 @@
 package graft.load
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-pixel PEAK-OF-SEASON timing — the argmax of each pixel's
   * time series (peak-NDVI phenology date, flood-crest timing; the
@@ -18,94 +16,60 @@ import org.apache.spark.sql.functions._
   * observations emit NaN / day −1.
   *
   * Scale shape — the argmax is MERGEABLE: the running state is three
-  * fixed-size planes (best value, best day, count) per pixel with
-  * map-side combine, the same true-partial-aggregate plan as
-  * [[Trend.PixelTrend]]; one partial buffer set per (band, ty, tx)
-  * per input partition crosses the exchange — never T planes, no
-  * time-depth rechunk, bounded state at ANY archive depth. The
-  * merge applies the identical (value, day) ordering, so partial
-  * order never changes the result (pinned by PhenologySpec's
-  * partition-invariance property).
+  * fixed-size planes (best value, best day, count) per pixel, a
+  * [[PixelFold]] with map-side combine like [[Trend.PixelTrend]]; one
+  * partial buffer set per (band, ty, tx) per input partition crosses
+  * the exchange — never T planes, no time-depth rechunk, bounded state
+  * at ANY archive depth. The merge applies the identical (value, day)
+  * ordering, so partial order never changes the result (pinned by
+  * PixelFoldPropsSpec's split property). The streaming standing peak
+  * map merges with this same fold.
   */
 object Phenology {
-
-  final case class PeakIn(tDays: Double, data: Array[Byte], dtype: String,
-                          nodata: Double, width: Int, height: Int)
-
-  /** Running argmax planes per pixel; sized lazily from the first
-    * tile. `day` is −1 where no valid observation has been seen. */
-  final case class PBuf(var n: Array[Int], var best: Array[Double],
-                        var day: Array[Double], var width: Int,
-                        var height: Int)
 
   final case class PeakOut(peak: Array[Double], day: Array[Double],
                            count: Array[Int])
 
-  class PixelPeak extends Aggregator[PeakIn, PBuf, PeakOut]
-      with Serializable {
+  /** Running argmax planes (best value, best day); `t` is the day
+    * number. A pixel with no valid observation yet holds NaN / day −1. */
+  class PixelPeak extends PixelFold[PeakOut] {
+    protected def init: Array[Double] = Array(Double.NaN, -1.0)
 
-    override def zero: PBuf = PBuf(null, null, null, 0, 0)
-
-    private def ensure(b: PBuf, w: Int, h: Int): Unit =
-      if (b.n == null) {
-        val m = w * h
-        b.n = new Array[Int](m)
-        b.best = Array.fill(m)(Double.NaN)
-        b.day = Array.fill(m)(-1.0)
-        b.width = w; b.height = h
-      }
-
-    /** The one ordering both engines spell: larger value wins; an
-      * equal value wins only with a strictly smaller day. */
-    private def better(v: Double, d: Double, bv: Double, bd: Double)
-        : Boolean =
-      bv.isNaN || v > bv || (v == bv && d < bd)
-
-    override def reduce(b: PBuf, t: PeakIn): PBuf = {
-      ensure(b, t.width, t.height)
-      require(b.width == t.width && b.height == t.height,
-        s"tile shape mismatch: ${b.width}x${b.height} vs ${t.width}x${t.height}")
-      val px = Fuse.decode(t.data, t.dtype)
+    protected def add(s: Array[Array[Double]], px: Array[Double],
+                      td: Double): Unit = {
+      val best = s(0); val day = s(1)
       var i = 0
       while (i < px.length) {
         val v = px(i)
-        if (!(v.isNaN || v == t.nodata)) {
-          b.n(i) += 1
-          if (better(v, t.tDays, b.best(i), b.day(i))) {
-            b.best(i) = v; b.day(i) = t.tDays
-          }
+        if (!v.isNaN && better(v, td, best(i), day(i))) {
+          best(i) = v; day(i) = td
         }
         i += 1
       }
-      b
     }
 
-    override def merge(a: PBuf, c: PBuf): PBuf = {
-      if (a.n == null) return c
-      if (c.n == null) return a
-      require(a.width == c.width && a.height == c.height,
-        s"tile shape mismatch in merge: ${a.width}x${a.height} vs ${c.width}x${c.height}")
+    override protected def mergePlanes(a: Array[Array[Double]],
+                                       c: Array[Array[Double]]): Unit = {
+      val best = a(0); val day = a(1); val cb = c(0); val cd = c(1)
       var i = 0
-      while (i < a.n.length) {
-        a.n(i) += c.n(i)
-        if (!c.best(i).isNaN &&
-            better(c.best(i), c.day(i), a.best(i), a.day(i))) {
-          a.best(i) = c.best(i); a.day(i) = c.day(i)
+      while (i < best.length) {
+        if (!cb(i).isNaN && better(cb(i), cd(i), best(i), day(i))) {
+          best(i) = cb(i); day(i) = cd(i)
         }
         i += 1
       }
-      a
     }
 
-    override def finish(b: PBuf): PeakOut = {
-      if (b.n == null) return PeakOut(Array.empty, Array.empty, Array.empty)
-      PeakOut(b.best, b.day, b.n)
-    }
-
-    override def bufferEncoder: Encoder[PBuf] = Encoders.product[PBuf]
-    override def outputEncoder: Encoder[PeakOut] =
-      Encoders.product[PeakOut]
+    protected def result(n: Array[Int], s: Array[Array[Double]]): PeakOut =
+      PeakOut(s(0), s(1), n)
   }
+
+  /** The one ordering of the argmax: larger value wins; an equal value
+    * wins only with a strictly smaller day; the NaN "no observation"
+    * best loses to every value. */
+  private def better(v: Double, d: Double, bv: Double, bd: Double)
+      : Boolean =
+    bv.isNaN || v > bv || (v == bv && d < bd)
 
   /** Peak value + timing of a `Load` tile frame across time. Returns
     * one row per (band, ty, tx): (peak, day, count) planes. `t0Sec`
@@ -113,22 +77,11 @@ object Phenology {
   def peakAcrossTime(spark: SparkSession, tiles: DataFrame,
                      t0Sec: Long): DataFrame = {
     import spark.implicits._
-    val agg = new PixelPeak().toColumn
-    tiles
-      .select(col("band"), col("ty"), col("tx"),
-        floor(((unix_timestamp(col("time")) - t0Sec) / 86400.0) + 0.5)
-          .as("tDays"),
-        col("data"), col("dtype"), col("nodata"),
-        col("width"), col("height"))
-      .as[(String, Int, Int, Double, Array[Byte], String, Double, Int, Int)]
-      .groupByKey { case (band, ty, tx, _, _, _, _, _, _) => (band, ty, tx) }
-      .mapValues { case (_, _, _, td, data, dtype, nodata, w, h) =>
-        PeakIn(td, data, dtype, nodata, w, h)
-      }
-      .agg(agg)
-      .map { case ((band, ty, tx), out) =>
-        (band, ty, tx, out.peak, out.day, out.count)
-      }
-      .toDF("band", "ty", "tx", "peak", "day", "count")
+    val fold = new PixelPeak
+    PixelFold.byTile(spark, tiles, fold, PixelFold.dayOf(t0Sec)).map {
+      case (band, ty, tx, b) =>
+        val o = fold.finish(b)
+        (band, ty, tx, o.peak, o.day, o.count)
+    }.toDF("band", "ty", "tx", "peak", "day", "count")
   }
 }

@@ -1,8 +1,6 @@
 package graft.load
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-pixel linear TREND across time — ordinary-least-squares slope +
   * intercept per pixel (vegetation greening/browning rates, coastal
@@ -16,7 +14,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape — the MERGEABLE contrast to the median/geomedian
   * family: OLS needs only the running sums (n, Σt, Σt², Σv, Σtv) per
-  * pixel, so this is a true partial aggregate ([[Aggregator]] with
+  * pixel, so this is a true partial aggregate (a [[PixelFold]] with
   * map-side combine): each task folds its local planes into five
   * fixed-size buffers and the exchange carries one partial buffer set
   * per (band, ty, tx) per input partition — never T planes, no
@@ -27,96 +25,51 @@ import org.apache.spark.sql.functions._
   */
 object Trend {
 
-  final case class TrendIn(tDays: Double, data: Array[Byte], dtype: String,
-                           nodata: Double, width: Int, height: Int)
-
-  /** Running OLS sums per pixel; sized lazily from the first tile. */
-  final case class TBuf(var n: Array[Int], var st: Array[Double],
-                        var stt: Array[Double], var sv: Array[Double],
-                        var stv: Array[Double], var width: Int, var height: Int)
-
   final case class TrendOut(slope: Array[Double], icept: Array[Double],
                             count: Array[Int])
 
-  class PixelTrend extends Aggregator[TrendIn, TBuf, TrendOut]
-      with Serializable {
+  /** Running OLS sum planes (Σt, Σt², Σv, Σtv); `t` is the day number. */
+  class PixelTrend extends PixelFold[TrendOut] {
+    protected def init: Array[Double] = Array.fill(4)(0.0)
 
-    override def zero: TBuf = TBuf(null, null, null, null, null, 0, 0)
-
-    private def ensure(b: TBuf, w: Int, h: Int): Unit =
-      if (b.n == null) {
-        val m = w * h
-        b.n = new Array[Int](m)
-        b.st = new Array[Double](m)
-        b.stt = new Array[Double](m)
-        b.sv = new Array[Double](m)
-        b.stv = new Array[Double](m)
-        b.width = w; b.height = h
-      }
-
-    override def reduce(b: TBuf, t: TrendIn): TBuf = {
-      ensure(b, t.width, t.height)
-      require(b.width == t.width && b.height == t.height,
-        s"tile shape mismatch: ${b.width}x${b.height} vs ${t.width}x${t.height}")
-      val px = Fuse.decode(t.data, t.dtype)
-      val td = t.tDays
+    protected def add(s: Array[Array[Double]], px: Array[Double],
+                      td: Double): Unit = {
+      val st = s(0); val stt = s(1); val sv = s(2); val stv = s(3)
       var i = 0
       while (i < px.length) {
         val v = px(i)
-        if (!(v.isNaN || v == t.nodata)) {
-          b.n(i) += 1
-          b.st(i) += td
-          b.stt(i) += td * td
-          b.sv(i) += v
-          b.stv(i) += td * v
+        if (!v.isNaN) {
+          st(i) += td
+          stt(i) += td * td
+          sv(i) += v
+          stv(i) += td * v
         }
         i += 1
       }
-      b
     }
 
-    override def merge(a: TBuf, c: TBuf): TBuf = {
-      if (a.n == null) return c
-      if (c.n == null) return a
-      require(a.width == c.width && a.height == c.height,
-        s"tile shape mismatch in merge: ${a.width}x${a.height} vs ${c.width}x${c.height}")
-      var i = 0
-      while (i < a.n.length) {
-        a.n(i) += c.n(i)
-        a.st(i) += c.st(i)
-        a.stt(i) += c.stt(i)
-        a.sv(i) += c.sv(i)
-        a.stv(i) += c.stv(i)
-        i += 1
-      }
-      a
-    }
-
-    override def finish(b: TBuf): TrendOut = {
-      if (b.n == null) return TrendOut(Array.empty, Array.empty, Array.empty)
-      val m = b.n.length
+    protected def result(cnt: Array[Int], s: Array[Array[Double]])
+        : TrendOut = {
+      val st = s(0); val stt = s(1); val sv = s(2); val stv = s(3)
+      val m = cnt.length
       val slope = new Array[Double](m)
       val icept = new Array[Double](m)
       var i = 0
       while (i < m) {
-        val n = b.n(i).toDouble
-        val den = n * b.stt(i) - b.st(i) * b.st(i)
-        if (b.n(i) >= 2 && den != 0.0) {
-          val s = (n * b.stv(i) - b.st(i) * b.sv(i)) / den
-          slope(i) = s
-          icept(i) = (b.sv(i) - s * b.st(i)) / n
+        val n = cnt(i).toDouble
+        val den = n * stt(i) - st(i) * st(i)
+        if (cnt(i) >= 2 && den != 0.0) {
+          val b = (n * stv(i) - st(i) * sv(i)) / den
+          slope(i) = b
+          icept(i) = (sv(i) - b * st(i)) / n
         } else {
           slope(i) = Double.NaN
           icept(i) = Double.NaN
         }
         i += 1
       }
-      TrendOut(slope, icept, b.n)
+      TrendOut(slope, icept, cnt)
     }
-
-    override def bufferEncoder: Encoder[TBuf] = Encoders.product[TBuf]
-    override def outputEncoder: Encoder[TrendOut] =
-      Encoders.product[TrendOut]
   }
 
   /** Interpolated median over `a(0 until m)` (sorted in place) — the
@@ -289,22 +242,11 @@ object Trend {
   def trendAcrossTime(spark: SparkSession, tiles: DataFrame,
                       t0Sec: Long): DataFrame = {
     import spark.implicits._
-    val agg = new PixelTrend().toColumn
-    tiles
-      .select(col("band"), col("ty"), col("tx"),
-        floor(((unix_timestamp(col("time")) - t0Sec) / 86400.0) + 0.5)
-          .as("tDays"),
-        col("data"), col("dtype"), col("nodata"),
-        col("width"), col("height"))
-      .as[(String, Int, Int, Double, Array[Byte], String, Double, Int, Int)]
-      .groupByKey { case (band, ty, tx, _, _, _, _, _, _) => (band, ty, tx) }
-      .mapValues { case (_, _, _, td, data, dtype, nodata, w, h) =>
-        TrendIn(td, data, dtype, nodata, w, h)
-      }
-      .agg(agg)
-      .map { case ((band, ty, tx), out) =>
-        (band, ty, tx, out.slope, out.icept, out.count)
-      }
-      .toDF("band", "ty", "tx", "slope", "icept", "count")
+    val fold = new PixelTrend
+    PixelFold.byTile(spark, tiles, fold, PixelFold.dayOf(t0Sec)).map {
+      case (band, ty, tx, b) =>
+        val o = fold.finish(b)
+        (band, ty, tx, o.slope, o.icept, o.count)
+    }.toDF("band", "ty", "tx", "slope", "icept", "count")
   }
 }

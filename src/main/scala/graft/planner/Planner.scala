@@ -221,5 +221,5 @@ object Planner {
     * max by itemsize, default uint16. */
   def electDtype(dtypes: Seq[String]): String =
     if (dtypes.isEmpty) "uint16"
-    else dtypes.maxBy(d => (graft.raster.Grb.itemSize(d), d))
+    else dtypes.maxBy(d => (graft.raster.Grb.dtypeSize(d), d))
 }

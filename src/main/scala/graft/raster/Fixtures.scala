@@ -315,14 +315,16 @@ object Fixtures {
     * lives on the 10 m grid and whose `swir` asset lives on its own
     * 20 m grid (per-asset proj:shape/proj:transform/gsd), so
     * `band2grid` groups them separately and a joint load must
-    * paste/warp each band from its own source grid. */
-  def writeScenesMultigrid(nItems: Int): Seq[String] =
+    * paste/warp each band from its own source grid. The `red` raster is
+    * the plain [[writeScenes]] file, written under that writer's own
+    * marker; only `swir` is written under the `-mg` marker, so no file
+    * is ever trusted through a marker that another writer owns. */
+  def writeScenesMultigrid(nItems: Int): Seq[String] = {
+    writeScenes(nItems)
     (0 until nItems).map { k =>
       val g10 = sceneGeobox(k)
       val g20 = swirGeobox(k)
       completed(dir, s"scene$k-mg") {
-        Grb.writeWithOverviews(grbPath(k, "red"), scenePixels(k), g10,
-          "uint16", Some(0.0))
         Grb.writeWithOverviews(swirPath(k), swirPixels(k), g20,
           "uint16", Some(0.0))
       }
@@ -331,6 +333,7 @@ object Fixtures {
           asset("red", grbPath(k, "red"), g10, Res, Seq("red" -> "red")),
           asset("swir", swirPath(k), g20, Res * 2, Seq("swir" -> "swir"))))
     }
+  }
 
   /** STAC item JSON of fixture scene k with proj + raster + eo extensions
     * populated the way real catalogs do (FIXTURES.md §1): one asset per

@@ -49,9 +49,6 @@ object Grb {
 
   def isFloat(dtype: String): Boolean = dtype.startsWith("float")
 
-  /** Widest-dtype election helper (A6, `_stac_load.py:391-397`). */
-  def itemSize(dtype: String): Int = dtypeSize(dtype)
-
   def write(path: String, pixels: Array[Double], geobox: GeoBox,
             dtype: String, nodata: Option[Double]): Unit = {
     require(pixels.length == geobox.width * geobox.height)

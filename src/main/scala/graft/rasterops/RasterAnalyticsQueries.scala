@@ -78,12 +78,10 @@ private[rasterops] trait RasterAnalyticsQueries {
     val (items, schemas) = parsedOf(jsons)
     val res = Load.load(spark, items, schemas, bands = Seq("red"),
       groupby = "id", chunks = 64, dtype = Some("float64"))
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     res.tiles
       .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
         col("nodata"), unix_timestamp(col("time")).as("tsec"),
-        posexplode(decode(col("data"), col("dtype"))))
+        posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .select(col("band"), col("tIdx").as("tidx"), col("tsec"), col("ty"),
         col("tx"),
         (col("pos") / col("width")).cast("int").as("py"),
@@ -208,15 +206,13 @@ private[rasterops] trait RasterAnalyticsQueries {
     val (items, schemas) = parsedOf(jsons)
     val res = Load.load(spark, items, schemas, bands = Seq("red"),
       groupby = "id", chunks = 64, dtype = Some("float64"))
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     val tsec =
       if (withTsec) Seq(unix_timestamp(col("time")).as("tsec")) else Nil
     val tsecOut = if (withTsec) Seq(col("tsec")) else Nil
     res.tiles
       .select(Seq(col("band"), col("tIdx").as("tidx"), col("ty"),
         col("tx")) ++ tsec ++ Seq(col("nodata"),
-        posexplode(decode(col("data"), col("dtype")))): _*)
+        posexplode(Fuse.decodeUdf(col("data"), col("dtype")))): _*)
       .select(Seq(col("band"), col("tidx"), col("ty"), col("tx")) ++
         tsecOut ++ Seq(col("pos"),
         when(isnan(col("col")) || col("col") === col("nodata"),
@@ -822,10 +818,8 @@ private[rasterops] trait RasterAnalyticsQueries {
     val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     val planes = res.tiles.select(col("band"), col("tIdx"), col("ty"),
-      col("tx"), decode(col("data"), col("dtype")).as("px"), col("nodata"))
+      col("tx"), Fuse.decodeUdf(col("data"), col("dtype")).as("px"), col("nodata"))
     val red = planes.where(col("band") === "red")
       .select(col("tIdx"), col("ty"), col("tx"),
         col("px").as("rp"), col("nodata").as("rnd"))
@@ -1045,11 +1039,9 @@ private[rasterops] trait RasterAnalyticsQueries {
     val (items, schemas) = parsedOf(jsons)
     val res = Load.load(spark, items, schemas, bands = Seq("red", "qa"),
       groupby = "id", chunks = 64)
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     res.tiles
       .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        col("nodata"), posexplode(decode(col("data"), col("dtype"))))
+        col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .select(col("band"), col("tIdx").as("tidx"), col("ty"), col("tx"),
         (col("pos") / col("width")).cast("int").as("py"),
         (col("pos") % col("width")).cast("int").as("px"),
@@ -1101,11 +1093,9 @@ private[rasterops] trait RasterAnalyticsQueries {
     val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     res.tiles
       .select(col("band"), col("tIdx"), col("nodata"),
-        posexplode(decode(col("data"), col("dtype"))))
+        posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .where(!isnan(col("col")) && col("col") =!= col("nodata"))
       .select(col("band"), col("tIdx"),
         least(lit(15), floor(col("col") / 2000).cast("int")).as("bin"))
@@ -1335,11 +1325,9 @@ private[rasterops] trait RasterAnalyticsQueries {
     val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "id", chunks = 64)
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     res.tiles
       .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        col("nodata"), posexplode(decode(col("data"), col("dtype"))))
+        col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .select(col("band"), col("tIdx").as("tidx"), col("ty"), col("tx"),
         (col("pos") / col("width")).cast("int").as("py"),
         (col("pos") % col("width")).cast("int").as("px"),
@@ -1381,11 +1369,9 @@ private[rasterops] trait RasterAnalyticsQueries {
     val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "id", chunks = 64)
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     res.tiles
       .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        col("nodata"), posexplode(decode(col("data"), col("dtype"))))
+        col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .select(col("band"), col("tIdx").as("tidx"), col("ty"), col("tx"),
         (col("pos") / col("width")).cast("int").as("py"),
         (col("pos") % col("width")).cast("int").as("px"),

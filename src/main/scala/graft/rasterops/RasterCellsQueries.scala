@@ -28,11 +28,9 @@ private[rasterops] trait RasterCellsQueries {
     val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     res.tiles
       .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        posexplode(decode(col("data"), col("dtype"))))
+        posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .select(col("band"), col("tIdx").as("tidx"), col("ty"), col("tx"),
         (col("pos") / col("width")).cast("int").as("py"),
         (col("pos") % col("width")).cast("int").as("px"),
@@ -62,11 +60,9 @@ private[rasterops] trait RasterCellsQueries {
     val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "id", chunks = 64)
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     res.tiles
       .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        col("nodata"), posexplode(decode(col("data"), col("dtype"))))
+        col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .select(col("band"), col("tIdx").as("tidx"), col("ty"), col("tx"),
         (col("pos") / col("width")).cast("int").as("py"),
         (col("pos") % col("width")).cast("int").as("px"),
@@ -98,8 +94,6 @@ private[rasterops] trait RasterCellsQueries {
        |ORDER BY band, ty, tx""".stripMargin
   def reprojectCells(spark: SparkSession): DataFrame = {
     val (items, schemas) = parsed()
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     Seq("EPSG:3857" -> 20.0, "EPSG:6933" -> 20.0, "ESRI:54034" -> 20.0)
       .map { case (crs, res) =>
         Load.load(spark, items, schemas, bands = Seq("red"),
@@ -108,7 +102,7 @@ private[rasterops] trait RasterCellsQueries {
           .withColumn("crs", lit(crs))
       }.reduce(_ unionAll _)
       .select(col("crs"), col("band"), col("tIdx"), col("ty"), col("tx"),
-        col("width"), posexplode(decode(col("data"), col("dtype"))))
+        col("width"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .select(col("crs"), col("band"), col("tIdx").as("tidx"), col("ty"),
         col("tx"),
         (col("pos") / col("width")).cast("int").as("py"),
@@ -137,14 +131,12 @@ private[rasterops] trait RasterCellsQueries {
        |ORDER BY crs, band, tidx, ty, tx""".stripMargin
   def resampleCells(spark: SparkSession): DataFrame = {
     val (items, schemas) = parsed()
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     // native 10 m per-item planes in absolute grid coords; float64 output
     // => invalid pixels land as NaN directly
     Load.load(spark, items, schemas, bands = Seq("red"), groupby = "id",
       chunks = 64, dtype = Some("float64")).tiles
       .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        col("nodata"), posexplode(decode(col("data"), col("dtype"))))
+        col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .select(col("band"), col("tIdx").as("tidx"),
         (col("ty") * 64 + (col("pos") / col("width")).cast("int")).as("gy"),
         (col("tx") * 64 + (col("pos") % col("width")).cast("int")).as("gx"),
@@ -159,7 +151,7 @@ private[rasterops] trait RasterCellsQueries {
         .withColumn("mode", lit(m))
     }.reduce(_ unionAll _)
       .select(col("mode"), col("band"), col("tIdx"), col("ty"), col("tx"),
-        col("width"), col("nodata"), posexplode(decode(col("data"), col("dtype"))))
+        col("width"), col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .select(col("mode"), col("band"), col("tIdx").as("tidx"), col("ty"),
         col("tx"),
         (col("pos") / col("width")).cast("int").as("py"),
@@ -279,12 +271,10 @@ private[rasterops] trait RasterCellsQueries {
     import spark.implicits._
     import graft.raster.Kernels
     val (items, schemas) = parsed()
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     Load.load(spark, items, schemas, bands = Seq("red"), groupby = "id",
       chunks = 64, dtype = Some("float64")).tiles
       .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        col("nodata"), posexplode(decode(col("data"), col("dtype"))))
+        col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .select(col("band"), col("tIdx").as("tidx"),
         (col("ty") * 64 + (col("pos") / col("width")).cast("int")).as("gy"),
         (col("tx") * 64 + (col("pos") % col("width")).cast("int")).as("gx"),
@@ -316,7 +306,7 @@ private[rasterops] trait RasterCellsQueries {
         .withColumn("mode", lit(m))
     }.reduce(_ unionAll _)
       .select(col("mode"), col("band"), col("tIdx"), col("ty"), col("tx"),
-        col("width"), col("nodata"), posexplode(decode(col("data"), col("dtype"))))
+        col("width"), col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .select(col("mode"), col("band"), col("tIdx").as("tidx"),
         (col("ty") * 256 + (col("pos") / col("width")).cast("int")).as("gpy"),
         (col("tx") * 256 + (col("pos") % col("width")).cast("int")).as("gpx"),
@@ -421,12 +411,10 @@ private[rasterops] trait RasterCellsQueries {
        |ORDER BY mode, band, tidx, gpy""".stripMargin
   def overviewCells(spark: SparkSession): DataFrame = {
     val (items, schemas) = parsed()
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     Load.load(spark, items, schemas, bands = Seq("red"), groupby = "id",
       chunks = 64, dtype = Some("float64")).tiles
       .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        col("nodata"), posexplode(decode(col("data"), col("dtype"))))
+        col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .select(col("band"), col("tIdx").as("tidx"),
         (col("ty") * 64 + (col("pos") / col("width")).cast("int")).as("gy"),
         (col("tx") * 64 + (col("pos") % col("width")).cast("int")).as("gx"),
@@ -439,7 +427,7 @@ private[rasterops] trait RasterCellsQueries {
         .withColumn("lvl", lit(lvl))
     }.reduce(_ unionAll _)
       .select(col("lvl"), col("band"), col("tIdx"), col("ty"), col("tx"),
-        col("width"), col("nodata"), posexplode(decode(col("data"), col("dtype"))))
+        col("width"), col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .select(col("lvl"), col("band"), col("tIdx").as("tidx"), col("ty"),
         col("tx"),
         (col("pos") / col("width")).cast("int").as("py"),

@@ -66,8 +66,6 @@ private[rasterops] trait RasterLoadQueries {
     * `raster_resample_cells`/`raster_resample_conv`). */
   def loadResampling(spark: SparkSession): DataFrame = {
     val (items, schemas) = parsed()
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     Seq("nearest", "bilinear", "average", "mode", "sum", "cubic", "lanczos").map { m =>
       Load.load(spark, items, schemas, bands = Seq("red"),
         groupby = "solar_day", chunks = 64,
@@ -76,7 +74,7 @@ private[rasterops] trait RasterLoadQueries {
         .withColumn("mode", lit(m))
     }.reduce(_ unionAll _)
       .select(col("mode"), col("band"), col("tIdx"), col("ty"), col("tx"),
-        col("width"), col("nodata"), posexplode(decode(col("data"), col("dtype"))))
+        col("width"), col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .select(col("mode"), col("band"), col("tIdx").as("tidx"),
         col("ty"), col("tx"),
         (col("pos") / col("width")).cast("int").as("py"),
@@ -130,11 +128,9 @@ private[rasterops] trait RasterLoadQueries {
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 32,
       geopolygon = Some(tri), resolution = Some(10.0))
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     res.tiles
       .select(col("band"), col("tIdx").as("tidx"), col("ty"), col("tx"),
-        posexplode(decode(col("data"), col("dtype"))))
+        posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .groupBy("band", "tidx", "ty", "tx")
       .agg(count(lit(1)).as("n_px"),
         sum(when(isnan(col("col")), 0L)
@@ -257,15 +253,13 @@ private[rasterops] trait RasterLoadQueries {
     * the join — and re-aggregates the bilinear nir half. */
   def loadResamplingMixed(spark: SparkSession): DataFrame = {
     val (items, schemas) = parsed()
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     Load.load(spark, items, schemas, bands = Seq("red", "nir"),
         groupby = "solar_day", chunks = 64,
         crs = Some("EPSG:3857"), resolution = Some(30.0),
         resampling = Map("red" -> "nearest", "nir" -> "bilinear"),
         dtype = Some("float64")).tiles
       .select(col("band"), col("tIdx"), col("ty"), col("tx"),
-        col("width"), col("nodata"), posexplode(decode(col("data"), col("dtype"))))
+        col("width"), col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .select(col("band"), col("tIdx").as("tidx"),
         col("ty"), col("tx"),
         (col("pos") / col("width")).cast("int").as("py"),
@@ -329,12 +323,10 @@ private[rasterops] trait RasterLoadQueries {
   def loadMultigrid(spark: SparkSession): DataFrame = {
     val jsons = Fixtures.writeScenesMultigrid(NScenes)
     val (items, schemas) = parsedOf(jsons)
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     def landCells(tiles: DataFrame, path: String): Unit =
       tiles
         .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-          col("nodata"), posexplode(decode(col("data"), col("dtype"))))
+          col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
         .select(col("band"), col("tIdx").as("tidx"),
           (col("ty") * 64 + (col("pos") / col("width")).cast("int")).as("gy"),
           (col("tx") * 64 + (col("pos") % col("width")).cast("int")).as("gx"),

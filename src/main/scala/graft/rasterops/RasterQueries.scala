@@ -47,12 +47,10 @@ object RasterQueries
     * batch-vs-streaming comparisons key on (band, time, ty, tx). Shared
     * by the streaming-ingest anchor and its batch twin. */
   private[rasterops] def pixelsByTime(df: DataFrame): DataFrame = {
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     df.select(col("band"),
         date_format(col("time"), "yyyy-MM-dd HH:mm:ss").as("t"),
         col("ty"), col("tx"), col("width"),
-        posexplode(decode(col("data"), col("dtype"))))
+        posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .select(col("band"), col("t"), col("ty"), col("tx"),
         (col("pos") / col("width")).cast("int").as("py"),
         (col("pos") % col("width")).cast("int").as("px"),

@@ -1,9 +1,9 @@
 package graft.rasterops
-import graft.load.{Fuse, Load}
+import graft.load.{Composite, Fuse, Load, Phenology, PixelFold, Trend}
 import graft.planner.Planner
 import graft.raster.Fixtures
 import graft.stac.StacParse
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Structured-streaming raster surfaces: microbatch scene ingest and
@@ -77,18 +77,18 @@ private[rasterops] trait RasterStreamQueries {
   }
 
   /** Shared scaffold of the standing-merge streaming queries
-    * ([[streamComposite]], [[streamTrend]]): stage the scene JSONs into
-    * a fixed landing dir (cleared at query start — per-invocation
-    * createTempDirectory trees would leak scene JSONs + two parquet
-    * state copies every bench/verify round), drain them one scene per
-    * microbatch through `foreachBatch`, and fold each batch's
-    * `partials` into the standing state with the replay-safe
-    * batchId-guarded swap commit. Takes N (stateName, partials,
-    * mergeCols) SINKS so both standing-merge queries ride ONE drain of
-    * the scene fixture — the scene parse+load (the dominant microbatch
-    * cost) runs once per batch and feeds every sink's partials; each
-    * sink keeps its own state dir, `_batchid` marker, and swap commit,
-    * so replay semantics per state are unchanged from the
+    * ([[streamComposite]], [[streamTrend]], [[streamPhenology]]): stage
+    * the scene JSONs into a fixed landing dir (cleared at query start —
+    * per-invocation createTempDirectory trees would leak scene JSONs +
+    * two parquet state copies every bench/verify round), drain them one
+    * scene per microbatch through `foreachBatch`, and fold each batch
+    * into the standing state with the replay-safe batchId-guarded swap
+    * commit. Takes N (stateName, fold, t) SINKS so every standing-merge
+    * query rides ONE drain of the scene fixture — the scene parse+load
+    * (the dominant microbatch cost) runs once per batch and feeds every
+    * sink's [[PixelFold.byTile]] partials (`t` is the fold's per-plane
+    * scalar); each sink keeps its own state dir, `_batchid` marker, and
+    * swap commit, so replay semantics per state are unchanged from the
     * one-sink scaffold. Returns one state path per sink. The replay
     * guard runs BEFORE the expensive parse+load: foreachBatch is
     * at-least-once, and a retried microbatch must not double-merge its
@@ -97,10 +97,7 @@ private[rasterops] trait RasterStreamQueries {
       landingName: String,
       jsons: Seq[String], grid: graft.geo.GeoBox,
       schemas: Map[String, graft.model.CollectionMetadata],
-      sinks: Seq[(String, DataFrame => DataFrame,
-        Seq[(String,
-          (org.apache.spark.sql.Column, org.apache.spark.sql.Column)
-            => org.apache.spark.sql.Column)])]): Seq[String] = {
+      sinks: Seq[(String, PixelFold[_], Column)]): Seq[String] = {
     def resetDir(p: java.nio.file.Path): java.nio.file.Path = {
       def rm(d: java.io.File): Unit = {
         Option(d.listFiles()).foreach(_.foreach(rm))
@@ -139,9 +136,9 @@ private[rasterops] trait RasterStreamQueries {
             bands = Seq("red", "nir"), groupby = "id", chunks = 64,
             geobox = Some(grid))
           pending.foreach { i =>
-            val (_, partials, mergeCols) = sinks(i)
-            commitMergeWith(spark, statePaths(i), batchId,
-              partials(res.tiles), mergeCols)
+            val fold = sinks(i)._2
+            commitMerge(spark, statePaths(i), batchId,
+              PixelFold.byTile(spark, res.tiles, fold, sinks(i)._3), fold)
           }
         }
         ()
@@ -155,12 +152,12 @@ private[rasterops] trait RasterStreamQueries {
   /** Session memo of [[runMergeStream]] over the contract scene
     * fixture with ALL standing-merge sinks: the drain (stream setup +
     * per-scene parse+load, ~3 s each when run twice) happens once per
-    * build and `stream_composite` / `stream_trend` each summarize their
-    * own state. The fixture is session-constant (synthetic scenes,
-    * independent of the sf dir), so the memo can never serve stale
-    * state to a different input; a rebuild resets the state dirs
-    * (`runMergeStream.resetDir`). One key per application; nothing
-    * pinned to release. */
+    * build and `stream_composite` / `stream_trend` / `stream_phenology`
+    * each summarize their own state. The fixture is session-constant
+    * (synthetic scenes, independent of the sf dir), so the memo can
+    * never serve stale state to a different input; a rebuild resets the
+    * state dirs (`runMergeStream.resetDir`). One key per application;
+    * nothing pinned to release. */
   private val mergedStates = new graft.BoundedCache[Seq[String]](1, _ => ())
 
   /** (composite, trend, peak) standing-state paths. */
@@ -170,65 +167,21 @@ private[rasterops] trait RasterStreamQueries {
         Fixtures.writeScenes(NScenes).map(_.replaceAll("\n", " "))
       val (allItems, allSchemas) = parsed()
       val grid = Planner.outputGeobox(allItems, allSchemas).get
+      val days = PixelFold.dayOf(TrendAnchorSec)
       runMergeStream(spark, "graft_stream_merge_landing",
         jsons, grid, allSchemas, Seq(
-          ("graft_stream_comp_state", compositePartials(spark)(_),
-            CompositeMergeCols),
-          ("graft_stream_trend_state", trendPartials(spark)(_),
-            TrendMergeCols),
-          ("graft_stream_peak_state", peakPartials(spark)(_),
-            PeakMergeCols)))
+          ("graft_stream_comp_state", new Composite.PixelComposite, lit(0.0)),
+          ("graft_stream_trend_state", new Trend.PixelTrend, days),
+          ("graft_stream_peak_state", new Phenology.PixelPeak, days)))
     }
-
-  /** Batch tiles -> composite partial buffer rows (one per
-    * band/ty/tx). */
-  private def compositePartials(spark: SparkSession)(tiles: DataFrame)
-      : DataFrame = {
-    import spark.implicits._
-    tiles
-        .select(col("band"), col("ty"), col("tx"), col("data"),
-          col("dtype"), col("nodata"), col("width"), col("height"))
-        .as[(String, Int, Int, Array[Byte], String, Double, Int, Int)]
-        .groupByKey { case (band, ty, tx, _, _, _, _, _) => (band, ty, tx) }
-        .mapGroups { (key, it) =>
-          val (band, ty, tx) = key
-          var sum: Array[Double] = null
-          var mn: Array[Double] = null
-          var mx: Array[Double] = null
-          var cnt: Array[Int] = null
-          it.foreach { case (_, _, _, data, dtype, nodata, w, h) =>
-            val n = w * h
-            if (sum == null) {
-              sum = new Array[Double](n)
-              mn = Array.fill(n)(Double.PositiveInfinity)
-              mx = Array.fill(n)(Double.NegativeInfinity)
-              cnt = new Array[Int](n)
-            }
-            val px = Fuse.decode(data, dtype)
-            var i = 0
-            while (i < n) {
-              val v = px(i)
-              if (!(v.isNaN || v == nodata)) {
-                sum(i) += v
-                if (v < mn(i)) mn(i) = v
-                if (v > mx(i)) mx(i) = v
-                cnt(i) += 1
-              }
-              i += 1
-            }
-          }
-          (band, ty, tx, sum, mn, mx, cnt)
-        }
-        .toDF("band", "ty", "tx", "sum", "mn", "mx", "cnt")
-  }
 
   /** Streaming RUNNING COMPOSITE (beyond the reference): scenes arrive
     * one per microbatch and fold into a STANDING per-tile composite
-    * state table — one row per (band, ty, tx) holding per-pixel
-    * (sum, min, max, count) plane ARRAYS. The composite is mergeable,
-    * so each batch computes its own partial buffers (task-local decode
-    * + accumulate) and merges them into the standing table with a
-    * full-outer join and `zip_with` array arithmetic — the
+    * state table — one row per (band, ty, tx) holding the
+    * [[Composite.PixelComposite]] buffer (count, sum, min, max plane
+    * ARRAYS). The composite is mergeable, so each batch computes its own
+    * partial buffers with the batch fold and merges them into the
+    * standing table with the fold's own merge — the
     * continental-running-mosaic topology: state is one buffer set per
     * tile (never the scene history), each batch's work is
     * metadata-driven, and at 100 TB the swap-dir state table becomes a
@@ -238,9 +191,9 @@ private[rasterops] trait RasterStreamQueries {
     * parquet reader), a retried at-least-once microbatch is skipped,
     * and the swap renames the old state ASIDE before promoting `_next`
     * (a death mid-swap leaves `_old` to recover from, never nothing).
-    * The drain itself is shared with [[streamTrend]] via
-    * [[ensureMergeStates]] — one stream pass feeds both standing
-    * states.
+    * The drain itself is shared with [[streamTrend]] and
+    * [[streamPhenology]] via [[ensureMergeStates]] — one stream pass
+    * feeds every standing state.
     *
     * Oracle: the streamed state must equal the across-time statistics
     * of a one-shot batch load of the same scenes — the per-time pixel
@@ -248,7 +201,7 @@ private[rasterops] trait RasterStreamQueries {
     * per pixel and the quantized per-tile summary (valid values are
     * uint16 integers, so double sums are exact and the ×100 rounding
     * is order-independent). A dropped batch, double merge, or wrong
-    * zip_with breaks the hash. */
+    * merge breaks the hash. */
   def streamComposite(spark: SparkSession): DataFrame = {
     val statePath = ensureMergeStates(spark)(0)
     val (allItems, allSchemas) = parsed()
@@ -259,11 +212,9 @@ private[rasterops] trait RasterStreamQueries {
     val res = Load.load(spark, allItems, allSchemas,
       bands = Seq("red", "nir"), groupby = "id", chunks = 64,
       geobox = Some(grid))
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
     res.tiles
       .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        col("nodata"), posexplode(decode(col("data"), col("dtype"))))
+        col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .select(col("band"), col("tIdx").as("tidx"), col("ty"), col("tx"),
         (col("pos") / col("width")).cast("int").as("py"),
         (col("pos") % col("width")).cast("int").as("px"),
@@ -273,6 +224,9 @@ private[rasterops] trait RasterStreamQueries {
 
     // summary of the STREAMED state (quantized, order-exact)
     spark.read.parquet(statePath)
+      .select(col("band"), col("ty"), col("tx"), col("buf.n").as("cnt"),
+        col("buf.planes")(0).as("sum"), col("buf.planes")(1).as("mn"),
+        col("buf.planes")(2).as("mx"))
       .select(col("band"), col("ty"), col("tx"),
         expr("size(cnt)").as("n_px"),
         expr("aggregate(cnt, 0L, (a, c) -> a + c)").as("cnt_total"),
@@ -303,51 +257,24 @@ private[rasterops] trait RasterStreamQueries {
       "UTF-8").trim.toLong
   }
 
-  /** Merge one batch's partial buffers into the standing state and
-    * commit with a replay-safe swap. Idempotent per batchId: a retried
-    * microbatch (foreachBatch is at-least-once) is a no-op. The swap
-    * renames the current state ASIDE to `_old` before promoting
-    * `_next`, so a death at any step leaves a recoverable dir — never
-    * the rmDir-then-rename window where the standing table is gone. */
-  /** The composite state's per-column element merges. */
-  private[rasterops] val CompositeMergeCols: Seq[(String,
-    (org.apache.spark.sql.Column, org.apache.spark.sql.Column)
-      => org.apache.spark.sql.Column)] = Seq(
-    "sum" -> ((x, y) => x + y),
-    "mn" -> ((x, y) => least(x, y)),
-    "mx" -> ((x, y) => greatest(x, y)),
-    "cnt" -> ((x, y) => x + y))
-
+  /** Merge one batch's partial buffers into the standing state with
+    * the fold's own merge and commit with a replay-safe swap.
+    * Idempotent per batchId: a retried microbatch (foreachBatch is
+    * at-least-once) is a no-op. The swap renames the current state
+    * ASIDE to `_old` before promoting `_next`, so a death at any step
+    * leaves a recoverable dir — never the rmDir-then-rename window where
+    * the standing table is gone. */
   private[graft] def commitMerge(spark: SparkSession, statePath: String,
-      batchId: Long, cur: DataFrame): Unit =
-    commitMergeWith(spark, statePath, batchId, cur, CompositeMergeCols)
-
-  /** [[commitMerge]] generalized over the per-column element merge
-    * functions — the running-trend state reuses the identical swap and
-    * replay protocol with five additive plane columns. */
-  private[graft] def commitMergeWith(spark: SparkSession, statePath: String,
-      batchId: Long, cur: DataFrame,
-      mergeCols: Seq[(String,
-        (org.apache.spark.sql.Column, org.apache.spark.sql.Column)
-          => org.apache.spark.sql.Column)]): Unit = {
+      batchId: Long, cur: Dataset[(String, Int, Int, PixelFold.Buf)],
+      fold: PixelFold[_]): Unit = {
+    import spark.implicits._
     if (batchId <= lastMergedBatch(statePath)) return
     val stateDir = new java.io.File(statePath)
+    // state columns (band, ty, tx, buf) map onto the tuple by position
     val merged =
       if (!stateDir.exists()) cur
-      else {
-        val prev = spark.read.parquet(statePath)
-        def mergeArr(c: String,
-            f: (org.apache.spark.sql.Column, org.apache.spark.sql.Column)
-              => org.apache.spark.sql.Column) =
-          when(col(s"a.$c").isNull, col(s"b.$c"))
-            .when(col(s"b.$c").isNull, col(s"a.$c"))
-            .otherwise(zip_with(col(s"a.$c"), col(s"b.$c"), f))
-            .as(c)
-        prev.as("a").join(cur.as("b"), Seq("band", "ty", "tx"),
-            "full_outer")
-          .select(Seq(col("band"), col("ty"), col("tx")) ++
-            mergeCols.map { case (c, f) => mergeArr(c, f) }: _*)
-      }
+      else PixelFold.mergeByTile(spark, spark.read.parquet(statePath)
+        .as[(String, Int, Int, PixelFold.Buf)].union(cur), fold)
     val nextDir = new java.io.File(statePath + "_next")
     val oldDir = new java.io.File(statePath + "_old")
     def rmDir(d: java.io.File): Unit = {
@@ -356,7 +283,8 @@ private[rasterops] trait RasterStreamQueries {
     }
     // the merge must materialize BEFORE the old state moves aside —
     // `merged` reads `statePath` lazily, so write-to-next comes first
-    merged.write.mode("overwrite").parquet(nextDir.toString)
+    merged.toDF("band", "ty", "tx", "buf")
+      .write.mode("overwrite").parquet(nextDir.toString)
     // the batchId marker travels inside the parquet dir (underscore
     // prefix = hidden from the reader), so the swap commits state and
     // marker atomically together
@@ -379,108 +307,49 @@ private[rasterops] trait RasterStreamQueries {
     * numbers keep the standing sums order-exact. */
   private[rasterops] val TrendAnchorSec = 1577836800L
 
-  /** Streaming RUNNING TREND (beyond the reference): the per-pixel OLS
-    * sums (n, Σt, Σt², Σv, Σtv) are MERGEABLE, so a standing trend map
-    * updates per microbatch exactly like [[streamComposite]]'s
-    * composite — each batch computes its own partial sum planes
-    * task-locally and folds them into the standing table with the same
-    * replay-safe batchId-guarded swap commit ([[commitMergeWith]], all
-    * five columns additive); the drain is shared with
-    * [[streamComposite]] via [[ensureMergeStates]] — one stream pass
-    * feeds both standing states. The slope/intercept are DERIVED from the
-    * standing sums at read time, never stored — the state stays
-    * merge-closed. Oracle: the streamed state must equal the one-shot
-    * batch OLS of the same scenes; the batch load's raw pixel series
-    * lands and DuckDB recomputes the sums and the identical closed
-    * form (anchored at the same fixed epoch). A dropped or
-    * double-merged batch shifts every sum and breaks the hash. */
-  /** The running-trend state's per-column element merges: all five OLS
-    * sum planes are additive. */
-  private[rasterops] val TrendMergeCols: Seq[(String,
-    (org.apache.spark.sql.Column, org.apache.spark.sql.Column)
-      => org.apache.spark.sql.Column)] =
-    Seq("n", "st", "stt", "sv", "stv").map(c =>
-      (c, (x: org.apache.spark.sql.Column,
-           y: org.apache.spark.sql.Column) => x + y))
-
-  /** Batch tiles -> partial OLS sum planes (one row per band/ty/tx). */
-  private def trendPartials(spark: SparkSession)(tiles: DataFrame)
-      : DataFrame = {
-    import spark.implicits._
-    // local copy: a trait-member reference inside mapGroups would drag
-    // the whole (non-serializable) registry object into the closure
-    val anchorSec = TrendAnchorSec
-    tiles
-        .select(col("band"), col("ty"), col("tx"), col("data"),
-          col("dtype"), col("nodata"), col("width"), col("height"),
-          unix_timestamp(col("time")).as("tsec"))
-        .as[(String, Int, Int, Array[Byte], String, Double, Int, Int, Long)]
-        .groupByKey { case (band, ty, tx, _, _, _, _, _, _) => (band, ty, tx) }
-        .mapGroups { (key, it) =>
-          val (band, ty, tx) = key
-          var n: Array[Int] = null
-          var st: Array[Double] = null
-          var stt: Array[Double] = null
-          var sv: Array[Double] = null
-          var stv: Array[Double] = null
-          var tw = -1
-          var th = -1
-          it.foreach { case (_, _, _, data, dtype, nodata, w, h, tsec) =>
-            val m = w * h
-            if (n == null) {
-              tw = w; th = h
-              n = new Array[Int](m); st = new Array[Double](m)
-              stt = new Array[Double](m); sv = new Array[Double](m)
-              stv = new Array[Double](m)
-            }
-            // same shape contract as Trend.PixelTrend / Anomaly.PixelStats:
-            // fail loudly on a (w,h) mismatch within a tile group instead of
-            // an ArrayIndexOutOfBounds or a silent truncation
-            require(w == tw && h == th,
-              s"tile shape mismatch in group ($band,$ty,$tx): " +
-                s"(${w}x$h) vs (${tw}x$th)")
-            val td = math.floor((tsec - anchorSec) / 86400.0 + 0.5)
-            val px = Fuse.decode(data, dtype)
-            var i = 0
-            while (i < m) {
-              val v = px(i)
-              if (!(v.isNaN || v == nodata)) {
-                n(i) += 1; st(i) += td; stt(i) += td * td
-                sv(i) += v; stv(i) += td * v
-              }
-              i += 1
-            }
-          }
-          (band, ty, tx, n, st, stt, sv, stv)
-        }
-        .toDF("band", "ty", "tx", "n", "st", "stt", "sv", "stv")
-  }
-
-  def streamTrend(spark: SparkSession): DataFrame = {
-    val statePath = ensureMergeStates(spark)(1)
+  /** Oracle anchor of the standing trend and peak maps: the same
+    * scenes in ONE batch load, the raw per-time pixel series landed at
+    * `path` for DuckDB's independent recompute. */
+  private def landBatchSeries(spark: SparkSession, path: String): Unit = {
     val (allItems, allSchemas) = parsed()
     val grid = Planner.outputGeobox(allItems, allSchemas).get
-
-    // oracle anchor: the same scenes in ONE batch load, raw per-time
-    // pixel series landed for DuckDB's independent OLS recompute
-    val res = Load.load(spark, allItems, allSchemas,
-      bands = Seq("red", "nir"), groupby = "id", chunks = 64,
-      geobox = Some(grid))
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
-    res.tiles
+    Load.load(spark, allItems, allSchemas,
+        bands = Seq("red", "nir"), groupby = "id", chunks = 64,
+        geobox = Some(grid)).tiles
       .select(col("band"), col("tIdx").as("tidx"), col("ty"), col("tx"),
         unix_timestamp(col("time")).as("tsec"), col("nodata"),
-        posexplode(decode(col("data"), col("dtype"))))
+        posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
       .select(col("band"), col("tidx"), col("ty"), col("tx"), col("tsec"),
         col("pos"),
         when(isnan(col("col")) || col("col") === col("nodata"),
           lit(Double.NaN)).otherwise(col("col")).as("value"))
-      .write.mode("overwrite").parquet(StreamTrendCellsPath)
+      .write.mode("overwrite").parquet(path)
+  }
+
+  /** Streaming RUNNING TREND (beyond the reference): the per-pixel OLS
+    * sums (n, Σt, Σt², Σv, Σtv) are MERGEABLE, so a standing trend map
+    * updates per microbatch exactly like [[streamComposite]]'s
+    * composite — each batch folds its tiles with [[Trend.PixelTrend]]
+    * and merges them into the standing table with the fold's own merge
+    * inside the same replay-safe batchId-guarded swap commit
+    * ([[commitMerge]]); the drain is shared via [[ensureMergeStates]].
+    * The slope/intercept are DERIVED from the standing sums at read
+    * time, never stored — the state stays merge-closed. Oracle: the
+    * streamed state must equal the one-shot batch OLS of the same
+    * scenes; the batch load's raw pixel series lands and DuckDB
+    * recomputes the sums and the identical closed form (anchored at the
+    * same fixed epoch). A dropped or double-merged batch shifts every
+    * sum and breaks the hash. */
+  def streamTrend(spark: SparkSession): DataFrame = {
+    val statePath = ensureMergeStates(spark)(1)
+    landBatchSeries(spark, StreamTrendCellsPath)
 
     // summary of the STREAMED state: slope/intercept derived from the
     // standing sums per pixel, quantized per tile
     spark.read.parquet(statePath)
+      .select(col("band"), col("ty"), col("tx"), col("buf.n").as("n"),
+        col("buf.planes")(0).as("st"), col("buf.planes")(1).as("stt"),
+        col("buf.planes")(2).as("sv"), col("buf.planes")(3).as("stv"))
       .select(col("band"), col("ty"), col("tx"),
         posexplode(arrays_zip(col("n"), col("st"), col("stt"),
           col("sv"), col("stv"))))
@@ -505,116 +374,33 @@ private[rasterops] trait RasterStreamQueries {
       .orderBy("band", "ty", "tx")
   }
 
-  /** The standing peak-argmax state's merges: `bd` (array of
-    * (value, day) structs) picks the better observation per pixel —
-    * larger value, ties to the smaller day; `-Inf` marks "no valid
-    * observation yet" so a real value always wins. NOTE the sentinel
-    * is −Inf and NOT NaN: Spark SQL orders NaN ABOVE every number, so
-    * a NaN sentinel would beat every real observation in the `>`
-    * comparison. The comparison is associative+commutative, so the
-    * standing state equals the one-shot batch argmax regardless of
-    * batch arrival order. `cnt` is plain additive. */
-  private[graft] val PeakMergeCols: Seq[(String,
-    (org.apache.spark.sql.Column, org.apache.spark.sql.Column)
-      => org.apache.spark.sql.Column)] = Seq(
-    "bd" -> ((x, y) =>
-      when(y("_1") > x("_1") ||
-        (y("_1") === x("_1") && y("_2") < x("_2")), y).otherwise(x)),
-    "cnt" -> ((x, y) => x + y))
-
-  /** Batch tiles -> standing-argmax partial planes: one row per
-    * (band, ty, tx) with `bd` = (best value, best day) struct planes
-    * (−Inf/−1 where the batch has no valid observation) and `cnt`. */
-  private def peakPartials(spark: SparkSession)(tiles: DataFrame)
-      : DataFrame = {
-    import spark.implicits._
-    val anchorSec = TrendAnchorSec
-    tiles
-      .select(col("band"), col("ty"), col("tx"), col("data"),
-        col("dtype"), col("nodata"), col("width"), col("height"),
-        unix_timestamp(col("time")).as("tsec"))
-      .as[(String, Int, Int, Array[Byte], String, Double, Int, Int, Long)]
-      .groupByKey { case (band, ty, tx, _, _, _, _, _, _) => (band, ty, tx) }
-      .mapGroups { (key, it) =>
-        val (band, ty, tx) = key
-        var bv: Array[Double] = null
-        var bd: Array[Double] = null
-        var cnt: Array[Int] = null
-        var tw = -1
-        var th = -1
-        it.foreach { case (_, _, _, data, dtype, nodata, w, h, tsec) =>
-          val m = w * h
-          if (bv == null) {
-            tw = w; th = h
-            bv = Array.fill(m)(Double.NegativeInfinity)
-            bd = Array.fill(m)(-1.0)
-            cnt = new Array[Int](m)
-          }
-          require(w == tw && h == th,
-            s"tile shape mismatch in group ($band,$ty,$tx): " +
-              s"(${w}x$h) vs (${tw}x$th)")
-          val td = math.floor((tsec - anchorSec) / 86400.0 + 0.5)
-          val px = Fuse.decode(data, dtype)
-          var i = 0
-          while (i < m) {
-            val v = px(i)
-            if (!(v.isNaN || v == nodata)) {
-              cnt(i) += 1
-              if (v > bv(i) || (v == bv(i) && td < bd(i))) {
-                bv(i) = v; bd(i) = td
-              }
-            }
-            i += 1
-          }
-        }
-        (band, ty, tx, bv.zip(bd), cnt)
-      }
-      .toDF("band", "ty", "tx", "bd", "cnt")
-  }
-
   /** Streaming STANDING PEAK MAP (beyond the reference): the
     * peak-of-season argmax ([[graft.load.Phenology]]'s batch
-    * semantics) maintained incrementally — each microbatch's partial
-    * (best value, best day) planes fold into the standing state with
-    * the SAME replay-safe batchId-guarded swap commit as the other
-    * standing-merge sinks, on the SAME shared drain
+    * semantics) maintained incrementally — each microbatch folds its
+    * tiles with [[Phenology.PixelPeak]] and merges them into the
+    * standing state with the fold's own merge (one tie-break, one NaN
+    * "no observation" sentinel) inside the SAME replay-safe
+    * batchId-guarded swap commit, on the SAME shared drain
     * ([[ensureMergeStates]], third sink). The argmax merge is
     * associative and commutative, so the streamed state equals the
     * one-shot batch argmax of the same scenes — which is exactly what
     * the oracle recomputes from the landed raw series. */
   def streamPhenology(spark: SparkSession): DataFrame = {
     val statePath = ensureMergeStates(spark)(2)
-    val (allItems, allSchemas) = parsed()
-    val grid = Planner.outputGeobox(allItems, allSchemas).get
-
-    // oracle anchor: the same scenes in ONE batch load, raw per-time
-    // pixel series landed for DuckDB's independent argmax recompute
-    val res = Load.load(spark, allItems, allSchemas,
-      bands = Seq("red", "nir"), groupby = "id", chunks = 64,
-      geobox = Some(grid))
-    val decode = udf { (data: Array[Byte], dtype: String) =>
-      Fuse.decode(data, dtype) }
-    res.tiles
-      .select(col("band"), col("tIdx").as("tidx"), col("ty"), col("tx"),
-        unix_timestamp(col("time")).as("tsec"), col("nodata"),
-        posexplode(decode(col("data"), col("dtype"))))
-      .select(col("band"), col("tidx"), col("ty"), col("tx"), col("tsec"),
-        col("pos"),
-        when(isnan(col("col")) || col("col") === col("nodata"),
-          lit(Double.NaN)).otherwise(col("col")).as("value"))
-      .write.mode("overwrite").parquet(StreamPeakCellsPath)
+    landBatchSeries(spark, StreamPeakCellsPath)
 
     // summary of the STREAMED state (quantized, order-exact)
     spark.read.parquet(statePath)
+      .select(col("band"), col("ty"), col("tx"), col("buf.n").as("cnt"),
+        col("buf.planes")(0).as("best"), col("buf.planes")(1).as("day"))
       .select(col("band"), col("ty"), col("tx"),
         expr("aggregate(cnt, 0, (s, c) -> s + c)").as("n_obs"),
-        expr("aggregate(bd, 0, (s, e) -> s + " +
-          "if(e._1 = CAST('-Infinity' AS DOUBLE), 0, 1))").as("n_peak"),
-        expr("aggregate(bd, 0L, (s, e) -> s + " +
-          "if(e._1 = CAST('-Infinity' AS DOUBLE), 0L, " +
-          "CAST(round(e._1 * 100) AS BIGINT)))").as("peak_q"),
-        expr("aggregate(bd, 0L, (s, e) -> s + " +
-          "if(e._2 < 0, 0L, CAST(e._2 AS BIGINT)))").as("day_sum"))
+        expr("aggregate(best, 0, (s, v) -> s + if(isnan(v), 0, 1))")
+          .as("n_peak"),
+        expr("aggregate(best, 0L, (s, v) -> s + " +
+          "if(isnan(v), 0L, CAST(round(v * 100) AS BIGINT)))").as("peak_q"),
+        expr("aggregate(day, 0L, (s, d) -> s + " +
+          "if(d < 0, 0L, CAST(d AS BIGINT)))").as("day_sum"))
       .orderBy("band", "ty", "tx")
   }
 

@@ -113,28 +113,29 @@ class StreamRecoverySpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_commit_merge")
     val statePath = root.resolve("state").toString
 
+    val fold = new load.Composite.PixelComposite
     def buf(b: String, s: Double, c: Int) =
-      Seq((b, 0, 0, Array(s, s), Array(s, s), Array(s, s), Array(c, c)))
-        .toDF("band", "ty", "tx", "sum", "mn", "mx", "cnt")
+      Seq((b, 0, 0, load.PixelFold.Buf(Array(c, c),
+        Array(Array(s, s), Array(s, s), Array(s, s)), 2, 1))).toDS()
     def sums(): Map[String, (Double, Int)] =
       spark.read.parquet(statePath)
-        .select(col("band"), expr("sum[0]"), expr("cnt[0]"))
+        .select(col("band"), expr("buf.planes[0][0]"), expr("buf.n[0]"))
         .collect().map(r => r.getString(0) ->
           (r.getDouble(1), r.getInt(2))).toMap
 
     rasterops.RasterQueries.commitMerge(spark, statePath, 0L,
-      buf("red", 10.0, 1))
+      buf("red", 10.0, 1), fold)
     assert(sums() == Map("red" -> (10.0, 1)))
     assert(rasterops.RasterQueries.lastMergedBatch(statePath) == 0L)
 
     // a RETRIED batch 0 (at-least-once delivery) must not double-merge
     rasterops.RasterQueries.commitMerge(spark, statePath, 0L,
-      buf("red", 10.0, 1))
+      buf("red", 10.0, 1), fold)
     assert(sums() == Map("red" -> (10.0, 1)),
       "replayed batchId double-merged into the standing buffers")
 
     rasterops.RasterQueries.commitMerge(spark, statePath, 1L,
-      buf("red", 5.0, 2))
+      buf("red", 5.0, 2), fold)
     assert(sums() == Map("red" -> (15.0, 3)))
 
     // crash between the two swap renames: state moved aside to _old,
@@ -146,47 +147,50 @@ class StreamRecoverySpec extends AnyFunSuite {
       "mid-swap crash did not recover the standing state from _old")
     assert(sums() == Map("red" -> (15.0, 3)))
     rasterops.RasterQueries.commitMerge(spark, statePath, 2L,
-      buf("red", 1.0, 1))
+      buf("red", 1.0, 1), fold)
     assert(sums() == Map("red" -> (16.0, 4)))
     assert(!new java.io.File(statePath + "_old").exists(),
       "recovery dir must be cleared after a successful commit")
   }
 
-  /** The standing peak-argmax merge (streamPhenology's sink): larger
-    * value wins, ties to the smaller day, the −Inf "no valid obs"
-    * sentinel always loses to a real value — and the merge is
-    * order-invariant, so any batch arrival order lands the same
-    * standing state. */
-  test("PeakMergeCols: argmax semantics, -Inf sentinel, order-invariance") {
+  /** The standing peak-argmax merge (streamPhenology's sink) is the
+    * batch fold's own merge: larger value wins, ties to the smaller
+    * day, the NaN "no valid obs" sentinel always loses to a real value
+    * — and the merge is order-invariant, so any batch arrival order
+    * lands the same standing state. */
+  test("peak fold merge: argmax semantics, NaN sentinel, order-invariance") {
     import spark.implicits._
-    val negInf = Double.NegativeInfinity
+    val none = Double.NaN
+    val fold = new load.Phenology.PixelPeak
 
     def buf(vd: Seq[(Double, Double)], c: Int) =
-      Seq(("red", 0, 0, vd.toArray, Array.fill(vd.length)(c)))
-        .toDF("band", "ty", "tx", "bd", "cnt")
+      Seq(("red", 0, 0, load.PixelFold.Buf(Array.fill(vd.length)(c),
+        Array(vd.map(_._1).toArray, vd.map(_._2).toArray), vd.length, 1)))
+        .toDS()
+    // NaN-safe view of a pixel: None for the sentinel value
+    def view(vd: Seq[(Double, Double)]) =
+      vd.map { case (v, d) => (Option(v).filterNot(_.isNaN), d) }
     def state(path: String): (Seq[(Double, Double)], Seq[Int]) = {
-      val r = spark.read.parquet(path)
-        .selectExpr("bd", "cnt").head()
-      (r.getSeq[org.apache.spark.sql.Row](0)
-        .map(x => (x.getDouble(0), x.getDouble(1))),
-        r.getSeq[Int](1))
+      val b = spark.read.parquet(path)
+        .as[(String, Int, Int, load.PixelFold.Buf)].head()._4
+      (b.planes(0).toSeq.zip(b.planes(1)), b.n.toSeq)
     }
 
     // px0: b wins on value; px1: tie -> smaller day (a); px2: a is the
     // sentinel -> b's real value wins; px3: both sentinel -> stays
-    val a = Seq((10.0, 5.0), (7.0, 2.0), (negInf, -1.0), (negInf, -1.0))
-    val b = Seq((12.0, 9.0), (7.0, 8.0), (3.0, 4.0), (negInf, -1.0))
-    val want = Seq((12.0, 9.0), (7.0, 2.0), (3.0, 4.0), (negInf, -1.0))
+    val a = Seq((10.0, 5.0), (7.0, 2.0), (none, -1.0), (none, -1.0))
+    val b = Seq((12.0, 9.0), (7.0, 8.0), (3.0, 4.0), (none, -1.0))
+    val want = Seq((12.0, 9.0), (7.0, 2.0), (3.0, 4.0), (none, -1.0))
 
     for ((first, second, name) <- Seq((a, b, "ab"), (b, a, "ba"))) {
       val root = Files.createTempDirectory(s"graft_peak_merge_$name")
       val path = root.resolve("state").toString
-      rasterops.RasterQueries.commitMergeWith(spark, path, 0L,
-        buf(first, 1), rasterops.RasterQueries.PeakMergeCols)
-      rasterops.RasterQueries.commitMergeWith(spark, path, 1L,
-        buf(second, 2), rasterops.RasterQueries.PeakMergeCols)
+      rasterops.RasterQueries.commitMerge(spark, path, 0L,
+        buf(first, 1), fold)
+      rasterops.RasterQueries.commitMerge(spark, path, 1L,
+        buf(second, 2), fold)
       val (bd, cnt) = state(path)
-      assert(bd == want, s"order $name: $bd != $want")
+      assert(view(bd) == view(want), s"order $name: $bd != $want")
       assert(cnt == Seq(3, 3, 3, 3), s"order $name: cnt $cnt")
     }
   }
