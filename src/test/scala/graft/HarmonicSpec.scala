@@ -5,8 +5,8 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Invariants of the per-pixel harmonic-fit fold: exact recovery of a
-  * noiseless `a + b·cq + c·sq` series and the n≥3 / singular-system
-  * guards (its bit-for-bit mergeability is PixelFoldPropsSpec's). */
+  * noiseless `a + b·cq + c·sq` series, bit-for-bit mergeability on
+  * integer inputs, and the n≥3 / singular-system guards. */
 class HarmonicSpec extends AnyFunSuite {
 
   private def check(prop: Prop): Unit = {
@@ -15,18 +15,28 @@ class HarmonicSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
-  /** Fit one single-pixel plane per (cq, sq, v) observation; the
+  /** Fit one single-pixel plane per (cq, sq, v) observation, split into
+    * `cuts` partial buffers then merged (Nil = one buffer); the
     * observation index stands in for its epoch seconds. */
-  private def fit(obs: Seq[(Double, Double, Double)])
+  private def fit(obs: Seq[(Double, Double, Double)], cuts: Seq[Int] = Nil)
       : (Double, Double, Double, Int) = {
     val agg = new Harmonic.PixelHarmonic(
       obs.zipWithIndex.map { case ((cq, sq, _), i) => i.toLong -> (cq, sq) }
         .toMap)
-    val buf = obs.zipWithIndex.foldLeft(agg.zero) { case (b, ((_, _, v), i)) =>
-      agg.reduce(b, PixelFold.In(i.toDouble,
-        Fuse.encode(Array(v), "float64"), "float64", Double.NaN, 1, 1))
+    val indexed = obs.zipWithIndex
+    val groups =
+      if (cuts.isEmpty) Seq(indexed)
+      else {
+        val bounds = (0 +: cuts.sorted :+ obs.length).distinct
+        bounds.zip(bounds.tail).map { case (a, b) => indexed.slice(a, b) }
+      }
+    val bufs = groups.map { g =>
+      g.foldLeft(agg.zero) { case (b, ((_, _, v), i)) =>
+        agg.reduce(b, PixelFold.In(i.toDouble,
+          Fuse.encode(Array(v), "float64"), "float64", Double.NaN, 1, 1))
+      }
     }
-    val out = agg.finish(buf)
+    val out = agg.finish(bufs.reduce(agg.merge))
     if (out.level.isEmpty) (Double.NaN, Double.NaN, Double.NaN, 0)
     else (out.level(0), out.cosB(0), out.sinB(0), out.count(0))
   }
@@ -51,6 +61,26 @@ class HarmonicSpec extends AnyFunSuite {
       // to double precision
       cnt == n && math.abs(level - a) < 1e-6 &&
         math.abs(cosB - b) < 1e-9 && math.abs(sinB - c) < 1e-9
+    })
+  }
+
+  test("any partition of observations merges bit-for-bit") {
+    val gen = for {
+      n <- Gen.choose(3, 16)
+      vs <- Gen.listOfN(n, Gen.choose(0, 4000))
+      nCuts <- Gen.choose(0, 4)
+      cuts <- Gen.listOfN(nCuts, Gen.choose(1, math.max(1, n - 1)))
+    } yield (vs, cuts)
+    check(Prop.forAll(gen) { case (vs, cuts) =>
+      val bs = basisAt(vs.indices)
+      val obs = bs.zip(vs).map { case ((cq, sq), v) => (cq, sq, v.toDouble) }
+      val one = fit(obs)
+      val split = fit(obs, cuts)
+      // bit-for-bit: integer sums are order-exact, finish is identical
+      (one._1 == split._1 || (one._1.isNaN && split._1.isNaN)) &&
+        (one._2 == split._2 || (one._2.isNaN && split._2.isNaN)) &&
+        (one._3 == split._3 || (one._3.isNaN && split._3.isNaN)) &&
+        one._4 == split._4
     })
   }
 

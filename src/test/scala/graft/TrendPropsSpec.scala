@@ -4,10 +4,12 @@ import graft.load.{Composite, Fuse, PixelFold, Trend}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** ScalaCheck invariants of the per-pixel OLS trend fold: exact
-  * recovery of noiseless linear series and the minimum-observations /
-  * zero-variance guards (the mergeability claim is
-  * PixelFoldPropsSpec's), plus the Theil–Sen rechunk sibling. */
+/** ScalaCheck invariants of the per-pixel OLS trend fold: the
+  * mergeability claim (any partition of the observations into partial
+  * buffers merges to the single-pass result BIT-FOR-BIT on integer
+  * inputs), exact recovery of noiseless linear series, the
+  * minimum-observations / zero-variance guards, and the Theil–Sen
+  * rechunk sibling. */
 class TrendPropsSpec extends AnyFunSuite {
 
   private def check(prop: Prop): Unit = {
@@ -28,16 +30,45 @@ class TrendPropsSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
-  /** Run the fold over one single-pixel plane per (t, v). */
-  private def fit(obs: Seq[(Double, Double)]): (Double, Double, Int) = {
+  /** Run the fold over one single-pixel plane per (t, v), with the
+    * observation list split into `cuts` partial buffers that are then
+    * merged — cuts = Nil means one buffer (the reference). */
+  private def fit(obs: Seq[(Double, Double)], cuts: Seq[Int] = Nil)
+      : (Double, Double, Int) = {
     val agg = new Trend.PixelTrend
-    val buf = obs.foldLeft(agg.zero) { case (b, (t, v)) =>
-      agg.reduce(b, PixelFold.In(t, Fuse.encode(Array(v), "float64"),
-        "float64", Double.NaN, 1, 1))
+    val groups =
+      if (cuts.isEmpty) Seq(obs)
+      else {
+        val bounds = (0 +: cuts.sorted :+ obs.length).distinct
+        bounds.zip(bounds.tail).map { case (a, b) => obs.slice(a, b) }
+      }
+    val bufs = groups.map { g =>
+      g.foldLeft(agg.zero) { case (b, (t, v)) =>
+        agg.reduce(b, PixelFold.In(t, Fuse.encode(Array(v), "float64"),
+          "float64", Double.NaN, 1, 1))
+      }
     }
-    val out = agg.finish(buf)
+    val out = agg.finish(bufs.reduce(agg.merge))
     if (out.slope.isEmpty) (Double.NaN, Double.NaN, 0)
     else (out.slope(0), out.icept(0), out.count(0))
+  }
+
+  test("any partition of observations merges to the one-pass result") {
+    val gen = for {
+      n <- Gen.choose(2, 24)
+      vs <- Gen.listOfN(n, Gen.choose(0, 4000))
+      nCuts <- Gen.choose(0, 4)
+      cuts <- Gen.listOfN(nCuts, Gen.choose(1, math.max(1, n - 1)))
+    } yield (vs.map(_.toDouble), cuts)
+    forAll(gen) { case (vs, cuts) =>
+      // integer days + integer values: sums are order-exact, so the
+      // merged fit must equal the single-buffer fit BIT-FOR-BIT
+      val obs = vs.zipWithIndex.map { case (v, t) => (t.toDouble, v) }
+      val one = fit(obs)
+      val merged = fit(obs, cuts)
+      assert(one == merged,
+        s"merge changed the fit: $one vs $merged (cuts=$cuts)")
+    }
   }
 
   test("noiseless linear series recover slope and intercept exactly") {
