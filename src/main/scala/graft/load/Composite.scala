@@ -405,9 +405,10 @@ object Composite {
   /** The fused gather: the driver plans one unit per group from the
     * load's bins (only bins that exist, so a time with no mask plane
     * gives no plane), and [[Load.BinPlan.mapUnits]] reads and fuses each
-    * unit's bins in the task that holds it, which decodes them as a
-    * rechunk group would decode the tile rows and runs `reduce` over the
-    * whole tile. */
+    * unit's bins in the task that holds it. Each fused bin becomes a
+    * plane in one pass ([[Load.FusedBin.plane]]), bit-identical to the
+    * decoded tile row a rechunk group would gather, and `reduce` runs
+    * over the whole tile. */
   private def fusedGroups(spark: SparkSession, plan: Load.BinPlan,
       jointBands: Boolean)(
       reduce: (Int, Int, Int, Array[Plane], Int, Int) => Iterator[SliceOut])
@@ -417,11 +418,10 @@ object Composite {
       val rs = rows.buffered
       val (ty, tx, w, h) = (rs.head.ty, rs.head.tx, rs.head.width,
         rs.head.height)
-      // the tile row's payload, decoded at the epoch second
-      // `unix_timestamp` gives its time, is what the shuffle gathers
+      // the tile row's pixels at the epoch second `unix_timestamp` gives
+      // its time are what the shuffle gathers
       val planes = rs.map(r => Plane(r.band, r.tIdx,
-        Math.floorDiv(r.time.getTime, 1000L), Fuse.decode(r.data, r.dtype),
-        r.nodata)).toArray
+        Math.floorDiv(r.time.getTime, 1000L), r.plane, r.nodata)).toArray
       reduce(ty, tx, 0, planes, w, h).map(o =>
         TileOut(o.band, o.tIdx, ty, tx, o.planes, o.cnt))
     })

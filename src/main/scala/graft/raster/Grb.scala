@@ -131,8 +131,26 @@ object Grb {
   }
 
   /** Windowed read: only the rows/cols intersecting (x0,y0,w,h) are read
-    * from disk. Returns row-major doubles; unsigned types are widened
-    * (SURVEY §2 hard-part 4).
+    * from disk ([[windowRows]]). Returns row-major doubles; unsigned
+    * types are widened (SURVEY §2 hard-part 4). */
+  def readWindow(path: String, x0: Int, y0: Int, w: Int, h: Int): (Header, Array[Double]) = {
+    val raf = RasterIO.open(path)
+    try {
+      val hd = readHeader(raf, path)
+      val px = new Array[Double](w * h)
+      val dcode = DtypeCodes(hd.dtype)
+      windowRows(raf, hd, x0, y0, w, h) { (row, bb, off) =>
+        decodeRow(bb, off, dcode, px, row * w, w)
+      }
+      (hd, px)
+    } finally raf.close()
+  }
+
+  /** Span-read cap: beyond this, fall back to row-wise reads. */
+  private val MaxSpanBytes: Long = 256L << 20
+
+  /** Reads the window's rows and hands each to `row(r, bb, off)`: row `r`
+    * of the window is the `w` pixels at byte `off` of `bb`.
     *
     * I/O strategy: one contiguous read spanning the whole window (first
     * byte of the first row to last byte of the last row) instead of a
@@ -142,50 +160,39 @@ object Grb {
     * (especially) object storage, and exactly how COG readers coalesce
     * ranged GETs. Falls back to per-row reads only when the gap would
     * blow the span past `MaxSpanBytes`. */
-  def readWindow(path: String, x0: Int, y0: Int, w: Int, h: Int): (Header, Array[Double]) = {
-    val raf = RasterIO.open(path)
-    try {
-      val hd = readHeader(raf, path)
-      require(x0 >= 0 && y0 >= 0 && x0 + w <= hd.width && y0 + h <= hd.height,
-        s"window ($x0,$y0,$w,$h) out of bounds ${hd.width}x${hd.height}")
-      val px = new Array[Double](w * h)
-      val sz = dtypeSize(hd.dtype)
-      val dcode = DtypeCodes(hd.dtype)
-      val rowStride = hd.width.toLong * sz
-      val spanBytes = (h - 1).toLong * rowStride + w.toLong * sz
-      if (spanBytes <= MaxSpanBytes) {
-        val buf = new Array[Byte](spanBytes.toInt)
-        raf.seek(hd.pixelOffset + y0.toLong * rowStride + x0.toLong * sz)
-        raf.readFully(buf)
-        val bb = ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)
-        var row = 0
-        while (row < h) {
-          decodeRow(bb, row.toInt * rowStride.toInt, dcode, px, row * w, w)
-          row += 1
-        }
-      } else {
-        val rowBytes = new Array[Byte](w * sz)
-        val bb = ByteBuffer.wrap(rowBytes).order(ByteOrder.LITTLE_ENDIAN)
-        var row = 0
-        while (row < h) {
-          raf.seek(hd.pixelOffset + (y0 + row).toLong * rowStride + x0.toLong * sz)
-          raf.readFully(rowBytes)
-          decodeRow(bb, 0, dcode, px, row * w, w)
-          row += 1
-        }
+  private def windowRows(raf: RasterInput, hd: Header, x0: Int, y0: Int,
+                         w: Int, h: Int)(row: (Int, ByteBuffer, Int) => Unit): Unit = {
+    require(x0 >= 0 && y0 >= 0 && x0 + w <= hd.width && y0 + h <= hd.height,
+      s"window ($x0,$y0,$w,$h) out of bounds ${hd.width}x${hd.height}")
+    val sz = dtypeSize(hd.dtype)
+    val rowStride = hd.width.toLong * sz
+    val spanBytes = (h - 1).toLong * rowStride + w.toLong * sz
+    if (spanBytes <= MaxSpanBytes) {
+      val buf = new Array[Byte](spanBytes.toInt)
+      raf.seek(hd.pixelOffset + y0.toLong * rowStride + x0.toLong * sz)
+      raf.readFully(buf)
+      val bb = ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)
+      var r = 0
+      while (r < h) { row(r, bb, r * rowStride.toInt); r += 1 }
+    } else {
+      val rowBytes = new Array[Byte](w * sz)
+      val bb = ByteBuffer.wrap(rowBytes).order(ByteOrder.LITTLE_ENDIAN)
+      var r = 0
+      while (r < h) {
+        raf.seek(hd.pixelOffset + (y0 + r).toLong * rowStride + x0.toLong * sz)
+        raf.readFully(rowBytes)
+        row(r, bb, 0)
+        r += 1
       }
-      (hd, px)
-    } finally raf.close()
+    }
   }
 
-  /** Span-read cap: beyond this, fall back to row-wise reads. */
-  private val MaxSpanBytes: Long = 256L << 20
-
-  /** Fused windowed read + first-valid mosaic (A2 paste hot path): decode
-    * the window's pixels straight out of the read buffer into the
-    * still-nodata positions of `out` — no intermediate ROI array, no
-    * remap pass. `srcNodata` NaN means "no nodata value". Returns the
-    * number of newly filled pixels. */
+  /** Fused windowed read + first-valid mosaic (A2 paste hot path): each
+    * row of the window is decoded out of the read buffer into one
+    * row-sized scratch and fused from there into the still-nodata
+    * positions of `out` ([[RasterFormat.fuseRow]]) — no window-sized
+    * array. `srcNodata` NaN means "no nodata value". Returns the number
+    * of newly filled pixels. */
   def fuseWindowInto(path: String, x0: Int, y0: Int, w: Int, h: Int,
                      srcNodata0: Option[Double],
                      out: Array[Double], outW: Int, dx0: Int, dy0: Int,
@@ -194,35 +201,13 @@ object Grb {
     var filled = 0L
     try {
       val hd = readHeader(raf, path)
-      require(x0 >= 0 && y0 >= 0 && x0 + w <= hd.width && y0 + h <= hd.height,
-        s"window ($x0,$y0,$w,$h) out of bounds ${hd.width}x${hd.height}")
-      val sz = dtypeSize(hd.dtype)
       val dcode = DtypeCodes(hd.dtype)
       val sn = srcNodata0.getOrElse(Double.NaN)
-      val rowStride = hd.width.toLong * sz
-      val spanBytes = (h - 1).toLong * rowStride + w.toLong * sz
-      if (spanBytes <= MaxSpanBytes) {
-        val buf = new Array[Byte](spanBytes.toInt)
-        raf.seek(hd.pixelOffset + y0.toLong * rowStride + x0.toLong * sz)
-        raf.readFully(buf)
-        val bb = ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)
-        var row = 0
-        while (row < h) {
-          filled += fuseRow(bb, row * rowStride.toInt, dcode, sn,
-            out, (dy0 + row) * outW + dx0, w, dstNodata)
-          row += 1
-        }
-      } else {
-        val rowBytes = new Array[Byte](w * sz)
-        val bb = ByteBuffer.wrap(rowBytes).order(ByteOrder.LITTLE_ENDIAN)
-        var row = 0
-        while (row < h) {
-          raf.seek(hd.pixelOffset + (y0 + row).toLong * rowStride + x0.toLong * sz)
-          raf.readFully(rowBytes)
-          filled += fuseRow(bb, 0, dcode, sn,
-            out, (dy0 + row) * outW + dx0, w, dstNodata)
-          row += 1
-        }
+      val px = new Array[Double](w)
+      windowRows(raf, hd, x0, y0, w, h) { (row, bb, off) =>
+        decodeRow(bb, off, dcode, px, 0, w)
+        filled += RasterFormat.fuseRow(px, 0, sn, out,
+          (dy0 + row) * outW + dx0, w, dstNodata)
       }
       filled
     } catch {
@@ -234,40 +219,8 @@ object Grb {
     } finally raf.close()
   }
 
-  /** Decode+fuse `n` pixels: write only where `out` is still dstNodata
-    * and the source value is valid. Dtype dispatch per row, not per px. */
-  private def fuseRow(bb: ByteBuffer, off: Int, dcode: Int, sn: Double,
-                      out: Array[Double], outOff: Int, n: Int,
-                      dstNodata: Double): Long = {
-    var filled = 0L
-    var i = 0
-    while (i < n) {
-      val di = outOff + i
-      val cur = out(di)
-      if (cur.isNaN || cur == dstNodata) {
-        val v: Double = (dcode: @annotation.switch) match {
-          case 1 => bb.get(off + i) & 0xff
-          case 2 => bb.get(off + i)
-          case 3 => bb.getShort(off + i * 2) & 0xffff
-          case 4 => bb.getShort(off + i * 2)
-          case 5 => bb.getInt(off + i * 4)
-          case 6 => bb.getLong(off + i * 8).toDouble
-          case 7 => bb.getFloat(off + i * 4)
-          case 8 => bb.getDouble(off + i * 8)
-        }
-        // write src-valid values (reference paste copies verbatim); count
-        // as filled only when distinguishable from dst nodata, so later
-        // sources (which still see a hole there) don't double-count
-        if (!(v.isNaN || v == sn)) { out(di) = v; if (v != dstNodata) filled += 1 }
-      }
-      i += 1
-    }
-    filled
-  }
-
-  /** Decode `n` pixels from `bb` at byte `off` into `out(outOff..)`.
-    * Dtype dispatch hoisted out of the pixel loop (one branch per row,
-    * not per pixel). */
+  /** Decode `n` pixels from `bb` at byte `off` into `out(outOff..)`: one
+    * dtype dispatch per row, then one typed loop. */
   private def decodeRow(bb: ByteBuffer, off: Int, dcode: Int,
                         out: Array[Double], outOff: Int, n: Int): Unit = {
     var i = 0

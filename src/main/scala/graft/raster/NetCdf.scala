@@ -84,32 +84,34 @@ object NetCdf {
 
   // ---------------------------------------------------------------- parse
 
-  private final class Cursor(val bytes: Array[Byte]) {
-    private var pos = 0
-    def i32(): Int = {
-      val v = ((bytes(pos) & 0xff) << 24) | ((bytes(pos + 1) & 0xff) << 16) |
-        ((bytes(pos + 2) & 0xff) << 8) | (bytes(pos + 3) & 0xff)
-      pos += 4; v
-    }
-    def i64(): Long = (i32().toLong << 32) | (i32().toLong & 0xffffffffL)
+  /** Reads the header's big-endian fields off an open input, in order. */
+  private final class Cursor(in: RasterInput, path: String) {
+    def i32(): Int = in.readInt()
+    def i64(): Long = in.readLong()
     def name(): String = {
       val n = i32()
-      val s = new String(bytes, pos, n, "UTF-8")
-      pos += pad4(n); s
+      new String(padded(n), 0, n, "UTF-8")
+    }
+    /** The next `n` bytes and their padding to a 4-byte boundary. */
+    private def padded(n: Long): Array[Byte] = {
+      val len = (n + 3) & ~3L
+      require(n >= 0 && in.position + len <= in.length,
+        s"$path: malformed netCDF header: a $n-byte field runs past the end")
+      val b = new Array[Byte](len.toInt)
+      in.readFully(b)
+      b
     }
     def attValues(ncType: Int, nelems: Int): NcAtt = {
-      val raw = pad4(nelems * ncSize(ncType))
-      val bb = ByteBuffer.wrap(bytes, pos, raw).order(ByteOrder.BIG_ENDIAN)
-      pos += raw
-      if (ncType == NcChar)
-        NcAtt(Some(new String(bytes, bb.position(), nelems, "UTF-8")), Nil)
+      val raw = padded(nelems.toLong * ncSize(ncType))
+      val bb = ByteBuffer.wrap(raw).order(ByteOrder.BIG_ENDIAN)
+      if (ncType == NcChar) NcAtt(Some(new String(raw, 0, nelems, "UTF-8")), Nil)
       else NcAtt(None, (0 until nelems).map { i =>
         ncType match {
-          case NcByte => bb.get(bb.position() + i).toDouble
-          case NcShort => bb.getShort(bb.position() + i * 2).toDouble
-          case NcInt => bb.getInt(bb.position() + i * 4).toDouble
-          case NcFloat => bb.getFloat(bb.position() + i * 4).toDouble
-          case NcDouble => bb.getDouble(bb.position() + i * 8)
+          case NcByte => bb.get(i).toDouble
+          case NcShort => bb.getShort(i * 2).toDouble
+          case NcInt => bb.getInt(i * 4).toDouble
+          case NcFloat => bb.getFloat(i * 4).toDouble
+          case NcDouble => bb.getDouble(i * 8)
         }
       })
     }
@@ -136,18 +138,22 @@ object NetCdf {
   }
 
   private def parseHeader(path: String): NcHeader = {
-    // the classic header is a short prefix of the file; cap the slurp so
-    // a multi-GB store never lands on the heap (1 MiB >> any real header)
     require(RasterIO.exists(path), s"not a netCDF file: $path")
-    val bytes = RasterIO.readPrefix(path, 1 << 20)
-    require(bytes.length >= 8 && bytes(0) == 'C' && bytes(1) == 'D' &&
-      bytes(2) == 'F', s"$path: not a netCDF classic file (bad magic)")
-    val version = bytes(3)
+    val in = RasterIO.open(path)
+    try parseHeader(in, path) finally in.close()
+  }
+
+  private def parseHeader(in: RasterInput, path: String): NcHeader = {
+    val badMagic = s"$path: not a netCDF classic file (bad magic)"
+    require(in.length >= 8, badMagic)
+    val magic = new Array[Byte](4)
+    in.readFully(magic)
+    require(magic(0) == 'C' && magic(1) == 'D' && magic(2) == 'F', badMagic)
+    val version = magic(3)
     require(version == 1 || version == 2,
       s"$path: unsupported netCDF variant $version (classic CDF-1/2 only; " +
         "netCDF-4/HDF5 is out of scope)")
-    val c = new Cursor(bytes)
-    c.i32() // magic
+    val c = new Cursor(in, path)
     c.i32() // numrecs (record vars unsupported; validated per-var below)
     val nDims = listCount(c, TagDim, "dimension")
     val dims = (0 until nDims).map(_ => c.name() -> c.i32())

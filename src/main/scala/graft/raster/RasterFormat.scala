@@ -72,33 +72,44 @@ object RasterFormat {
     else None
   }
 
-  /** First-valid fuse of a decoded `w`×`h` window into `out`: a pixel is
-    * written where `out` is still `dstNodata` (or NaN) and the source is
-    * valid (not NaN, not `srcNodata`; NaN `srcNodata` means none). A
-    * written value equal to `dstNodata` is not counted, so a later
-    * source that still sees a hole there does not double-count — the
-    * same rule as `Grb.fuseWindowInto`. */
+  /** First-valid fuse of a decoded `w`×`h` window into `out` (row
+    * stride `outW`, window origin at `(dx0, dy0)`), row by row through
+    * [[fuseRow]]. */
   def fuseInto(pix: Array[Double], w: Int, h: Int, srcNodata: Double,
                out: Array[Double], outW: Int, dx0: Int, dy0: Int,
                dstNodata: Double): Long = {
     var filled = 0L
     var y = 0
     while (y < h) {
-      val rowOff = (dy0 + y) * outW + dx0
-      var x = 0
-      while (x < w) {
-        val di = rowOff + x
-        val cur = out(di)
-        if (cur.isNaN || cur == dstNodata) {
-          val v = pix(y * w + x)
-          if (!(v.isNaN || v == srcNodata)) {
-            out(di) = v
-            if (v != dstNodata) filled += 1
-          }
-        }
-        x += 1
-      }
+      filled += fuseRow(pix, y * w, srcNodata, out, (dy0 + y) * outW + dx0,
+        w, dstNodata)
       y += 1
+    }
+    filled
+  }
+
+  /** First-valid fuse of the `n` decoded pixels at `pix(off)` into
+    * `out(outOff)`: a pixel is written where `out` is still `dstNodata`
+    * (or NaN) and the source is valid (not NaN, not `srcNodata`; NaN
+    * `srcNodata` means none). A written value equal to `dstNodata` is
+    * not counted, so a later source that still sees a hole there does
+    * not double-count. Every paste fuse ends here. */
+  def fuseRow(pix: Array[Double], off: Int, srcNodata: Double,
+              out: Array[Double], outOff: Int, n: Int,
+              dstNodata: Double): Long = {
+    var filled = 0L
+    var x = 0
+    while (x < n) {
+      val di = outOff + x
+      val cur = out(di)
+      if (cur.isNaN || cur == dstNodata) {
+        val v = pix(off + x)
+        if (!(v.isNaN || v == srcNodata)) {
+          out(di) = v
+          if (v != dstNodata) filled += 1
+        }
+      }
+      x += 1
     }
     filled
   }
@@ -168,6 +179,15 @@ object RasterFormat {
     override def numBands(uri: String): Int = Tiff.numBands(uri)
     override def overviews(uri: String): Seq[(Int, String)] =
       Tiff.overviewLevels(uri)
+    /** Paste reads fuse straight from the decoded raster's bank
+      * ([[Tiff.fuseWindowInto]]); a failed decode fills nothing. */
+    override def fuseWindowInto(uri: String, x0: Int, y0: Int, w: Int, h: Int,
+                                band: Int, srcNodata: Option[Double],
+                                out: Array[Double], outW: Int, dx0: Int,
+                                dy0: Int, dstNodata: Double,
+                                permissive: Boolean): Long =
+      Tiff.fuseWindowInto(uri, x0, y0, w, h, band,
+        srcNodata.getOrElse(Double.NaN), out, outW, dx0, dy0, dstNodata)
     override def subdataset(uri: String, sub: String): String = {
       requireUnaddressed(uri, sub, "an image index")
       s"$uri#${Tiff.resolveSubdataset(uri, sub)}"

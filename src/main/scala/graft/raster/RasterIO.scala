@@ -83,21 +83,123 @@ object LocalFileSource extends RasterByteSource {
   private def p(uri: String): String =
     if (uri.startsWith("file://")) uri.stripPrefix("file://") else uri
 
+  /** A file read through one buffer of its own: header fields and IFD
+    * entries are served from the buffer, one `read` syscall per refill
+    * instead of one per byte, while a `readFully` of at least a buffer's
+    * length (a pixel span) goes straight to the file. `position` is the
+    * logical position; the buffer lives and dies with this input. */
   private final class Raf(path: String) extends RasterInput {
     private val raf = new java.io.RandomAccessFile(path, "r")
-    def seek(pos: Long): Unit = raf.seek(pos)
-    def position: Long = raf.getFilePointer
-    def length: Long = raf.length()
-    def read(): Int = raf.read()
-    def read(buf: Array[Byte]): Int = raf.read(buf)
-    def readFully(buf: Array[Byte]): Unit = raf.readFully(buf)
-    def readByte(): Byte = raf.readByte()
-    def readShort(): Short = raf.readShort()
-    def readInt(): Int = raf.readInt()
-    def readLong(): Long = raf.readLong()
-    def readDouble(): Double = raf.readDouble()
+    private val buf = new Array[Byte](BufferBytes)
+    private var bufStart = 0L // file offset of buf(0)
+    private var bufLen = 0 // bytes of buf that hold the file
+    private var pos = 0L
+
+    def seek(p: Long): Unit = {
+      if (p < 0) throw new java.io.IOException(s"$path: negative seek $p")
+      pos = p
+    }
+    def position: Long = pos
+    // rasters are immutable while open: one size query per input
+    lazy val length: Long = raf.length()
+
+    /** Offset in `buf` of `pos` when `[pos, pos + n)` is buffered, or -1. */
+    private def at(n: Int): Int = {
+      val o = pos - bufStart
+      if (o >= 0 && o + n <= bufLen) o.toInt else -1
+    }
+
+    /** Refills the buffer from `pos`; returns how many bytes it holds. */
+    private def refill(): Int = {
+      raf.seek(pos)
+      bufStart = pos
+      bufLen = 0
+      var r = 0
+      while (r >= 0 && bufLen < buf.length) {
+        r = raf.read(buf, bufLen, buf.length - bufLen)
+        if (r > 0) bufLen += r
+      }
+      bufLen
+    }
+
+    private def eof(n: Int): Nothing = throw new java.io.EOFException(
+      s"$path: $n byte(s) at $pos read past the end ($length bytes)")
+
+    /** Offset in `buf` of `n` buffered bytes at `pos`, refilling once. */
+    private def need(n: Int): Int = {
+      val o = at(n)
+      if (o >= 0) o
+      else if (refill() >= n) 0
+      else eof(n)
+    }
+
+    /** Offset in `buf` of `pos`, refilling when `pos` is not buffered;
+      * -1 at the end of the file. */
+    private def avail(): Int = {
+      val o = at(1)
+      if (o >= 0) o else if (refill() > 0) 0 else -1
+    }
+
+    def read(): Int = {
+      val o = avail()
+      if (o < 0) -1 else { pos += 1; buf(o) & 0xff }
+    }
+
+    def read(b: Array[Byte]): Int =
+      if (b.isEmpty) 0
+      else if (b.length >= buf.length && at(b.length) < 0) {
+        raf.seek(pos)
+        val r = raf.read(b)
+        if (r > 0) pos += r
+        r
+      } else {
+        val o = avail()
+        if (o < 0) -1
+        else {
+          val r = math.min(b.length, bufLen - o)
+          System.arraycopy(buf, o, b, 0, r)
+          pos += r
+          r
+        }
+      }
+
+    def readFully(b: Array[Byte]): Unit = {
+      val o = at(b.length)
+      if (o >= 0) System.arraycopy(buf, o, b, 0, b.length)
+      else if (b.length >= buf.length) {
+        if (pos + b.length > length) eof(b.length)
+        raf.seek(pos)
+        raf.readFully(b)
+      } else System.arraycopy(buf, need(b.length), b, 0, b.length)
+      pos += b.length
+    }
+
+    def readByte(): Byte = { val o = need(1); pos += 1; buf(o) }
+    def readShort(): Short = {
+      val o = need(2); pos += 2
+      (((buf(o) & 0xff) << 8) | (buf(o + 1) & 0xff)).toShort
+    }
+    def readInt(): Int = {
+      val o = need(4); pos += 4
+      ((buf(o) & 0xff) << 24) | ((buf(o + 1) & 0xff) << 16) |
+        ((buf(o + 2) & 0xff) << 8) | (buf(o + 3) & 0xff)
+    }
+    def readLong(): Long = {
+      val o = need(8); pos += 8
+      var v = 0L
+      var i = 0
+      while (i < 8) { v = (v << 8) | (buf(o + i) & 0xffL); i += 1 }
+      v
+    }
+    def readDouble(): Double = java.lang.Double.longBitsToDouble(readLong())
     def close(): Unit = raf.close()
   }
+
+  /** [[Raf]]'s buffer: a GRB header or an IFD's entries in one refill.
+    * Every refill reads the whole buffer, so a larger one costs input
+    * bytes per header read (8 KiB added 19 MB, 14%, to
+    * `archive_geomedian`'s bytes read per op). */
+  private val BufferBytes = 512
 
   def open(uri: String): RasterInput = new Raf(p(uri))
   def readAll(uri: String): Array[Byte] =

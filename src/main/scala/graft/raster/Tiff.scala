@@ -4,7 +4,9 @@ import graft.geo.{Affine, Crs, GeoBox}
 
 import java.awt.Rectangle
 import java.awt.color.ColorSpace
-import java.awt.image.{BufferedImage, ComponentColorModel, DataBuffer, Raster}
+import java.awt.image.{BufferedImage, ComponentColorModel, ComponentSampleModel,
+  DataBuffer, DataBufferByte, DataBufferDouble, DataBufferFloat, DataBufferInt,
+  DataBufferShort, DataBufferUShort, Raster}
 import java.io.File
 import javax.imageio.{IIOImage, ImageIO, ImageTypeSpecifier, ImageWriteParam}
 import javax.imageio.plugins.tiff.{BaselineTIFFTagSet, TIFFDirectory, TIFFField, TIFFTag}
@@ -93,7 +95,12 @@ object Tiff {
       require(readers.hasNext, s"no TIFF reader for $path")
       val reader = readers.next()
       reader.setInput(iis, false, false)
-      try f(reader, idx) finally reader.dispose()
+      try f(reader, idx)
+      catch {
+        // the plugin's errors ("Data segment out of stream") name no file
+        case e: java.io.IOException =>
+          throw new java.io.IOException(s"$path: ${e.getMessage}", e)
+      } finally reader.dispose()
     } finally iis.close()
   }
 
@@ -199,10 +206,43 @@ object Tiff {
   /** Windowed read of one band: decodes only the region's tiles/strips.
     * Row-major doubles, unsigned types widened. `band` is 1-based —
     * multi-band files (RGB/MSI packed into one asset) address plane
-    * `band-1` of the decoded raster; `setSourceBands` restricts the
-    * decode itself to that plane for planar or banded layouts. */
+    * `band-1` of the decoded raster. */
   def readWindow(uri: String, x0: Int, y0: Int, w: Int, h: Int,
                  band: Int = 1): Array[Double] =
+    decodeWindow(uri, x0, y0, w, h, band) { samples =>
+      val out = new Array[Double](w * h)
+      var y = 0
+      while (y < h) { samples.row(y, out, y * w); y += 1 }
+      out
+    }
+
+  /** Fused windowed read + first-valid mosaic (A2 paste path): each row of
+    * band `band` goes from the decoded raster's bank into one row-sized
+    * scratch and is fused from there into the still-`dstNodata`
+    * positions of `out` ([[RasterFormat.fuseRow]]) — no window-sized
+    * copy. `srcNodata` NaN means "no nodata value". Returns the number
+    * of newly filled pixels. */
+  def fuseWindowInto(uri: String, x0: Int, y0: Int, w: Int, h: Int,
+                     band: Int, srcNodata: Double, out: Array[Double],
+                     outW: Int, dx0: Int, dy0: Int, dstNodata: Double): Long =
+    decodeWindow(uri, x0, y0, w, h, band) { samples =>
+      val px = new Array[Double](w)
+      var filled = 0L
+      var y = 0
+      while (y < h) {
+        samples.row(y, px, 0)
+        filled += RasterFormat.fuseRow(px, 0, srcNodata, out,
+          (dy0 + y) * outW + dx0, w, dstNodata)
+        y += 1
+      }
+      filled
+    }
+
+  /** Decodes the window of the addressed image and hands `f` its band
+    * `band` (1-based). The decode covers all samples — interleaved
+    * layouts decode whole rows anyway. */
+  private def decodeWindow[A](uri: String, x0: Int, y0: Int, w: Int, h: Int,
+                              band: Int)(f: Samples => A): A =
     withReader(uri) { (reader, idx) =>
       require(x0 >= 0 && y0 >= 0 && x0 + w <= reader.getWidth(idx) &&
         y0 + h <= reader.getHeight(idx),
@@ -216,16 +256,62 @@ object Tiff {
         require(band >= 1 && band <= nBands,
           s"band $band requested of $uri with $nBands sample band(s)")
       }
-      // decode the window (all samples — interleaved layouts decode rows
-      // anyway) and extract the addressed plane from the raster
-      val img = reader.read(idx, param)
-      val out = new Array[Double](w * h)
-      img.getRaster.getSamples(0, 0, w, h, band - 1, out)
-      // JDK raster samples come back sign-extended only for signed buffer
-      // types; unsigned 8/16-bit arrive already widened. int64 is not a
-      // TIFF baseline type, so no masking is needed here.
-      out
+      f(new Samples(reader.read(idx, param).getRaster, band - 1))
     }
+
+  /** Band `b` of a decoded raster, read row by row straight from its
+    * primitive bank: a `ComponentSampleModel` gives the band's bank and
+    * offset and the pixel and scanline strides, so a row is one typed
+    * loop, with no virtual call per sample. Samples come out as
+    * `Raster.getSamples` gives them: unsigned 8/16-bit buffers widen,
+    * signed ones sign-extend. Any other sample model takes that generic
+    * path. */
+  private final class Samples(r: Raster, b: Int) {
+    private val w = r.getWidth
+
+    /** Row `y` of the band into `out(outOff until outOff + width)`. */
+    def row(y: Int, out: Array[Double], outOff: Int): Unit =
+      r.getSampleModel match {
+        case sm: ComponentSampleModel =>
+          val bank = sm.getBankIndices()(b)
+          val ps = sm.getPixelStride
+          val i0 = r.getDataBuffer.getOffsets()(bank) + sm.getOffset(
+            r.getMinX - r.getSampleModelTranslateX,
+            r.getMinY + y - r.getSampleModelTranslateY, b)
+          var x = 0
+          var i = i0
+          r.getDataBuffer match {
+            case d: DataBufferByte =>
+              val a = d.getData(bank)
+              while (x < w) { out(outOff + x) = a(i) & 0xff; x += 1; i += ps }
+            case d: DataBufferUShort =>
+              val a = d.getData(bank)
+              while (x < w) { out(outOff + x) = a(i) & 0xffff; x += 1; i += ps }
+            case d: DataBufferShort =>
+              val a = d.getData(bank)
+              while (x < w) { out(outOff + x) = a(i); x += 1; i += ps }
+            case d: DataBufferInt =>
+              val a = d.getData(bank)
+              while (x < w) { out(outOff + x) = a(i); x += 1; i += ps }
+            case d: DataBufferFloat =>
+              val a = d.getData(bank)
+              while (x < w) { out(outOff + x) = a(i); x += 1; i += ps }
+            case d: DataBufferDouble =>
+              val a = d.getData(bank)
+              while (x < w) { out(outOff + x) = a(i); x += 1; i += ps }
+            case _ => generic(y, out, outOff)
+          }
+        case _ => generic(y, out, outOff)
+      }
+
+    private def generic(y: Int, out: Array[Double], outOff: Int): Unit = {
+      var x = 0
+      while (x < w) {
+        out(outOff + x) = r.getSampleDouble(r.getMinX + x, r.getMinY + y, b)
+        x += 1
+      }
+    }
+  }
 
   /** Decimation levels of the addressed image: (scale, uri). A pyramid
     * is the run of unnamed reduced-resolution IFDs immediately FOLLOWING

@@ -126,8 +126,8 @@ class PixelFoldPropsSpec extends AnyFunSuite {
       def byKey(bufs: Array[(String, Int, Int, PixelFold.Buf)]) =
         bufs.map(r => (r._1, r._2, r._3) -> r._4).toMap
       val want = byKey(PixelFold.byTile(spark, tiles(rows), fold, t).collect())
-      val path = java.nio.file.Files.createTempDirectory("graft_fold_state")
-        .resolve("state").toString
+      val path = java.nio.file.Paths.get(
+        TmpLanding.fresh("graft_fold_state", "props")).resolve("state").toString
       val batches = new scala.util.Random(seed).shuffle(split(rows, cuts))
       batches.zipWithIndex.foreach { case (b, id) =>
         val cur = PixelFold.byTile(spark, tiles(b), fold, t)

@@ -418,6 +418,33 @@ class RasterSpec extends AnyFunSuite {
         p5(b - 1).toSeq, s"5-band stack band $b")
   }
 
+  test("TIFF bank reads equal Raster.getSamples: every dtype, band layout and window") {
+    val g = gbox(40, 24)
+    for (dt <- Seq("uint8", "uint16", "int16", "int32", "float32", "float64");
+         nb <- Seq(1, 3, 4); tile <- Seq(Some(16), None)) {
+      val planes = (1 to nb).map(b => ramp(40, 24, (x, y) => dt match {
+        case "uint8" => ((x * 7 + y * 3 + b) % 256).toDouble
+        case "uint16" => ((x * 977 + y * 31 + b) % 65536).toDouble
+        case _ => (x - 20) * 1000.5 + y * 3 - b
+      }))
+      val path = s"$tmp/bank_${dt}_$nb${tile.fold("s")(_ => "t")}.tif"
+      Tiff.writeBands(path, planes, g, dt, Some(0.0), tileSize = tile)
+      val raster = javax.imageio.ImageIO.read(new java.io.File(path)).getRaster
+      for (b <- 1 to nb; (x0, y0, w, h) <- Seq((0, 0, 40, 24), (13, 5, 17, 9))) {
+        val want = raster.getSamples(x0, y0, w, h, b - 1, new Array[Double](w * h))
+        val got = Tiff.readWindow(path, x0, y0, w, h, band = b)
+        assert(got.toSeq.map(java.lang.Double.doubleToRawLongBits) ==
+          want.toSeq.map(java.lang.Double.doubleToRawLongBits), s"$path band $b")
+        // the paste fuse reads the same samples: into a half-filled plane
+        val out = Array.tabulate(50 * 30)(i => if (i % 2 == 0) 0.0 else -7.0)
+        val ref = out.clone()
+        val n = Tiff.fuseWindowInto(path, x0, y0, w, h, b, 0.0, out, 50, 4, 3, 0.0)
+        assert(n == RasterFormat.fuseInto(want, w, h, 0.0, ref, 50, 4, 3, 0.0))
+        assert(out.toSeq == ref.toSeq, s"$path band $b fuse")
+      }
+    }
+  }
+
   test("TIFF float32 + NaN nodata roundtrip") {
     val g = gbox(32, 16)
     val px = ramp(32, 16, (x, y) => if (x == 0) Double.NaN else x + y / 100.0)

@@ -40,7 +40,7 @@ class StacParseLocalSpec extends AnyFunSuite {
     val (local, localSchemas) = StacParse.parseItems(spark, spark.createDataset(jsons))
     assert(canon(local.collect().toSeq) == canon(items))
     assert(localSchemas == schemas)
-    val dir = java.nio.file.Files.createTempDirectory("graft_parse_text")
+    val dir = java.nio.file.Paths.get(TmpLanding.fresh("graft_parse_text", "spec"))
     jsons.zipWithIndex.foreach { case (j, i) =>
       java.nio.file.Files.writeString(dir.resolve(f"item_$i%03d.json"), j)
     }
@@ -58,6 +58,43 @@ class StacParseLocalSpec extends AnyFunSuite {
         .collect().length == jsons.size)
     }
     assert(counts.jobs == 0)
+  }
+
+  test("the fast double parser reads every fixture set and the bench items to the same parse") {
+    // the JDK's own double parser, as a plain ObjectMapper reads numbers
+    val plain = new ObjectMapper()
+    // scenes on the load benchmark's grids (UTM 35S, 10 m; scene files
+    // need not exist to be parsed): 17-digit footprint coordinates
+    val bench = for {
+      ((w, h, x0, y0), s) <- Seq((1024, 768, 400000.0, 8200000.0),
+        (512, 384, 500000.0, 8000000.0), (128, 128, 600000.0, 8100000.0))
+        .zipWithIndex
+      k <- 0 until 9
+    } yield {
+      val g = graft.geo.GeoBox(w, h, graft.geo.Affine.grid(
+        x0 + (k % 3) * (w / 2) * 10.0, y0 - (k / 3) * (h / 2) * 10.0, 10.0,
+        -10.0), graft.geo.Crs.Utm(35, south = true))
+      Fixtures.item(s"bench$s-$k", s"bench-$s", g,
+        java.time.LocalDateTime.of(2021, 3, 1, 8, 0).plusDays(k.toLong),
+        "p", Seq("red", "nir").map(b =>
+          Fixtures.asset(b, s"/nowhere/s$k-$b.tif", g, 10.0, Seq(b -> b))))
+    }
+    val sets = Seq("grb" -> Fixtures.writeScenes(4),
+      "tiff" -> Fixtures.writeScenesTiff(3),
+      "zarr" -> Fixtures.writeScenesZarr(2),
+      "netcdf" -> Fixtures.writeScenesNc(2),
+      "subdatasets" -> Fixtures.writeScenesSubdatasets(2),
+      "multiband" -> Fixtures.writeScenesMultiband(2),
+      "gap" -> Fixtures.writeScenesGap(),
+      "qa" -> Fixtures.writeScenesQa(),
+      "multigrid" -> Fixtures.writeScenesMultigrid(3),
+      "bench" -> bench)
+    sets.foreach { case (name, js) =>
+      val (fast, fastSchemas) = StacParse.parseItems(js)
+      val (slow, slowSchemas) = StacParse.parseTrees(js.map(plain.readTree))
+      assert(canon(fast) == canon(slow), name)
+      assert(fastSchemas == slowSchemas, name)
+    }
   }
 
   test("the first item of a collection wins where two items disagree") {

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import java.nio.file.{Files, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Checkpoint recovery — the exactly-once property the streaming family
   * rests on at 100 TB/day: a query killed mid-stream and restarted with
@@ -20,7 +20,7 @@ class StreamRecoverySpec extends AnyFunSuite {
   import GraftSpark.{spark, sf}
 
   test("restart from checkpoint: offsets + watermark resume, windows emit exactly once") {
-    val root = Files.createTempDirectory("graft_recovery")
+    val root = Paths.get(TmpLanding.fresh("graft_recovery", "spec"))
     val src = root.resolve("src"); Files.createDirectories(src)
     val sink = root.resolve("sink").toString
     val chk = root.resolve("chk").toString
@@ -35,7 +35,7 @@ class StreamRecoverySpec extends AnyFunSuite {
     val lo = Seq(Long.MinValue) ++ bounds.map(_.toLong)
     val hi = bounds.map(_.toLong) ++ Seq(Long.MaxValue)
     val staged = lo.zip(hi).zipWithIndex.map { case ((a, b), k) =>
-      val tmp = Files.createTempDirectory("graft_rec_part")
+      val tmp = Paths.get(TmpLanding.fresh("graft_rec_part", s"part$k"))
       ev.where(expr(s"unix_seconds(ts) >= ${a}L AND unix_seconds(ts) < ${b}L"))
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
@@ -110,7 +110,7 @@ class StreamRecoverySpec extends AnyFunSuite {
     * state dir — the replay contract of a Delta MERGE-on-batchId. */
   test("commitMerge: batchId replay is a no-op and mid-swap crash recovers") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_commit_merge")
+    val root = Paths.get(TmpLanding.fresh("graft_commit_merge", "spec"))
     val statePath = root.resolve("state").toString
 
     val fold = new load.Composite.PixelComposite
@@ -183,7 +183,7 @@ class StreamRecoverySpec extends AnyFunSuite {
     val want = Seq((12.0, 9.0), (7.0, 2.0), (3.0, 4.0), (none, -1.0))
 
     for ((first, second, name) <- Seq((a, b, "ab"), (b, a, "ba"))) {
-      val root = Files.createTempDirectory(s"graft_peak_merge_$name")
+      val root = Paths.get(TmpLanding.fresh("graft_peak_merge", name))
       val path = root.resolve("state").toString
       rasterops.RasterQueries.commitMerge(spark, path, 0L,
         buf(first, 1), fold)
