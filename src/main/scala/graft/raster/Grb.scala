@@ -220,8 +220,9 @@ object Grb {
   }
 
   /** Decode `n` pixels from `bb` at byte `off` into `out(outOff..)`: one
-    * dtype dispatch per row, then one typed loop. */
-  private def decodeRow(bb: ByteBuffer, off: Int, dcode: Int,
+    * dtype dispatch per row, then one typed loop. Shared by the TIFF tile
+    * and zarr chunk reads. */
+  private[raster] def decodeRow(bb: ByteBuffer, off: Int, dcode: Int,
                         out: Array[Double], outOff: Int, n: Int): Unit = {
     var i = 0
     (dcode: @annotation.switch) match {

@@ -167,10 +167,12 @@ object RasterFormat {
     }
   }
 
-  /** GeoTIFF over the JDK's bundled `javax.imageio` TIFF plugin: windowed
-    * reads via `ImageReadParam.setSourceRegion`, multi-band stacks,
-    * reduced-resolution subimages as overviews and PageName-named images
-    * as subdatasets (addressed as `uri#<image-index>`). See [[Tiff]]. */
+  /** GeoTIFF through [[Tiff]]'s own classic-TIFF reader: windowed reads
+    * that decode only the tiles/strips a window touches (none, Deflate
+    * and LZW natively; other codecs through the JDK's `javax.imageio`
+    * TIFF plugin), multi-band stacks, reduced-resolution subimages as
+    * overviews and PageName-named images as subdatasets (addressed as
+    * `uri#<image-index>`). */
   object TiffFormat extends RasterFormat {
     def header(uri: String, band: Int): Grb.Header = Tiff.readHeader(uri, band)
     def window(uri: String, x0: Int, y0: Int, w: Int, h: Int,
@@ -179,15 +181,18 @@ object RasterFormat {
     override def numBands(uri: String): Int = Tiff.numBands(uri)
     override def overviews(uri: String): Seq[(Int, String)] =
       Tiff.overviewLevels(uri)
-    /** Paste reads fuse straight from the decoded raster's bank
-      * ([[Tiff.fuseWindowInto]]); a failed decode fills nothing. */
+    /** Paste reads fuse each decoded tile row straight into `out`
+      * ([[Tiff.fuseWindowInto]]). Permissive reads keep the partial fill
+      * as GRB's do: rows fused before a corrupt tile stay in `out` and
+      * are counted; a file cut short fills nothing. */
     override def fuseWindowInto(uri: String, x0: Int, y0: Int, w: Int, h: Int,
                                 band: Int, srcNodata: Option[Double],
                                 out: Array[Double], outW: Int, dx0: Int,
                                 dy0: Int, dstNodata: Double,
                                 permissive: Boolean): Long =
       Tiff.fuseWindowInto(uri, x0, y0, w, h, band,
-        srcNodata.getOrElse(Double.NaN), out, outW, dx0, dy0, dstNodata)
+        srcNodata.getOrElse(Double.NaN), out, outW, dx0, dy0, dstNodata,
+        permissive)
     override def subdataset(uri: String, sub: String): String = {
       requireUnaddressed(uri, sub, "an image index")
       s"$uri#${Tiff.resolveSubdataset(uri, sub)}"

@@ -7,28 +7,38 @@ import java.awt.color.ColorSpace
 import java.awt.image.{BufferedImage, ComponentColorModel, ComponentSampleModel,
   DataBuffer, DataBufferByte, DataBufferDouble, DataBufferFloat, DataBufferInt,
   DataBufferShort, DataBufferUShort, Raster}
-import java.io.File
+import java.io.{File, IOException}
+import java.nio.{ByteBuffer, ByteOrder}
 import javax.imageio.{IIOImage, ImageIO, ImageTypeSpecifier, ImageWriteParam}
-import javax.imageio.plugins.tiff.{BaselineTIFFTagSet, TIFFDirectory, TIFFField, TIFFTag}
+import javax.imageio.plugins.tiff.{TIFFDirectory, TIFFField, TIFFTag}
+import javax.imageio.plugins.tiff.BaselineTIFFTagSet._
 
-/** GeoTIFF I/O on the JDK's bundled `javax.imageio` TIFF plugin (public
-  * API since Java 9: `javax.imageio.plugins.tiff`) — no GDAL required.
+/** GeoTIFF I/O with no GDAL.
   *
-  * Read side (what [[RasterFormat.TiffFormat]] consumes):
-  *  - geo-referencing from ModelPixelScaleTag (33550) + ModelTiepointTag
-  *    (33922), CRS from the GeoKeyDirectoryTag (34735) projected/
-  *    geographic EPSG keys, nodata from GDAL_NODATA (42113) — the same
-  *    tags rasterio reads for the reference (`_rio.py:374-475`);
-  *  - **windowed reads**: `ImageReadParam.setSourceRegion` decodes only
-  *    the tiles/strips intersecting the window — the COG access pattern;
+  * Read side (what [[RasterFormat.TiffFormat]] consumes): a classic-TIFF
+  * reader of its own over [[RasterIO.open]], so a remote file is read as
+  * range reads of its IFDs and of the tiles a window needs.
+  *  - one IFD parser for both byte orders ([[TiffFile]]): geo-referencing
+  *    from ModelPixelScaleTag (33550) + ModelTiepointTag (33922), CRS
+  *    from the GeoKeyDirectoryTag (34735) projected/geographic EPSG keys,
+  *    nodata from GDAL_NODATA (42113) — the same tags rasterio reads for
+  *    the reference (`_rio.py:374-475`);
+  *  - **windowed reads** ([[segments]]): each tile or strip the window
+  *    touches is read on its own and decoded once, and its rows go
+  *    through `Grb.decodeRow` straight into the caller's rows. Native
+  *    codecs: none, Deflate (8, 32946) and LZW (5), predictor 1 and 2
+  *    (8/16/32-bit samples), chunky and planar layouts. Any other codec
+  *    (JPEG, PackBits, CCITT, predictor 3) decodes the window through the
+  *    JDK's `javax.imageio` TIFF plugin ([[decodeWindow]]);
   *  - **overview pyramid**: reduced-resolution subimages (additional
   *    IFDs), addressed as `path#<imageIndex>`; their geobox derives from
   *    the base image's (GDAL writes geo tags on the base IFD only).
   *
-  * Write side exists for fixtures/tests and as the S10 sink analog:
-  * tiled (multiples-of-16) or stripped layout, optional overview IFDs.
-  * Supported dtypes: uint8, uint16, int16, int32, float32, float64
-  * (TIFF SampleFormat 1/2/3). Single-band, axis-aligned north-up grids.
+  * Write side, on the `javax.imageio` plugin, exists for fixtures/tests
+  * and as the S10 sink analog: tiled (multiples-of-16) or stripped
+  * layout, optional overview IFDs. Supported dtypes: uint8, int8, uint16,
+  * int16, int32, float32, float64 (TIFF SampleFormat 1/2/3; int8 is read
+  * only). Single-band, axis-aligned north-up grids.
   */
 object Tiff {
 
@@ -36,8 +46,8 @@ object Tiff {
   private val TagModelTiepoint = 33922
   private val TagGeoKeyDirectory = 34735
   private val TagGdalNodata = 42113
-  private val TagNewSubfileType = BaselineTIFFTagSet.TAG_NEW_SUBFILE_TYPE // 254
-  private val TagPageName = BaselineTIFFTagSet.TAG_PAGE_NAME // 285
+  private val TagNewSubfileType = TAG_NEW_SUBFILE_TYPE // 254
+  private val TagPageName = TAG_PAGE_NAME // 285
 
   // GeoKey ids (GeoTIFF spec §6.2)
   private val GTModelTypeGeoKey = 1024
@@ -45,37 +55,482 @@ object Tiff {
   private val GeographicTypeGeoKey = 2048
   private val ProjectedCSTypeGeoKey = 3072
 
-  /** Split `path#idx` or `path#name` into (path, image index) — a
-    * non-numeric fragment is a subdataset NAME, resolved via PageName
-    * (cached: raster stores are immutable, and at scale every container
-    * open is an object-store round trip). Makes every entry point
-    * (readHeader/readWindow/numBands and the `gtiff` DSv2 source)
-    * accept named-subdataset URIs. */
-  private def splitUri(uri: String): (String, Int) = {
+  /** Split `path#idx` or `path#name` into the path and the fragment, if
+    * any: digits address an image index, anything else a subdataset
+    * NAME, resolved via PageName in the same open ([[TiffFile.index]]).
+    * Makes every entry point (readHeader/readWindow/numBands and the
+    * `gtiff` DSv2 source) accept named-subdataset URIs. */
+  private def splitUri(uri: String): (String, Option[String]) = {
     val i = uri.lastIndexOf('#')
-    if (i < 0) (uri, 0)
-    else {
-      val path = uri.substring(0, i)
-      val frag = uri.substring(i + 1)
-      if (frag.nonEmpty && frag.forall(_.isDigit)) (path, frag.toInt)
-      else (path, subdatasetIdxCache.computeIfAbsent(
-        (path, frag), _ => resolveSubdatasetUncached(path, frag)))
+    if (i < 0) (uri, None) else (uri.substring(0, i), Some(uri.substring(i + 1)))
+  }
+
+  /** Opens the file of `uri` and hands `f` it and the addressed image. */
+  private def withFile[A](uri: String)(f: (TiffFile, Int) => A): A = {
+    val (path, frag) = splitUri(uri)
+    val file = new TiffFile(path)
+    try f(file, file.index(frag)) finally file.close()
+  }
+
+  /** One open classic TIFF: its input, its byte order and its IFD chain,
+    * parsed in chain order only as far as a caller asks. Values are read
+    * from the input when asked for; IFD entries and the values stored
+    * next to them come out of the input's buffer. Structural faults raise
+    * an `IOException` naming the file. */
+  private final class TiffFile(val path: String) extends java.io.Closeable {
+    private val in = RasterIO.open(path)
+    private val dirs = scala.collection.mutable.ArrayBuffer.empty[Dir]
+    private val seen = scala.collection.mutable.HashSet.empty[Long]
+    /** The file's length, byte order and first IFD offset, from its
+      * 8-byte header. */
+    val (length, order, le, firstIfd): (Long, ByteOrder, Boolean, Long) =
+      try {
+        val len = in.length
+        if (len < 8) fail(s"not a TIFF file ($len bytes)")
+        val hdr = ByteBuffer.wrap(bytes(0, 8))
+        val ord =
+          if (hdr.get(0) == 'I' && hdr.get(1) == 'I') ByteOrder.LITTLE_ENDIAN
+          else if (hdr.get(0) == 'M' && hdr.get(1) == 'M') ByteOrder.BIG_ENDIAN
+          else fail("not a TIFF file (no II/MM byte-order mark)")
+        hdr.order(ord)
+        hdr.getShort(2).toInt match {
+          case 42 => (len, ord, ord == ByteOrder.LITTLE_ENDIAN, hdr.getInt(4) & 0xffffffffL)
+          case 43 => fail("BigTIFF is not supported (classic TIFF only)")
+          case v => fail(s"not a TIFF file (version $v)")
+        }
+      } catch { case e: Throwable => in.close(); throw e }
+    private var nextIfd = firstIfd
+
+    def fail(why: String): Nothing = throw new IOException(s"$path: $why")
+    def close(): Unit = in.close()
+
+    private def u16(): Int = {
+      val v = in.readShort()
+      (if (le) java.lang.Short.reverseBytes(v) else v) & 0xffff
+    }
+    private def u32(): Long = {
+      val v = in.readInt()
+      (if (le) Integer.reverseBytes(v) else v) & 0xffffffffL
+    }
+
+    /** Whether image `i` exists, parsing the chain up to it. */
+    def has(i: Int): Boolean = {
+      while (dirs.length <= i && nextIfd != 0) parseNext()
+      i >= 0 && i < dirs.length
+    }
+
+    /** Image `i`'s IFD; an index past the chain fails loudly. */
+    def dir(i: Int): Dir = {
+      require(has(i), s"$path has no image $i ($count image(s))")
+      dirs(i)
+    }
+
+    /** The number of images (walks the whole chain). */
+    def count: Int = { while (nextIfd != 0) parseNext(); dirs.length }
+
+    /** The image a `#fragment` addresses: none is image 0, digits are an
+      * index, anything else is a subdataset name. */
+    def index(frag: Option[String]): Int = frag match {
+      case None => 0
+      case Some(f) if f.nonEmpty && f.forall(_.isDigit) =>
+        val i = f.toInt
+        dir(i)
+        i
+      case Some(name) => resolve(name)
+    }
+
+    /** The image whose PageName is `name`; a miss fails listing the
+      * names the container has. */
+    def resolve(name: String): Int =
+      Iterator.from(0).takeWhile(has).find(dir(_).pageName.contains(name))
+        .getOrElse(throw new IllegalArgumentException(
+          s"subdataset '$name' not found in $path; available: " +
+            ((0 until count).flatMap(dir(_).pageName) match {
+              case Seq() => "none (container has no named subdatasets)"
+              case ns => ns.mkString("'", "', '", "'")
+            })))
+
+    private def parseNext(): Unit = {
+      val at = nextIfd
+      if (!seen.add(at)) fail(s"IFD chain loops back to byte $at")
+      if (at < 8 || at + 2 > length) fail(s"IFD offset $at outside the file ($length bytes)")
+      in.seek(at)
+      val n = u16()
+      if (at + 2 + n * 12L + 4 > length) fail(s"IFD at byte $at runs past the end of the file")
+      val tags = new Array[Int](n)
+      val types = new Array[Int](n)
+      val counts = new Array[Int](n)
+      val offs = new Array[Long](n)
+      var k = 0
+      while (k < n) {
+        tags(k) = u16()
+        types(k) = u16()
+        val cnt = u32()
+        val field = at + 2 + k * 12L + 8
+        val bytes = cnt * typeSize(types(k))
+        offs(k) = if (bytes <= 4) field else u32()
+        if (offs(k) + bytes > length)
+          fail(s"tag ${tags(k)} of IFD ${dirs.length} runs past the end of the file")
+        counts(k) = cnt.toInt
+        in.seek(field + 4)
+        k += 1
+      }
+      nextIfd = u32()
+      dirs += new Dir(this, tags, types, counts, offs)
+    }
+
+    /** The `count` values of TIFF type `tpe` at byte `at`, as doubles:
+      * the BYTE, SHORT, LONG and DOUBLE types the read tags are stored in
+      * (exact for every unsigned integer TIFF stores in 32 bits). */
+    def values(tpe: Int, count: Int, at: Long): Array[Double] = {
+      in.seek(at)
+      val out = new Array[Double](count)
+      var i = 0
+      while (i < count) {
+        out(i) = tpe match {
+          case 1 => in.readByte() & 0xff
+          case 3 => u16()
+          case 4 => u32().toDouble
+          case 12 =>
+            val hi = u32(); val lo = u32()
+            java.lang.Double.longBitsToDouble(if (le) (lo << 32) | hi else (hi << 32) | lo)
+          case t => fail(s"unsupported TIFF field type $t")
+        }
+        i += 1
+      }
+      out
+    }
+
+    /** `count` bytes at `at` as a NUL-terminated ASCII string. */
+    def ascii(count: Int, at: Long): String = {
+      val b = new Array[Byte](count)
+      in.seek(at)
+      in.readFully(b)
+      new String(b, "US-ASCII").takeWhile(_ != '\u0000')
+    }
+
+    /** `n` bytes at `at` (one tile or strip). */
+    def bytes(at: Long, n: Int): Array[Byte] = {
+      val b = new Array[Byte](n)
+      in.seek(at)
+      in.readFully(b)
+      b
     }
   }
 
-  private val subdatasetIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Integer]()
+  /** Bytes per value of a TIFF field type (1 for types this reader does
+    * not know: their values are never read). */
+  private def typeSize(tpe: Int): Int = tpe match {
+    case 3 | 8 => 2
+    case 4 | 9 | 11 | 13 => 4
+    case 5 | 10 | 12 => 8
+    case _ => 1
+  }
 
-  /** (path, overview idx) -> index of the geo-tag-carrying parent IFD. */
-  private val parentIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Integer]()
+  /** One IFD: its entries (tag, type, count, byte offset of the values)
+    * and the fields the reader uses. */
+  private final class Dir(f: TiffFile, tags: Array[Int], types: Array[Int],
+                          counts: Array[Int], offs: Array[Long]) {
+    private def find(tag: Int): Int = tags.indexOf(tag)
+    def has(tag: Int): Boolean = find(tag) >= 0
 
-  private def withReader[A](uri: String)(f: (javax.imageio.ImageReader, Int) => A): A = {
-    val (path, idx) = splitUri(uri)
-    // remote-IO seam: ImageIO wants a File; non-local sources fall back
-    // to a stream over the byte channel (MemoryCache-backed, seekable)
+    def nums(tag: Int): Option[Array[Double]] = find(tag) match {
+      case -1 => None
+      case k => Some(f.values(types(k), counts(k), offs(k)))
+    }
+
+    def ascii(tag: Int): Option[String] = find(tag) match {
+      case -1 => None
+      case k if types(k) == 2 => Some(f.ascii(counts(k), offs(k)))
+      case _ => None
+    }
+
+    private def int(tag: Int, dflt: Int): Int =
+      nums(tag).flatMap(_.headOption).fold(dflt)(_.toInt)
+
+    private def required(tag: Int, what: String): Array[Double] =
+      nums(tag).getOrElse(f.fail(s"IFD has no $what (tag $tag)"))
+
+    lazy val width: Int = required(TAG_IMAGE_WIDTH, "ImageWidth").head.toInt
+    lazy val height: Int = required(TAG_IMAGE_LENGTH, "ImageLength").head.toInt
+    lazy val spp: Int = int(TAG_SAMPLES_PER_PIXEL, 1)
+    lazy val bits: Int = int(TAG_BITS_PER_SAMPLE, 8)
+    lazy val sampleFormat: Int = int(TAG_SAMPLE_FORMAT, 1)
+    lazy val compression: Int = int(TAG_COMPRESSION, 1)
+    lazy val predictor: Int = int(TAG_PREDICTOR, 1)
+    lazy val planar: Int = int(TAG_PLANAR_CONFIGURATION, 1)
+    lazy val pageName: Option[String] = ascii(TagPageName)
+    lazy val tiled: Boolean = has(TAG_TILE_WIDTH)
+
+    /** Tile size; a strip is a tile as wide as the image. */
+    lazy val block: (Int, Int) =
+      if (tiled) (int(TAG_TILE_WIDTH, 0), int(TAG_TILE_LENGTH, 0))
+      else (width, math.min(int(TAG_ROWS_PER_STRIP, Int.MaxValue), height))
+
+    lazy val offsets: Array[Double] = required(
+      if (tiled) TAG_TILE_OFFSETS else TAG_STRIP_OFFSETS, "tile/strip offsets")
+    lazy val byteCounts: Array[Double] = required(
+      if (tiled) TAG_TILE_BYTE_COUNTS else TAG_STRIP_BYTE_COUNTS,
+      "tile/strip byte counts")
+
+    /** The predictor applies to the compressed codecs only (as in
+      * libtiff): uncompressed data ignores the tag. */
+    def differenced: Boolean = predictor == 2 && compression != 1
+
+    /** Whether [[segments]] decodes this image; the rest go through the
+      * `javax.imageio` plugin. */
+    def native: Boolean =
+      (compression == 1 || compression == 5 || compression == 8 ||
+        compression == 32946) &&
+        (predictor == 1 || compression == 1 ||
+          (predictor == 2 && (bits == 8 || bits == 16 || bits == 32)))
+  }
+
+  /** Sample-band count of the addressed image (1 for grayscale, 3 for
+    * RGB, N for packed multispectral stacks). */
+  def numBands(uri: String): Int = withFile(uri)((f, idx) => f.dir(idx).spp)
+
+  /** Resolve a named subdataset to its image index by PageName (tag 285)
+    * — multi-image TIFF containers are the zero-GDAL analog of the
+    * netCDF/HDF variable containers `RasterSource.subdataset` addresses
+    * in the reference (`loader/types.py:44-56`, `_rio.py:374-430`). A
+    * miss fails loudly listing what the container actually has, like the
+    * band path (`readHeader`'s SamplesPerPixel validation). Nothing is
+    * cached: the walk is a few buffered IFD reads of the file. */
+  def resolveSubdataset(path: String, name: String): Int =
+    withFile(path)((f, _) => f.resolve(name))
+
+  /** Names of the container's subdatasets (page-named images), in image
+    * order. */
+  def subdatasetNames(path: String): Seq[String] =
+    withFile(path)((f, _) => (0 until f.count).flatMap(f.dir(_).pageName))
+
+  private def requireBand(uri: String, d: Dir, band: Int): Unit =
+    require(band >= 1 && band <= d.spp,
+      s"band $band requested of $uri with ${d.spp} sample band(s)")
+
+  /** Header of the addressed image. Overview IFDs (idx > 0) carry no geo
+    * tags; their geobox is the base geobox decimated by the size ratio.
+    * `band` (1-based) validates against SamplesPerPixel — a request for
+    * band 3 of a single-band file must fail loudly, not read band 1
+    * (reference `loader/types.py:40-70` RasterSource.band). */
+  def readHeader(uri: String, band: Int = 1): Grb.Header = withFile(uri) { (f, idx) =>
+    val d = f.dir(idx)
+    requireBand(uri, d, band)
+    val dtype = dtypeOf(d)
+    // An idx > 0 IFD with its OWN ModelPixelScale is a standalone
+    // subdataset image (multi-image container); one without is a
+    // reduced-resolution overview deriving georeferencing from its
+    // PARENT — the nearest preceding IFD that carries geo tags (the
+    // base image, or the subdataset the overview belongs to: GDAL lays
+    // a subdataset's pyramid out as the unnamed IFDs following it).
+    val geoIdx = (idx to 1 by -1).find(f.dir(_).has(TagModelPixelScale)).getOrElse(0)
+    val geo = f.dir(geoIdx)
+    val nodata = geo.ascii(TagGdalNodata)
+      .map(_.trim)
+      .flatMap(s => if (s.equalsIgnoreCase("nan")) Some(Double.NaN)
+                    else s.toDoubleOption)
+    val gbox =
+      if (geoIdx == idx) geoboxOf(geo, d.width, d.height)
+      else {
+        // decimated level: same origin, linear part scaled by size ratio
+        val parentGbox = geoboxOf(geo, geo.width, geo.height)
+        val sx = parentGbox.width.toDouble / d.width
+        val sy = parentGbox.height.toDouble / d.height
+        val t = parentGbox.transform
+        GeoBox(d.width, d.height,
+          Affine(t.a * sx, t.b * sx, t.c, t.d * sy, t.e * sy, t.f), parentGbox.crs)
+      }
+    Grb.Header(dtype, d.width, d.height, nodata, gbox, 0L)
+  }
+
+  /** The addressed image's IFD, once the window and band are checked. */
+  private def windowDir(f: TiffFile, idx: Int, uri: String, x0: Int, y0: Int,
+                        w: Int, h: Int, band: Int): Dir = {
+    val d = f.dir(idx)
+    require(x0 >= 0 && y0 >= 0 && w >= 0 && h >= 0 && x0 + w <= d.width &&
+      y0 + h <= d.height,
+      s"window ($x0,$y0,$w,$h) out of bounds ${d.width}x${d.height}")
+    requireBand(uri, d, band)
+    d
+  }
+
+  /** Windowed read of one band: decodes only the region's tiles/strips.
+    * Row-major doubles, unsigned types widened. `band` is 1-based —
+    * multi-band files (RGB/MSI packed into one asset) address plane
+    * `band-1`. */
+  def readWindow(uri: String, x0: Int, y0: Int, w: Int, h: Int,
+                 band: Int = 1): Array[Double] = withFile(uri) { (f, idx) =>
+    val d = windowDir(f, idx, uri, x0, y0, w, h, band)
+    val out = new Array[Double](w * h)
+    if (d.native)
+      segments(f, d, x0, y0, w, h, band) { (wy, wx, px, n) =>
+        System.arraycopy(px, 0, out, wy * w + wx, n)
+      }
+    else decodeWindow(f.path, idx, x0, y0, w, h, band, dtypeOf(d)) { samples =>
+      var y = 0
+      while (y < h) { samples.row(y, out, y * w); y += 1 }
+    }
+    out
+  }
+
+  /** Fused windowed read + first-valid mosaic (A2 paste path): each
+    * tile's part of a window row is decoded into one row-sized scratch
+    * ([[segments]]) and fused from there into the still-`dstNodata`
+    * positions of `out` ([[RasterFormat.fuseRow]]) — no window-sized
+    * array. `srcNodata` NaN means "no nodata value". Returns the number
+    * of newly filled pixels. A `permissive` read that fails keeps what it
+    * fused before the failure (the tiles before a corrupt one) and
+    * returns that count, as [[Grb.fuseWindowInto]] does; a file cut short
+    * fails before it fuses anything. */
+  def fuseWindowInto(uri: String, x0: Int, y0: Int, w: Int, h: Int,
+                     band: Int, srcNodata: Double, out: Array[Double],
+                     outW: Int, dx0: Int, dy0: Int, dstNodata: Double,
+                     permissive: Boolean = false): Long = {
+    var filled = 0L
+    try withFile(uri) { (f, idx) =>
+      val d = windowDir(f, idx, uri, x0, y0, w, h, band)
+      if (d.native)
+        segments(f, d, x0, y0, w, h, band) { (wy, wx, seg, n) =>
+          filled += RasterFormat.fuseRow(seg, 0, srcNodata, out,
+            (dy0 + wy) * outW + dx0 + wx, n, dstNodata)
+        }
+      else decodeWindow(f.path, idx, x0, y0, w, h, band, dtypeOf(d)) { samples =>
+        val px = new Array[Double](w)
+        var y = 0
+        while (y < h) {
+          samples.row(y, px, 0)
+          filled += RasterFormat.fuseRow(px, 0, srcNodata, out,
+            (dy0 + y) * outW + dx0, w, dstNodata)
+          y += 1
+        }
+      }
+      filled
+    } catch {
+      case e: Exception if permissive =>
+        System.err.println(s"[graft.tiff] $uri: partial read (${e.getMessage})")
+        filled
+    }
+  }
+
+  /** Band `band` of the window `(x0, y0, w, h)` of `d`, tile by tile: each
+    * tile (or strip) the window touches is read on its own, decoded as
+    * far as its last row in the window and undifferenced (predictor 2);
+    * each of its rows in the window goes through `Grb.decodeRow` into one
+    * row scratch, and `seg(wy, wx, px, n)` gets the tile's part of window
+    * row `wy`: `px(0 until n)` are the samples from window column `wx`
+    * on. Every tile is checked to lie inside the file before the first
+    * is read, so a file cut short fails before anything is handed on. */
+  private def segments(f: TiffFile, d: Dir, x0: Int, y0: Int, w: Int, h: Int,
+                       band: Int)(seg: (Int, Int, Array[Double], Int) => Unit): Unit = {
+    if (w == 0 || h == 0) return
+    val sz = d.bits / 8
+    val dcode = Grb.DtypeCodes(dtypeOf(d))
+    val chunky = d.planar == 1
+    val spt = if (chunky) d.spp else 1 // samples per pixel of a tile
+    val (bw, bh) = d.block
+    if (bw <= 0 || bh <= 0) f.fail(s"tile size ${bw}x$bh")
+    val rowBytes = bw * spt * sz
+    val across = (d.width + bw - 1) / bw
+    val plane = if (chunky) 0 else (band - 1) * across * ((d.height + bh - 1) / bh)
+    val (tx0, tx1) = (x0 / bw, (x0 + w - 1) / bw)
+    val (ty0, ty1) = (y0 / bh, (y0 + h - 1) / bh)
+    val (offsets, counts) = (d.offsets, d.byteCounts)
+    var ty = ty0
+    while (ty <= ty1) {
+      var tx = tx0
+      while (tx <= tx1) {
+        val t = plane + ty * across + tx
+        if (t >= offsets.length || t >= counts.length)
+          f.fail(s"tile $t missing from the tile table (${offsets.length} entries)")
+        if (offsets(t) + counts(t) > f.length)
+          f.fail(s"tile $t ends at byte ${(offsets(t) + counts(t)).toLong}, " +
+            s"past the end of the file (${f.length} bytes)")
+        tx += 1
+      }
+      ty += 1
+    }
+    val compressed = d.compression != 1
+    val tile = if (compressed) new Array[Byte](rowBytes * bh) else null
+    // a pixel-interleaved row part decodes whole pixels, then keeps `band`
+    val px = new Array[Double](math.min(w, bw) * spt)
+    ty = ty0
+    while (ty <= ty1) {
+      val top = ty * bh
+      val r0 = math.max(y0, top) - top
+      val r1 = math.min(y0 + h, top + bh) - top
+      val need = r1 * rowBytes
+      var tx = tx0
+      while (tx <= tx1) {
+        val t = plane + ty * across + tx
+        val (at, n) = (offsets(t).toLong, counts(t).toInt)
+        def what = s"${f.path}: tile $t"
+        val data =
+          if (!compressed) {
+            if (n < need) f.fail(s"tile $t holds $n of its $need bytes")
+            f.bytes(at, need)
+          } else {
+            val raw = f.bytes(at, n)
+            if (d.compression == 5) Codecs.lzw(raw, tile, need, what)
+            else Codecs.inflate(raw, tile, need, what)
+            tile
+          }
+        val bb = ByteBuffer.wrap(data).order(f.order)
+        if (d.differenced) {
+          var r = r0
+          while (r < r1) { undoPredictor(bb, r * rowBytes, bw * spt, spt, sz); r += 1 }
+        }
+        val left = tx * bw
+        val cx0 = math.max(x0, left)
+        val cn = math.min(x0 + w, left + bw) - cx0
+        var r = r0
+        while (r < r1) {
+          Grb.decodeRow(bb, r * rowBytes + (cx0 - left) * spt * sz, dcode, px, 0, cn * spt)
+          if (spt > 1) {
+            var i = 0
+            while (i < cn) { px(i) = px(i * spt + band - 1); i += 1 }
+          }
+          seg(top + r - y0, cx0 - x0, px, cn)
+          r += 1
+        }
+        tx += 1
+      }
+      ty += 1
+    }
+  }
+
+  /** Undoes TIFF predictor 2 (horizontal differencing) on one row of
+    * `samples` samples of `sz` bytes at byte `off`: each sample adds the
+    * same component of the pixel before it, in the file's byte order
+    * and wrapping like the integer it is (float samples are differenced
+    * as 32-bit integers, as libtiff does). */
+  private def undoPredictor(bb: ByteBuffer, off: Int, samples: Int, spt: Int,
+                            sz: Int): Unit = {
+    val end = off + samples * sz
+    var i = off + spt * sz
+    val back = spt * sz
+    sz match {
+      case 1 =>
+        while (i < end) { bb.put(i, (bb.get(i) + bb.get(i - back)).toByte); i += 1 }
+      case 2 =>
+        while (i < end) {
+          bb.putShort(i, (bb.getShort(i) + bb.getShort(i - back)).toShort); i += 2
+        }
+      case 4 =>
+        while (i < end) { bb.putInt(i, bb.getInt(i) + bb.getInt(i - back)); i += 4 }
+    }
+  }
+
+  /** Decodes the window of image `idx` through the `javax.imageio` TIFF
+    * plugin and hands `f` its band `band` (1-based): the path of the
+    * codecs [[segments]] does not decode. The decode covers all samples —
+    * interleaved layouts decode whole rows anyway. Remote files reach the
+    * plugin as a stream over the byte source (MemoryCache-backed,
+    * seekable). */
+  private def decodeWindow[A](path: String, idx: Int, x0: Int, y0: Int, w: Int,
+                              h: Int, band: Int, dtype: String)(f: Samples => A): A = {
     val iis = RasterIO.localFile(path) match {
-      case Some(f) => ImageIO.createImageInputStream(f)
+      case Some(file) => ImageIO.createImageInputStream(file)
       case None =>
         val in = RasterIO.open(path)
         ImageIO.createImageInputStream(new java.io.InputStream {
@@ -95,178 +550,26 @@ object Tiff {
       require(readers.hasNext, s"no TIFF reader for $path")
       val reader = readers.next()
       reader.setInput(iis, false, false)
-      try f(reader, idx)
-      catch {
+      try {
+        val param = reader.getDefaultReadParam
+        param.setSourceRegion(new Rectangle(x0, y0, w, h))
+        f(new Samples(reader.read(idx, param).getRaster, band - 1, dtype == "int8"))
+      } catch {
         // the plugin's errors ("Data segment out of stream") name no file
-        case e: java.io.IOException =>
-          throw new java.io.IOException(s"$path: ${e.getMessage}", e)
+        case e: IOException => throw new IOException(s"$path: ${e.getMessage}", e)
       } finally reader.dispose()
     } finally iis.close()
   }
-
-  /** Sample-band count of the addressed image (1 for grayscale, 3 for
-    * RGB, N for packed multispectral stacks). */
-  def numBands(uri: String): Int = withReader(uri) { (reader, idx) =>
-    samplesPerPixel(TIFFDirectory.createFromMetadata(reader.getImageMetadata(idx)))
-  }
-
-  private def pageNameOf(reader: javax.imageio.ImageReader, i: Int): Option[String] =
-    Option(TIFFDirectory.createFromMetadata(reader.getImageMetadata(i))
-      .getTIFFField(TagPageName)).map(_.getAsString(0))
-
-  /** Resolve a named subdataset to its image index by PageName (tag 285)
-    * — multi-image TIFF containers are the zero-GDAL analog of the
-    * netCDF/HDF variable containers `RasterSource.subdataset` addresses
-    * in the reference (`loader/types.py:44-56`, `_rio.py:374-430`). A
-    * miss fails loudly listing what the container actually has, like the
-    * band path (`readHeader`'s SamplesPerPixel validation). */
-  def resolveSubdataset(path: String, name: String): Int =
-    subdatasetIdxCache.computeIfAbsent(
-      (path, name), _ => resolveSubdatasetUncached(path, name))
-
-  private def resolveSubdatasetUncached(path: String, name: String): Int =
-    withReader(path) { (reader, _) =>
-      val n = reader.getNumImages(true)
-      val names = (0 until n).map(i => pageNameOf(reader, i))
-      names.indexWhere(_.contains(name)) match {
-        case -1 => throw new IllegalArgumentException(
-          s"subdataset '$name' not found in $path; available: " +
-            (names.flatten match {
-              case Seq() => "none (container has no named subdatasets)"
-              case ns => ns.mkString("'", "', '", "'")
-            }))
-        case i => i
-      }
-    }
-
-  /** Names of the container's subdatasets (page-named images), in image
-    * order. */
-  def subdatasetNames(path: String): Seq[String] =
-    withReader(path) { (reader, _) =>
-      (0 until reader.getNumImages(true)).flatMap(i => pageNameOf(reader, i))
-    }
-
-  /** Header of the addressed image. Overview IFDs (idx > 0) carry no geo
-    * tags; their geobox is the base geobox decimated by the size ratio.
-    * `band` (1-based) validates against SamplesPerPixel — a request for
-    * band 3 of a single-band file must fail loudly, not read band 1
-    * (reference `loader/types.py:40-70` RasterSource.band). */
-  def readHeader(uri: String, band: Int = 1): Grb.Header = withReader(uri) { (reader, idx) =>
-    val w = reader.getWidth(idx)
-    val h = reader.getHeight(idx)
-    val dir = TIFFDirectory.createFromMetadata(reader.getImageMetadata(idx))
-    val nBands = samplesPerPixel(dir)
-    require(band >= 1 && band <= nBands,
-      s"band $band requested of $uri with $nBands sample band(s)")
-    val dtype = dtypeOf(dir)
-    // An idx > 0 IFD with its OWN ModelPixelScale is a standalone
-    // subdataset image (multi-image container); one without is a
-    // reduced-resolution overview deriving georeferencing from its
-    // PARENT — the nearest preceding IFD that carries geo tags (the
-    // base image, or the subdataset the overview belongs to: GDAL lays
-    // a subdataset's pyramid out as the unnamed IFDs following it).
-    val standalone = idx == 0 || dir.getTIFFField(TagModelPixelScale) != null
-    // parent resolution decodes up to idx-1 IFD metadatas — cached per
-    // (path, idx) like the name cache (immutable stores; container
-    // opens are object-store round trips at scale)
-    val geoIdx: Int =
-      if (standalone) idx
-      else parentIdxCache.computeIfAbsent((splitUri(uri)._1, idx), _ =>
-        (idx - 1 to 0 by -1).find { i =>
-          i == 0 || TIFFDirectory.createFromMetadata(reader.getImageMetadata(i))
-            .getTIFFField(TagModelPixelScale) != null
-        }.get)
-    val geoDir =
-      if (standalone) dir
-      else TIFFDirectory.createFromMetadata(reader.getImageMetadata(geoIdx))
-    // the JDK reader filters tags outside its allowed TagSets out of the
-    // metadata (GDAL_NODATA is no baseline/GeoTIFF tag), so fall back to a
-    // raw scan of the geo-carrying IFD for it
-    val nodata = Option(geoDir.getTIFFField(TagGdalNodata))
-      .map(_.getAsString(0))
-      .orElse(rawAsciiTag(splitUri(uri)._1, TagGdalNodata, geoIdx))
-      .map(_.trim)
-      .flatMap(s => if (s.equalsIgnoreCase("nan")) Some(Double.NaN)
-                    else s.toDoubleOption)
-    val gbox =
-      if (standalone) geoboxOf(geoDir, w, h)
-      else {
-        // decimated level: same origin, linear part scaled by size ratio
-        val parentGbox = geoboxOf(geoDir,
-          reader.getWidth(geoIdx), reader.getHeight(geoIdx))
-        val sx = parentGbox.width.toDouble / w
-        val sy = parentGbox.height.toDouble / h
-        val t = parentGbox.transform
-        GeoBox(w, h, Affine(t.a * sx, t.b * sx, t.c, t.d * sy, t.e * sy, t.f),
-          parentGbox.crs)
-      }
-    Grb.Header(dtype, w, h, nodata, gbox, 0L)
-  }
-
-  /** Windowed read of one band: decodes only the region's tiles/strips.
-    * Row-major doubles, unsigned types widened. `band` is 1-based —
-    * multi-band files (RGB/MSI packed into one asset) address plane
-    * `band-1` of the decoded raster. */
-  def readWindow(uri: String, x0: Int, y0: Int, w: Int, h: Int,
-                 band: Int = 1): Array[Double] =
-    decodeWindow(uri, x0, y0, w, h, band) { samples =>
-      val out = new Array[Double](w * h)
-      var y = 0
-      while (y < h) { samples.row(y, out, y * w); y += 1 }
-      out
-    }
-
-  /** Fused windowed read + first-valid mosaic (A2 paste path): each row of
-    * band `band` goes from the decoded raster's bank into one row-sized
-    * scratch and is fused from there into the still-`dstNodata`
-    * positions of `out` ([[RasterFormat.fuseRow]]) — no window-sized
-    * copy. `srcNodata` NaN means "no nodata value". Returns the number
-    * of newly filled pixels. */
-  def fuseWindowInto(uri: String, x0: Int, y0: Int, w: Int, h: Int,
-                     band: Int, srcNodata: Double, out: Array[Double],
-                     outW: Int, dx0: Int, dy0: Int, dstNodata: Double): Long =
-    decodeWindow(uri, x0, y0, w, h, band) { samples =>
-      val px = new Array[Double](w)
-      var filled = 0L
-      var y = 0
-      while (y < h) {
-        samples.row(y, px, 0)
-        filled += RasterFormat.fuseRow(px, 0, srcNodata, out,
-          (dy0 + y) * outW + dx0, w, dstNodata)
-        y += 1
-      }
-      filled
-    }
-
-  /** Decodes the window of the addressed image and hands `f` its band
-    * `band` (1-based). The decode covers all samples — interleaved
-    * layouts decode whole rows anyway. */
-  private def decodeWindow[A](uri: String, x0: Int, y0: Int, w: Int, h: Int,
-                              band: Int)(f: Samples => A): A =
-    withReader(uri) { (reader, idx) =>
-      require(x0 >= 0 && y0 >= 0 && x0 + w <= reader.getWidth(idx) &&
-        y0 + h <= reader.getHeight(idx),
-        s"window ($x0,$y0,$w,$h) out of bounds " +
-          s"${reader.getWidth(idx)}x${reader.getHeight(idx)}")
-      val param = reader.getDefaultReadParam
-      param.setSourceRegion(new Rectangle(x0, y0, w, h))
-      if (band != 1) {
-        val dir = TIFFDirectory.createFromMetadata(reader.getImageMetadata(idx))
-        val nBands = samplesPerPixel(dir)
-        require(band >= 1 && band <= nBands,
-          s"band $band requested of $uri with $nBands sample band(s)")
-      }
-      f(new Samples(reader.read(idx, param).getRaster, band - 1))
-    }
 
   /** Band `b` of a decoded raster, read row by row straight from its
     * primitive bank: a `ComponentSampleModel` gives the band's bank and
     * offset and the pixel and scanline strides, so a row is one typed
     * loop, with no virtual call per sample. Samples come out as
     * `Raster.getSamples` gives them: unsigned 8/16-bit buffers widen,
-    * signed ones sign-extend. Any other sample model takes that generic
-    * path. */
-  private final class Samples(r: Raster, b: Int) {
+    * signed ones sign-extend; an int8 image (which the plugin decodes
+    * into an unsigned byte buffer) sign-extends too, as the native
+    * decode does. Any other sample model takes that generic path. */
+  private final class Samples(r: Raster, b: Int, int8: Boolean) {
     private val w = r.getWidth
 
     /** Row `y` of the band into `out(outOff until outOff + width)`. */
@@ -283,7 +586,8 @@ object Tiff {
           r.getDataBuffer match {
             case d: DataBufferByte =>
               val a = d.getData(bank)
-              while (x < w) { out(outOff + x) = a(i) & 0xff; x += 1; i += ps }
+              if (int8) while (x < w) { out(outOff + x) = a(i); x += 1; i += ps }
+              else while (x < w) { out(outOff + x) = a(i) & 0xff; x += 1; i += ps }
             case d: DataBufferUShort =>
               val a = d.getData(bank)
               while (x < w) { out(outOff + x) = a(i) & 0xffff; x += 1; i += ps }
@@ -307,7 +611,8 @@ object Tiff {
     private def generic(y: Int, out: Array[Double], outOff: Int): Unit = {
       var x = 0
       while (x < w) {
-        out(outOff + x) = r.getSampleDouble(r.getMinX + x, r.getMinY + y, b)
+        val v = r.getSampleDouble(r.getMinX + x, r.getMinY + y, b)
+        out(outOff + x) = if (int8) v.toByte else v
         x += 1
       }
     }
@@ -318,76 +623,15 @@ object Tiff {
     * its full image (the GDAL container layout — a subdataset's
     * overviews sit between it and the next page-named image), so this
     * works for the base image and for `#`-addressed subdatasets alike. */
-  def overviewLevels(uri: String): Seq[(Int, String)] = withReader(uri) {
-    (reader, idx) =>
-      val (path, _) = splitUri(uri)
-      val n = reader.getNumImages(true)
-      val baseW = reader.getWidth(idx)
-      Iterator.from(idx + 1).takeWhile(i =>
-        i < n && pageNameOf(reader, i).isEmpty).map { i =>
-        math.round(baseW.toDouble / reader.getWidth(i)).toInt -> s"$path#$i"
-      }.toSeq.sortBy(_._1)
+  def overviewLevels(uri: String): Seq[(Int, String)] = withFile(uri) { (f, idx) =>
+    val baseW = f.dir(idx).width
+    Iterator.from(idx + 1).takeWhile(i => f.has(i) && f.dir(i).pageName.isEmpty)
+      .map(i => math.round(baseW.toDouble / f.dir(i).width).toInt -> s"${f.path}#$i")
+      .toSeq.sortBy(_._1)
   }
 
-  /** Minimal raw scan of the `ifdIdx`-th IFD for an ASCII tag the
-    * plugin's metadata filter dropped. Classic TIFF only (BigTIFF would
-    * arrive via a different magic); handles both byte orders and inline
-    * values. */
-  private def rawAsciiTag(path: String, tagNum: Int,
-                          ifdIdx: Int): Option[String] = {
-    val raf = RasterIO.open(path)
-    try {
-      val b0 = raf.read(); val b1 = raf.read()
-      val le = b0 == 'I' && b1 == 'I'
-      def u16(): Int = {
-        val a = raf.read(); val b = raf.read()
-        if (le) a | (b << 8) else (a << 8) | b
-      }
-      def u32(): Long = {
-        val a = u16().toLong; val b = u16().toLong
-        if (le) a | (b << 16) else (a << 16) | b
-      }
-      if (u16() != 42) return None
-      var ifdOff = u32()
-      var skip = ifdIdx
-      while (skip > 0) {
-        if (ifdOff == 0) return None
-        raf.seek(ifdOff)
-        val entries = u16()
-        raf.seek(ifdOff + 2 + entries * 12L) // 12 bytes per IFD entry
-        ifdOff = u32()
-        skip -= 1
-      }
-      if (ifdOff == 0) return None
-      raf.seek(ifdOff)
-      val n = u16()
-      var i = 0
-      while (i < n) {
-        val tag = u16(); val tpe = u16(); val cnt = u32()
-        if (tag == tagNum && tpe == 2) {
-          val bytes = new Array[Byte](cnt.toInt)
-          if (cnt <= 4) raf.readFully(bytes)
-          else { raf.seek(u32()); raf.readFully(bytes) }
-          return Some(new String(bytes, "US-ASCII").takeWhile(_ != '\u0000'))
-        }
-        u32() // skip value/offset
-        i += 1
-      }
-      None
-    } catch { case _: Exception => None }
-    finally raf.close()
-  }
-
-  private def samplesPerPixel(dir: TIFFDirectory): Int =
-    Option(dir.getTIFFField(BaselineTIFFTagSet.TAG_SAMPLES_PER_PIXEL))
-      .map(_.getAsInt(0)).getOrElse(1)
-
-  private def dtypeOf(dir: TIFFDirectory): String = {
-    def intField(tag: Int, dflt: Int): Int =
-      Option(dir.getTIFFField(tag)).map(_.getAsInt(0)).getOrElse(dflt)
-    val bits = intField(BaselineTIFFTagSet.TAG_BITS_PER_SAMPLE, 8)
-    val fmt = intField(BaselineTIFFTagSet.TAG_SAMPLE_FORMAT, 1)
-    (bits, fmt) match {
+  private def dtypeOf(d: Dir): String =
+    (d.bits, d.sampleFormat) match {
       case (8, 1) => "uint8"
       case (8, 2) => "int8"
       case (16, 1) => "uint16"
@@ -398,30 +642,28 @@ object Tiff {
       case other => throw new IllegalArgumentException(
         s"unsupported TIFF sample layout (bits, format) = $other")
     }
-  }
 
-  private def geoboxOf(dir: TIFFDirectory, w: Int, h: Int): GeoBox = {
-    val scale = Option(dir.getTIFFField(TagModelPixelScale)).getOrElse(
+  private def geoboxOf(d: Dir, w: Int, h: Int): GeoBox = {
+    val scale = d.nums(TagModelPixelScale).getOrElse(
       throw new IllegalArgumentException("TIFF has no ModelPixelScaleTag"))
-    val tie = Option(dir.getTIFFField(TagModelTiepoint)).getOrElse(
+    val tie = d.nums(TagModelTiepoint).getOrElse(
       throw new IllegalArgumentException("TIFF has no ModelTiepointTag"))
-    val (sx, sy) = (scale.getAsDouble(0), scale.getAsDouble(1))
+    val (sx, sy) = (scale(0), scale(1))
     // tiepoint: raster (i,j,k) -> model (x,y,z)
-    val (ti, tj) = (tie.getAsDouble(0), tie.getAsDouble(1))
-    val (tx, ty) = (tie.getAsDouble(3), tie.getAsDouble(4))
+    val (ti, tj) = (tie(0), tie(1))
+    val (tx, ty) = (tie(3), tie(4))
     val ox = tx - ti * sx
     val oy = ty + tj * sy
-    GeoBox(w, h, Affine.grid(ox, oy, sx, -sy), crsOf(dir))
+    GeoBox(w, h, Affine.grid(ox, oy, sx, -sy), crsOf(d))
   }
 
-  private def crsOf(dir: TIFFDirectory): Crs = {
-    val gk = Option(dir.getTIFFField(TagGeoKeyDirectory)).getOrElse(
+  private def crsOf(d: Dir): Crs = {
+    val gk = d.nums(TagGeoKeyDirectory).getOrElse(
       throw new IllegalArgumentException("TIFF has no GeoKeyDirectoryTag"))
     // entries of 4 shorts: (keyId, tagLocation, count, value)
     def keyValue(keyId: Int): Option[Int] =
-      (4 until gk.getCount by 4).collectFirst {
-        case i if gk.getAsInt(i) == keyId && gk.getAsInt(i + 1) == 0 =>
-          gk.getAsInt(i + 3)
+      (4 until gk.length - 3 by 4).collectFirst {
+        case i if gk(i).toInt == keyId && gk(i + 1) == 0 => gk(i + 3).toInt
       }
     keyValue(ProjectedCSTypeGeoKey)
       .orElse(keyValue(GeographicTypeGeoKey))

@@ -136,6 +136,7 @@ object Zarr {
       s"window ($x0,$y0,$w,$h) out of bounds ${m.width}x${m.height}")
     val out = new Array[Double](w * h)
     val px = Grb.dtypeSize(m.dtype)
+    val dcode = Grb.DtypeCodes(m.dtype)
     val cy0 = y0 / m.chunkH
     val cy1 = (y0 + h - 1) / m.chunkH
     val cx0 = x0 / m.chunkW
@@ -152,17 +153,8 @@ object Zarr {
             val bytes =
               if (!m.zlib) raw
               else {
-                val inf = new java.util.zip.Inflater()
-                inf.setInput(raw)
                 val outB = new Array[Byte](m.chunkW * m.chunkH * px)
-                var off = 0
-                var stuck = false
-                while (!inf.finished() && off < outB.length && !stuck) {
-                  val k = inf.inflate(outB, off, outB.length - off)
-                  if (k == 0) stuck = true else off += k
-                }
-                inf.end()
-                require(!stuck, s"$chunkUri: truncated or corrupt zlib chunk")
+                Codecs.inflate(raw, outB, outB.length, chunkUri)
                 outB
               }
             ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
@@ -180,7 +172,7 @@ object Zarr {
             java.util.Arrays.fill(out, outOff, outOff + n, m.fill)
           } else {
             val chOff = ((y - cy * m.chunkH) * m.chunkW + (rx0 - cx * m.chunkW)) * px
-            decodeRow(chunk, chOff, m.dtype, out, outOff, n)
+            Grb.decodeRow(chunk, chOff, dcode, out, outOff, n)
           }
           y += 1
         }
@@ -189,21 +181,6 @@ object Zarr {
       cy += 1
     }
     out
-  }
-
-  private def decodeRow(bb: ByteBuffer, off: Int, dtype: String,
-                        out: Array[Double], outOff: Int, n: Int): Unit = {
-    var i = 0
-    dtype match {
-      case "uint8" => while (i < n) { out(outOff + i) = bb.get(off + i) & 0xff; i += 1 }
-      case "int8" => while (i < n) { out(outOff + i) = bb.get(off + i); i += 1 }
-      case "uint16" => while (i < n) { out(outOff + i) = bb.getShort(off + i * 2) & 0xffff; i += 1 }
-      case "int16" => while (i < n) { out(outOff + i) = bb.getShort(off + i * 2); i += 1 }
-      case "int32" => while (i < n) { out(outOff + i) = bb.getInt(off + i * 4); i += 1 }
-      case "int64" => while (i < n) { out(outOff + i) = bb.getLong(off + i * 8).toDouble; i += 1 }
-      case "float32" => while (i < n) { out(outOff + i) = bb.getFloat(off + i * 4); i += 1 }
-      case "float64" => while (i < n) { out(outOff + i) = bb.getDouble(off + i * 8); i += 1 }
-    }
   }
 
   /** Sidecar pyramid levels of the addressed variable: `<var>.ovrN`

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * in-process HTTP file server (Range-capable, with injectable 503s)
   * behind [[HttpRangeSource]] — format decoders unchanged. Proves
   * (a) ranged-GET reads are byte-identical to local reads for both the
-  * positioned-decoder path (GRB) and the javax.imageio stream-fallback
-  * path (GeoTIFF), (b) the retry policy (the reference's
+  * positioned-decoder paths (GRB, and GeoTIFF: its IFDs and the tiles
+  * a window touches), (b) the retry policy (the reference's
   * GDAL_HTTP_MAX_RETRY analog, `_rio.py:65-69`) absorbs transient
   * failures, and (c) non-transient failures fail fast.
   */
@@ -16,6 +16,7 @@ class HttpRangeSpec extends AnyFunSuite {
 
   private val failNext = new java.util.concurrent.atomic.AtomicInteger(0)
   private val nRequests = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val nBytes = new java.util.concurrent.atomic.AtomicLong(0)
 
   private lazy val dir =
     java.nio.file.Files.createTempDirectory("graft_http_src").toString
@@ -43,6 +44,7 @@ class HttpRangeSpec extends AnyFunSuite {
               val slice = java.util.Arrays.copyOfRange(bytes, a, b + 1)
               exchange.getResponseHeaders.set(
                 "Content-Range", s"bytes $a-$b/${bytes.length}")
+              nBytes.addAndGet(slice.length)
               exchange.sendResponseHeaders(206, slice.length)
               exchange.getResponseBody.write(slice)
               exchange.close()
@@ -88,11 +90,25 @@ class HttpRangeSpec extends AnyFunSuite {
     assert(gets < 30, s"windowed read issued $gets GETs")
   }
 
-  test("GeoTIFF decode over http routes through the stream fallback") {
+  test("GeoTIFF over http equals local reads and fetches only the window's tiles") {
     tifPath // materialize the served file before the first request
     val uri = s"$base/s.tif"
+    assert(Tiff.readHeader(uri) == Tiff.readHeader(tifPath))
     val remote = Tiff.readWindow(uri, 2, 2, 30, 30)
     assert(remote.sameElements(Tiff.readWindow(tifPath, 2, 2, 30, 30)))
+    // a 2 MiB file: a window inside one 64² tile fetches a length probe,
+    // one read-ahead block from the header on, and that tile if the block
+    // missed it — not a stream through the whole file
+    val bigGbox = graft.geo.GeoBox(1024, 1024, g.transform, g.crs)
+    val big = Array.tabulate(1024 * 1024)(i => (i % 1024 + i / 1024).toDouble)
+    Tiff.write(s"$dir/big.tif", big, bigGbox, "uint16", Some(0.0), tileSize = Some(64))
+    val (before, bytesBefore) = (nRequests.get(), nBytes.get())
+    val win = Tiff.readWindow(s"$base/big.tif", 70, 70, 30, 30)
+    val (gets, bytes) = (nRequests.get() - before, nBytes.get() - bytesBefore)
+    assert(win.toSeq == Tiff.readWindow(s"$dir/big.tif", 70, 70, 30, 30).toSeq)
+    val fileBytes = new java.io.File(s"$dir/big.tif").length()
+    assert(gets <= 4, s"windowed read issued $gets GETs")
+    assert(bytes < fileBytes / 4, s"windowed read fetched $bytes of $fileBytes bytes")
   }
 
   test("transient 503s are retried and the read still succeeds") {

@@ -7,12 +7,14 @@ import graft.raster.{AutoReader, Grb, RasterIO, Tiff}
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Cut and truncated rasters through the buffered local input and the
-  * paste fuse: a GRB cut inside its 72-byte header, GRBs cut inside
-  * their pixel span (a window served from the input's buffer and one
-  * read past it), and a Deflate TIFF whose last tiles are cut off. A
-  * strict read fails naming the file; a permissive load fuses exactly
-  * the intact sources' pixels. */
+/** Cut, truncated and corrupt rasters through the buffered local input
+  * and the paste fuse: a GRB cut inside its 72-byte header, GRBs cut
+  * inside their pixel span (a window served from the input's buffer and
+  * one read past it), a Deflate TIFF whose last tiles are cut off, and
+  * TIFFs with one corrupt tile (flipped bytes, a Deflate or LZW stream
+  * that ends short). A strict read fails naming the file; a permissive
+  * load fuses exactly the intact sources' pixels, plus, for a corrupt
+  * tile, the tiles read before it. */
 class ReadFailureSpec extends AnyFunSuite {
 
   private lazy val dir = TmpLanding.fresh("graft_read_failure", "spec")
@@ -119,5 +121,56 @@ class ReadFailureSpec extends AnyFunSuite {
     val bs = broken.map(_._2)
     val mixed = Seq(bs(0), intact(0)._2, bs(1), bs(2), intact(1)._2, bs(3))
     assert(fuse(mixed, failOnError = false) == ((want, wantValid)))
+  }
+
+  /** Byte offset and length of tile `t` of image 0, from the plugin's
+    * metadata. */
+  private def tileRange(path: String, t: Int): (Int, Int) = {
+    val iis = javax.imageio.ImageIO.createImageInputStream(new java.io.File(path))
+    try {
+      val r = javax.imageio.ImageIO.getImageReaders(iis).next()
+      r.setInput(iis)
+      val d = javax.imageio.plugins.tiff.TIFFDirectory.createFromMetadata(
+        r.getImageMetadata(0))
+      (d.getTIFFField(324).getAsLong(t).toInt, d.getTIFFField(325).getAsLong(t).toInt)
+    } finally iis.close()
+  }
+
+  test("a corrupt TIFF tile fails strict reads; permissive keeps the tiles before it") {
+    val tif = intact(1)._2
+    val bytes = Files.readAllBytes(Paths.get(tif))
+    val (at, n) = tileRange(tif, 5)
+    def flipped(name: String, from: Int, until: Int): String = {
+      val b = bytes.clone()
+      for (i <- from until until) b(i) = (b(i) ^ 0x5a).toByte
+      Files.write(Paths.get(s"$dir/$name.tif"), b)
+      s"$dir/$name.tif"
+    }
+    // hand-built twins whose tile 5 holds the first half of its stream
+    val short = Seq(8 -> "deflate", 5 -> "lzw").map { case (c, name) =>
+      val p = s"$dir/short_$name.tif"
+      TiffBuilder.write(p, 64, 48, Seq(plane(64, 48, (x, y) => 5000 + x * y)),
+        "uint16", TiffBuilder.Layout(tile = Some((16, 16)), compression = c),
+        corrupt = (i, b) => if (i == 5) b.take(b.length / 2) else b)
+      p
+    }
+    val (want, _) = fuse(Seq(tif), failOnError = true)
+    // tiles 0 to 4 of the 16-pixel tiling: rows 0-15, then columns 0-15
+    val kept = want.indices.map { i =>
+      val (x, y) = (i % 64, i / 64)
+      if (y < 16 || (y < 32 && x < 16)) want(i) else 0.0
+    }
+    // the zlib header, the middle of the stream, and its checksum alone
+    for (path <- Seq(flipped("flip_header", at, at + 2),
+                     flipped("flip_middle", at + n / 3, at + 2 * n / 3),
+                     flipped("flip_checksum", at + n - 4, at + n)) ++ short) {
+      val e = intercept[java.io.IOException] {
+        AutoReader.readInto(RasterSource(path), RasterLoadParams(failOnError = true),
+          g, 0.0, Array.fill(g.width * g.height)(0.0))
+      }
+      assert(e.getMessage.contains(path) && e.getMessage.contains("tile 5"), e.getMessage)
+      assert(fuse(Seq(path), failOnError = false) == ((kept, kept.count(_ != 0.0).toLong)),
+        path)
+    }
   }
 }
