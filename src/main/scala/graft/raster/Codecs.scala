@@ -3,10 +3,10 @@ package graft.raster
 import java.io.IOException
 import java.util.zip.{DataFormatException, Inflater}
 
-/** The decoders of the compressed containers: zlib/Deflate (TIFF tiles
-  * and strips, zarr chunks) and TIFF LZW. Each fills an exact number of
-  * bytes and fails loudly, naming `what` (the file or chunk), on a
-  * stream that ends short of it or cannot be decoded. */
+/** The zlib/Deflate decoder of the compressed containers (TIFF tiles
+  * and strips, zarr chunks): it fills an exact number of bytes and fails
+  * loudly, naming `what` (the file or chunk), on a stream that ends short
+  * of it or cannot be decoded. */
 private[raster] object Codecs {
 
   /** Inflates `src` into `dst(0 until len)`. A stream that ends, or
@@ -29,76 +29,5 @@ private[raster] object Codecs {
       case e: DataFormatException =>
         throw new IOException(s"$what: corrupt compressed stream (${e.getMessage})", e)
     } finally inf.end()
-  }
-
-  private val Clear = 256
-  private val Eoi = 257
-
-  /** Decodes TIFF LZW (MSB-first codes of 9 to 12 bits, widened one code
-    * early as the TIFF 6.0 encoder does) from `src` into
-    * `dst(0 until len)`. Decoding stops once `len` bytes are out; a
-    * stream that ends first, or holds a code not yet in its table,
-    * raises an `IOException`. */
-  def lzw(src: Array[Byte], dst: Array[Byte], len: Int, what: => String): Unit = {
-    if (src.length >= 2 && src(0) == 0 && (src(1) & 1) == 1)
-      throw new IOException(s"$what: old-style (pre-TIFF 6.0) LZW is not supported")
-    val prefix = new Array[Int](4096)
-    val suffix = new Array[Byte](4096)
-    val first = new Array[Byte](4096)
-    val length = new Array[Int](4096)
-    var c = 0
-    while (c < 256) {
-      suffix(c) = c.toByte; first(c) = c.toByte; length(c) = 1; c += 1
-    }
-    var next = 258
-    var width = 9
-    var old = -1
-    var out = 0
-    var bits = 0 // the low `nbits` bits are unread input
-    var nbits = 0
-    var pos = 0
-    def fail(why: String): Nothing =
-      throw new IOException(s"$what: $why after $out of $len bytes")
-    while (out < len) {
-      while (nbits < width) {
-        if (pos >= src.length) fail("LZW stream ends")
-        bits = (bits << 8) | (src(pos) & 0xff)
-        nbits += 8
-        pos += 1
-      }
-      val code = (bits >>> (nbits - width)) & ((1 << width) - 1)
-      nbits -= width
-      bits &= (1 << nbits) - 1
-      if (code == Clear) { next = 258; width = 9; old = -1 }
-      else if (code == Eoi) fail("LZW stream ends")
-      else {
-        if (old < 0) {
-          if (code > 255) fail(s"LZW code $code follows a clear code")
-        } else if (next < 4096) {
-          if (code > next) fail(s"LZW code $code is not in the table (next $next)")
-          // the new entry: the previous string plus the first byte of this
-          // one, which for code == next is the previous string's own first
-          prefix(next) = old
-          suffix(next) = if (code == next) first(old) else first(code)
-          first(next) = first(old)
-          length(next) = length(old) + 1
-          next += 1
-          if (next == 511) width = 10
-          else if (next == 1023) width = 11
-          else if (next == 2047) width = 12
-        } else if (code >= next) fail(s"LZW code $code is not in the table")
-        // the string of `code`, written back to front, clipped at `len`
-        val n = length(code)
-        var p = out + n - 1
-        var k = code
-        while (p >= out) {
-          if (p < len) dst(p) = suffix(k)
-          k = prefix(k)
-          p -= 1
-        }
-        out += n
-        old = code
-      }
-    }
   }
 }

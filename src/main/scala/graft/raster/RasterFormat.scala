@@ -168,8 +168,8 @@ object RasterFormat {
   }
 
   /** GeoTIFF through [[Tiff]]'s own classic-TIFF reader: windowed reads
-    * that decode only the tiles/strips a window touches (none, Deflate
-    * and LZW natively; other codecs through the JDK's `javax.imageio`
+    * that decode only the tiles/strips a window touches (none and
+    * Deflate natively; other codecs through the JDK's `javax.imageio`
     * TIFF plugin), multi-band stacks, reduced-resolution subimages as
     * overviews and PageName-named images as subdatasets (addressed as
     * `uri#<image-index>`). */

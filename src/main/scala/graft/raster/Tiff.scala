@@ -4,9 +4,7 @@ import graft.geo.{Affine, Crs, GeoBox}
 
 import java.awt.Rectangle
 import java.awt.color.ColorSpace
-import java.awt.image.{BufferedImage, ComponentColorModel, ComponentSampleModel,
-  DataBuffer, DataBufferByte, DataBufferDouble, DataBufferFloat, DataBufferInt,
-  DataBufferShort, DataBufferUShort, Raster}
+import java.awt.image.{BufferedImage, ComponentColorModel, DataBuffer, Raster}
 import java.io.{File, IOException}
 import java.nio.{ByteBuffer, ByteOrder}
 import javax.imageio.{IIOImage, ImageIO, ImageTypeSpecifier, ImageWriteParam}
@@ -26,10 +24,10 @@ import javax.imageio.plugins.tiff.BaselineTIFFTagSet._
   *  - **windowed reads** ([[segments]]): each tile or strip the window
   *    touches is read on its own and decoded once, and its rows go
   *    through `Grb.decodeRow` straight into the caller's rows. Native
-  *    codecs: none, Deflate (8, 32946) and LZW (5), predictor 1 and 2
-  *    (8/16/32-bit samples), chunky and planar layouts. Any other codec
-  *    (JPEG, PackBits, CCITT, predictor 3) decodes the window through the
-  *    JDK's `javax.imageio` TIFF plugin ([[decodeWindow]]);
+  *    codecs: none and Deflate (8, 32946), predictor 1 and 2 (8/16/32-bit
+  *    samples), chunky and planar layouts. Any other codec (LZW, JPEG,
+  *    PackBits, CCITT, predictor 3) decodes the window through the JDK's
+  *    `javax.imageio` TIFF plugin ([[decodeWindow]]);
   *  - **overview pyramid**: reduced-resolution subimages (additional
   *    IFDs), addressed as `path#<imageIndex>`; their geobox derives from
   *    the base image's (GDAL writes geo tags on the base IFD only).
@@ -280,8 +278,7 @@ object Tiff {
     /** Whether [[segments]] decodes this image; the rest go through the
       * `javax.imageio` plugin. */
     def native: Boolean =
-      (compression == 1 || compression == 5 || compression == 8 ||
-        compression == 32946) &&
+      (compression == 1 || compression == 8 || compression == 32946) &&
         (predictor == 1 || compression == 1 ||
           (predictor == 2 && (bits == 8 || bits == 16 || bits == 32)))
   }
@@ -368,8 +365,13 @@ object Tiff {
         System.arraycopy(px, 0, out, wy * w + wx, n)
       }
     else decodeWindow(f.path, idx, x0, y0, w, h, band, dtypeOf(d)) { samples =>
+      val px = new Array[Double](w)
       var y = 0
-      while (y < h) { samples.row(y, out, y * w); y += 1 }
+      while (y < h) {
+        samples.row(y, px)
+        System.arraycopy(px, 0, out, y * w, w)
+        y += 1
+      }
     }
     out
   }
@@ -399,7 +401,7 @@ object Tiff {
         val px = new Array[Double](w)
         var y = 0
         while (y < h) {
-          samples.row(y, px, 0)
+          samples.row(y, px)
           filled += RasterFormat.fuseRow(px, 0, srcNodata, out,
             (dy0 + y) * outW + dx0, w, dstNodata)
           y += 1
@@ -430,7 +432,13 @@ object Tiff {
     val spt = if (chunky) d.spp else 1 // samples per pixel of a tile
     val (bw, bh) = d.block
     if (bw <= 0 || bh <= 0) f.fail(s"tile size ${bw}x$bh")
-    val rowBytes = bw * spt * sz
+    // the largest part of a tile the window needs: whole tiles, or the
+    // rows of the first tile row down to the window's last
+    val rowBytesL = bw.toLong * spt * sz
+    val needMax = rowBytesL * math.min(bh, y0 + h - (y0 / bh) * bh)
+    if (needMax > Int.MaxValue - 8)
+      f.fail(s"a ${bw}x$bh tile of $spt ${d.bits}-bit samples is too large to read")
+    val rowBytes = rowBytesL.toInt
     val across = (d.width + bw - 1) / bw
     val plane = if (chunky) 0 else (band - 1) * across * ((d.height + bh - 1) / bh)
     val (tx0, tx1) = (x0 / bw, (x0 + w - 1) / bw)
@@ -451,7 +459,7 @@ object Tiff {
       ty += 1
     }
     val compressed = d.compression != 1
-    val tile = if (compressed) new Array[Byte](rowBytes * bh) else null
+    val tile = if (compressed) new Array[Byte](needMax.toInt) else null
     // a pixel-interleaved row part decodes whole pixels, then keeps `band`
     val px = new Array[Double](math.min(w, bw) * spt)
     ty = ty0
@@ -470,9 +478,7 @@ object Tiff {
             if (n < need) f.fail(s"tile $t holds $n of its $need bytes")
             f.bytes(at, need)
           } else {
-            val raw = f.bytes(at, n)
-            if (d.compression == 5) Codecs.lzw(raw, tile, need, what)
-            else Codecs.inflate(raw, tile, need, what)
+            Codecs.inflate(f.bytes(at, n), tile, need, what)
             tile
           }
         val bb = ByteBuffer.wrap(data).order(f.order)
@@ -561,59 +567,17 @@ object Tiff {
     } finally iis.close()
   }
 
-  /** Band `b` of a decoded raster, read row by row straight from its
-    * primitive bank: a `ComponentSampleModel` gives the band's bank and
-    * offset and the pixel and scanline strides, so a row is one typed
-    * loop, with no virtual call per sample. Samples come out as
-    * `Raster.getSamples` gives them: unsigned 8/16-bit buffers widen,
-    * signed ones sign-extend; an int8 image (which the plugin decodes
-    * into an unsigned byte buffer) sign-extends too, as the native
-    * decode does. Any other sample model takes that generic path. */
+  /** Band `b` of a decoded raster, row by row, as `Raster.getSamples`
+    * gives it, except that an int8 image (which the plugin decodes into
+    * an unsigned byte buffer) sign-extends, as the native decode does. */
   private final class Samples(r: Raster, b: Int, int8: Boolean) {
-    private val w = r.getWidth
 
-    /** Row `y` of the band into `out(outOff until outOff + width)`. */
-    def row(y: Int, out: Array[Double], outOff: Int): Unit =
-      r.getSampleModel match {
-        case sm: ComponentSampleModel =>
-          val bank = sm.getBankIndices()(b)
-          val ps = sm.getPixelStride
-          val i0 = r.getDataBuffer.getOffsets()(bank) + sm.getOffset(
-            r.getMinX - r.getSampleModelTranslateX,
-            r.getMinY + y - r.getSampleModelTranslateY, b)
-          var x = 0
-          var i = i0
-          r.getDataBuffer match {
-            case d: DataBufferByte =>
-              val a = d.getData(bank)
-              if (int8) while (x < w) { out(outOff + x) = a(i); x += 1; i += ps }
-              else while (x < w) { out(outOff + x) = a(i) & 0xff; x += 1; i += ps }
-            case d: DataBufferUShort =>
-              val a = d.getData(bank)
-              while (x < w) { out(outOff + x) = a(i) & 0xffff; x += 1; i += ps }
-            case d: DataBufferShort =>
-              val a = d.getData(bank)
-              while (x < w) { out(outOff + x) = a(i); x += 1; i += ps }
-            case d: DataBufferInt =>
-              val a = d.getData(bank)
-              while (x < w) { out(outOff + x) = a(i); x += 1; i += ps }
-            case d: DataBufferFloat =>
-              val a = d.getData(bank)
-              while (x < w) { out(outOff + x) = a(i); x += 1; i += ps }
-            case d: DataBufferDouble =>
-              val a = d.getData(bank)
-              while (x < w) { out(outOff + x) = a(i); x += 1; i += ps }
-            case _ => generic(y, out, outOff)
-          }
-        case _ => generic(y, out, outOff)
-      }
-
-    private def generic(y: Int, out: Array[Double], outOff: Int): Unit = {
-      var x = 0
-      while (x < w) {
-        val v = r.getSampleDouble(r.getMinX + x, r.getMinY + y, b)
-        out(outOff + x) = if (int8) v.toByte else v
-        x += 1
+    /** Row `y` of the band into `px(0 until width)`. */
+    def row(y: Int, px: Array[Double]): Unit = {
+      r.getSamples(r.getMinX, r.getMinY + y, r.getWidth, 1, b, px)
+      if (int8) {
+        var x = 0
+        while (x < px.length) { px(x) = px(x).toByte; x += 1 }
       }
     }
   }

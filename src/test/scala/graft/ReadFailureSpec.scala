@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the paste fuse: a GRB cut inside its 72-byte header, GRBs cut
   * inside their pixel span (a window served from the input's buffer and
   * one read past it), a Deflate TIFF whose last tiles are cut off, and
-  * TIFFs with one corrupt tile (flipped bytes, a Deflate or LZW stream
-  * that ends short). A strict read fails naming the file; a permissive
+  * TIFFs with one corrupt tile (flipped bytes, a Deflate stream that
+  * ends short). A strict read fails naming the file; a permissive
   * load fuses exactly the intact sources' pixels, plus, for a corrupt
   * tile, the tiles read before it. */
 class ReadFailureSpec extends AnyFunSuite {
@@ -146,14 +146,11 @@ class ReadFailureSpec extends AnyFunSuite {
       Files.write(Paths.get(s"$dir/$name.tif"), b)
       s"$dir/$name.tif"
     }
-    // hand-built twins whose tile 5 holds the first half of its stream
-    val short = Seq(8 -> "deflate", 5 -> "lzw").map { case (c, name) =>
-      val p = s"$dir/short_$name.tif"
-      TiffBuilder.write(p, 64, 48, Seq(plane(64, 48, (x, y) => 5000 + x * y)),
-        "uint16", TiffBuilder.Layout(tile = Some((16, 16)), compression = c),
-        corrupt = (i, b) => if (i == 5) b.take(b.length / 2) else b)
-      p
-    }
+    // a hand-built twin whose tile 5 holds the first half of its stream
+    val short = s"$dir/short_deflate.tif"
+    TiffBuilder.write(short, 64, 48, Seq(plane(64, 48, (x, y) => 5000 + x * y)),
+      "uint16", TiffBuilder.Layout(tile = Some((16, 16)), compression = 8),
+      corrupt = (i, b) => if (i == 5) b.take(b.length / 2) else b)
     val (want, _) = fuse(Seq(tif), failOnError = true)
     // tiles 0 to 4 of the 16-pixel tiling: rows 0-15, then columns 0-15
     val kept = want.indices.map { i =>
@@ -163,7 +160,7 @@ class ReadFailureSpec extends AnyFunSuite {
     // the zlib header, the middle of the stream, and its checksum alone
     for (path <- Seq(flipped("flip_header", at, at + 2),
                      flipped("flip_middle", at + n / 3, at + 2 * n / 3),
-                     flipped("flip_checksum", at + n - 4, at + n)) ++ short) {
+                     flipped("flip_checksum", at + n - 4, at + n), short)) {
       val e = intercept[java.io.IOException] {
         AutoReader.readInto(RasterSource(path), RasterLoadParams(failOnError = true),
           g, 0.0, Array.fill(g.width * g.height)(0.0))
@@ -172,5 +169,21 @@ class ReadFailureSpec extends AnyFunSuite {
       assert(fuse(Seq(path), failOnError = false) == ((kept, kept.count(_ != 0.0).toLong)),
         path)
     }
+  }
+
+  test("a tile too large to decode fails naming the file, before it allocates") {
+    val path = s"$dir/huge_tile.tif"
+    TiffBuilder.write(path, 64, 48, Seq(plane(64, 48, (x, y) => 1 + x + y)),
+      "uint16", TiffBuilder.Layout(tile = Some((16, 16)), compression = 8))
+    // TileWidth (322), a LONG held in its IFD entry, rewritten to 2^30:
+    // one tile row is 2 GiB of samples
+    val b = Files.readAllBytes(Paths.get(path))
+    val bb = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val entry = (8 until b.length - 12).find(i =>
+      bb.getShort(i) == 322 && bb.getShort(i + 2) == 4 && bb.getInt(i + 4) == 1).get
+    bb.putInt(entry + 8, 1 << 30)
+    Files.write(Paths.get(path), b)
+    val e = intercept[java.io.IOException](Tiff.readWindow(path, 0, 0, 8, 40))
+    assert(e.getMessage.contains(path) && e.getMessage.contains("too large"), e.getMessage)
   }
 }

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 
 /** Hand-built classic TIFFs for the reader specs: every layout the
   * native reader decodes (byte order, tiles or strips, chunky or planar,
-  * predictor 1 or 2, none / Deflate / LZW / PackBits), written sample by
+  * predictor 1 or 2, none / Deflate / PackBits), written sample by
   * sample so no reader under test had a hand in them. Pixel data comes
   * first and the IFD last, with its out-of-line values after it; ImageWidth
   * and ImageLength are LONGs, the small fields SHORTs stored inline. */
@@ -69,7 +69,6 @@ object TiffBuilder {
     val encoded = blocks.zipWithIndex.map { case (b, i) =>
       corrupt(i, l.compression match {
         case 1 => b
-        case 5 => lzw(b)
         case 8 => deflate(b)
         case 32773 => packBits(b, bw * spt * sz)
       })
@@ -172,45 +171,6 @@ object TiffBuilder {
     val buf = new Array[Byte](4096)
     while (!d.finished()) out.write(buf, 0, d.deflate(buf))
     d.end()
-    out.toByteArray
-  }
-
-  /** TIFF LZW: MSB-first codes, 9 to 12 bits, widened when the next
-    * free code passes the width's largest, a clear code at 4094. */
-  def lzw(b: Array[Byte]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    var acc = 0L
-    var nacc = 0
-    def emit(code: Int, width: Int): Unit = {
-      acc = (acc << width) | code
-      nacc += width
-      while (nacc >= 8) { out.write((acc >>> (nacc - 8)).toInt & 0xff); nacc -= 8 }
-    }
-    val dict = new java.util.HashMap[Long, Integer]()
-    var next = 258
-    var width = 9
-    emit(256, width)
-    if (b.nonEmpty) {
-      var cur = b(0) & 0xff
-      for (i <- 1 until b.length) {
-        val c = b(i) & 0xff
-        val hit = dict.get((cur.toLong << 8) | c)
-        if (hit != null) cur = hit
-        else {
-          emit(cur, width)
-          dict.put((cur.toLong << 8) | c, next)
-          next += 1
-          if (next == 4094) { emit(256, width); dict.clear(); next = 258; width = 9 }
-          else if (next > (1 << width) - 1) width += 1
-          cur = c
-        }
-      }
-      emit(cur, width)
-      // the decoder adds an entry on reading `cur`, and may widen first
-      if (next + 1 > (1 << width) - 1 && width < 12) width += 1
-    }
-    emit(257, width)
-    if (nacc > 0) out.write((acc << (8 - nacc)).toInt & 0xff)
     out.toByteArray
   }
 

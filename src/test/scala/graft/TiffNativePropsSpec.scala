@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The native TIFF reader against the JDK's `javax.imageio` plugin, bit
   * for bit, on hand-built files ([[TiffBuilder]]): both byte orders,
   * tiles (with partial edge tiles) and strips, chunky and planar layouts,
-  * none / Deflate / LZW, predictor 2, and every dtype the reader accepts.
+  * none / Deflate, predictor 2, and every dtype the reader accepts.
   * Where the plugin cannot decode a layout (predictor 2 on 16- and 32-bit
   * samples) the written samples are the oracle. int8 is the one
   * deliberate difference: the plugin decodes it into an unsigned byte
@@ -92,7 +92,7 @@ class TiffNativePropsSpec extends AnyFunSuite {
   test("native reads equal the ImageIO plugin's samples: byte orders, tiles and strips, layouts, codecs, dtypes") {
     val rnd = new scala.util.Random(20261020)
     var k = 0
-    for (dtype <- dtypes; bigEndian <- Seq(false, true); compression <- Seq(1, 5, 8);
+    for (dtype <- dtypes; bigEndian <- Seq(false, true); compression <- Seq(1, 8);
          tiled <- Seq(true, false); planar <- Seq(1, 2)) {
       val spp = 1 + rnd.nextInt(3)
       val (w, h) = (1 + rnd.nextInt(70), 1 + rnd.nextInt(45))
@@ -125,7 +125,7 @@ class TiffNativePropsSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(17)
     var k = 0
     for (dtype <- Seq("uint16", "int16", "int32", "float32"); bigEndian <- Seq(false, true);
-         compression <- Seq(5, 8); planar <- Seq(1, 2)) {
+         planar <- Seq(1, 2)) {
       val spp = 1 + rnd.nextInt(3)
       val (w, h) = (2 + rnd.nextInt(60), 1 + rnd.nextInt(40))
       val path = s"$dir/pred$k.tif"
@@ -134,26 +134,11 @@ class TiffNativePropsSpec extends AnyFunSuite {
       TiffBuilder.write(path, w, h, px, dtype, TiffBuilder.Layout(bigEndian,
         tile = if (rnd.nextBoolean()) Some((16, 16)) else None,
         rowsPerStrip = 1 + rnd.nextInt(h), planar = planar, predictor = 2,
-        compression = compression))
+        compression = 8))
       intercept[javax.imageio.IIOException](javax.imageio.ImageIO.read(new java.io.File(path)))
       check(path, spp, w, h, rnd) { case (b, (x0, y0, ww, wh)) =>
         Array.tabulate(ww * wh)(i => px(b - 1)((y0 + i / ww) * w + x0 + i % ww))
       }
-    }
-  }
-
-  test("LZW tiles past 4096 codes (table resets) decode like the plugin") {
-    val rnd = new scala.util.Random(5)
-    val (w, h) = (300, 160)
-    for (dtype <- Seq("uint8", "uint16"); bigEndian <- Seq(false, true)) {
-      val path = s"$dir/lzw_${dtype}_$bigEndian.tif"
-      val px = Seq(Array.fill(w * h)(sample(dtype, rnd)))
-      TiffBuilder.write(path, w, h, px, dtype,
-        TiffBuilder.Layout(bigEndian, tile = Some((256, 128)), compression = 5))
-      check(path, 1, w, h, rnd) { case (_, (x0, y0, ww, wh)) =>
-        imageIo(path, dtype, 0, x0, y0, ww, wh)
-      }
-      assert(Tiff.readWindow(path, 0, 0, w, h).toSeq == px.head.toSeq)
     }
   }
 
