@@ -11,7 +11,8 @@ import java.nio.{ByteBuffer, ByteOrder}
   * features the reference's reader optimizes around (`_rio.py:314-475`):
   *
   *  - **windowed reads**: pixels are row-major fixed-width, so a window
-  *    read seeks exactly the needed rows (no full-file read);
+  *    read is one span from its first needed byte to its last
+  *    ([[RowMajor]]; no full-file read);
   *  - **overview pyramid**: decimated levels in sidecar `.ovr<N>` files,
   *    selected via `pickOverview` (S8, `loader/_reader.py:104-114`).
   *
@@ -110,9 +111,38 @@ object Grb {
   final case class Header(dtype: String, width: Int, height: Int,
                           nodata: Option[Double], geobox: GeoBox, pixelOffset: Long)
 
-  def readHeader(path: String): Header = {
-    val raf = RasterIO.open(path)
-    try readHeader(raf, path) finally raf.close()
+  def readHeader(path: String): Header = RasterImage.use(open(path))(_.header)
+
+  /** Windowed read of the rows/cols intersecting (x0,y0,w,h): row-major
+    * doubles, unsigned types widened (SURVEY §2 hard-part 4). */
+  def readWindow(path: String, x0: Int, y0: Int, w: Int, h: Int): (Header, Array[Double]) =
+    RasterImage.use(open(path))(img => (img.header, img.window(x0, y0, w, h)))
+
+  /** `path` opened: its header read, its pixels one little-endian
+    * row-major block ([[RowMajor]]), and any `.ovr<N>` sidecar as an
+    * overview level (S8 generalized — deep pyramids 8x/16x included). */
+  def open(path: String): RasterImage = {
+    val in = RasterIO.open(path)
+    RasterImage.closingOnFailure(in) {
+      val hd = readHeader(in, path)
+      new RasterImage(path) {
+        def header: Header = hd
+        private[raster] val blocks: Blocks = new RowMajor(in, hd.pixelOffset, hd.width,
+          hd.height, hd.dtype, ByteOrder.LITTLE_ENDIAN)
+        override def overviews: Seq[(Int, String)] = {
+          val (dir, name) = RasterIO.parentAndName(path)
+          val prefix = name + ".ovr"
+          RasterIO.list(dir)
+            .flatMap { n =>
+              if (n.startsWith(prefix))
+                n.stripPrefix(prefix).toIntOption.map(s => s -> s"$dir/$n")
+              else None
+            }
+            .sortBy(_._1)
+        }
+        def close(): Unit = in.close()
+      }
+    }
   }
 
   private def readHeader(raf: RasterInput, path: String): Header = {
@@ -130,98 +160,9 @@ object Grb {
       GeoBox(w, h, Affine.fromArray(t.toSeq), crs), raf.position)
   }
 
-  /** Windowed read: only the rows/cols intersecting (x0,y0,w,h) are read
-    * from disk ([[windowRows]]). Returns row-major doubles; unsigned
-    * types are widened (SURVEY §2 hard-part 4). */
-  def readWindow(path: String, x0: Int, y0: Int, w: Int, h: Int): (Header, Array[Double]) = {
-    val raf = RasterIO.open(path)
-    try {
-      val hd = readHeader(raf, path)
-      val px = new Array[Double](w * h)
-      val dcode = DtypeCodes(hd.dtype)
-      windowRows(raf, hd, x0, y0, w, h) { (row, bb, off) =>
-        decodeRow(bb, off, dcode, px, row * w, w)
-      }
-      (hd, px)
-    } finally raf.close()
-  }
-
-  /** Span-read cap: beyond this, fall back to row-wise reads. */
-  private val MaxSpanBytes: Long = 256L << 20
-
-  /** Reads the window's rows and hands each to `row(r, bb, off)`: row `r`
-    * of the window is the `w` pixels at byte `off` of `bb`.
-    *
-    * I/O strategy: one contiguous read spanning the whole window (first
-    * byte of the first row to last byte of the last row) instead of a
-    * seek+read syscall per row — for a 1024-wide tile of a 2048-wide
-    * scene this turns ~1024 syscalls into 1 at the cost of reading the
-    * inter-row gap bytes, a worthwhile trade on both local disk and
-    * (especially) object storage, and exactly how COG readers coalesce
-    * ranged GETs. Falls back to per-row reads only when the gap would
-    * blow the span past `MaxSpanBytes`. */
-  private def windowRows(raf: RasterInput, hd: Header, x0: Int, y0: Int,
-                         w: Int, h: Int)(row: (Int, ByteBuffer, Int) => Unit): Unit = {
-    require(x0 >= 0 && y0 >= 0 && x0 + w <= hd.width && y0 + h <= hd.height,
-      s"window ($x0,$y0,$w,$h) out of bounds ${hd.width}x${hd.height}")
-    val sz = dtypeSize(hd.dtype)
-    val rowStride = hd.width.toLong * sz
-    val spanBytes = (h - 1).toLong * rowStride + w.toLong * sz
-    if (spanBytes <= MaxSpanBytes) {
-      val buf = new Array[Byte](spanBytes.toInt)
-      raf.seek(hd.pixelOffset + y0.toLong * rowStride + x0.toLong * sz)
-      raf.readFully(buf)
-      val bb = ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)
-      var r = 0
-      while (r < h) { row(r, bb, r * rowStride.toInt); r += 1 }
-    } else {
-      val rowBytes = new Array[Byte](w * sz)
-      val bb = ByteBuffer.wrap(rowBytes).order(ByteOrder.LITTLE_ENDIAN)
-      var r = 0
-      while (r < h) {
-        raf.seek(hd.pixelOffset + (y0 + r).toLong * rowStride + x0.toLong * sz)
-        raf.readFully(rowBytes)
-        row(r, bb, 0)
-        r += 1
-      }
-    }
-  }
-
-  /** Fused windowed read + first-valid mosaic (A2 paste hot path): each
-    * row of the window is decoded out of the read buffer into one
-    * row-sized scratch and fused from there into the still-nodata
-    * positions of `out` ([[RasterFormat.fuseRow]]) — no window-sized
-    * array. `srcNodata` NaN means "no nodata value". Returns the number
-    * of newly filled pixels. */
-  def fuseWindowInto(path: String, x0: Int, y0: Int, w: Int, h: Int,
-                     srcNodata0: Option[Double],
-                     out: Array[Double], outW: Int, dx0: Int, dy0: Int,
-                     dstNodata: Double, permissive: Boolean = false): Long = {
-    val raf = RasterIO.open(path)
-    var filled = 0L
-    try {
-      val hd = readHeader(raf, path)
-      val dcode = DtypeCodes(hd.dtype)
-      val sn = srcNodata0.getOrElse(Double.NaN)
-      val px = new Array[Double](w)
-      windowRows(raf, hd, x0, y0, w, h) { (row, bb, off) =>
-        decodeRow(bb, off, dcode, px, 0, w)
-        filled += RasterFormat.fuseRow(px, 0, sn, out,
-          (dy0 + row) * outW + dx0, w, dstNodata)
-      }
-      filled
-    } catch {
-      // permissive: `out` may hold rows fused before the failure — report
-      // the partial fill so the caller's remaining-count stays accurate
-      case e: Exception if permissive =>
-        System.err.println(s"[graft.grb] $path: partial read (${e.getMessage})")
-        filled
-    } finally raf.close()
-  }
-
-  /** Decode `n` pixels from `bb` at byte `off` into `out(outOff..)`: one
-    * dtype dispatch per row, then one typed loop. Shared by the TIFF tile
-    * and zarr chunk reads. */
+  /** Decode `n` pixels from `bb` at byte `off` into `out(outOff..)`, in
+    * `bb`'s byte order: one dtype dispatch per row, then one typed loop.
+    * The row decoder of every container ([[Blocks.rows]]). */
   private[raster] def decodeRow(bb: ByteBuffer, off: Int, dcode: Int,
                         out: Array[Double], outOff: Int, n: Int): Unit = {
     var i = 0

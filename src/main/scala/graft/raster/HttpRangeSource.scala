@@ -8,7 +8,7 @@ package graft.raster
   *
   * Every positioned read maps to one `Range: bytes=a-b` GET through a
   * [[blockSize]] read-ahead buffer, so the decoders' span coalescing
-  * (`Grb.MaxSpanBytes` etc.) turns a windowed tile read into a handful
+  * (`RowMajor.MaxSpanBytes` etc.) turns a windowed tile read into a handful
   * of ranged GETs, never per-value requests. Transient failures —
   * connect/read `IOException`s and HTTP 408/429/5xx — retry with
   * exponential backoff up to [[maxRetries]]; non-transient statuses
@@ -226,12 +226,6 @@ class HttpRangeSource(
 
   def readAll(uri: String): Array[Byte] = withRetry(s"GET $uri") {
     readBody(connect(uri, None))
-  }
-
-  def readPrefix(uri: String, maxLen: Int): Array[Byte] = {
-    val n = lengthOf(uri)
-    if (n == 0) Array.emptyByteArray
-    else getRange(uri, 0, math.min(maxLen.toLong, n) - 1)
   }
 
   def exists(uri: String): Boolean =

@@ -138,7 +138,6 @@ object NetCdf {
   }
 
   private def parseHeader(path: String): NcHeader = {
-    require(RasterIO.exists(path), s"not a netCDF file: $path")
     val in = RasterIO.open(path)
     try parseHeader(in, path) finally in.close()
   }
@@ -174,41 +173,21 @@ object NetCdf {
 
   // ------------------------------------------------------------- surface
 
-  /** Split `file.nc#var` into (file, variable); a single-variable file
-    * may omit the fragment — loud otherwise, like the TIFF/zarr faces. */
-  private def splitUri(uri: String): (String, String) = {
-    val i = uri.lastIndexOf('#')
-    if (i >= 0) (uri.substring(0, i), uri.substring(i + 1))
-    else variables(uri) match {
-      case Seq(only) => (uri, only)
-      case vs => throw new IllegalArgumentException(
-        s"$uri holds ${vs.size} data variables (${vs.mkString(", ")}); " +
-          "address one as file.nc#<variable>")
-    }
-  }
-
   /** Data variables (= subdatasets): 2-D numeric non-record variables,
     * in name order. Coordinate and grid-mapping variables are format
     * plumbing, not datasets. */
-  def variables(path: String): Seq[String] = {
-    val h = parseHeader(path)
+  def variables(path: String): Seq[String] = dataVariables(parseHeader(path))
+
+  private def dataVariables(h: NcHeader): Seq[String] =
     h.vars.filter { v =>
       v.dimIds.size == 2 && dtypeOf(v.ncType).isDefined &&
         v.dimIds.forall(id => h.dims(id)._2 > 0) // record dim = size 0
     }.map(_.name).sorted
-  }
 
-  /** Loud subdataset validation (reader plan-time hook). */
-  def requireVariable(path: String, name: String): Unit = {
-    val vs = variables(path)
-    require(vs.contains(name),
-      s"variable '$name' not found in $path; available: " +
-        (if (vs.isEmpty) "none" else vs.mkString("'", "', '", "'")))
-  }
-
-  private final case class Meta(width: Int, height: Int, dtype: String,
-                                typeSize: Int, begin: Long,
-                                geobox: GeoBox, nodata: Option[Double])
+  /** A subdataset miss, listing the data variables the file has. */
+  private def missing(path: String, name: String, vs: Seq[String]): String =
+    s"variable '$name' not found in $path; available: " +
+      (if (vs.isEmpty) "none" else vs.mkString("'", "', '", "'"))
 
   /** Classify a dimension as the X ('X') or Y ('Y') raster axis, from
     * its coordinate variable's CF attributes when present (axis,
@@ -237,12 +216,12 @@ object NetCdf {
     })
   }
 
-  private def readMeta(path: String, variable: String): Meta = {
-    val h = parseHeader(path)
+  /** The header of variable `variable` of the file parsed as `h`; the
+    * CF coordinate fallback reads its axes from `in`. */
+  private def headerOf(in: RasterInput, path: String, h: NcHeader,
+                       variable: String): Grb.Header = {
     val v = h.vars.find(_.name == variable).getOrElse(
-      throw new IllegalArgumentException(
-        s"variable '$variable' not found in $path; available: " +
-          variables(path).mkString("'", "', '", "'")))
+      throw new IllegalArgumentException(missing(path, variable, dataVariables(h))))
     require(v.dimIds.size == 2 && dtypeOf(v.ncType).isDefined,
       s"$path#$variable is not a 2-D numeric variable")
     val (hDim, wDim) = (h.dims(v.dimIds(0)), h.dims(v.dimIds(1)))
@@ -264,14 +243,14 @@ object NetCdf {
         "their coordinate variables an axis/standard_name/units attribute")
     val nodata = v.atts.get("_FillValue").orElse(v.atts.get("missing_value"))
       .flatMap(_.nums.headOption)
-    val (transform, crs) = georef(path, h, v, wDim, hDim)
-    Meta(wDim._2, hDim._2, dtypeOf(v.ncType).get, ncSize(v.ncType),
-      v.begin, GeoBox(wDim._2, hDim._2, transform, crs), nodata)
+    val (transform, crs) = georef(in, path, h, v, wDim, hDim)
+    Grb.Header(dtypeOf(v.ncType).get, wDim._2, hDim._2, nodata,
+      GeoBox(wDim._2, hDim._2, transform, crs), v.begin)
   }
 
   /** GDAL/rioxarray grid-mapping georeferencing with CF coordinate-var
     * fallback; loud when neither is present or the CRS is WKT-only. */
-  private def georef(path: String, h: NcHeader, v: NcVar,
+  private def georef(in: RasterInput, path: String, h: NcHeader, v: NcVar,
                      wDim: (String, Int), hDim: (String, Int)): (Affine, Crs) = {
     val gm = v.atts.get("grid_mapping").flatMap(_.text)
       .flatMap(n => h.vars.find(_.name == n))
@@ -304,7 +283,7 @@ object NetCdf {
             throw new IllegalArgumentException(
               s"$path#${v.name}: no GeoTransform and no coordinate " +
                 s"variable '${dim._1}' to derive one from"))
-          readVector(path, cv, dim._2)
+          readVector(in, cv, dim._2)
         }
         val xs = axis(wDim)
         val ys = axis(hDim)
@@ -321,63 +300,49 @@ object NetCdf {
     }
   }
 
-  private def readVector(path: String, v: NcVar, n: Int): Array[Double] = {
-    val raf = RasterIO.open(path)
-    try {
-      val sz = ncSize(v.ncType)
-      val buf = new Array[Byte](n * sz)
-      raf.seek(v.begin)
-      raf.readFully(buf)
-      val bb = ByteBuffer.wrap(buf).order(ByteOrder.BIG_ENDIAN)
-      val out = new Array[Double](n)
-      var i = 0
-      while (i < n) { out(i) = readAs(bb, i * sz, v.ncType); i += 1 }
-      out
-    } finally raf.close()
+  private def readVector(in: RasterInput, v: NcVar, n: Int): Array[Double] = {
+    val buf = new Array[Byte](n * ncSize(v.ncType))
+    in.seek(v.begin)
+    in.readFully(buf)
+    val out = new Array[Double](n)
+    Grb.decodeRow(ByteBuffer.wrap(buf).order(ByteOrder.BIG_ENDIAN), 0,
+      Grb.DtypeCodes(dtypeOf(v.ncType).get), out, 0, n)
+    out
   }
 
-  private def readAs(bb: ByteBuffer, off: Int, ncType: Int): Double =
-    ncType match {
-      case NcByte => bb.get(off).toDouble
-      case NcShort => bb.getShort(off).toDouble
-      case NcInt => bb.getInt(off).toDouble
-      case NcFloat => bb.getFloat(off).toDouble
-      case NcDouble => bb.getDouble(off)
-    }
+  def readHeader(uri: String): Grb.Header = RasterImage.use(open(uri))(_.header)
 
-  def readHeader(uri: String): Grb.Header = {
-    val (path, variable) = splitUri(uri)
-    val m = readMeta(path, variable)
-    Grb.Header(m.dtype, m.width, m.height, m.nodata, m.geobox, 0L)
-  }
+  /** Windowed read: contiguous row-major storage, read as one span
+    * ([[RowMajor]]) — the same byte-ranged access a COG/zarr read has,
+    * object-store friendly. */
+  def readWindow(uri: String, x0: Int, y0: Int, w: Int, h: Int): Array[Double] =
+    RasterImage.use(open(uri))(_.window(x0, y0, w, h))
 
-  /** Windowed read: contiguous row-major storage, so each window row is
-    * one ranged read at `begin + (y*width + x0)*size` — the same
-    * byte-ranged access a COG/zarr read has, object-store friendly. */
-  def readWindow(uri: String, x0: Int, y0: Int, w: Int, h: Int): Array[Double] = {
-    val (path, variable) = splitUri(uri)
-    val m = readMeta(path, variable)
-    require(x0 >= 0 && y0 >= 0 && x0 + w <= m.width && y0 + h <= m.height,
-      s"window ($x0,$y0,$w,$h) out of bounds ${m.width}x${m.height}")
-    val out = new Array[Double](w * h)
-    val raf = RasterIO.open(path)
-    try {
-      val rowBytes = new Array[Byte](w * m.typeSize)
-      val bb = ByteBuffer.wrap(rowBytes).order(ByteOrder.BIG_ENDIAN)
-      val ncType = ncTypeOf(m.dtype)
-      var y = 0
-      while (y < h) {
-        raf.seek(m.begin + ((y0 + y).toLong * m.width + x0) * m.typeSize)
-        raf.readFully(rowBytes)
-        var x = 0
-        while (x < w) {
-          out(y * w + x) = readAs(bb, x * m.typeSize, ncType)
-          x += 1
+  /** `file.nc#var` opened: the header parsed once, the variable's
+    * big-endian rows one row-major block. A single-variable file may
+    * omit the fragment — loud otherwise, like the TIFF/zarr faces. */
+  def open(uri: String): RasterImage = {
+    val cut = uri.lastIndexOf('#')
+    val path = if (cut < 0) uri else uri.substring(0, cut)
+    val in = RasterIO.open(path)
+    RasterImage.closingOnFailure(in) {
+      val h = parseHeader(in, path)
+      val variable =
+        if (cut >= 0) uri.substring(cut + 1)
+        else dataVariables(h) match {
+          case Seq(only) => only
+          case vs => throw new IllegalArgumentException(
+            s"$uri holds ${vs.size} data variables (${vs.mkString(", ")}); " +
+              "address one as file.nc#<variable>")
         }
-        y += 1
+      val hd = headerOf(in, path, h, variable)
+      new RasterImage(uri) {
+        def header: Grb.Header = hd
+        private[raster] val blocks: Blocks = new RowMajor(in, hd.pixelOffset,
+          hd.width, hd.height, hd.dtype, ByteOrder.BIG_ENDIAN)
+        def close(): Unit = in.close()
       }
-      out
-    } finally raf.close()
+    }
   }
 
   // -------------------------------------------------------------- writer

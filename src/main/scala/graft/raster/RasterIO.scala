@@ -16,8 +16,9 @@ package graft.raster
   * inside the source. The decoders need no change: they already read
   * through positioned byte ranges, never a bare `java.io.File` —
   * which is also why the windowed read paths coalesce row reads into
-  * few large spans (see `Grb.MaxSpanBytes`): at scale each span is one
-  * object-store ranged GET.
+  * few large spans (see `RowMajor.MaxSpanBytes`): at scale each span is
+  * one object-store ranged GET. A read opens its source once
+  * ([[RasterFormat.open]]), so a source costs one input per read.
   *
   * Write paths (COG/zarr/netCDF export) intentionally stay local-file:
   * distributed exports write executor-local files for a driver-side or
@@ -30,10 +31,6 @@ trait RasterByteSource {
 
   /** Whole-object read (zarr chunks, JSON metadata). */
   def readAll(uri: String): Array[Byte]
-
-  /** First `min(maxLen, size)` bytes — header slurps without paying for
-    * the full object. */
-  def readPrefix(uri: String, maxLen: Int): Array[Byte]
 
   def exists(uri: String): Boolean
 
@@ -60,8 +57,8 @@ trait RasterByteSource {
 /** Positioned big-endian binary input: exactly the `RandomAccessFile`
   * subset the format decoders use (multi-byte reads in network order,
   * like `DataInput`). A remote implementation maps `seek`+`readFully`
-  * to ranged GETs; `Grb.MaxSpanBytes`-style span coalescing in the
-  * callers keeps the GET count low. */
+  * to ranged GETs; span coalescing in the callers ([[RowMajor]], one
+  * read per TIFF tile) keeps the GET count low. */
 trait RasterInput extends java.io.Closeable {
   def seek(pos: Long): Unit
   def position: Long
@@ -204,12 +201,6 @@ object LocalFileSource extends RasterByteSource {
   def open(uri: String): RasterInput = new Raf(p(uri))
   def readAll(uri: String): Array[Byte] =
     java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p(uri)))
-  def readPrefix(uri: String, maxLen: Int): Array[Byte] = {
-    val f = new java.io.File(p(uri))
-    val in = new java.io.FileInputStream(f)
-    try in.readNBytes(math.min(f.length(), maxLen.toLong).toInt)
-    finally in.close()
-  }
   def exists(uri: String): Boolean = new java.io.File(p(uri)).exists()
   def list(uri: String): Seq[String] =
     Option(new java.io.File(p(uri)).listFiles())
@@ -250,8 +241,6 @@ object RasterIO {
 
   def open(uri: String): RasterInput = forUri(uri).open(uri)
   def readAll(uri: String): Array[Byte] = forUri(uri).readAll(uri)
-  def readPrefix(uri: String, maxLen: Int): Array[Byte] =
-    forUri(uri).readPrefix(uri, maxLen)
   def exists(uri: String): Boolean = forUri(uri).exists(uri)
   def list(uri: String): Seq[String] = forUri(uri).list(uri)
   def localFile(uri: String): Option[java.io.File] = forUri(uri).localFile(uri)

@@ -78,21 +78,26 @@ private[raster] final case class ReadPlan(header: Grb.Header,
                                           srcNodata: Option[Double], roi: Roi,
                                           pasteAt: Option[(Int, Int)])
 
-/** The one windowed reader over every container format. Each source's
-  * format comes from [[RasterFormat.of]], which supplies header decode,
-  * windowed pixel reads, overview levels and subdataset resolution; the
-  * paste/warp planning, resampling kernels, fused mosaic and the
-  * approximating row transformer are format-independent and live here.
-  * [[AutoReader]] is the instance the loader uses. */
+/** The one windowed reader over every container format. Each source is
+  * read through exactly one open of its format ([[RasterFormat.open]],
+  * closed when the read ends): subdataset resolution, planning, the
+  * paste fuse, the warp window and the overview list all take that one
+  * [[RasterImage]], whose window reads are the one block loop and follow
+  * its one failure rule. The paste/warp planning, resampling kernels,
+  * fused mosaic and the approximating row transformer are
+  * format-independent and live here. [[AutoReader]] is the instance the
+  * loader uses. */
 class WindowedReader extends RasterReader {
 
-  /** Normalize a source for reading: strip the file scheme and resolve
-    * `subdataset` to a concrete image URI of its format. */
-  private def resolve(src0: RasterSource): (RasterSource, RasterFormat) = {
-    val src = src0.copy(uri = src0.uri.stripPrefix("file://"))
-    val fmt = RasterFormat.of(src.uri)
-    (src.subdataset.fold(src)(sub =>
-      src.copy(uri = fmt.subdataset(src.uri, sub), subdataset = None)), fmt)
+  /** `f` of the source, its file scheme stripped and its `subdataset`
+    * resolved to a concrete image URI of its format, and of that URI
+    * opened (and closed after). */
+  private def opened[T](src0: RasterSource)(f: (RasterSource, RasterImage) => T): T = {
+    val src1 = src0.copy(uri = src0.uri.stripPrefix("file://"))
+    val fmt = RasterFormat.of(src1.uri)
+    val src = src1.subdataset.fold(src1)(sub =>
+      src1.copy(uri = fmt.subdataset(src1.uri, sub), subdataset = None))
+    RasterImage.use(fmt.open(src.uri, src.band))(f(src, _))
   }
 
   /** The one permissive catch (`_rio.py:402-436`): with `failOnError` off
@@ -114,11 +119,12 @@ class WindowedReader extends RasterReader {
   def read(src0: RasterSource, cfg: RasterLoadParams, dstGeobox: GeoBox,
            dstNodata: Double): Option[(Roi, Array[Double])] =
     permissive(src0, cfg, Option.empty[(Roi, Array[Double])]) {
-      val (src, fmt) = resolve(src0)
-      plan(src, fmt, cfg, dstGeobox).flatMap {
-        case ReadPlan(header, srcNodata, roi, Some((sx0, sy0))) =>
-          paste(src, fmt, header, srcNodata, dstGeobox, roi, sx0, sy0, dstNodata)
-        case p => warp(src, fmt, p, cfg, dstGeobox, dstNodata)
+      opened(src0) { (src, img) =>
+        plan(src, img, cfg, dstGeobox).flatMap {
+          case ReadPlan(header, srcNodata, roi, Some((sx0, sy0))) =>
+            paste(img, header, srcNodata, roi, sx0, sy0, dstNodata)
+          case p => warp(src, img, p, cfg, dstGeobox, dstNodata)
+        }
       }
     }
 
@@ -128,30 +134,31 @@ class WindowedReader extends RasterReader {
   def readInto(src0: RasterSource, cfg: RasterLoadParams, dstGeobox: GeoBox,
                dstNodata: Double, out: Array[Double]): Long =
     permissive(src0, cfg, 0L) {
-      val (src, fmt) = resolve(src0)
-      plan(src, fmt, cfg, dstGeobox) match {
-        case None => 0L
-        case Some(ReadPlan(header, srcNodata, roi, Some((sx0, sy0)))) =>
-          val (cx0, cy0, wx0, wy0, w, h) = clipPaste(header, roi, sx0, sy0)
-          if (w <= 0 || h <= 0) 0L
-          else fmt.fuseWindowInto(src.uri, wx0, wy0, w, h, src.band, srcNodata,
-            out, dstGeobox.width, roi.x0 + cx0, roi.y0 + cy0, dstNodata,
-            permissive = !cfg.failOnError)
-        case Some(p) =>
-          warp(src, fmt, p, cfg, dstGeobox, dstNodata).fold(0L) {
-            case (roi, pix) =>
-              // warp output is already nodata-remapped to dstNodata
-              RasterFormat.fuseInto(pix, roi.w, roi.h, dstNodata, out,
-                dstGeobox.width, roi.x0, roi.y0, dstNodata)
-          }
+      opened(src0) { (src, img) =>
+        plan(src, img, cfg, dstGeobox) match {
+          case None => 0L
+          case Some(ReadPlan(header, srcNodata, roi, Some((sx0, sy0)))) =>
+            val (cx0, cy0, wx0, wy0, w, h) = clipPaste(header, roi, sx0, sy0)
+            if (w <= 0 || h <= 0) 0L
+            else img.fuseWindowInto(wx0, wy0, w, h, srcNodata.getOrElse(Double.NaN),
+              out, dstGeobox.width, roi.x0 + cx0, roi.y0 + cy0, dstNodata,
+              permissive = !cfg.failOnError)
+          case Some(p) =>
+            warp(src, img, p, cfg, dstGeobox, dstNodata).fold(0L) {
+              case (roi, pix) =>
+                // warp output is already nodata-remapped to dstNodata
+                RasterFormat.fuseInto(pix, roi.w, roi.h, dstNodata, out,
+                  dstGeobox.width, roi.x0, roi.y0, dstNodata)
+            }
+        }
       }
     }
 
   /** Shared F15/F16 planning (`_rio.py:314-475` analog). None = no
     * overlap with the destination. */
-  private def plan(src: RasterSource, fmt: RasterFormat, cfg: RasterLoadParams,
+  private def plan(src: RasterSource, img: RasterImage, cfg: RasterLoadParams,
                    dstGeobox: GeoBox): Option[ReadPlan] = {
-    val header = fmt.header(src.uri, src.band)
+    val header = img.header
     val srcGeobox = header.geobox
     val srcNodata = cfg.srcNodataOverride
       .orElse(header.nodata)
@@ -207,12 +214,12 @@ class WindowedReader extends RasterReader {
   }
 
   /** Direct windowed read — grids align (F15 fast path). */
-  private def paste(src: RasterSource, fmt: RasterFormat, header: Grb.Header,
-                    srcNodata: Option[Double], dstGeobox: GeoBox, roi: Roi,
-                    sx0: Int, sy0: Int, dstNodata: Double): Option[(Roi, Array[Double])] = {
+  private def paste(img: RasterImage, header: Grb.Header,
+                    srcNodata: Option[Double], roi: Roi, sx0: Int, sy0: Int,
+                    dstNodata: Double): Option[(Roi, Array[Double])] = {
     val (cx0, cy0, wx0, wy0, w, h) = clipPaste(header, roi, sx0, sy0)
     if (w <= 0 || h <= 0) return None
-    val pix = fmt.window(src.uri, wx0, wy0, w, h, src.band)
+    val pix = img.window(wx0, wy0, w, h)
     val out = new Array[Double](roi.w * roi.h)
     if (cx0 > 0 || cy0 > 0 || w < roi.w || h < roi.h)
       java.util.Arrays.fill(out, dstNodata)
@@ -235,23 +242,26 @@ class WindowedReader extends RasterReader {
 
   /** Per-pixel reproject + resample (F16). Reads a source window sized to
     * the ROI (with overview selection when shrinking, S8). */
-  private def warp(src: RasterSource, fmt: RasterFormat, p: ReadPlan,
+  private def warp(src: RasterSource, img: RasterImage, p: ReadPlan,
                    cfg: RasterLoadParams, dstGeobox: GeoBox,
                    dstNodata: Double): Option[(Roi, Array[Double])] = {
     val ReadPlan(header, srcNodata, roi, _) = p
-    val srcGeobox0 = header.geobox
     // read shrink: how many src pixels per dst pixel
-    val shrink = math.max(1, math.floor(dstGeobox.gsd / srcGeobox0.gsd).toInt)
-    val (uri, srcGeobox) =
-      if (cfg.useOverviews && shrink > 1) {
-        val levels = fmt.overviews(src.uri)
-        Grb.pickOverview(shrink, levels.map(_._1)) match {
-          case Some(i) =>
-            val u = levels(i)._2
-            (u, fmt.header(u, src.band).geobox)
-          case None => (src.uri, srcGeobox0)
-        }
-      } else (src.uri, srcGeobox0)
+    val shrink = math.max(1, math.floor(dstGeobox.gsd / header.geobox.gsd).toInt)
+    val levels = if (cfg.useOverviews && shrink > 1) img.overviews else Nil
+    Grb.pickOverview(shrink, levels.map(_._1)) match {
+      case None => warpFrom(img, srcNodata, roi, cfg, dstGeobox, dstNodata)
+      case Some(i) =>
+        RasterImage.use(img.level(levels(i)._2, src.band))(
+          warpFrom(_, srcNodata, roi, cfg, dstGeobox, dstNodata))
+    }
+  }
+
+  /** [[warp]] from one level: the chosen overview, or the base image. */
+  private def warpFrom(img: RasterImage, srcNodata: Option[Double], roi: Roi,
+                       cfg: RasterLoadParams, dstGeobox: GeoBox,
+                       dstNodata: Double): Option[(Roi, Array[Double])] = {
+    val srcGeobox = img.header.geobox
 
     // shrink relative to the CHOSEN level: the average-pooling window is
     // sized in that level's pixels (an .ovr4 read at 4x shrink pools 1
@@ -278,7 +288,7 @@ class WindowedReader extends RasterReader {
     val wy1 = math.min(srcGeobox.height, math.ceil(scorners.map(_._2).max).toInt + 1)
     if (wx1 <= wx0 || wy1 <= wy0) return None
     val (sw, sh) = (wx1 - wx0, wy1 - wy0)
-    val spix = fmt.window(uri, wx0, wy0, sw, sh, src.band)
+    val spix = img.window(wx0, wy0, sw, sh)
 
     // primitive nodata (NaN = none) — keeps Option out of the pixel loop
     val sn = srcNodata.getOrElse(Double.NaN)

@@ -21,9 +21,10 @@ import javax.imageio.plugins.tiff.BaselineTIFFTagSet._
   *    from the GeoKeyDirectoryTag (34735) projected/geographic EPSG keys,
   *    nodata from GDAL_NODATA (42113) — the same tags rasterio reads for
   *    the reference (`_rio.py:374-475`);
-  *  - **windowed reads** ([[segments]]): each tile or strip the window
-  *    touches is read on its own and decoded once, and its rows go
-  *    through `Grb.decodeRow` straight into the caller's rows. Native
+  *  - **windowed reads** ([[Tiles]], read by the one block loop
+  *    [[Blocks.rows]]): each tile or strip the window touches is read on
+  *    its own and decoded once, and its rows go through `Grb.decodeRow`
+  *    straight into the caller's rows. Native
   *    codecs: none and Deflate (8, 32946), predictor 1 and 2 (8/16/32-bit
   *    samples), chunky and planar layouts. Any other codec (LZW, JPEG,
   *    PackBits, CCITT, predictor 3) decodes the window through the JDK's
@@ -61,13 +62,6 @@ object Tiff {
   private def splitUri(uri: String): (String, Option[String]) = {
     val i = uri.lastIndexOf('#')
     if (i < 0) (uri, None) else (uri.substring(0, i), Some(uri.substring(i + 1)))
-  }
-
-  /** Opens the file of `uri` and hands `f` it and the addressed image. */
-  private def withFile[A](uri: String)(f: (TiffFile, Int) => A): A = {
-    val (path, frag) = splitUri(uri)
-    val file = new TiffFile(path)
-    try f(file, file.index(frag)) finally file.close()
   }
 
   /** One open classic TIFF: its input, its byte order and its IFD chain,
@@ -207,6 +201,21 @@ object Tiff {
       new String(b, "US-ASCII").takeWhile(_ != '\u0000')
     }
 
+    /** The file from its first byte, as a stream over this input (which
+      * closing the stream leaves open). */
+    def stream: java.io.InputStream = {
+      in.seek(0)
+      new java.io.InputStream {
+        def read(): Int = in.read()
+        override def read(b: Array[Byte], off: Int, len: Int): Int = {
+          val buf = if (off == 0 && len == b.length) b else new Array[Byte](len)
+          val n = in.read(buf)
+          if (n > 0 && (buf ne b)) System.arraycopy(buf, 0, b, off, n)
+          n
+        }
+      }
+    }
+
     /** `n` bytes at `at` (one tile or strip). */
     def bytes(at: Long, n: Int): Array[Byte] = {
       val b = new Array[Byte](n)
@@ -275,7 +284,7 @@ object Tiff {
       * libtiff): uncompressed data ignores the tag. */
     def differenced: Boolean = predictor == 2 && compression != 1
 
-    /** Whether [[segments]] decodes this image; the rest go through the
+    /** Whether [[Tiles]] decodes this image; the rest go through the
       * `javax.imageio` plugin. */
     def native: Boolean =
       (compression == 1 || compression == 8 || compression == 32946) &&
@@ -283,225 +292,181 @@ object Tiff {
           (predictor == 2 && (bits == 8 || bits == 16 || bits == 32)))
   }
 
+  /** `uri`'s addressed image opened for band `band` (1-based): the file's
+    * header and IFD chain parsed once, as far as the image. */
+  def open(uri: String, band: Int = 1): RasterImage = {
+    val (path, frag) = splitUri(uri)
+    val file = new TiffFile(path)
+    RasterImage.closingOnFailure(file)(new Image(uri, file, file.index(frag), band,
+      owner = true))
+  }
+
   /** Sample-band count of the addressed image (1 for grayscale, 3 for
     * RGB, N for packed multispectral stacks). */
-  def numBands(uri: String): Int = withFile(uri)((f, idx) => f.dir(idx).spp)
+  def numBands(uri: String): Int = RasterImage.use(open(uri))(_.numBands)
 
   /** Resolve a named subdataset to its image index by PageName (tag 285)
     * — multi-image TIFF containers are the zero-GDAL analog of the
     * netCDF/HDF variable containers `RasterSource.subdataset` addresses
     * in the reference (`loader/types.py:44-56`, `_rio.py:374-430`). A
     * miss fails loudly listing what the container actually has, like the
-    * band path (`readHeader`'s SamplesPerPixel validation). Nothing is
-    * cached: the walk is a few buffered IFD reads of the file. */
-  def resolveSubdataset(path: String, name: String): Int =
-    withFile(path)((f, _) => f.resolve(name))
-
-  /** Names of the container's subdatasets (page-named images), in image
-    * order. */
-  def subdatasetNames(path: String): Seq[String] =
-    withFile(path)((f, _) => (0 until f.count).flatMap(f.dir(_).pageName))
+    * band path. Reads open `path#name` and resolve it the same way. */
+  def resolveSubdataset(path: String, name: String): Int = {
+    val f = new TiffFile(path)
+    try f.resolve(name) finally f.close()
+  }
 
   private def requireBand(uri: String, d: Dir, band: Int): Unit =
     require(band >= 1 && band <= d.spp,
       s"band $band requested of $uri with ${d.spp} sample band(s)")
 
-  /** Header of the addressed image. Overview IFDs (idx > 0) carry no geo
-    * tags; their geobox is the base geobox decimated by the size ratio.
-    * `band` (1-based) validates against SamplesPerPixel — a request for
-    * band 3 of a single-band file must fail loudly, not read band 1
-    * (reference `loader/types.py:40-70` RasterSource.band). */
-  def readHeader(uri: String, band: Int = 1): Grb.Header = withFile(uri) { (f, idx) =>
-    val d = f.dir(idx)
-    requireBand(uri, d, band)
-    val dtype = dtypeOf(d)
-    // An idx > 0 IFD with its OWN ModelPixelScale is a standalone
-    // subdataset image (multi-image container); one without is a
-    // reduced-resolution overview deriving georeferencing from its
-    // PARENT — the nearest preceding IFD that carries geo tags (the
-    // base image, or the subdataset the overview belongs to: GDAL lays
-    // a subdataset's pyramid out as the unnamed IFDs following it).
-    val geoIdx = (idx to 1 by -1).find(f.dir(_).has(TagModelPixelScale)).getOrElse(0)
-    val geo = f.dir(geoIdx)
-    val nodata = geo.ascii(TagGdalNodata)
-      .map(_.trim)
-      .flatMap(s => if (s.equalsIgnoreCase("nan")) Some(Double.NaN)
-                    else s.toDoubleOption)
-    val gbox =
-      if (geoIdx == idx) geoboxOf(geo, d.width, d.height)
-      else {
-        // decimated level: same origin, linear part scaled by size ratio
-        val parentGbox = geoboxOf(geo, geo.width, geo.height)
-        val sx = parentGbox.width.toDouble / d.width
-        val sy = parentGbox.height.toDouble / d.height
-        val t = parentGbox.transform
-        GeoBox(d.width, d.height,
-          Affine(t.a * sx, t.b * sx, t.c, t.d * sy, t.e * sy, t.f), parentGbox.crs)
-      }
-    Grb.Header(dtype, d.width, d.height, nodata, gbox, 0L)
-  }
-
-  /** The addressed image's IFD, once the window and band are checked. */
-  private def windowDir(f: TiffFile, idx: Int, uri: String, x0: Int, y0: Int,
-                        w: Int, h: Int, band: Int): Dir = {
-    val d = f.dir(idx)
-    require(x0 >= 0 && y0 >= 0 && w >= 0 && h >= 0 && x0 + w <= d.width &&
-      y0 + h <= d.height,
-      s"window ($x0,$y0,$w,$h) out of bounds ${d.width}x${d.height}")
-    requireBand(uri, d, band)
-    d
-  }
+  /** Header of the addressed image. `band` (1-based) validates against
+    * SamplesPerPixel — a request for band 3 of a single-band file must
+    * fail loudly, not read band 1 (reference `loader/types.py:40-70`
+    * RasterSource.band). */
+  def readHeader(uri: String, band: Int = 1): Grb.Header =
+    RasterImage.use(open(uri, band))(_.header)
 
   /** Windowed read of one band: decodes only the region's tiles/strips.
     * Row-major doubles, unsigned types widened. `band` is 1-based —
     * multi-band files (RGB/MSI packed into one asset) address plane
     * `band-1`. */
   def readWindow(uri: String, x0: Int, y0: Int, w: Int, h: Int,
-                 band: Int = 1): Array[Double] = withFile(uri) { (f, idx) =>
-    val d = windowDir(f, idx, uri, x0, y0, w, h, band)
-    val out = new Array[Double](w * h)
-    if (d.native)
-      segments(f, d, x0, y0, w, h, band) { (wy, wx, px, n) =>
-        System.arraycopy(px, 0, out, wy * w + wx, n)
-      }
-    else decodeWindow(f.path, idx, x0, y0, w, h, band, dtypeOf(d)) { samples =>
-      val px = new Array[Double](w)
-      var y = 0
-      while (y < h) {
-        samples.row(y, px)
-        System.arraycopy(px, 0, out, y * w, w)
-        y += 1
-      }
-    }
-    out
-  }
+                 band: Int = 1): Array[Double] =
+    RasterImage.use(open(uri, band))(_.window(x0, y0, w, h))
 
-  /** Fused windowed read + first-valid mosaic (A2 paste path): each
-    * tile's part of a window row is decoded into one row-sized scratch
-    * ([[segments]]) and fused from there into the still-`dstNodata`
-    * positions of `out` ([[RasterFormat.fuseRow]]) — no window-sized
-    * array. `srcNodata` NaN means "no nodata value". Returns the number
-    * of newly filled pixels. A `permissive` read that fails keeps what it
-    * fused before the failure (the tiles before a corrupt one) and
-    * returns that count, as [[Grb.fuseWindowInto]] does; a file cut short
-    * fails before it fuses anything. */
-  def fuseWindowInto(uri: String, x0: Int, y0: Int, w: Int, h: Int,
-                     band: Int, srcNodata: Double, out: Array[Double],
-                     outW: Int, dx0: Int, dy0: Int, dstNodata: Double,
-                     permissive: Boolean = false): Long = {
-    var filled = 0L
-    try withFile(uri) { (f, idx) =>
-      val d = windowDir(f, idx, uri, x0, y0, w, h, band)
-      if (d.native)
-        segments(f, d, x0, y0, w, h, band) { (wy, wx, seg, n) =>
-          filled += RasterFormat.fuseRow(seg, 0, srcNodata, out,
-            (dy0 + wy) * outW + dx0 + wx, n, dstNodata)
+  /** Decimation levels of the addressed image: (scale, uri). */
+  def overviewLevels(uri: String): Seq[(Int, String)] =
+    RasterImage.use(open(uri))(_.overviews)
+
+  /** Image `idx` of the open file `f`, band `band`; closing it closes `f`
+    * when it is the `owner` (an overview level shares its base's file). */
+  private final class Image(uri: String, f: TiffFile, idx: Int, band: Int,
+                            owner: Boolean) extends RasterImage(uri) {
+    private val d = f.dir(idx)
+    requireBand(uri, d, band)
+
+    /** Overview IFDs (idx > 0) carry no geo tags; their geobox is the
+      * parent's decimated by the size ratio. */
+    lazy val header: Grb.Header = {
+      // An idx > 0 IFD with its OWN ModelPixelScale is a standalone
+      // subdataset image (multi-image container); one without is a
+      // reduced-resolution overview deriving georeferencing from its
+      // PARENT — the nearest preceding IFD that carries geo tags (the
+      // base image, or the subdataset the overview belongs to: GDAL lays
+      // a subdataset's pyramid out as the unnamed IFDs following it).
+      val geoIdx = (idx to 1 by -1).find(f.dir(_).has(TagModelPixelScale)).getOrElse(0)
+      val geo = f.dir(geoIdx)
+      val nodata = geo.ascii(TagGdalNodata)
+        .map(_.trim)
+        .flatMap(s => if (s.equalsIgnoreCase("nan")) Some(Double.NaN)
+                      else s.toDoubleOption)
+      val gbox =
+        if (geoIdx == idx) geoboxOf(geo, d.width, d.height)
+        else {
+          // decimated level: same origin, linear part scaled by size ratio
+          val parentGbox = geoboxOf(geo, geo.width, geo.height)
+          val sx = parentGbox.width.toDouble / d.width
+          val sy = parentGbox.height.toDouble / d.height
+          val t = parentGbox.transform
+          GeoBox(d.width, d.height,
+            Affine(t.a * sx, t.b * sx, t.c, t.d * sy, t.e * sy, t.f), parentGbox.crs)
         }
-      else decodeWindow(f.path, idx, x0, y0, w, h, band, dtypeOf(d)) { samples =>
+      Grb.Header(dtypeOf(d), d.width, d.height, nodata, gbox, 0L)
+    }
+
+    override def numBands: Int = d.spp
+
+    /** A pyramid is the run of unnamed reduced-resolution IFDs
+      * immediately FOLLOWING its full image (the GDAL container layout —
+      * a subdataset's overviews sit between it and the next page-named
+      * image), so this works for the base image and for `#`-addressed
+      * subdatasets alike. */
+    override def overviews: Seq[(Int, String)] =
+      Iterator.from(idx + 1).takeWhile(i => f.has(i) && f.dir(i).pageName.isEmpty)
+        .map(i => math.round(d.width.toDouble / f.dir(i).width).toInt -> s"${f.path}#$i")
+        .toSeq.sortBy(_._1)
+
+    override def level(levelUri: String, band: Int): RasterImage = {
+      val (path, frag) = splitUri(levelUri)
+      if (path != f.path) super.level(levelUri, band)
+      else new Image(levelUri, f, f.index(frag), band, owner = false)
+    }
+
+    private[raster] lazy val blocks: Blocks = new Tiles(f, d, band)
+
+    /** Native codecs go through the block loop; the rest decode the
+      * window through the `javax.imageio` plugin ([[decodeWindow]]). */
+    override private[raster] def rows(x0: Int, y0: Int, w: Int, h: Int)(
+        seg: (Int, Int, Array[Double], Int) => Unit): Unit =
+      if (d.native) blocks.rows(x0, y0, w, h)(seg)
+      else decodeWindow(f, idx, x0, y0, w, h, band, dtypeOf(d)) { samples =>
         val px = new Array[Double](w)
         var y = 0
-        while (y < h) {
-          samples.row(y, px)
-          filled += RasterFormat.fuseRow(px, 0, srcNodata, out,
-            (dy0 + y) * outW + dx0, w, dstNodata)
-          y += 1
-        }
+        while (y < h) { samples.row(y, px); seg(y, 0, px, w); y += 1 }
       }
-      filled
-    } catch {
-      case e: Exception if permissive =>
-        System.err.println(s"[graft.tiff] $uri: partial read (${e.getMessage})")
-        filled
-    }
+
+    def close(): Unit = if (owner) f.close()
   }
 
-  /** Band `band` of the window `(x0, y0, w, h)` of `d`, tile by tile: each
-    * tile (or strip) the window touches is read on its own, decoded as
-    * far as its last row in the window and undifferenced (predictor 2);
-    * each of its rows in the window goes through `Grb.decodeRow` into one
-    * row scratch, and `seg(wy, wx, px, n)` gets the tile's part of window
-    * row `wy`: `px(0 until n)` are the samples from window column `wx`
-    * on. Every tile is checked to lie inside the file before the first
-    * is read, so a file cut short fails before anything is handed on. */
-  private def segments(f: TiffFile, d: Dir, x0: Int, y0: Int, w: Int, h: Int,
-                       band: Int)(seg: (Int, Int, Array[Double], Int) => Unit): Unit = {
-    if (w == 0 || h == 0) return
-    val sz = d.bits / 8
-    val dcode = Grb.DtypeCodes(dtypeOf(d))
-    val chunky = d.planar == 1
-    val spt = if (chunky) d.spp else 1 // samples per pixel of a tile
-    val (bw, bh) = d.block
-    if (bw <= 0 || bh <= 0) f.fail(s"tile size ${bw}x$bh")
-    // the largest part of a tile the window needs: whole tiles, or the
-    // rows of the first tile row down to the window's last
-    val rowBytesL = bw.toLong * spt * sz
-    val needMax = rowBytesL * math.min(bh, y0 + h - (y0 / bh) * bh)
-    if (needMax > Int.MaxValue - 8)
-      f.fail(s"a ${bw}x$bh tile of $spt ${d.bits}-bit samples is too large to read")
-    val rowBytes = rowBytesL.toInt
-    val across = (d.width + bw - 1) / bw
-    val plane = if (chunky) 0 else (band - 1) * across * ((d.height + bh - 1) / bh)
-    val (tx0, tx1) = (x0 / bw, (x0 + w - 1) / bw)
-    val (ty0, ty1) = (y0 / bh, (y0 + h - 1) / bh)
-    val (offsets, counts) = (d.offsets, d.byteCounts)
-    var ty = ty0
-    while (ty <= ty1) {
-      var tx = tx0
-      while (tx <= tx1) {
-        val t = plane + ty * across + tx
-        if (t >= offsets.length || t >= counts.length)
-          f.fail(s"tile $t missing from the tile table (${offsets.length} entries)")
-        if (offsets(t) + counts(t) > f.length)
-          f.fail(s"tile $t ends at byte ${(offsets(t) + counts(t)).toLong}, " +
-            s"past the end of the file (${f.length} bytes)")
-        tx += 1
-      }
-      ty += 1
+  /** The tiles (or strips: a strip is a tile as wide as the image) of
+    * image `d`, band `band`: each one the window touches is read on its
+    * own, decoded as far as its last row in the window and undifferenced
+    * (predictor 2). Every tile of a window is checked to lie inside the
+    * file before the first is read, so a file cut short fails before
+    * anything is handed on. */
+  private final class Tiles(f: TiffFile, d: Dir, band: Int) extends Blocks {
+    private val sz = d.bits / 8
+    private val chunky = d.planar == 1
+    val dcode: Int = Grb.DtypeCodes(dtypeOf(d))
+    override val spp: Int = if (chunky) d.spp else 1 // samples per pixel of a tile
+    override val sample: Int = if (chunky) band - 1 else 0
+    val (blockW, blockH): (Int, Int) = d.block
+    if (blockW <= 0 || blockH <= 0) f.fail(s"tile size ${blockW}x$blockH")
+    private val rowBytes = blockW.toLong * spp * sz
+    private val across = (d.width + blockW - 1) / blockW
+    private val plane =
+      if (chunky) 0 else (band - 1) * across * ((d.height + blockH - 1) / blockH)
+    private val (offsets, counts) = (d.offsets, d.byteCounts)
+    private val compressed = d.compression != 1
+    private var scratch: Array[Byte] = null
+
+    override def check(bx: Int, by: Int): Unit = {
+      val t = plane + by * across + bx
+      if (t >= offsets.length || t >= counts.length)
+        f.fail(s"tile $t missing from the tile table (${offsets.length} entries)")
+      if (offsets(t) + counts(t) > f.length)
+        f.fail(s"tile $t ends at byte ${(offsets(t) + counts(t)).toLong}, " +
+          s"past the end of the file (${f.length} bytes)")
     }
-    val compressed = d.compression != 1
-    val tile = if (compressed) new Array[Byte](needMax.toInt) else null
-    // a pixel-interleaved row part decodes whole pixels, then keeps `band`
-    val px = new Array[Double](math.min(w, bw) * spt)
-    ty = ty0
-    while (ty <= ty1) {
-      val top = ty * bh
-      val r0 = math.max(y0, top) - top
-      val r1 = math.min(y0 + h, top + bh) - top
-      val need = r1 * rowBytes
-      var tx = tx0
-      while (tx <= tx1) {
-        val t = plane + ty * across + tx
-        val (at, n) = (offsets(t).toLong, counts(t).toInt)
-        def what = s"${f.path}: tile $t"
-        val data =
-          if (!compressed) {
-            if (n < need) f.fail(s"tile $t holds $n of its $need bytes")
-            f.bytes(at, need)
-          } else {
-            Codecs.inflate(f.bytes(at, n), tile, need, what)
-            tile
-          }
-        val bb = ByteBuffer.wrap(data).order(f.order)
-        if (d.differenced) {
-          var r = r0
-          while (r < r1) { undoPredictor(bb, r * rowBytes, bw * spt, spt, sz); r += 1 }
+
+    def read(bx: Int, by: Int, r0: Int, r1: Int, c0: Int, n: Int): Part = {
+      val t = plane + by * across + bx
+      // the part of the tile the window needs: its rows down to the
+      // window's last
+      val needL = r1 * rowBytes
+      if (needL > Int.MaxValue - 8)
+        f.fail(s"a ${blockW}x$blockH tile of $spp ${d.bits}-bit samples is too large to read")
+      val need = needL.toInt
+      val (at, len) = (offsets(t).toLong, counts(t).toInt)
+      val data =
+        if (!compressed) {
+          if (len < need) f.fail(s"tile $t holds $len of its $need bytes")
+          f.bytes(at, need)
+        } else {
+          if (scratch == null || scratch.length < need) scratch = new Array[Byte](need)
+          Codecs.inflate(f.bytes(at, len), scratch, need, s"${f.path}: tile $t")
+          scratch
         }
-        val left = tx * bw
-        val cx0 = math.max(x0, left)
-        val cn = math.min(x0 + w, left + bw) - cx0
+      val bb = ByteBuffer.wrap(data).order(f.order)
+      if (d.differenced) {
         var r = r0
         while (r < r1) {
-          Grb.decodeRow(bb, r * rowBytes + (cx0 - left) * spt * sz, dcode, px, 0, cn * spt)
-          if (spt > 1) {
-            var i = 0
-            while (i < cn) { px(i) = px(i * spt + band - 1); i += 1 }
-          }
-          seg(top + r - y0, cx0 - x0, px, cn)
+          undoPredictor(bb, r * rowBytes.toInt, blockW * spp, spp, sz)
           r += 1
         }
-        tx += 1
       }
-      ty += 1
+      new Part(bb, r0 * rowBytes.toInt + c0 * spp * sz, rowBytes.toInt)
     }
   }
 
@@ -528,41 +493,30 @@ object Tiff {
   }
 
   /** Decodes the window of image `idx` through the `javax.imageio` TIFF
-    * plugin and hands `f` its band `band` (1-based): the path of the
-    * codecs [[segments]] does not decode. The decode covers all samples —
-    * interleaved layouts decode whole rows anyway. Remote files reach the
-    * plugin as a stream over the byte source (MemoryCache-backed,
-    * seekable). */
-  private def decodeWindow[A](path: String, idx: Int, x0: Int, y0: Int, w: Int,
-                              h: Int, band: Int, dtype: String)(f: Samples => A): A = {
-    val iis = RasterIO.localFile(path) match {
+    * plugin and hands `fn` its band `band` (1-based): the path of the
+    * codecs [[Tiles]] does not decode. The decode covers all samples —
+    * interleaved layouts decode whole rows anyway. A remote file reaches
+    * the plugin as a stream over the open file's input (MemoryCache-
+    * backed, seekable). */
+  private def decodeWindow[A](f: TiffFile, idx: Int, x0: Int, y0: Int, w: Int,
+                              h: Int, band: Int, dtype: String)(fn: Samples => A): A = {
+    val iis = RasterIO.localFile(f.path) match {
       case Some(file) => ImageIO.createImageInputStream(file)
-      case None =>
-        val in = RasterIO.open(path)
-        ImageIO.createImageInputStream(new java.io.InputStream {
-          def read(): Int = in.read()
-          override def read(b: Array[Byte], off: Int, len: Int): Int = {
-            val buf = if (off == 0 && len == b.length) b else new Array[Byte](len)
-            val n = in.read(buf)
-            if (n > 0 && (buf ne b)) System.arraycopy(buf, 0, b, off, n)
-            n
-          }
-          override def close(): Unit = in.close()
-        })
+      case None => ImageIO.createImageInputStream(f.stream)
     }
-    require(iis != null, s"cannot open $path")
+    require(iis != null, s"cannot open ${f.path}")
     try {
       val readers = ImageIO.getImageReaders(iis)
-      require(readers.hasNext, s"no TIFF reader for $path")
+      require(readers.hasNext, s"no TIFF reader for ${f.path}")
       val reader = readers.next()
       reader.setInput(iis, false, false)
       try {
         val param = reader.getDefaultReadParam
         param.setSourceRegion(new Rectangle(x0, y0, w, h))
-        f(new Samples(reader.read(idx, param).getRaster, band - 1, dtype == "int8"))
+        fn(new Samples(reader.read(idx, param).getRaster, band - 1, dtype == "int8"))
       } catch {
         // the plugin's errors ("Data segment out of stream") name no file
-        case e: IOException => throw new IOException(s"$path: ${e.getMessage}", e)
+        case e: IOException => throw new IOException(s"${f.path}: ${e.getMessage}", e)
       } finally reader.dispose()
     } finally iis.close()
   }
@@ -580,18 +534,6 @@ object Tiff {
         while (x < px.length) { px(x) = px(x).toByte; x += 1 }
       }
     }
-  }
-
-  /** Decimation levels of the addressed image: (scale, uri). A pyramid
-    * is the run of unnamed reduced-resolution IFDs immediately FOLLOWING
-    * its full image (the GDAL container layout — a subdataset's
-    * overviews sit between it and the next page-named image), so this
-    * works for the base image and for `#`-addressed subdatasets alike. */
-  def overviewLevels(uri: String): Seq[(Int, String)] = withFile(uri) { (f, idx) =>
-    val baseW = f.dir(idx).width
-    Iterator.from(idx + 1).takeWhile(i => f.has(i) && f.dir(i).pageName.isEmpty)
-      .map(i => math.round(baseW.toDouble / f.dir(i).width).toInt -> s"${f.path}#$i")
-      .toSeq.sortBy(_._1)
   }
 
   private def dtypeOf(d: Dir): String =

@@ -64,8 +64,9 @@ object Zarr {
       .sorted
   }
 
-  /** Loud subdataset validation (reader plan-time hook). */
-  def requireVariable(store: String, name: String): Unit = {
+  /** Loud subdataset validation: a variable the store lacks fails
+    * listing the ones it has. */
+  private def requireVariable(store: String, name: String): Unit = {
     val vs = variables(store)
     require(vs.contains(name),
       s"variable '$name' not found in $store; available: " +
@@ -82,7 +83,11 @@ object Zarr {
 
   private def readMeta(store: String, variable: String): Meta = {
     val vdir = s"$store/$variable"
-    val za = readJson(s"$vdir/.zarray")
+    val za =
+      try readJson(s"$vdir/.zarray")
+      catch {
+        case e: java.io.IOException => requireVariable(store, variable); throw e
+      }
     require(za.get("zarr_format").asInt() == 2,
       s"$vdir: only zarr v2 is supported")
     val shape = za.get("shape")
@@ -118,75 +123,70 @@ object Zarr {
       zlib, GeoBox(w, h, tr, crs), nodata)
   }
 
-  def readHeader(uri: String): Grb.Header = {
+  def readHeader(uri: String): Grb.Header = RasterImage.use(open(uri))(_.header)
+
+  /** Windowed read of the chunks intersecting the window. Row-major
+    * doubles, unsigned types widened. */
+  def readWindow(uri: String, x0: Int, y0: Int, w: Int, h: Int): Array[Double] =
+    RasterImage.use(open(uri))(_.window(x0, y0, w, h))
+
+  /** `store#var` opened: `.zarray` and `.zattrs` read once, the chunks
+    * its blocks ([[Chunks]]). A store with one variable may omit the
+    * fragment. */
+  def open(uri: String): RasterImage = {
     val (store, variable) = splitUri(uri)
     val m = readMeta(store, variable)
-    Grb.Header(m.dtype, m.width, m.height, m.nodata, m.geobox, 0L)
+    new RasterImage(uri) {
+      val header: Grb.Header = Grb.Header(m.dtype, m.width, m.height, m.nodata,
+        m.geobox, 0L)
+      private[raster] val blocks: Blocks = new Chunks(s"$store/$variable", m)
+      override def overviews: Seq[(Int, String)] = levels(store, variable)
+      def close(): Unit = ()
+    }
   }
 
-  /** Windowed read: decodes only the chunks intersecting the window —
-    * the same access shape a COG read has (and what makes the format
-    * object-store friendly at scale: one GET per needed chunk). Missing
-    * chunk files are `fill_value` (zarr semantics for never-written
-    * regions). Row-major doubles, unsigned types widened. */
-  def readWindow(uri: String, x0: Int, y0: Int, w: Int, h: Int): Array[Double] = {
-    val (store, variable) = splitUri(uri)
-    val m = readMeta(store, variable)
-    require(x0 >= 0 && y0 >= 0 && x0 + w <= m.width && y0 + h <= m.height,
-      s"window ($x0,$y0,$w,$h) out of bounds ${m.width}x${m.height}")
-    val out = new Array[Double](w * h)
-    val px = Grb.dtypeSize(m.dtype)
-    val dcode = Grb.DtypeCodes(m.dtype)
-    val cy0 = y0 / m.chunkH
-    val cy1 = (y0 + h - 1) / m.chunkH
-    val cx0 = x0 / m.chunkW
-    val cx1 = (x0 + w - 1) / m.chunkW
-    var cy = cy0
-    while (cy <= cy1) {
-      var cx = cx0
-      while (cx <= cx1) {
-        val chunkUri = s"$store/$variable/$cy.$cx"
-        val chunk: ByteBuffer =
-          if (!RasterIO.exists(chunkUri)) null
-          else {
-            val raw = RasterIO.readAll(chunkUri)
-            val bytes =
-              if (!m.zlib) raw
-              else {
-                val outB = new Array[Byte](m.chunkW * m.chunkH * px)
-                Codecs.inflate(raw, outB, outB.length, chunkUri)
-                outB
-              }
-            ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-          }
-        // window rows intersecting this chunk
-        val ry0 = math.max(y0, cy * m.chunkH)
-        val ry1 = math.min(y0 + h, (cy + 1) * m.chunkH)
-        val rx0 = math.max(x0, cx * m.chunkW)
-        val rx1 = math.min(x0 + w, (cx + 1) * m.chunkW)
-        var y = ry0
-        while (y < ry1) {
-          val outOff = (y - y0) * w + (rx0 - x0)
-          val n = rx1 - rx0
-          if (chunk == null) {
-            java.util.Arrays.fill(out, outOff, outOff + n, m.fill)
-          } else {
-            val chOff = ((y - cy * m.chunkH) * m.chunkW + (rx0 - cx * m.chunkW)) * px
-            Grb.decodeRow(chunk, chOff, dcode, out, outOff, n)
-          }
-          y += 1
+  /** A variable's chunks: each one the window touches is read whole (an
+    * `exists` and a `readAll`: one GET per needed chunk on an object
+    * store, the access shape a COG read has) and inflated, when zlib, only
+    * down to the window's last row in it. A missing chunk file reads as
+    * `fill_value` (zarr semantics for never-written regions). */
+  private final class Chunks(vdir: String, m: Meta) extends Blocks {
+    private val sz = Grb.dtypeSize(m.dtype)
+    private val rowBytes = m.chunkW * sz
+    private var scratch: Array[Byte] = null
+    val blockW: Int = m.chunkW
+    val blockH: Int = m.chunkH
+    val dcode: Int = Grb.DtypeCodes(m.dtype)
+    override val fill: Double = m.fill
+
+    def read(bx: Int, by: Int, r0: Int, r1: Int, c0: Int, n: Int): Part = {
+      val chunk = s"$vdir/$by.$bx"
+      if (!RasterIO.exists(chunk)) return null
+      val raw = RasterIO.readAll(chunk)
+      val need = r1 * rowBytes
+      val bytes =
+        if (!m.zlib) {
+          if (raw.length < need) throw new java.io.IOException(
+            s"$chunk: chunk holds ${raw.length} of its $need bytes")
+          raw
+        } else {
+          if (scratch == null || scratch.length < need) scratch = new Array[Byte](need)
+          Codecs.inflate(raw, scratch, need, chunk)
+          scratch
         }
-        cx += 1
-      }
-      cy += 1
+      new Part(ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN),
+        r0 * rowBytes + c0 * sz, rowBytes)
     }
-    out
   }
 
   /** Sidecar pyramid levels of the addressed variable: `<var>.ovrN`
     * variables in the same store, (scale, `store#level-var`) ascending. */
   def overviewLevels(uri: String): Seq[(Int, String)] = {
     val (store, variable) = splitUri(uri)
+    levels(store, variable)
+  }
+
+  private def levels(store: String, variable: String): Seq[(Int, String)] =
     RasterIO.list(store)
       .filter(n => RasterIO.exists(s"$store/$n/.zarray"))
       .flatMap { n =>
@@ -196,7 +196,6 @@ object Zarr {
         else None
       }
       .sortBy(_._1).toSeq
-  }
 
   /** Store + variable metadata only (`.zgroup`/`.zarray`/`.zattrs`) —
     * the driver-side half of a distributed write: metadata is written

@@ -595,9 +595,9 @@ private[rasterops] trait RasterLoadQueries {
     res.exportZarr(store, chunk = 64)
     val vars = graft.raster.Zarr.variables(store)
     spark.createDataset(vars).repartition(vars.size).map { v =>
-      val hdr = graft.raster.Zarr.readHeader(s"$store#$v")
-      val px = graft.raster.Zarr.readWindow(s"$store#$v",
-        0, 0, hdr.width, hdr.height)
+      val (hdr, px) = graft.raster.RasterFormat.read(s"$store#$v", 1) { img =>
+        (img.header, img.window(0, 0, img.header.width, img.header.height))
+      }
       val nd = hdr.nodata.getOrElse(Double.NaN)
       var valid = 0L; var total = 0.0
       var i = 0

@@ -10,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** The DSv2 scan of the `raster` pixel table: the prune-only filter
   * pushdown, the row-band partition planner, and the column-pruned
-  * row-emit loop. Per-format behavior (header/window/band-count) comes
-  * from [[RasterFormat.of]] for each uri.
+  * row-emit loop. Each file is read through one open of its format
+  * ([[RasterFormat.read]]) when planned, and one per partition read.
   *
   * Pushdown design (SURVEY §4 "COG table"):
   *  - **ROI pushdown** (`SupportsPushDownFilters`): x/y comparison
@@ -132,9 +132,7 @@ private[sources] class PixelScan(
     * table spans thousands of files. */
   override def planInputPartitions(): Array[InputPartition] = {
     PlanUtil.parMap(uris) { u =>
-      val fmt = RasterFormat.of(u)
-      val hd = fmt.header(u, 1)
-      val nBands = fmt.numBands(u)
+      val (hd, nBands) = RasterFormat.read(u, 1)(img => (img.header, img.numBands))
       val b = bounds.clampTo(hd.width, hd.height)
       if (b.isEmpty) Seq.empty
       else {
@@ -173,10 +171,8 @@ private[sources] class PixelPartitionReader(
     part: PixelInputPartition, columns: Array[String])
     extends PartitionReader[InternalRow] {
 
-  private val fmt = RasterFormat.of(part.uri)
-  private val header = fmt.header(part.uri, part.band)
-  private val pixels =
-    fmt.window(part.uri, part.x0, part.y0, part.w, part.h, part.band)
+  private val (header, pixels) = RasterFormat.read(part.uri, part.band)(img =>
+    (img.header, img.window(part.x0, part.y0, part.w, part.h)))
   private val uri = UTF8String.fromString(part.uri)
   private val t = header.geobox.transform
   private val nodataOrNull: Any = header.nodata.orNull

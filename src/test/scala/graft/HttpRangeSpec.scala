@@ -17,6 +17,8 @@ class HttpRangeSpec extends AnyFunSuite {
   private val failNext = new java.util.concurrent.atomic.AtomicInteger(0)
   private val nRequests = new java.util.concurrent.atomic.AtomicInteger(0)
   private val nBytes = new java.util.concurrent.atomic.AtomicLong(0)
+  /** `bytes=0-0` length probes: one per input opened. */
+  private val nProbes = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private lazy val dir =
     java.nio.file.Files.createTempDirectory("graft_http_src").toString
@@ -38,6 +40,7 @@ class HttpRangeSpec extends AnyFunSuite {
           val bytes = java.nio.file.Files.readAllBytes(f.toPath)
           Option(exchange.getRequestHeaders.getFirst("Range")) match {
             case Some(r) =>
+              if (r == "bytes=0-0") nProbes.incrementAndGet()
               val m = "bytes=(\\d+)-(\\d+)".r.findFirstMatchIn(r).get
               val a = m.group(1).toInt
               val b = math.min(m.group(2).toLong, bytes.length - 1L).toInt
@@ -111,6 +114,16 @@ class HttpRangeSpec extends AnyFunSuite {
     assert(bytes < fileBytes / 4, s"windowed read fetched $bytes of $fileBytes bytes")
   }
 
+  test("a GRB paste read over http opens it once: one length probe") {
+    grbPath // materialize the served file before the first request
+    val before = nProbes.get()
+    val out = Array.fill(g.width * g.height)(0.0)
+    val filled = AutoReader.readInto(graft.model.RasterSource(s"$base/s.grb"),
+      graft.model.RasterLoadParams(), g, 0.0, out)
+    assert(filled == px.count(_ != 0.0).toLong)
+    assert(nProbes.get() - before == 1, s"${nProbes.get() - before} length probes")
+  }
+
   test("transient 503s are retried and the read still succeeds") {
     grbPath // materialize before priming failures
     failNext.set(3)
@@ -135,11 +148,9 @@ class HttpRangeSpec extends AnyFunSuite {
     assert(nRequests.get() - before == 1, "404 must not be retried")
   }
 
-  test("readPrefix and readAll match the local bytes") {
+  test("readAll matches the local bytes") {
     val local = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(grbPath))
     assert(RasterIO.readAll(s"$base/s.grb").sameElements(local))
-    assert(RasterIO.readPrefix(s"$base/s.grb", 64)
-      .sameElements(local.take(64)))
   }
 }

@@ -164,8 +164,6 @@ class IoSessionSpec extends AnyFunSuite {
     object CustomSource extends RasterByteSource {
       def open(uri: String): RasterInput = LocalFileSource.open(uri)
       def readAll(uri: String): Array[Byte] = LocalFileSource.readAll(uri)
-      def readPrefix(uri: String, maxLen: Int): Array[Byte] =
-        LocalFileSource.readPrefix(uri, maxLen)
       def exists(uri: String): Boolean = false
       def list(uri: String): Seq[String] = Seq.empty
       def localFile(uri: String): Option[java.io.File] = None

@@ -52,7 +52,7 @@ class NetCdfSpec extends AnyFunSuite {
     val bare = intercept[IllegalArgumentException](NetCdf.readHeader(path))
     assert(bare.getMessage.contains("file.nc#<variable>"))
     val miss = intercept[IllegalArgumentException](
-      NetCdf.requireVariable(path, "swir"))
+      NetCdf.readHeader(s"$path#swir"))
     assert(miss.getMessage.contains("'nir', 'red'"))
     assert(NetCdf.readWindow(s"$path#nir", 0, 0, 1, 1).head == 5000.0)
   }

@@ -438,7 +438,8 @@ class RasterSpec extends AnyFunSuite {
         // the paste fuse reads the same samples: into a half-filled plane
         val out = Array.tabulate(50 * 30)(i => if (i % 2 == 0) 0.0 else -7.0)
         val ref = out.clone()
-        val n = Tiff.fuseWindowInto(path, x0, y0, w, h, b, 0.0, out, 50, 4, 3, 0.0)
+        val n = RasterFormat.read(path, b)(_.fuseWindowInto(x0, y0, w, h, 0.0, out,
+          50, 4, 3, 0.0))
         assert(n == RasterFormat.fuseInto(want, w, h, 0.0, ref, 50, 4, 3, 0.0))
         assert(out.toSeq == ref.toSeq, s"$path band $b fuse")
       }

@@ -3,7 +3,7 @@ package graft
 import graft.geo.{Affine, Crs, GeoBox}
 import graft.load.Fuse
 import graft.model.{RasterLoadParams, RasterSource}
-import graft.raster.{AutoReader, Grb, RasterIO, Tiff}
+import graft.raster.{AutoReader, Grb, NetCdf, RasterIO, Tiff, Zarr}
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,9 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * inside their pixel span (a window served from the input's buffer and
   * one read past it), a Deflate TIFF whose last tiles are cut off, and
   * TIFFs with one corrupt tile (flipped bytes, a Deflate stream that
-  * ends short). A strict read fails naming the file; a permissive
-  * load fuses exactly the intact sources' pixels, plus, for a corrupt
-  * tile, the tiles read before it. */
+  * ends short), a zlib zarr chunk with flipped bytes and a netCDF file
+  * cut inside its data. One rule for every container: a strict read
+  * fails with an `IOException` naming the file; a permissive load fuses
+  * exactly the intact sources' pixels, plus, for a corrupt block, the
+  * blocks read before it (none for a GRB or netCDF plane, which is read
+  * as one span). */
 class ReadFailureSpec extends AnyFunSuite {
 
   private lazy val dir = TmpLanding.fresh("graft_read_failure", "spec")
@@ -169,6 +172,43 @@ class ReadFailureSpec extends AnyFunSuite {
       assert(fuse(Seq(path), failOnError = false) == ((kept, kept.count(_ != 0.0).toLong)),
         path)
     }
+  }
+
+  /** A strict paste read of `uri` fails with an `IOException` naming
+    * `path`; a permissive one fuses `kept` and counts its valid pixels. */
+  private def failsKeeping(uri: String, path: String, kept: Seq[Double]): Unit = {
+    val e = intercept[java.io.IOException] {
+      AutoReader.readInto(RasterSource(uri), RasterLoadParams(failOnError = true),
+        g, 0.0, Array.fill(g.width * g.height)(0.0))
+    }
+    assert(e.getMessage.contains(path), e.getMessage)
+    assert(fuse(Seq(uri), failOnError = false) == ((kept, kept.count(_ != 0.0).toLong)),
+      uri)
+  }
+
+  test("a corrupt zarr chunk fails strict reads; permissive keeps the chunks before it") {
+    val store = s"$dir/flip.zarr"
+    val px = plane(64, 48, (x, y) => 3000 + x + 7 * y)
+    Zarr.write(store, "v", px, g, "uint16", Some(0.0), chunk = 16, zlib = true)
+    val (want, _) = fuse(Seq(s"$store#v"), failOnError = true)
+    // chunk (1, 2) with its zlib header flipped; chunks are read row by
+    // row, so rows 0-15 and then columns 0-31 of rows 16-31 come first
+    val chunk = Paths.get(store, "v", "1.2")
+    val b = Files.readAllBytes(chunk)
+    for (i <- 0 until 2) b(i) = (b(i) ^ 0x5a).toByte
+    Files.write(chunk, b)
+    failsKeeping(s"$store#v", store, want.indices.map { i =>
+      val (x, y) = (i % 64, i / 64)
+      if (y < 16 || (y < 32 && x < 32)) want(i) else 0.0
+    })
+  }
+
+  test("a netCDF file cut inside its data fails strict reads; permissive fuses nothing") {
+    val full = s"$dir/full.nc"
+    NetCdf.write(full, Seq("v" -> plane(64, 48, (x, y) => 200 + x * y)), g, "int16",
+      Some(0.0))
+    val path = cut(full, s"$dir/cut_data.nc", _ - 64 * 2 * 5)
+    failsKeeping(s"$path#v", path, Seq.fill(g.width * g.height)(0.0))
   }
 
   test("a tile too large to decode fails naming the file, before it allocates") {

@@ -84,7 +84,8 @@ class TiffNativePropsSpec extends AnyFunSuite {
       assert(bits(got) == bits(expect), s"$path band $b window $win")
       val out = Array.tabulate((w + 3) * (h + 2))(i => if (i % 3 == 0) 0.0 else -7.0)
       val ref = out.clone()
-      val n = Tiff.fuseWindowInto(path, x0, y0, ww, wh, b, 0.0, out, w + 3, 2, 1, 0.0)
+      val n = RasterFormat.read(path, b)(_.fuseWindowInto(x0, y0, ww, wh, 0.0, out,
+        w + 3, 2, 1, 0.0))
       assert(n == RasterFormat.fuseInto(expect, ww, wh, 0.0, ref, w + 3, 2, 1, 0.0))
       assert(bits(out) == bits(ref), s"$path band $b window $win fuse")
     }

@@ -77,7 +77,7 @@ class ZarrSpec extends AnyFunSuite {
     val bare = intercept[IllegalArgumentException](Zarr.readHeader(store))
     assert(bare.getMessage.contains("store.zarr#<variable>"))
     val miss = intercept[IllegalArgumentException](
-      Zarr.requireVariable(store, "swir"))
+      Zarr.readHeader(s"$store#swir"))
     assert(miss.getMessage.contains("'nir', 'red'"))
     assert(Zarr.readWindow(s"$store#nir", 0, 0, 1, 1).head == 5000.0)
   }
