@@ -99,13 +99,15 @@ object Grb {
     }
   }
 
-  private def putPixel(buf: ByteBuffer, dtype: String, v: Double): Unit = dtype match {
+  /** `v` encoded as one `dtype` pixel at `buf`'s position. */
+  private[raster] def putPixel(buf: ByteBuffer, dtype: String, v: Double): Unit = dtype match {
     case "uint8" | "int8" => buf.put(v.toInt.toByte)
     case "uint16" | "int16" => buf.putShort(v.toInt.toShort)
     case "int32" => buf.putInt(v.toInt)
     case "int64" => buf.putLong(v.toLong)
     case "float32" => buf.putFloat(v.toFloat)
     case "float64" => buf.putDouble(v)
+    case other => throw new IllegalArgumentException(s"unsupported dtype '$other'")
   }
 
   final case class Header(dtype: String, width: Int, height: Int,

@@ -219,24 +219,11 @@ class WindowedReader extends RasterReader {
                     dstNodata: Double): Option[(Roi, Array[Double])] = {
     val (cx0, cy0, wx0, wy0, w, h) = clipPaste(header, roi, sx0, sy0)
     if (w <= 0 || h <= 0) return None
-    val pix = img.window(wx0, wy0, w, h)
-    val out = new Array[Double](roi.w * roi.h)
-    if (cx0 > 0 || cy0 > 0 || w < roi.w || h < roi.h)
-      java.util.Arrays.fill(out, dstNodata)
-    // src nodata as a primitive: NaN means "no nodata value" and the
-    // v.isNaN test alone applies (F5 semantics, no Option in the loop)
-    val sn = srcNodata.getOrElse(Double.NaN)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val v = pix(y * w + x)
-        out((cy0 + y) * roi.w + (cx0 + x)) =
-          if (v.isNaN || v == sn) dstNodata else v
-        x += 1
-      }
-      y += 1
-    }
+    // every valid source pixel lands on a fresh dstNodata plane: the
+    // first-valid fuse is then exactly the src-nodata → dstNodata remap
+    val out = Array.fill(roi.w * roi.h)(dstNodata)
+    img.fuseWindowInto(wx0, wy0, w, h, srcNodata.getOrElse(Double.NaN), out,
+      roi.w, cx0, cy0, dstNodata)
     Some((roi, out))
   }
 

@@ -145,11 +145,12 @@ object Zarr {
     }
   }
 
-  /** A variable's chunks: each one the window touches is read whole (an
-    * `exists` and a `readAll`: one GET per needed chunk on an object
-    * store, the access shape a COG read has) and inflated, when zlib, only
-    * down to the window's last row in it. A missing chunk file reads as
-    * `fill_value` (zarr semantics for never-written regions). */
+  /** A variable's chunks: each one the window touches is read whole (one
+    * `readAll`: one GET per needed chunk on an object store, the access
+    * shape a COG read has) and inflated, when zlib, only down to the
+    * window's last row in it. A missing chunk file (a local
+    * `NoSuchFileException`, an HTTP 404's `FileNotFoundException`) reads
+    * as `fill_value` (zarr semantics for never-written regions). */
   private final class Chunks(vdir: String, m: Meta) extends Blocks {
     private val sz = Grb.dtypeSize(m.dtype)
     private val rowBytes = m.chunkW * sz
@@ -161,8 +162,12 @@ object Zarr {
 
     def read(bx: Int, by: Int, r0: Int, r1: Int, c0: Int, n: Int): Part = {
       val chunk = s"$vdir/$by.$bx"
-      if (!RasterIO.exists(chunk)) return null
-      val raw = RasterIO.readAll(chunk)
+      val raw =
+        try RasterIO.readAll(chunk)
+        catch {
+          case _: java.io.FileNotFoundException |
+               _: java.nio.file.NoSuchFileException => return null
+        }
       val need = r1 * rowBytes
       val bytes =
         if (!m.zlib) {
@@ -251,7 +256,7 @@ object Zarr {
     while (y < chunk) {
       var x = 0
       while (x < chunk) {
-        putPixel(buf, dtype, if (y < h && x < w) tile(y * w + x) else fill)
+        Grb.putPixel(buf, dtype, if (y < h && x < w) tile(y * w + x) else fill)
         x += 1
       }
       y += 1
@@ -303,13 +308,4 @@ object Zarr {
     }
   }
 
-  private def putPixel(buf: ByteBuffer, dtype: String, v: Double): Unit = dtype match {
-    case "uint8" | "int8" => buf.put(v.toInt.toByte)
-    case "uint16" | "int16" => buf.putShort(v.toInt.toShort)
-    case "int32" => buf.putInt(v.toInt)
-    case "int64" => buf.putLong(v.toLong)
-    case "float32" => buf.putFloat(v.toFloat)
-    case "float64" => buf.putDouble(v)
-    case other => throw new IllegalArgumentException(s"unsupported dtype '$other'")
-  }
 }

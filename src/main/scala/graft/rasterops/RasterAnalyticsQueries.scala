@@ -5,6 +5,7 @@ import graft.planner.Planner
 import graft.raster.Fixtures
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import TileCells._
 
 /** Raster analytics layer: zonal stats, temporal fill, band math,
   * focal mean, drill, change detection, pyramids, rasterize,
@@ -78,24 +79,14 @@ private[rasterops] trait RasterAnalyticsQueries {
     val (items, schemas) = parsedOf(jsons)
     val res = Load.load(spark, items, schemas, bands = Seq("red"),
       groupby = "id", chunks = 64, dtype = Some("float64"))
-    res.tiles
-      .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        col("nodata"), unix_timestamp(col("time")).as("tsec"),
-        posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .select(col("band"), col("tIdx").as("tidx"), col("tsec"), col("ty"),
-        col("tx"),
-        (col("pos") / col("width")).cast("int").as("py"),
-        (col("pos") % col("width")).cast("int").as("px"),
-        when(isnan(col("col")) || col("col") === col("nodata"),
-          lit(Double.NaN)).otherwise(col("col")).as("value"))
+    cells(res.tiles, Seq(col("band"), col("tIdx").as("tidx"),
+      unix_timestamp(col("time")).as("tsec"), col("ty"), col("tx")),
+      masked = true)
       .write.mode("overwrite").parquet(GapCellsPath)
     res.temporalFill()
       .select(col("band"), col("tIdx"), col("ty"), col("tx"),
-        col("n_filled"),
-        expr("aggregate(filled, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 100) AS BIGINT)))").as("fill_q"),
-        expr("aggregate(filled, 0, (s, v) -> s + if(isnan(v), 0, 1))")
-          .as("n_data"))
+        col("n_filled"), planeSum("filled", 100).as("fill_q"),
+        planeValid("filled").as("n_data"))
       .orderBy("band", "tIdx", "ty", "tx")
   }
 
@@ -163,8 +154,7 @@ private[rasterops] trait RasterAnalyticsQueries {
       .write.mode("overwrite").parquet(SmoothCellsPath)
     graft.load.TemporalSmooth.smoothAcrossTime(spark, fill)
       .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("n_valid"),
-        expr("aggregate(smooth, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 100) AS BIGINT)))").as("smooth_q"))
+        planeSum("smooth", 100).as("smooth_q"))
       .orderBy("band", "tIdx", "ty", "tx")
   }
 
@@ -208,16 +198,7 @@ private[rasterops] trait RasterAnalyticsQueries {
       groupby = "id", chunks = 64, dtype = Some("float64"))
     val tsec =
       if (withTsec) Seq(unix_timestamp(col("time")).as("tsec")) else Nil
-    val tsecOut = if (withTsec) Seq(col("tsec")) else Nil
-    res.tiles
-      .select(Seq(col("band"), col("tIdx").as("tidx"), col("ty"),
-        col("tx")) ++ tsec ++ Seq(col("nodata"),
-        posexplode(Fuse.decodeUdf(col("data"), col("dtype")))): _*)
-      .select(Seq(col("band"), col("tidx"), col("ty"), col("tx")) ++
-        tsecOut ++ Seq(col("pos"),
-        when(isnan(col("col")) || col("col") === col("nodata"),
-          lit(Double.NaN)).otherwise(col("col")).as("value")): _*)
-      .write.mode("overwrite").parquet(path)
+    series(res.tiles, tileKeys ++ tsec).write.mode("overwrite").parquet(path)
     res
   }
 
@@ -239,12 +220,9 @@ private[rasterops] trait RasterAnalyticsQueries {
     graft.load.Trend.trendAcrossTime(spark, res.tiles, t0Sec)
       .select(col("band"), col("ty"), col("tx"),
         expr("aggregate(count, 0, (s, c) -> s + c)").as("n_obs"),
-        expr("aggregate(slope, 0, (s, v) -> s + if(isnan(v), 0, 1))")
-          .as("n_fit"),
-        expr("aggregate(slope, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 1e6) AS BIGINT)))").as("slope_q"),
-        expr("aggregate(icept, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 100) AS BIGINT)))").as("icept_q"))
+        planeValid("slope").as("n_fit"),
+        planeSum("slope", 1e6).as("slope_q"),
+        planeSum("icept", 100).as("icept_q"))
       .orderBy("band", "ty", "tx")
   }
 
@@ -305,8 +283,7 @@ private[rasterops] trait RasterAnalyticsQueries {
         expr("aggregate(count, 0, (s, c) -> s + c)").as("n_obs"),
         expr("aggregate(day, 0, (s, d) -> s + if(d >= 0, 1, 0))")
           .as("n_peak"),
-        expr("aggregate(peak, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 100) AS BIGINT)))").as("peak_q"),
+        planeSum("peak", 100).as("peak_q"),
         expr("aggregate(day, 0L, (s, d) -> s + " +
           "if(d < 0, 0L, CAST(d AS BIGINT)))").as("day_sum"))
       .orderBy("band", "ty", "tx")
@@ -360,12 +337,9 @@ private[rasterops] trait RasterAnalyticsQueries {
     landGapSeries(spark, TrendRobustCellsPath).trendRobust()
       .select(col("band"), col("ty"), col("tx"),
         expr("aggregate(count, 0, (s, c) -> s + c)").as("n_obs"),
-        expr("aggregate(slope, 0, (s, v) -> s + if(isnan(v), 0, 1))")
-          .as("n_fit"),
-        expr("aggregate(slope, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 1e6) AS BIGINT)))").as("slope_q"),
-        expr("aggregate(icept, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 100) AS BIGINT)))").as("icept_q"))
+        planeValid("slope").as("n_fit"),
+        planeSum("slope", 1e6).as("slope_q"),
+        planeSum("icept", 100).as("icept_q"))
       .orderBy("band", "ty", "tx")
   }
 
@@ -440,14 +414,10 @@ private[rasterops] trait RasterAnalyticsQueries {
     graft.load.Harmonic.harmonicAcrossTime(spark, res.tiles, basis)
       .select(col("band"), col("ty"), col("tx"),
         expr("aggregate(count, 0, (s, c) -> s + c)").as("n_obs"),
-        expr("aggregate(level, 0, (s, v) -> s + if(isnan(v), 0, 1))")
-          .as("n_fit"),
-        expr("aggregate(level, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 100) AS BIGINT)))").as("level_q"),
-        expr("aggregate(cosb, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 1e6) AS BIGINT)))").as("cos_q"),
-        expr("aggregate(sinb, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 1e6) AS BIGINT)))").as("sin_q"))
+        planeValid("level").as("n_fit"),
+        planeSum("level", 100).as("level_q"),
+        planeSum("cosb", 1e6).as("cos_q"),
+        planeSum("sinb", 1e6).as("sin_q"))
       .orderBy("band", "ty", "tx")
   }
 
@@ -578,8 +548,7 @@ private[rasterops] trait RasterAnalyticsQueries {
     graft.load.BandMath
       .normalizedDifference(spark, res.tiles, "nir", "red", "ndvi")
       .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("n_valid"),
-        expr("aggregate(values, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 1e6) AS BIGINT)))").as("ndvi_q"))
+        planeSum("values", 1e6).as("ndvi_q"))
       .orderBy("band", "tIdx", "ty", "tx")
   }
 
@@ -616,8 +585,7 @@ private[rasterops] trait RasterAnalyticsQueries {
       groupby = "solar_day", chunks = 64)
     graft.load.Focal.focalMean(spark, res.tiles, radius = 1)
       .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("n_valid"),
-        expr("aggregate(focal, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 100) AS BIGINT)))").as("focal_q"))
+        planeSum("focal", 100).as("focal_q"))
       .orderBy("band", "tIdx", "ty", "tx")
   }
 
@@ -635,8 +603,7 @@ private[rasterops] trait RasterAnalyticsQueries {
       col("band"), col("tIdx"), col("ty"), col("tx"))
     graft.load.Focal.focalMeanStanding(spark, standing, radius = 1)
       .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("n_valid"),
-        expr("aggregate(focal, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 100) AS BIGINT)))").as("focal_q"))
+        planeSum("focal", 100).as("focal_q"))
       .orderBy("band", "tIdx", "ty", "tx")
   }
 
@@ -684,12 +651,8 @@ private[rasterops] trait RasterAnalyticsQueries {
       groupby = "solar_day", chunks = 64)
     graft.load.Focal.horn(spark, res.tiles)
       .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("n_valid"),
-        expr("aggregate(gx, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 1000) AS BIGINT)))").as("gx_q"),
-        expr("aggregate(gy, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 1000) AS BIGINT)))").as("gy_q"),
-        expr("aggregate(mag, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 1000) AS BIGINT)))").as("mag_q"))
+        planeSum("gx", 1000).as("gx_q"), planeSum("gy", 1000).as("gy_q"),
+        planeSum("mag", 1000).as("mag_q"))
       .orderBy("band", "tIdx", "ty", "tx")
   }
 
@@ -966,8 +929,7 @@ private[rasterops] trait RasterAnalyticsQueries {
       groupby = "solar_day", chunks = 64)
     graft.load.BandMath.changeAcrossTime(spark, res.tiles, 0, 1)()
       .select(col("band"), col("ty"), col("tx"), col("n_both"),
-        expr("aggregate(change, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 100) AS BIGINT)))").as("diff_q"),
+        planeSum("change", 100).as("diff_q"),
         expr("aggregate(change, 0L, (s, v) -> s + " +
           "if(isnan(v) OR v = 0D, 0L, 1L))").as("n_changed"))
       .orderBy("band", "ty", "tx")
@@ -1010,9 +972,7 @@ private[rasterops] trait RasterAnalyticsQueries {
         .withColumn("level", lit(s))
     }.reduce(_ unionAll _)
       .select(col("level"), col("band"), col("tIdx"), col("ty"), col("tx"),
-        col("n_valid"),
-        expr("aggregate(plane, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 100) AS BIGINT)))").as("sum_q"))
+        col("n_valid"), planeSum("plane", 100).as("sum_q"))
       .orderBy("level", "band", "tIdx", "ty", "tx")
   }
 
@@ -1039,19 +999,11 @@ private[rasterops] trait RasterAnalyticsQueries {
     val (items, schemas) = parsedOf(jsons)
     val res = Load.load(spark, items, schemas, bands = Seq("red", "qa"),
       groupby = "id", chunks = 64)
-    res.tiles
-      .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .select(col("band"), col("tIdx").as("tidx"), col("ty"), col("tx"),
-        (col("pos") / col("width")).cast("int").as("py"),
-        (col("pos") % col("width")).cast("int").as("px"),
-        when(isnan(col("col")) || col("col") === col("nodata"),
-          lit(Double.NaN)).otherwise(col("col")).as("value"))
+    cells(res.tiles, tileKeys, masked = true)
       .write.mode("overwrite").parquet(MaskCellsPath)
     res.maskedMedianComposite("red", "qa", _ == 1.0)
       .select(col("band"), col("ty"), col("tx"),
-        expr("aggregate(median, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 100) AS BIGINT)))").as("med_q"),
+        planeSum("median", 100).as("med_q"),
         expr("CAST(aggregate(count, 0, (s, v) -> s + v) AS BIGINT)")
           .as("n_used"))
       .orderBy("band", "ty", "tx")
@@ -1093,12 +1045,10 @@ private[rasterops] trait RasterAnalyticsQueries {
     val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
-    res.tiles
-      .select(col("band"), col("tIdx"), col("nodata"),
-        posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .where(!isnan(col("col")) && col("col") =!= col("nodata"))
+    cells(res.tiles, Seq(col("band"), col("tIdx")), masked = true)
+      .where(!isnan(col("value")))
       .select(col("band"), col("tIdx"),
-        least(lit(15), floor(col("col") / 2000).cast("int")).as("bin"))
+        least(lit(15), floor(col("value") / 2000).cast("int")).as("bin"))
       .groupBy("band", "tIdx", "bin")
       .agg(count(lit(1)).as("n"))
       .orderBy("band", "tIdx", "bin")
@@ -1325,19 +1275,11 @@ private[rasterops] trait RasterAnalyticsQueries {
     val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "id", chunks = 64)
-    res.tiles
-      .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .select(col("band"), col("tIdx").as("tidx"), col("ty"), col("tx"),
-        (col("pos") / col("width")).cast("int").as("py"),
-        (col("pos") % col("width")).cast("int").as("px"),
-        when(isnan(col("col")) || col("col") === col("nodata"),
-          lit(Double.NaN)).otherwise(col("col")).as("value"))
+    cells(res.tiles, tileKeys, masked = true)
       .write.mode("overwrite").parquet(GeomedianCellsPath)
     res.geomedianComposite(Seq("red", "nir"))
       .select(col("band"), col("ty"), col("tx"),
-        expr("aggregate(geomedian, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 100) AS BIGINT)))").as("geo_q"),
+        planeSum("geomedian", 100).as("geo_q"),
         expr("CAST(aggregate(count, 0, (s, v) -> s + v) AS BIGINT)")
           .as("n_valid"))
       .orderBy("band", "ty", "tx")
@@ -1369,25 +1311,13 @@ private[rasterops] trait RasterAnalyticsQueries {
     val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "id", chunks = 64)
-    res.tiles
-      .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .select(col("band"), col("tIdx").as("tidx"), col("ty"), col("tx"),
-        (col("pos") / col("width")).cast("int").as("py"),
-        (col("pos") % col("width")).cast("int").as("px"),
-        when(isnan(col("col")) || col("col") === col("nodata"),
-          lit(Double.NaN)).otherwise(col("col")).as("value"))
+    cells(res.tiles, tileKeys, masked = true)
       .write.mode("overwrite").parquet(GeomedianCellsPath)
     res.geomadComposite(Seq("red", "nir"))
       .select(col("ty"), col("tx"),
-        expr("aggregate(emad, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 100) AS BIGINT)))").as("emad_q"),
-        expr("aggregate(smad, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 1000000) AS BIGINT)))")
-          .as("smad_q"),
-        expr("aggregate(bcmad, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 1000000) AS BIGINT)))")
-          .as("bcmad_q"),
+        planeSum("emad", 100).as("emad_q"),
+        planeSum("smad", 1e6).as("smad_q"),
+        planeSum("bcmad", 1e6).as("bcmad_q"),
         expr("CAST(aggregate(count, 0, (s, v) -> s + v) AS BIGINT)")
           .as("n_valid"))
       .orderBy("ty", "tx")

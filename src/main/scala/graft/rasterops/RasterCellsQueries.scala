@@ -1,7 +1,8 @@
 package graft.rasterops
-import graft.load.{Fuse, Load}
+import graft.load.Load
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import TileCells._
 
 /** Cell-exact oracle anchors: landed mosaic/composite/reproject/
   * resample/overview planes re-derived pixel-by-pixel in DuckDB.
@@ -28,22 +29,10 @@ private[rasterops] trait RasterCellsQueries {
     val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 64)
-    res.tiles
-      .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .select(col("band"), col("tIdx").as("tidx"), col("ty"), col("tx"),
-        (col("pos") / col("width")).cast("int").as("py"),
-        (col("pos") % col("width")).cast("int").as("px"),
-        col("col").as("value"))
+    cells(res.tiles, tileKeys, masked = false)
       .write.mode("overwrite").parquet(CellsPath)
-    spark.read.parquet(CellsPath)
-      .groupBy("band", "tidx", "ty", "tx")
-      .agg(count(lit(1)).as("n_px"),
-        sum(when(isnan(col("value")), 0L)
-          .otherwise(round(col("value") * 100).cast("long"))).as("sum_q"),
-        round(min(when(!isnan(col("value")), col("value"))), 2).as("vmin"),
-        round(max(when(!isnan(col("value")), col("value"))), 2).as("vmax"))
-      .orderBy("band", "tidx", "ty", "tx")
+    summary(spark.read.parquet(CellsPath), Seq("band", "tidx", "ty", "tx"),
+      withValid = false)
   }
 
   private[rasterops] val mosaicCellsDuckSql: String =
@@ -60,19 +49,11 @@ private[rasterops] trait RasterCellsQueries {
     val (items, schemas) = parsed()
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "id", chunks = 64)
-    res.tiles
-      .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .select(col("band"), col("tIdx").as("tidx"), col("ty"), col("tx"),
-        (col("pos") / col("width")).cast("int").as("py"),
-        (col("pos") % col("width")).cast("int").as("px"),
-        when(isnan(col("col")) || col("col") === col("nodata"),
-          lit(Double.NaN)).otherwise(col("col")).as("value"))
+    cells(res.tiles, tileKeys, masked = true)
       .write.mode("overwrite").parquet(CompositeCellsPath)
     res.medianComposite()
       .select(col("band"), col("ty"), col("tx"),
-        expr("aggregate(median, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 100) AS BIGINT)))").as("med_q"),
+        planeSum("median", 100).as("med_q"),
         expr("CAST(aggregate(count, 0, (s, v) -> s + v) AS BIGINT)")
           .as("n_valid"))
       .orderBy("band", "ty", "tx")
@@ -94,29 +75,17 @@ private[rasterops] trait RasterCellsQueries {
        |ORDER BY band, ty, tx""".stripMargin
   def reprojectCells(spark: SparkSession): DataFrame = {
     val (items, schemas) = parsed()
-    Seq("EPSG:3857" -> 20.0, "EPSG:6933" -> 20.0, "ESRI:54034" -> 20.0)
+    val tiles = Seq("EPSG:3857" -> 20.0, "EPSG:6933" -> 20.0, "ESRI:54034" -> 20.0)
       .map { case (crs, res) =>
         Load.load(spark, items, schemas, bands = Seq("red"),
           groupby = "solar_day", chunks = 64,
           crs = Some(crs), resolution = Some(res)).tiles
           .withColumn("crs", lit(crs))
       }.reduce(_ unionAll _)
-      .select(col("crs"), col("band"), col("tIdx"), col("ty"), col("tx"),
-        col("width"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .select(col("crs"), col("band"), col("tIdx").as("tidx"), col("ty"),
-        col("tx"),
-        (col("pos") / col("width")).cast("int").as("py"),
-        (col("pos") % col("width")).cast("int").as("px"),
-        col("col").as("value"))
+    cells(tiles, col("crs") +: tileKeys, masked = false)
       .write.mode("overwrite").parquet(ReprojectCellsPath)
-    spark.read.parquet(ReprojectCellsPath)
-      .groupBy("crs", "band", "tidx", "ty", "tx")
-      .agg(count(lit(1)).as("n_px"),
-        sum(when(isnan(col("value")), 0L)
-          .otherwise(round(col("value") * 100).cast("long"))).as("sum_q"),
-        round(min(when(!isnan(col("value")), col("value"))), 2).as("vmin"),
-        round(max(when(!isnan(col("value")), col("value"))), 2).as("vmax"))
-      .orderBy("crs", "band", "tidx", "ty", "tx")
+    summary(spark.read.parquet(ReprojectCellsPath),
+      Seq("crs", "band", "tidx", "ty", "tx"), withValid = false)
   }
 
   private[rasterops] val reprojectCellsDuckSql: String =
@@ -133,41 +102,20 @@ private[rasterops] trait RasterCellsQueries {
     val (items, schemas) = parsed()
     // native 10 m per-item planes in absolute grid coords; float64 output
     // => invalid pixels land as NaN directly
-    Load.load(spark, items, schemas, bands = Seq("red"), groupby = "id",
-      chunks = 64, dtype = Some("float64")).tiles
-      .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .select(col("band"), col("tIdx").as("tidx"),
-        (col("ty") * 64 + (col("pos") / col("width")).cast("int")).as("gy"),
-        (col("tx") * 64 + (col("pos") % col("width")).cast("int")).as("gx"),
-        when(isnan(col("col")) || col("col") === col("nodata"),
-          lit(Double.NaN)).otherwise(col("col")).as("value"))
+    gridCells(Load.load(spark, items, schemas, bands = Seq("red"),
+      groupby = "id", chunks = 64, dtype = Some("float64")).tiles)
       .write.mode("overwrite").parquet(ResampleNativePath)
     // 20 m per-mode planes (overviews off: pooling must hit base pixels)
-    ResampleModes.map { m =>
+    val tiles = ResampleModes.map { m =>
       Load.load(spark, items, schemas, bands = Seq("red"), groupby = "id",
         chunks = 64, resolution = Some(20.0), resampling = Map("*" -> m),
         useOverviews = false, dtype = Some("float64")).tiles
         .withColumn("mode", lit(m))
     }.reduce(_ unionAll _)
-      .select(col("mode"), col("band"), col("tIdx"), col("ty"), col("tx"),
-        col("width"), col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .select(col("mode"), col("band"), col("tIdx").as("tidx"), col("ty"),
-        col("tx"),
-        (col("pos") / col("width")).cast("int").as("py"),
-        (col("pos") % col("width")).cast("int").as("px"),
-        when(isnan(col("col")) || col("col") === col("nodata"),
-          lit(Double.NaN)).otherwise(col("col")).as("value"))
+    cells(tiles, col("mode") +: tileKeys, masked = true)
       .write.mode("overwrite").parquet(ResampleCellsPath)
-    spark.read.parquet(ResampleCellsPath)
-      .groupBy("mode", "band", "tidx", "ty", "tx")
-      .agg(count(lit(1)).as("n_px"),
-        count(when(!isnan(col("value")), 1)).as("n_valid"),
-        sum(when(isnan(col("value")), 0L)
-          .otherwise(round(col("value") * 100).cast("long"))).as("sum_q"),
-        round(min(when(!isnan(col("value")), col("value"))), 2).as("vmin"),
-        round(max(when(!isnan(col("value")), col("value"))), 2).as("vmax"))
-      .orderBy("mode", "band", "tidx", "ty", "tx")
+    summary(spark.read.parquet(ResampleCellsPath),
+      Seq("mode", "band", "tidx", "ty", "tx"), withValid = true)
   }
 
   private[rasterops] val resampleCellsDuckSql: String =
@@ -271,15 +219,8 @@ private[rasterops] trait RasterCellsQueries {
     import spark.implicits._
     import graft.raster.Kernels
     val (items, schemas) = parsed()
-    Load.load(spark, items, schemas, bands = Seq("red"), groupby = "id",
-      chunks = 64, dtype = Some("float64")).tiles
-      .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .select(col("band"), col("tIdx").as("tidx"),
-        (col("ty") * 64 + (col("pos") / col("width")).cast("int")).as("gy"),
-        (col("tx") * 64 + (col("pos") % col("width")).cast("int")).as("gx"),
-        when(isnan(col("col")) || col("col") === col("nodata"),
-          lit(Double.NaN)).otherwise(col("col")).as("value"))
+    gridCells(Load.load(spark, items, schemas, bands = Seq("red"),
+      groupby = "id", chunks = 64, dtype = Some("float64")).tiles)
       .write.mode("overwrite").parquet(ConvNativePath)
     // per-tap weights at the aligned geometry: native cell 2P+o, kernel
     // argument o-1/2; 2-D weight = wx*wy in the engine's multiply order.
@@ -299,29 +240,19 @@ private[rasterops] trait RasterCellsQueries {
           ("gauss", dy, dx, Kernels.gauss(0.5, 2)))
     wrows.toDF("mode", "oy", "ox", "w")
       .coalesce(1).write.mode("overwrite").parquet(ConvWeightsPath)
-    Seq("lanczos", "cubic_spline", "gauss").map { m =>
+    val tiles = Seq("lanczos", "cubic_spline", "gauss").map { m =>
       Load.load(spark, items, schemas, bands = Seq("red"), groupby = "id",
         chunks = 256, resolution = Some(20.0), resampling = Map("*" -> m),
         useOverviews = false, dtype = Some("float64")).tiles
         .withColumn("mode", lit(m))
     }.reduce(_ unionAll _)
-      .select(col("mode"), col("band"), col("tIdx"), col("ty"), col("tx"),
-        col("width"), col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .select(col("mode"), col("band"), col("tIdx").as("tidx"),
-        (col("ty") * 256 + (col("pos") / col("width")).cast("int")).as("gpy"),
-        (col("tx") * 256 + (col("pos") % col("width")).cast("int")).as("gpx"),
-        when(isnan(col("col")) || col("col") === col("nodata"),
-          lit(Double.NaN)).otherwise(col("col")).as("value"))
+    cells(tiles, col("mode") +: tileKeys, masked = true)
+      .select(col("mode"), col("band"), col("tidx"),
+        (col("ty") * 256 + col("py")).as("gpy"),
+        (col("tx") * 256 + col("px")).as("gpx"), col("value"))
       .write.mode("overwrite").parquet(ConvCellsPath)
-    spark.read.parquet(ConvCellsPath)
-      .groupBy("mode", "band", "tidx", "gpy")
-      .agg(count(lit(1)).as("n_px"),
-        count(when(!isnan(col("value")), 1)).as("n_valid"),
-        sum(when(isnan(col("value")), 0L)
-          .otherwise(round(col("value") * 100).cast("long"))).as("sum_q"),
-        round(min(when(!isnan(col("value")), col("value"))), 2).as("vmin"),
-        round(max(when(!isnan(col("value")), col("value"))), 2).as("vmax"))
-      .orderBy("mode", "band", "tidx", "gpy")
+    summary(spark.read.parquet(ConvCellsPath),
+      Seq("mode", "band", "tidx", "gpy"), withValid = true)
   }
 
   private[rasterops] val resampleConvDuckSql: String =
@@ -411,39 +342,18 @@ private[rasterops] trait RasterCellsQueries {
        |ORDER BY mode, band, tidx, gpy""".stripMargin
   def overviewCells(spark: SparkSession): DataFrame = {
     val (items, schemas) = parsed()
-    Load.load(spark, items, schemas, bands = Seq("red"), groupby = "id",
-      chunks = 64, dtype = Some("float64")).tiles
-      .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .select(col("band"), col("tIdx").as("tidx"),
-        (col("ty") * 64 + (col("pos") / col("width")).cast("int")).as("gy"),
-        (col("tx") * 64 + (col("pos") % col("width")).cast("int")).as("gx"),
-        when(isnan(col("col")) || col("col") === col("nodata"),
-          lit(Double.NaN)).otherwise(col("col")).as("value"))
+    gridCells(Load.load(spark, items, schemas, bands = Seq("red"),
+      groupby = "id", chunks = 64, dtype = Some("float64")).tiles)
       .write.mode("overwrite").parquet(OverviewNativePath)
-    Seq(20.0 -> 2, 40.0 -> 4).map { case (res, lvl) =>
+    val tiles = Seq(20.0 -> 2, 40.0 -> 4).map { case (res, lvl) =>
       Load.load(spark, items, schemas, bands = Seq("red"), groupby = "id",
         chunks = 64, resolution = Some(res), dtype = Some("float64")).tiles
         .withColumn("lvl", lit(lvl))
     }.reduce(_ unionAll _)
-      .select(col("lvl"), col("band"), col("tIdx"), col("ty"), col("tx"),
-        col("width"), col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .select(col("lvl"), col("band"), col("tIdx").as("tidx"), col("ty"),
-        col("tx"),
-        (col("pos") / col("width")).cast("int").as("py"),
-        (col("pos") % col("width")).cast("int").as("px"),
-        when(isnan(col("col")) || col("col") === col("nodata"),
-          lit(Double.NaN)).otherwise(col("col")).as("value"))
+    cells(tiles, col("lvl") +: tileKeys, masked = true)
       .write.mode("overwrite").parquet(OverviewCellsPath)
-    spark.read.parquet(OverviewCellsPath)
-      .groupBy("lvl", "band", "tidx", "ty", "tx")
-      .agg(count(lit(1)).as("n_px"),
-        count(when(!isnan(col("value")), 1)).as("n_valid"),
-        sum(when(isnan(col("value")), 0L)
-          .otherwise(round(col("value") * 100).cast("long"))).as("sum_q"),
-        round(min(when(!isnan(col("value")), col("value"))), 2).as("vmin"),
-        round(max(when(!isnan(col("value")), col("value"))), 2).as("vmax"))
-      .orderBy("lvl", "band", "tidx", "ty", "tx")
+    summary(spark.read.parquet(OverviewCellsPath),
+      Seq("lvl", "band", "tidx", "ty", "tx"), withValid = true)
   }
 
   private[rasterops] val overviewCellsDuckSql: String =
@@ -526,10 +436,10 @@ private[rasterops] trait RasterCellsQueries {
       groupby = "id", chunks = 64)
     Seq(0.25, 0.75).map { q =>
       res.quantileComposite(q)
-        .selectExpr(s"'p${(q * 100).toInt}' AS p", "band", "ty", "tx",
-          "aggregate(quantile, 0L, (s, v) -> s + " +
-            "if(isnan(v), 0L, CAST(round(v * 100) AS BIGINT))) AS q_sum",
-          "CAST(aggregate(count, 0, (s, v) -> s + v) AS BIGINT) AS n_valid")
+        .select(lit(s"p${(q * 100).toInt}").as("p"), col("band"), col("ty"),
+          col("tx"), planeSum("quantile", 100).as("q_sum"),
+          expr("CAST(aggregate(count, 0, (s, v) -> s + v) AS BIGINT)")
+            .as("n_valid"))
     }.reduce(_ unionAll _)
       .orderBy("p", "band", "ty", "tx")
   }

@@ -1,9 +1,10 @@
 package graft.rasterops
 import graft.geo.Geom
-import graft.load.{Fuse, Load}
+import graft.load.Load
 import graft.raster.Fixtures
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import TileCells._
 
 /** Eager/lazy load summaries, pixel sources (GRB/GeoTIFF/zarr/netCDF,
   * DSv2 SQL), COG/zarr exports, tile round-trip.
@@ -66,31 +67,18 @@ private[rasterops] trait RasterLoadQueries {
     * `raster_resample_cells`/`raster_resample_conv`). */
   def loadResampling(spark: SparkSession): DataFrame = {
     val (items, schemas) = parsed()
-    Seq("nearest", "bilinear", "average", "mode", "sum", "cubic", "lanczos").map { m =>
+    val tiles = Seq("nearest", "bilinear", "average", "mode", "sum", "cubic",
+        "lanczos").map { m =>
       Load.load(spark, items, schemas, bands = Seq("red"),
         groupby = "solar_day", chunks = 64,
         crs = Some("EPSG:3857"), resolution = Some(30.0),
         resampling = Map("*" -> m), dtype = Some("float64")).tiles
         .withColumn("mode", lit(m))
     }.reduce(_ unionAll _)
-      .select(col("mode"), col("band"), col("tIdx"), col("ty"), col("tx"),
-        col("width"), col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .select(col("mode"), col("band"), col("tIdx").as("tidx"),
-        col("ty"), col("tx"),
-        (col("pos") / col("width")).cast("int").as("py"),
-        (col("pos") % col("width")).cast("int").as("px"),
-        when(isnan(col("col")) || col("col") === col("nodata"),
-          lit(Double.NaN)).otherwise(col("col")).as("value"))
+    cells(tiles, col("mode") +: tileKeys, masked = true)
       .write.mode("overwrite").parquet(LoadResampleCellsPath)
-    spark.read.parquet(LoadResampleCellsPath)
-      .groupBy("mode", "band", "tidx", "ty", "tx")
-      .agg(count(lit(1)).as("n_px"),
-        count(when(!isnan(col("value")), 1)).as("n_valid"),
-        sum(when(isnan(col("value")), 0L)
-          .otherwise(round(col("value") * 100).cast("long"))).as("sum_q"),
-        round(min(when(!isnan(col("value")), col("value"))), 2).as("vmin"),
-        round(max(when(!isnan(col("value")), col("value"))), 2).as("vmax"))
-      .orderBy("mode", "band", "tidx", "ty", "tx")
+    summary(spark.read.parquet(LoadResampleCellsPath),
+      Seq("mode", "band", "tidx", "ty", "tx"), withValid = true)
   }
 
   /** Polygon-ROI loading end to end (the reference's
@@ -128,16 +116,8 @@ private[rasterops] trait RasterLoadQueries {
     val res = Load.load(spark, items, schemas, bands = Seq("red", "nir"),
       groupby = "solar_day", chunks = 32,
       geopolygon = Some(tri), resolution = Some(10.0))
-    res.tiles
-      .select(col("band"), col("tIdx").as("tidx"), col("ty"), col("tx"),
-        posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .groupBy("band", "tidx", "ty", "tx")
-      .agg(count(lit(1)).as("n_px"),
-        sum(when(isnan(col("col")), 0L)
-          .otherwise(round(col("col") * 100).cast("long"))).as("sum_q"),
-        round(min(when(!isnan(col("col")), col("col"))), 2).as("vmin"),
-        round(max(when(!isnan(col("col")), col("col"))), 2).as("vmax"))
-      .orderBy("band", "tidx", "ty", "tx")
+    summary(cells(res.tiles, tileKeys, masked = false),
+      Seq("band", "tidx", "ty", "tx"), withValid = false)
   }
 
   /** Oracle: kept-tile set re-derived with the engine's exact
@@ -253,29 +233,14 @@ private[rasterops] trait RasterLoadQueries {
     * the join — and re-aggregates the bilinear nir half. */
   def loadResamplingMixed(spark: SparkSession): DataFrame = {
     val (items, schemas) = parsed()
-    Load.load(spark, items, schemas, bands = Seq("red", "nir"),
+    cells(Load.load(spark, items, schemas, bands = Seq("red", "nir"),
         groupby = "solar_day", chunks = 64,
         crs = Some("EPSG:3857"), resolution = Some(30.0),
         resampling = Map("red" -> "nearest", "nir" -> "bilinear"),
-        dtype = Some("float64")).tiles
-      .select(col("band"), col("tIdx"), col("ty"), col("tx"),
-        col("width"), col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .select(col("band"), col("tIdx").as("tidx"),
-        col("ty"), col("tx"),
-        (col("pos") / col("width")).cast("int").as("py"),
-        (col("pos") % col("width")).cast("int").as("px"),
-        when(isnan(col("col")) || col("col") === col("nodata"),
-          lit(Double.NaN)).otherwise(col("col")).as("value"))
+        dtype = Some("float64")).tiles, tileKeys, masked = true)
       .write.mode("overwrite").parquet(MixedResampleCellsPath)
-    spark.read.parquet(MixedResampleCellsPath)
-      .groupBy("band", "tidx", "ty", "tx")
-      .agg(count(lit(1)).as("n_px"),
-        count(when(!isnan(col("value")), 1)).as("n_valid"),
-        sum(when(isnan(col("value")), 0L)
-          .otherwise(round(col("value") * 100).cast("long"))).as("sum_q"),
-        round(min(when(!isnan(col("value")), col("value"))), 2).as("vmin"),
-        round(max(when(!isnan(col("value")), col("value"))), 2).as("vmax"))
-      .orderBy("band", "tidx", "ty", "tx")
+    summary(spark.read.parquet(MixedResampleCellsPath),
+      Seq("band", "tidx", "ty", "tx"), withValid = true)
   }
 
   /** Oracle: the red half is REBUILT from the nearest-mode landing of
@@ -324,15 +289,7 @@ private[rasterops] trait RasterLoadQueries {
     val jsons = Fixtures.writeScenesMultigrid(NScenes)
     val (items, schemas) = parsedOf(jsons)
     def landCells(tiles: DataFrame, path: String): Unit =
-      tiles
-        .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-          col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-        .select(col("band"), col("tIdx").as("tidx"),
-          (col("ty") * 64 + (col("pos") / col("width")).cast("int")).as("gy"),
-          (col("tx") * 64 + (col("pos") % col("width")).cast("int")).as("gx"),
-          when(isnan(col("col")) || col("col") === col("nodata"),
-            lit(Double.NaN)).otherwise(col("col")).as("value"))
-        .write.mode("overwrite").parquet(path)
+      gridCells(tiles).write.mode("overwrite").parquet(path)
     // joint load: both bands on ONE 10 m grid, each from its own grid
     val res = Load.load(spark, items, schemas, bands = Seq("red", "swir"),
       groupby = "id", chunks = 64, resolution = Some(10.0),
@@ -348,17 +305,10 @@ private[rasterops] trait RasterLoadQueries {
       groupby = "id", chunks = 64, geobox = Some(g20),
       dtype = Some("float64"))
     landCells(nat.tiles, MultigridNativePath)
-    spark.read.parquet(MultigridCellsPath)
+    summary(spark.read.parquet(MultigridCellsPath)
       .withColumn("ty", floor(col("gy") / 64).cast("int"))
-      .withColumn("tx", floor(col("gx") / 64).cast("int"))
-      .groupBy("band", "tidx", "ty", "tx")
-      .agg(count(lit(1)).as("n_px"),
-        count(when(!isnan(col("value")), 1)).as("n_valid"),
-        sum(when(isnan(col("value")), 0L)
-          .otherwise(round(col("value") * 100).cast("long"))).as("sum_q"),
-        round(min(when(!isnan(col("value")), col("value"))), 2).as("vmin"),
-        round(max(when(!isnan(col("value")), col("value"))), 2).as("vmax"))
-      .orderBy("band", "tidx", "ty", "tx")
+      .withColumn("tx", floor(col("gx") / 64).cast("int")),
+      Seq("band", "tidx", "ty", "tx"), withValid = true)
   }
 
   /** Oracle: red re-aggregates from the joint landing; swir is instead

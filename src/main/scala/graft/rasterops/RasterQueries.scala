@@ -3,8 +3,9 @@ package graft.rasterops
 import graft.load.{Fuse, Load}
 import graft.raster.Fixtures
 import graft.stac.StacParse
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import TileCells._
 
 /** Driver-contract entries for the raster surface (SURVEY §2 operators
   * S1-S14, P1-P8, J1-J3, A1-A8, F1-F16): each query drives the real
@@ -42,38 +43,19 @@ object RasterQueries
       .orderBy("band", "tIdx", "ty", "tx")
   }
 
-  /** Pixel-row explode keyed by the group TIMESTAMP instead of the group
-    * ordinal: incremental ingest assigns tIdx per batch, so
-    * batch-vs-streaming comparisons key on (band, time, ty, tx). Shared
-    * by the streaming-ingest anchor and its batch twin. */
-  private[rasterops] def pixelsByTime(df: DataFrame): DataFrame = {
-    df.select(col("band"),
-        date_format(col("time"), "yyyy-MM-dd HH:mm:ss").as("t"),
-        col("ty"), col("tx"), col("width"),
-        posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .select(col("band"), col("t"), col("ty"), col("tx"),
-        (col("pos") / col("width")).cast("int").as("py"),
-        (col("pos") % col("width")).cast("int").as("px"),
-        col("col").as("value"))
-  }
-
-  /** Deterministic per-tile summary over pixel rows, integer-quantized
-    * (×100 → BIGINT) so it is aggregation-order-exact across engines —
-    * the same convention as [[mosaicCells]]. */
-  private[rasterops] def quantizedSummaryByTime(px: DataFrame): DataFrame =
-    px.groupBy("band", "t", "ty", "tx")
-      .agg(count(lit(1)).as("n_px"),
-        sum(when(isnan(col("value")), 0L)
-          .otherwise(round(col("value") * 100).cast("long"))).as("sum_q"),
-        round(min(when(!isnan(col("value")), col("value"))), 2).as("vmin"),
-        round(max(when(!isnan(col("value")), col("value"))), 2).as("vmax"))
-      .orderBy("band", "t", "ty", "tx")
+  /** Cell keys with the group TIMESTAMP in place of the group ordinal:
+    * incremental ingest assigns tIdx per batch, so batch-vs-streaming
+    * comparisons key on (band, t, ty, tx). Shared by the
+    * streaming-ingest anchor and its batch twin. */
+  private[rasterops] def timeKeys: Seq[Column] = Seq(col("band"),
+    date_format(col("time"), "yyyy-MM-dd HH:mm:ss").as("t"), col("ty"), col("tx"))
 
   /** Batch twin of the streaming ingest, for the spec. */
   def groupByIdSummaryByTime(spark: SparkSession): DataFrame = {
     val (items, schemas) = parsed()
-    quantizedSummaryByTime(pixelsByTime(Load.load(spark, items, schemas,
-      bands = Seq("red", "nir"), groupby = "id", chunks = 64).tiles))
+    summary(cells(Load.load(spark, items, schemas, bands = Seq("red", "nir"),
+      groupby = "id", chunks = 64).tiles, timeKeys, masked = false),
+      Seq("band", "t", "ty", "tx"), withValid = false)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

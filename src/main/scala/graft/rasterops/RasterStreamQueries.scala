@@ -1,12 +1,13 @@
 package graft.rasterops
 import graft.TmpLanding
-import graft.load.{Composite, Fuse, Load, Phenology, PixelFold, Trend}
+import graft.load.{Composite, Load, Phenology, PixelFold, Trend}
 import graft.planner.Planner
 import graft.raster.Fixtures
 import graft.stac.StacParse
 import graft.streaming.StacIngest
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import TileCells._
 
 /** Structured-streaming raster surfaces: microbatch scene ingest, the
   * standing per-pixel states and incremental zonal statistics.
@@ -77,9 +78,10 @@ private[rasterops] trait RasterStreamQueries {
     // pixel-row parquet and BOTH engines aggregate the same file — the
     // incremental-mosaic analog of [[mosaicCells]] (a batch dropped or
     // double-appended by the stream shifts a checksum DuckDB recomputes)
-    pixelsByTime(spark.read.parquet(out))
+    cells(spark.read.parquet(out), timeKeys, masked = false)
       .write.mode("overwrite").parquet(StreamCellsPath)
-    quantizedSummaryByTime(spark.read.parquet(StreamCellsPath))
+    summary(spark.read.parquet(StreamCellsPath), Seq("band", "t", "ty", "tx"),
+      withValid = false)
   }
 
   /** The standing states by name: each state's fold and the fold's
@@ -146,14 +148,7 @@ private[rasterops] trait RasterStreamQueries {
 
     // oracle anchor: the same scenes in ONE batch load, per-time pixel
     // planes landed for DuckDB's independent across-time recompute
-    sceneLoad(spark)
-      .select(col("band"), col("tIdx"), col("ty"), col("tx"), col("width"),
-        col("nodata"), posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .select(col("band"), col("tIdx").as("tidx"), col("ty"), col("tx"),
-        (col("pos") / col("width")).cast("int").as("py"),
-        (col("pos") % col("width")).cast("int").as("px"),
-        when(isnan(col("col")) || col("col") === col("nodata"),
-          lit(Double.NaN)).otherwise(col("col")).as("value"))
+    cells(sceneLoad(spark), tileKeys, masked = true)
       .write.mode("overwrite").parquet(StreamCompCellsPath)
 
     // summary of the STREAMED state (quantized, order-exact)
@@ -240,17 +235,9 @@ private[rasterops] trait RasterStreamQueries {
   /** Oracle anchor of the standing trend and peak maps: the same
     * scenes in ONE batch load, the raw per-time pixel series landed at
     * `path` for DuckDB's independent recompute. */
-  private def landBatchSeries(spark: SparkSession, path: String): Unit = {
-    sceneLoad(spark)
-      .select(col("band"), col("tIdx").as("tidx"), col("ty"), col("tx"),
-        unix_timestamp(col("time")).as("tsec"), col("nodata"),
-        posexplode(Fuse.decodeUdf(col("data"), col("dtype"))))
-      .select(col("band"), col("tidx"), col("ty"), col("tx"), col("tsec"),
-        col("pos"),
-        when(isnan(col("col")) || col("col") === col("nodata"),
-          lit(Double.NaN)).otherwise(col("col")).as("value"))
+  private def landBatchSeries(spark: SparkSession, path: String): Unit =
+    series(sceneLoad(spark), tileKeys :+ unix_timestamp(col("time")).as("tsec"))
       .write.mode("overwrite").parquet(path)
-  }
 
   /** Streaming RUNNING TREND (beyond the reference): the per-pixel OLS
     * sums (n, Σt, Σt², Σv, Σtv) are MERGEABLE, so a standing trend map
@@ -321,10 +308,7 @@ private[rasterops] trait RasterStreamQueries {
         col("buf.planes")(0).as("best"), col("buf.planes")(1).as("day"))
       .select(col("band"), col("ty"), col("tx"),
         expr("aggregate(cnt, 0, (s, c) -> s + c)").as("n_obs"),
-        expr("aggregate(best, 0, (s, v) -> s + if(isnan(v), 0, 1))")
-          .as("n_peak"),
-        expr("aggregate(best, 0L, (s, v) -> s + " +
-          "if(isnan(v), 0L, CAST(round(v * 100) AS BIGINT)))").as("peak_q"),
+        planeValid("best").as("n_peak"), planeSum("best", 100).as("peak_q"),
         expr("aggregate(day, 0L, (s, d) -> s + " +
           "if(d < 0, 0L, CAST(d AS BIGINT)))").as("day_sum"))
       .orderBy("band", "ty", "tx")

@@ -148,6 +148,20 @@ class HttpRangeSpec extends AnyFunSuite {
     assert(nRequests.get() - before == 1, "404 must not be retried")
   }
 
+  test("a zarr window over http: one GET per chunk, a missing chunk reads fill_value") {
+    server
+    val store = s"$dir/z.zarr"
+    Zarr.write(store, "red", px, g, "uint16", Some(7.0), chunk = 64)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(store, "red", "0.1"))
+    val before = nRequests.get()
+    val remote = Zarr.readWindow(s"$base/z.zarr#red", 0, 0, 128, 64)
+    // .zarray, .zattrs, chunk 0.0 and the 404 of chunk 0.1 (not retried)
+    assert(nRequests.get() - before == 4, s"${nRequests.get() - before} GETs")
+    assert(remote.sameElements(Zarr.readWindow(s"$store#red", 0, 0, 128, 64)))
+    for (y <- 0 until 64; x <- 0 until 128)
+      assert(remote(y * 128 + x) == (if (x < 64) px(y * g.width + x) else 7.0))
+  }
+
   test("readAll matches the local bytes") {
     val local = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(grbPath))

@@ -135,7 +135,7 @@ class RasterIoSpec extends AnyFunSuite {
     assert(readAlls.count(_.endsWith("/.zarray")) == 1, readAlls)
     assert(readAlls.count(_.endsWith("/.zattrs")) == 1, readAlls)
     val chunks = ((g.width + 63) / 64) * ((g.height + 63) / 64)
-    assert(readAlls.length == 2 + chunks && exists == chunks && opens == 0,
+    assert(readAlls.length == 2 + chunks && exists == 0 && opens == 0,
       s"$readAlls, $exists exists, $opens opens")
   }
 
