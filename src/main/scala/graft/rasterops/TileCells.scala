@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *    `nodata`).
   *  - Quantization: a value `v` counts as the BIGINT `round(v × scale)`
   *    and NaN counts as 0, so per-tile sums are exact and independent of
-  *    the aggregation order in both engines. Cell summaries and landed
-  *    cells use scale 100; plane checksums name theirs.
+  *    the aggregation order in both engines. Cell summaries use scale
+  *    100; plane checksums name theirs.
   */
 private[graft] object TileCells {
 
